@@ -14,7 +14,7 @@ from __future__ import annotations
 
 import os
 from collections.abc import Callable
-from functools import reduce
+from functools import partial, reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window
@@ -978,9 +978,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "rel_pivot": _rel_pivot,
         "ann_ivf_topk": ann.q_ann_ivf_topk,
         "rel_asof_join": _rel_asof_join,
-        "ann_lsh_multiprobe": ann.q_ann_lsh_multiprobe,
-        "ann_lsh_multitable": ann.q_ann_lsh_multitable,
-        "ann_lsh_topk": ann.q_ann_lsh_topk,
+        "ann_lsh_multiprobe": partial(ann.q_ann_lsh, radius=1),
+        "ann_lsh_multitable": partial(ann.q_ann_lsh, n_tables=4),
+        "ann_lsh_topk": ann.q_ann_lsh,
         "dedup_simhash": dedup.q_simhash,
         "dedup_minhash_signatures": dedup.q_minhash_signatures,
         "txt_quality_score": textstats.q_quality_score,
@@ -997,8 +997,8 @@ def oracle_sql() -> dict[str, str]:
     # Near-dup connected components: the SimHash-pairs oracle is reused as
     # the edge set, then a recursive CTE propagates the min reachable id —
     # DuckDB's fixpoint semantics (UNION dedup) terminate exactly at the
-    # component minimum, the same fixpoint the Spark pointer-doubling
-    # label propagation converges to.
+    # component minimum, the same fixpoint the Spark large-star/small-star
+    # rewrites converge to.
     out["dedup_components"] = f"""
 WITH RECURSIVE pairs AS (
   SELECT * FROM ({out['dedup_simhash_pairs']}) WHERE hamming <= 1),

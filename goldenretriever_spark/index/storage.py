@@ -187,8 +187,7 @@ class StoredIndex:
         serving path (reference models.py:114-149 analog on the compressed
         index). The WHOLE batch is routed by the share of estimated decode
         volume in heavy queries (wand.WAND_HEAVY_SHARE_MIN); per-query batch
-        splitting exists but is an explicit opt-in that measured slower
-        (BENCH/WAND_MIXED.json).
+        splitting measured slower and was removed (BENCH/WAND_MIXED.json).
 
         ``documents``: optional (doc_id, ...) table; when given, the ranked
         ids are joined back so results carry materialized content (the

@@ -79,25 +79,35 @@ def _query_vectors(spark: SparkSession, sf_dir: str, n_queries: int = 5) -> Data
     )
 
 
-def brute_topk(emb: DataFrame, qvecs: DataFrame, k: int = 5) -> DataFrame:
-    """Frame-level exact cosine top-k: every (query, vector) pair scored —
-    the deliberate exactness baseline (crossJoin by design; the query side
-    is tiny and broadcasts). emb: (vec_id, embedding); qvecs: (query_id,
-    qvec). Self-queries rank first with cosine=1 — kept, as the reference's
-    Annoy index also returns the item itself."""
-    scored = qvecs.crossJoin(emb).select(
+def _cosine_q(pairs: DataFrame) -> DataFrame:
+    """(query_id, qvec, vec_id, embedding) candidate pairs -> (query_id,
+    vec_id, cosine_q) with cosine quantized x10000 (the oracle's discipline)."""
+    return pairs.select(
         "query_id",
         "vec_id",
-        F.round(cosine_col(F.col("qvec"), F.col("embedding")) * 10000).cast("long").alias(
-            "cosine_q"
-        ),
+        F.round(cosine_col(F.col("qvec"), F.col("embedding")) * 10000)
+        .cast("long")
+        .alias("cosine_q"),
     )
+
+
+def _rank_topk(scored: DataFrame, k: int) -> DataFrame:
+    """Shared ANN tail: per-query top-k by desc cosine_q, asc vec_id."""
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine_q"), F.asc("vec_id"))
     return (
         scored.withColumn("rnk", F.row_number().over(w))
         .filter(F.col("rnk") <= k)
         .select("query_id", "vec_id", "cosine_q", "rnk")
     )
+
+
+def brute_topk(emb: DataFrame, qvecs: DataFrame, k: int = 5) -> DataFrame:
+    """Frame-level exact cosine top-k: every (query, vector) pair scored —
+    the deliberate exactness baseline (crossJoin by design; the query side
+    is tiny and broadcasts). emb: (vec_id, embedding); qvecs: (query_id,
+    qvec). Self-queries rank first with cosine=1 — kept, as the reference's
+    Annoy index also returns the item itself."""
+    return _rank_topk(_cosine_q(qvecs.crossJoin(emb)), k)
 
 
 def q_ann_brute_topk(spark: SparkSession, sf_dir: str, k: int = 5, n_queries: int = 5) -> DataFrame:
@@ -105,97 +115,47 @@ def q_ann_brute_topk(spark: SparkSession, sf_dir: str, k: int = 5, n_queries: in
     return brute_topk(_emb(spark, sf_dir), _query_vectors(spark, sf_dir, n_queries), k=k)
 
 
-def q_ann_lsh_multiprobe(
-    spark: SparkSession, sf_dir: str, k: int = 5, radius: int = 1, n_queries: int = 5
+def q_ann_lsh(
+    spark: SparkSession,
+    sf_dir: str,
+    k: int = 5,
+    radius: int = 0,
+    n_tables: int = 1,
+    n_queries: int = 5,
 ) -> DataFrame:
-    """Multi-probe LSH top-k (the recall knob single-probe lacks): each query
-    also probes every bucket within Hamming distance <= radius of its own —
-    vectors on the wrong side of `radius` hyperplanes are still candidates
-    (Lv et al., VLDB 2007). radius=1 probes 1 + n_planes of the 2^n_planes
-    buckets, so cost is (1+P)/2^P of brute force while recovering most
-    boundary misses. The probe fan-out is an explode on the TINY query side;
-    the corpus is still hashed once and equi-joined."""
-    planes = hyperplanes()
-    n_planes = len(planes)
-    probe_ids = probe_masks(n_planes, radius)  # self + <=radius-bit flips
-    e = _emb(spark, sf_dir).withColumn("bucket", bucket_col(F.col("embedding"), planes))
-    q = (
-        _query_vectors(spark, sf_dir, n_queries)
-        .withColumn("bucket0", bucket_col(F.col("qvec"), planes))
-        .withColumn("mask", F.explode(F.array(*[F.lit(m) for m in probe_ids])))
-        .withColumn("bucket", F.col("bucket0").bitwiseXOR(F.col("mask")))
-    )
-    scored = q.join(e, "bucket").select(
-        "query_id",
-        "vec_id",
-        F.round(cosine_col(F.col("qvec"), F.col("embedding")) * 10000).cast("long").alias(
-            "cosine_q"
-        ),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine_q"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "vec_id", "cosine_q", "rnk")
-    )
-
-
-def q_ann_lsh_topk(spark: SparkSession, sf_dir: str, k: int = 5, n_queries: int = 5) -> DataFrame:
     """LSH-bucketed cosine top-k: both sides bucket by hyperplane sign bits;
     candidates = same-bucket vectors only (equi-join, prunes ~15/16 of the
-    corpus at 4 planes), then exact cosine re-rank inside the bucket."""
-    planes = hyperplanes()
-    e = _emb(spark, sf_dir).withColumn("bucket", bucket_col(F.col("embedding"), planes))
-    q = _query_vectors(spark, sf_dir, n_queries).withColumn("bucket", bucket_col(F.col("qvec"), planes))
-    scored = q.join(e, "bucket").select(
-        "query_id",
-        "vec_id",
-        F.round(cosine_col(F.col("qvec"), F.col("embedding")) * 10000).cast("long").alias(
-            "cosine_q"
-        ),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine_q"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "vec_id", "cosine_q", "rnk")
-    )
+    corpus at 4 planes), then exact cosine re-rank. Two recall knobs:
 
-
-def q_ann_lsh_multitable(
-    spark: SparkSession, sf_dir: str, k: int = 5, n_tables: int = 4, n_queries: int = 5
-) -> DataFrame:
-    """Multi-TABLE LSH top-k: L independent seeded hyperplane tables,
-    candidates = union over tables of same-bucket matches, exact cosine
-    re-rank (the classic LSH structure; recall ≈ 1-(1-p^P)^L vs multi-probe's
-    single-table fan-out). At 100 TB this is the preferred recall knob: the
-    corpus is hashed L times ONCE at ingest (a map-side column per table,
-    storable/partition-prunable), while multi-probe multiplies per-query
-    bucket reads. Here each table is a bucket equi-join on its own seeded
-    planes; probe-hit dedup aggregates the (query_id, vec_id, long) frame,
-    never the vectors."""
+    - ``radius`` (multi-probe, Lv et al., VLDB 2007): each query also
+      probes every bucket within Hamming distance <= radius of its own, so
+      vectors on the wrong side of `radius` hyperplanes are still
+      candidates. radius=1 probes 1 + n_planes of the 2^n_planes buckets.
+      The probe fan-out is an explode on the TINY query side; the corpus is
+      still hashed once per table and equi-joined.
+    - ``n_tables`` (multi-table): L independent tables, table t on planes
+      seeded 42 + 1000·t; candidates are the union over tables (recall
+      ≈ 1-(1-p^P)^L). At 100 TB this is the preferred knob: the corpus is
+      hashed L times ONCE at ingest (a map-side column per table), while
+      multi-probe multiplies per-query bucket reads.
+    """
+    masks = probe_masks(N_PLANES, radius)  # self + <=radius-bit flips
     scored = None
     for t in range(n_tables):
         planes = hyperplanes(seed=42 + 1000 * t)
         e = _emb(spark, sf_dir).withColumn("bucket", bucket_col(F.col("embedding"), planes))
-        q = _query_vectors(spark, sf_dir, n_queries).withColumn(
-            "bucket", bucket_col(F.col("qvec"), planes)
+        q = (
+            _query_vectors(spark, sf_dir, n_queries)
+            .withColumn("bucket0", bucket_col(F.col("qvec"), planes))
+            .withColumn("mask", F.explode(F.array(*[F.lit(m) for m in masks])))
+            .withColumn("bucket", F.col("bucket0").bitwiseXOR(F.col("mask")))
         )
-        s = q.join(e, "bucket").select(
-            "query_id",
-            "vec_id",
-            F.round(cosine_col(F.col("qvec"), F.col("embedding")) * 10000)
-            .cast("long")
-            .alias("cosine_q"),
-        )
+        s = _cosine_q(q.join(e, "bucket"))
         scored = s if scored is None else scored.unionByName(s)
+    # a vector found by several tables is one candidate; the dedup carries
+    # (query_id, vec_id, long) rows, never the vectors (no-op for one table)
     dedup = scored.groupBy("query_id", "vec_id").agg(F.max("cosine_q").alias("cosine_q"))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine_q"), F.asc("vec_id"))
-    return (
-        dedup.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "vec_id", "cosine_q", "rnk")
-    )
+    return _rank_topk(dedup, k)
 
 
 def train_centroids_kmeans(
@@ -395,19 +355,7 @@ def _ivf_rerank(probes: DataFrame, assign: DataFrame, k: int) -> DataFrame:
     centroid_id, exact quantized-cosine re-rank, per-query top-k. One source
     of truth so the per-query path (ivf_topk) and the persisted-lists path
     (ivf_topk_from_lists) cannot drift."""
-    scored = probes.join(assign, "centroid_id").select(
-        "query_id",
-        "vec_id",
-        F.round(cosine_col(F.col("qvec"), F.col("embedding")) * 10000)
-        .cast("long")
-        .alias("cosine_q"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine_q"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "vec_id", "cosine_q", "rnk")
-    )
+    return _rank_topk(_cosine_q(probes.join(assign, "centroid_id")), k)
 
 
 def ivf_topk(

@@ -333,111 +333,19 @@ def q_embedding_neardup_pairs(
     )
 
 
-def connected_components(
+def connected_components_star(
     edges: DataFrame,
     src: str = "doc_a",
     dst: str = "doc_b",
-    max_iter: int = 25,
-    strict: bool = True,
+    max_iter: int = 50,
 ) -> DataFrame:
     """Near-dup pairs -> dup CLUSTERS: (id, component) with component = the
     minimum id reachable through the undirected edge set — the step a real
     dedup pipeline runs after pair generation (keep min-id per component,
     drop the rest).
 
-    Iterative min-label propagation accelerated with POINTER DOUBLING:
-    each round sets
-        label(u) <- min(label(u), label(label(u)), min_{v in N(u)} label(v))
-    so labels chase the component minimum through both direct edges and the
-    label graph — O(log diameter) rounds instead of O(diameter) for plain
-    neighbor propagation (the classic Shiloach-Vishkin shortcutting idea;
-    at extreme scale the same fixpoint is computed by large-star/small-star
-    alternation, Kiveris et al. 2014). Each round is two shuffles on id;
-    ``localCheckpoint`` truncates lineage so round N's plan does not replay
-    rounds 1..N-1. Labels only decrease and are bounded below by the
-    component min, so the fixpoint is exact; iteration stops at the first
-    unchanged round. If ``max_iter`` is exhausted first the labels are NOT
-    the fixpoint, and silently returning them would be wrong (ADVICE r4) —
-    ``strict=True`` (default) raises; ``strict=False`` warns and returns
-    the partial labels for callers that explicitly accept approximation.
-
-    Skew note: the label-of-label join keys on ``label``, which concentrates
-    on few values once components grow; AQE skew-join splitting handles it
-    at this round count, and :func:`connected_components_star` is the
-    alternating large-star/small-star formulation (Kiveris et al. 2014)
-    whose min-aggregations partial-combine map-side — the preferred shape
-    for giant-component graphs at extreme scale (fixpoint cross-checked
-    between the two in tests/test_round5.py).
-    """
-    sym = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).unionByName(
-        edges.select(F.col(dst).alias("a"), F.col(src).alias("b"))
-    )
-    labels = (
-        sym.select(F.col("a").alias("id"))
-        .distinct()
-        .withColumn("label", F.col("id"))
-        .localCheckpoint(eager=True)
-    )
-    converged = False
-    for _ in range(max_iter):
-        nbr = (
-            sym.join(labels.withColumnRenamed("id", "b").withColumnRenamed("label", "nl"), "b")
-            .groupBy("a")
-            .agg(F.min("nl").alias("nbr_min"))
-            .withColumnRenamed("a", "id")
-        )
-        # label-of-label (pointer doubling): key = node id L, value =
-        # label(L); joined below on the current label column
-        hop = labels.withColumnRenamed("label", "hl").select(
-            F.col("id").alias("label"), F.col("hl").alias("hop_min")
-        )
-        new = (
-            labels.join(nbr, "id", "left")
-            .join(hop, "label", "left")
-            .select(
-                "id",
-                F.least(
-                    "label",
-                    F.coalesce("nbr_min", "label"),
-                    F.coalesce("hop_min", "label"),
-                ).alias("label"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        changed = (
-            new.withColumnRenamed("label", "new_label")
-            .join(labels, "id")
-            .filter(F.col("new_label") != F.col("label"))
-            .count()
-        )
-        labels = new
-        if changed == 0:
-            converged = True
-            break
-    if not converged:
-        msg = (
-            f"connected_components did not converge within max_iter={max_iter} "
-            "rounds; labels are NOT component minima"
-        )
-        if strict:
-            raise RuntimeError(msg)
-        import warnings
-
-        warnings.warn(msg, RuntimeWarning, stacklevel=2)
-    return labels.select("id", F.col("label").alias("component"))
-
-
-def connected_components_star(
-    edges: DataFrame,
-    src: str = "doc_a",
-    dst: str = "doc_b",
-    max_iter: int = 50,
-    strict: bool = True,
-) -> DataFrame:
-    """Connected components by ALTERNATING large-star / small-star edge
-    rewrites (Kiveris et al., "Connected Components in MapReduce and
-    Beyond", SoCC 2014) — same (id, component=min reachable id) output and
-    fixpoint as :func:`connected_components`, different scaling shape:
+    Alternating large-star / small-star edge rewrites (Kiveris et al.,
+    "Connected Components in MapReduce and Beyond", SoCC 2014):
 
     - large-star: every node u links each STRICTLY LARGER neighbor to
       m(u) = min of u's closed neighborhood;
@@ -445,25 +353,27 @@ def connected_components_star(
       (all smaller) neighbors and itself to their minimum.
 
     Both steps are a groupBy-min (map-side partial aggregation — a giant
-    component's root neighborhood combines locally before any shuffle, the
-    skew the pointer-doubling label join cannot pre-combine) followed by an
-    equi-join back to the edge list. Edges monotonically point downward and
-    the potential function of Kiveris et al. guarantees O(log^2 n) rounds;
+    component's root neighborhood combines locally before any shuffle, so
+    it never funnels every label through one join key; BENCH/CC_SKEW.json
+    measured 2.9x fewer shuffle records than label propagation with pointer
+    doubling) followed by an equi-join back to the edge list. Edges
+    monotonically point downward and the potential function of Kiveris et
+    al. guarantees O(log^2 n) rounds;
     at the fixpoint the edge set is exactly the star forest
     (node -> component min). Convergence is EXACT (ADVICE r5): a round pair
     converged iff the new edge set has the same count as the old AND the
     anti-join of new against old is empty — both sets are distinct rows, so
     that is set equality with no hash-collision failure mode; the per-round
-    driver cost is two tiny actions on already-checkpointed frames.
-    ``strict`` as in :func:`connected_components`.
+    driver cost is two tiny actions on already-checkpointed frames. If
+    ``max_iter`` is exhausted first the edge set is NOT a star forest and
+    the labels would be wrong, so non-convergence raises (ADVICE r4).
     """
     sym = (
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
         .filter(F.col("a") != F.col("b"))
     )
     # node set from the UNFILTERED edge list (ADVICE r5): a node appearing
-    # only in self-loop edges is still a (singleton) node, matching
-    # connected_components' coverage exactly
+    # only in self-loop edges is still a (singleton) node of itself
     nodes = (
         edges.select(F.col(src).alias("id"))
         .unionByName(edges.select(F.col(dst).alias("id")))
@@ -505,7 +415,6 @@ def connected_components_star(
         return out
 
     n_prev = e.count()
-    converged = False
     for _ in range(max_iter):
         prev = e
         e = large_star(e).localCheckpoint(eager=True)
@@ -513,19 +422,13 @@ def connected_components_star(
         n_new = e.count()
         # exact set equality: equal counts + empty anti-join (both distinct)
         if n_new == n_prev and e.join(prev, ["a", "b"], "left_anti").isEmpty():
-            converged = True
             break
         n_prev = n_new
-    if not converged:
-        msg = (
+    else:
+        raise RuntimeError(
             f"connected_components_star did not converge within max_iter={max_iter} "
             "round pairs; edge set is not yet a star forest"
         )
-        if strict:
-            raise RuntimeError(msg)
-        import warnings
-
-        warnings.warn(msg, RuntimeWarning, stacklevel=2)
     # star forest -> labels; isolated-from-rewrite roots label themselves
     mapping = e.groupBy("a").agg(F.min("b").alias("component")).withColumnRenamed(
         "a", "id"
@@ -536,15 +439,16 @@ def connected_components_star(
 
 
 def q_dedup_components(spark: SparkSession, sf_dir: str, max_hamming: int = 1) -> DataFrame:
-    """Contract query: SimHash near-dup pairs -> connected components.
-    Output (doc_id, component_id) for every document that appears in at
-    least one near-dup pair; component_id = min doc_id of the cluster (the
+    """Contract query: SimHash near-dup pairs -> connected components
+    (:func:`connected_components_star`). Output (doc_id, component_id) for
+    every document that appears in at least one near-dup pair;
+    component_id = min doc_id of the cluster (the
     canonical survivor a keep-one dedup retains). Hamming <= 1 edges are NOT
     transitive, so clusters genuinely need the graph fixpoint (1-bit steps
     chain into larger clusters) — the band-join still generates candidates
     pigeonhole-losslessly because the pair op bands for Hamming <= 3."""
     pairs = q_simhash_pairs(spark, sf_dir).filter(F.col("hamming") <= max_hamming)
-    return connected_components(pairs).select(
+    return connected_components_star(pairs).select(
         F.col("id").alias("doc_id"), F.col("component").alias("component_id")
     )
 

@@ -26,6 +26,11 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# filtered_top_k pushes the boolean doc set into the decode workers only up
+# to this many ids (int64 -> ~32 MB on the driver); above it the exact
+# semi-join plan runs instead.
+FILTER_PUSHDOWN_MAX_IDS = 4_000_000
+
 
 def _term_docs(
     posting_blocks: DataFrame, terms: list[str], n_term_buckets: int | None
@@ -165,7 +170,7 @@ def filtered_top_k(
     Plan (r7, VERDICT r6 #3): the boolean doc set
     (:func:`boolean_match_stored`) is materialized once
     (localCheckpoint); when it fits under
-    $SPARK_GRAFT_FILTER_PUSHDOWN_MAX_IDS (default 4M ids ≈ 32 MB) its ids
+    ``FILTER_PUSHDOWN_MAX_IDS`` (4M ids ≈ 32 MB) its ids
     are broadcast as a sorted array and pushed INTO the decode workers
     (wand._decode_scored), so a selective filter cuts decode emission,
     shuffle and aggregation volume — and the scoring leg then reuses the
@@ -179,8 +184,6 @@ def filtered_top_k(
 
     Returns (query_id, doc_id, score, rank).
     """
-    import os
-
     from pyspark.sql import Window
 
     from goldenretriever_spark.query.wand import (
@@ -199,11 +202,10 @@ def filtered_top_k(
 
     allowed_bc = None
     if pushdown:
-        cap = int(os.environ.get("SPARK_GRAFT_FILTER_PUSHDOWN_MAX_IDS", 4_000_000))
         # Arrow-path collect (bounded): cap+1 rows decide cap-overflow
         # without a separate count job; 4M int64 ids ≈ 32 MB on the driver
-        probe = allowed.limit(cap + 1).toPandas()
-        if len(probe) <= cap:
+        probe = allowed.limit(FILTER_PUSHDOWN_MAX_IDS + 1).toPandas()
+        if len(probe) <= FILTER_PUSHDOWN_MAX_IDS:
             ids = np.sort(probe["doc_id"].to_numpy(dtype=np.int64))
             allowed_bc = spark.sparkContext.broadcast(ids)
 

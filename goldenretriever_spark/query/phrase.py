@@ -7,36 +7,32 @@ bag-of-words only, /root/reference/src/models.py:114-149); this is a
 beyond-parity capability standard in every production full-text index
 (Lucene positional postings).
 
-Two independent implementations with identical semantics (cross-checked in
-tests/test_phrase.py):
+One implementation per operator plus a scan twin (cross-checked in
+tests/test_phrase.py and tests/test_positions.py):
 
-1. **Index path** (`phrase_match`) — positional postings `(term, doc_id,
-   pos)` come from one ``posexplode`` over the tokenized text. At scale they
-   are BUILT ONCE and persisted term-bucketed next to the blocked BM25
-   postings (index/positions.py — positions delta-varint packed with the
-   same ``index/codec.py`` grouped codec), and `phrase_match_stored` /
-   `proximity_match_stored` serve from those blocks: the term-bucket
-   partition pruning + term filter replace the corpus scan entirely.
-   A phrase of n terms becomes a tiny broadcast frame ``(term, offset)``;
-   joining it to the postings turns every candidate token into a candidate
-   phrase-start ``pos - offset``.  A start that collects all n distinct
-   offsets is a real occurrence:
+1. **Stored path** (`phrase_match_stored` / `proximity_match_stored`) —
+   positional postings ``(term, doc_id, pos)`` are BUILT ONCE and persisted
+   term-bucketed next to the blocked BM25 postings (index/positions.py —
+   positions delta-varint packed with the same ``index/codec.py`` grouped
+   codec). The term-bucket partition pruning + term filter replace the
+   corpus scan entirely. Every token of a phrase term votes for the
+   phrase start ``pos - offset``; a start that collects all n offsets is a
+   real occurrence:
 
-       postings ⋈ broadcast(phrase)           -- touches ONLY the phrase
-       → (doc_id, start = pos - offset, offset)   terms' postings, never
-       → groupBy(doc_id, start): n_distinct(offset) == n   the full corpus
+       blocks of the phrase terms             -- touches ONLY the phrase
+       → (doc_id, start = pos - offset)           terms' blocks, never
+       → groupBy(doc_id, start): count == n       the full corpus
        → groupBy(doc_id): count(*) = occurrences
 
-   Cost: one broadcast join + two shuffles, the second map-side combinable;
-   all JVM codegen, no Python.  Skew: a phrase containing a scorching-hot
-   term ("def") only explodes that ONE term's postings — the per-(doc,start)
-   grouping key is high-cardinality, so no reducer hot-spots.  Duplicate
-   phrase terms ("a b a") are handled by counting DISTINCT offsets.
+   Skew: a phrase containing a scorching-hot term ("def") only decodes that
+   ONE term's blocks — the per-(doc,start) grouping key is high-cardinality,
+   so no reducer hot-spots. Duplicate phrase terms ("a b a") vote once per
+   offset, so n votes still means n distinct offsets.
 
-2. **Scan path** (`phrase_match_scan`) — brute-force twin over the raw
-   text, a single Catalyst array expression (``filter(sequence(..), s ->
-   slice(tokens, s, n) == phrase)``).  Used as the cross-check and for
-   one-off queries where no index exists.
+2. **Scan path** (`phrase_match_scan` / `proximity_match_scan`) —
+   brute-force twin over the raw text, a single Catalyst array expression
+   (``filter(sequence(..), s -> slice(tokens, s, n) == phrase)``). Used as
+   the cross-check and for one-off queries where no index exists.
 
 Both count OVERLAPPING occurrences (token-level: "a a a a" contains "a a"
 three times), matching the DuckDB oracle's exact sliding-window count.
@@ -48,86 +44,6 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from goldenretriever_spark.tokenizer import simple_tokens
-
-
-def positional_postings(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """``(term, doc_id, pos)`` positional postings, one row per token.
-
-    ``posexplode`` emits the 0-based position for free — no window, no
-    shuffle; positions are exact token indices of the simple tokenizer.
-    """
-    toks = simple_tokens(F.col(text_col))
-    return docs.select(
-        F.col(id_col).alias("doc_id"), F.posexplode(toks).alias("pos", "term")
-    )
-
-
-def phrase_match_postings(pp: DataFrame, phrase: list[str]) -> DataFrame:
-    """Start-vote phrase match over ANY ``(term, doc_id, pos)`` postings
-    frame (rows unique per (term, doc_id, pos)) — the shared core of the
-    scan path and the stored-index path."""
-    if not phrase:
-        raise ValueError("phrase must be non-empty")
-    n = len(phrase)
-    spark = pp.sparkSession
-    qp = spark.createDataFrame(
-        [(t, i) for i, t in enumerate(phrase)], "term string, offset int"
-    )
-    starts = pp.join(F.broadcast(qp), "term").select(
-        "doc_id", (F.col("pos") - F.col("offset")).alias("start"), "offset"
-    )
-    # (doc_id, start, offset) rows are UNIQUE — (start, offset) determines
-    # pos, and each (term, doc, pos) posting exists once — so count(*) equals
-    # count_distinct(offset) and saves the distinct-aggregate's extra
-    # expand/exchange phase (plan: 2 shuffles, both map-side combinable).
-    return (
-        starts.groupBy("doc_id", "start")
-        .agg(F.count(F.lit(1)).alias("n_hit"))
-        .filter(F.col("n_hit") == n)
-        .groupBy("doc_id")
-        .agg(F.count(F.lit(1)).cast("long").alias("occurrences"))
-    )
-
-
-def phrase_match_postings_batch(
-    pp: DataFrame, phrases: list[tuple[int, list[str]]]
-) -> DataFrame:
-    """Batched start-vote: ``(query_id, doc_id, occurrences)`` for a WHOLE
-    phrase batch in one plan over one shared postings frame.
-
-    The per-phrase core (:func:`phrase_match_postings`) pays one
-    prune+decode+vote per phrase; here the broadcast frame carries
-    ``(query_id, term, offset)`` for every phrase and the vote keys on
-    ``(query_id, doc_id, start)``, so a P-phrase batch costs ONE pass over
-    the union of the phrases' postings — same amortization move as batched
-    BM25. Rows stay unique per (query_id, doc_id, start, offset) by the
-    same argument as the single-phrase path (offset determines pos), so
-    count(*) == the phrase's offset count detects a full vote."""
-    if not phrases:
-        raise ValueError("phrases must be non-empty")
-    if any(not ph for _, ph in phrases):
-        raise ValueError("phrase must be non-empty")
-    spark = pp.sparkSession
-    qp = spark.createDataFrame(
-        [(qid, t, i) for qid, ph in phrases for i, t in enumerate(ph)],
-        "query_id long, term string, offset int",
-    )
-    need = spark.createDataFrame(
-        [(qid, len(ph)) for qid, ph in phrases], "query_id long, n_need int"
-    )
-    starts = pp.join(F.broadcast(qp), "term").select(
-        "query_id", "doc_id", (F.col("pos") - F.col("offset")).alias("start")
-    )
-    return (
-        starts.groupBy("query_id", "doc_id", "start")
-        .agg(F.count(F.lit(1)).alias("n_hit"))
-        .join(F.broadcast(need), "query_id")
-        .filter(F.col("n_hit") == F.col("n_need"))
-        .groupBy("query_id", "doc_id")
-        .agg(F.count(F.lit(1)).cast("long").alias("occurrences"))
-    )
 
 
 def phrase_match_stored_batch(
@@ -173,28 +89,6 @@ def phrase_match_stored_batch(
     )
 
 
-def phrase_match(
-    docs: DataFrame, phrase: list[str], text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Tokenize-path phrase match: ``(doc_id, occurrences)`` for docs
-    containing the exact consecutive token sequence ``phrase`` (occurrences
-    > 0 only). For a PERSISTED index use :func:`phrase_match_stored` — this
-    path re-tokenizes the corpus and exists for index-less one-off queries
-    and as the stored path's cross-check twin."""
-    if not phrase:
-        raise ValueError("phrase must be non-empty")
-    # Pre-filter: a doc lacking ANY phrase term cannot match — an
-    # arrays-contain conjunction the optimizer applies before the explode.
-    # (With a PERSISTED positional index this pruning is the term equi-join
-    # itself: only the phrase terms' posting buckets are ever read.)
-    toks = simple_tokens(F.col(text_col))
-    pruned = docs
-    for t in sorted(set(phrase)):
-        pruned = pruned.filter(F.array_contains(toks, t))
-    pp = positional_postings(pruned, text_col=text_col, id_col=id_col)
-    return phrase_match_postings(pp, phrase)
-
-
 def phrase_match_stored(
     positional_blocks: DataFrame,
     phrase: list[str],
@@ -204,7 +98,7 @@ def phrase_match_stored(
     (index/positions.py) — the 100 TB path: the term-bucket partition
     pruning + term filter touch only the phrase terms' posting blocks; the
     corpus is never scanned or re-tokenized. Same ``(doc_id, occurrences)``
-    contract as :func:`phrase_match` (identity-tested in
+    contract as :func:`phrase_match_scan` (identity-tested in
     tests/test_positions.py). Thin wrapper over the batched fused
     decode+vote path (see :func:`phrase_match_stored_batch`)."""
     if not phrase:
@@ -247,88 +141,6 @@ def phrase_match_scan(
     )
 
 
-def proximity_match(
-    docs: DataFrame,
-    terms: list[str],
-    window: int,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Unordered proximity search: ``(doc_id, n_windows)`` for docs where ALL
-    distinct ``terms`` co-occur within some ``window`` consecutive tokens
-    (Lucene sloppy-phrase style, order-free). ``n_windows`` counts the
-    distinct window START positions that satisfy the conjunction — a
-    density signal usable as a ranking boost.
-
-    Index path, same start-vote shape as :func:`phrase_match`: each
-    positional posting of a query term votes for the ``window`` starts whose
-    span covers it (one ``explode(sequence(...))`` — cost is W × the
-    QUERY terms' postings only, never the corpus); a start collecting all
-    n distinct terms is a hit.  Window spans truncate at the document end
-    (a start near the end checks the remaining suffix), matching the scan
-    twin and the DuckDB oracle exactly.
-    """
-    tset = sorted(set(terms))
-    if not tset:
-        raise ValueError("terms must be non-empty")
-    if window < 1:
-        raise ValueError("window must be >= 1")
-    toks = simple_tokens(F.col(text_col))
-    pruned = docs
-    for t in tset:
-        pruned = pruned.filter(F.array_contains(toks, t))
-    pp = positional_postings(pruned, text_col=text_col, id_col=id_col)
-    return proximity_match_postings(pp, tset, window)
-
-
-def proximity_match_postings(
-    pp: DataFrame, terms: list[str], window: int
-) -> DataFrame:
-    """Window start-vote proximity match over ANY ``(term, doc_id, pos)``
-    postings frame — the shared core of the scan and stored paths."""
-    tset = sorted(set(terms))
-    if not tset:
-        raise ValueError("terms must be non-empty")
-    if window < 1:
-        raise ValueError("window must be >= 1")
-    n = len(tset)
-    spark = pp.sparkSession
-    qp = spark.createDataFrame([(t,) for t in tset], "term string")
-    hits = pp.join(F.broadcast(qp), "term")
-    if n > 1:
-        # Intersection-first pruning: the window explode multiplies every
-        # posting by W, so feeding it a scorching-hot term's full posting
-        # list is the scale bottleneck (measured: stored path 6x SLOWER than
-        # the scan twin at 100k docs on {def,hash,user} before this join).
-        # A doc lacking ANY query term cannot produce a window — shrink
-        # `hits` to docs containing ALL n terms first. One extra map-side-
-        # combinable shuffle over the query terms' postings, in exchange for
-        # exploding only the (typically tiny) conjunction's docs.
-        cand = (
-            hits.groupBy("doc_id")
-            .agg(F.count_distinct("term").alias("_nt"))
-            .filter(F.col("_nt") == n)
-            .select("doc_id")
-        )
-        hits = hits.join(cand, "doc_id", "left_semi")
-    starts = hits.select(
-        "doc_id",
-        "term",
-        F.explode(
-            F.sequence(
-                F.greatest(F.col("pos") - (window - 1), F.lit(0)), F.col("pos")
-            )
-        ).alias("start"),
-    )
-    return (
-        starts.groupBy("doc_id", "start")
-        .agg(F.count_distinct("term").alias("n_hit"))
-        .filter(F.col("n_hit") == n)
-        .groupBy("doc_id")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_windows"))
-    )
-
-
 def proximity_match_stored(
     positional_blocks: DataFrame,
     terms: list[str],
@@ -337,8 +149,19 @@ def proximity_match_stored(
 ) -> DataFrame:
     """Proximity match served from PERSISTED positional blocks — same
     bucket-pruned no-corpus-scan shape as :func:`phrase_match_stored`, same
-    ``(doc_id, n_windows)`` contract as :func:`proximity_match` (identity
-    with the scan twin pytest-locked).
+    ``(doc_id, n_windows)`` contract as :func:`proximity_match_scan`
+    (identity pytest-locked).
+
+    Unordered proximity search: ``(doc_id, n_windows)`` for docs where ALL
+    distinct ``terms`` co-occur within some ``window`` consecutive tokens
+    (Lucene sloppy-phrase style, order-free). ``n_windows`` counts the
+    distinct window START positions that satisfy the conjunction — a
+    density signal usable as a ranking boost. Each positional posting of a
+    query term votes for the ``window`` starts whose span covers it (one
+    ``explode(sequence(...))`` — cost is W × the QUERY terms' postings
+    only); a start collecting all n distinct terms is a hit. Window spans
+    truncate at the document end, matching the scan twin and the DuckDB
+    oracle exactly.
 
     r7 (guide §4.2): the decode emits int term CODES instead of strings
     (positions.decode_position_codes), and the redundant broadcast term
@@ -366,8 +189,12 @@ def proximity_match_stored(
     pruned = prune_blocks_for_terms(positional_blocks, tset, n_term_buckets)
     hits = decode_position_codes(pruned, tset)
     if n > 1:
-        # intersection-first pruning (see proximity_match_postings): shrink
-        # to docs containing ALL n terms before the W× window explode
+        # Intersection-first pruning: the window explode multiplies every
+        # posting by W, so feeding it a scorching-hot term's full posting
+        # list is the scale bottleneck (measured 6x slower than the scan
+        # twin at 100k docs on {def,hash,user} without it). A doc lacking
+        # ANY query term cannot produce a window — shrink to docs containing
+        # ALL n terms first, one map-side-combinable shuffle.
         cand = (
             hits.groupBy("doc_id")
             .agg(F.count_distinct("code").alias("_nt"))
@@ -400,7 +227,7 @@ def proximity_match_scan(
     text_col: str = "text",
     id_col: str = "doc_id",
 ) -> DataFrame:
-    """Scan-path twin of :func:`proximity_match`: one array expression, no
+    """Scan-path twin of :func:`proximity_match_stored`: one array expression, no
     index — every start ``s`` (1-based) whose (end-truncated) ``window``-token
     slice contains all distinct terms."""
     tset = sorted(set(terms))

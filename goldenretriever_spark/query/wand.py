@@ -26,8 +26,6 @@ lookup into a partition-pruned parquet scan.
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -257,7 +255,7 @@ WAND_CROSSOVER_DECODE_ROWS = 4_500_000
 # The batch MEAN was the r4 signal and misroutes skewed batches — a 25/25
 # one-term/five-term mix has mean 3.9 M (< crossover -> brute, 87.7 s)
 # while forced WAND runs 50.0 s because the heavy half dominates runtime
-# (BENCH/WAND_MIXED.json). Overridable via $SPARK_GRAFT_WAND_HEAVY_SHARE.
+# (BENCH/WAND_MIXED.json).
 WAND_HEAVY_SHARE_MIN = 0.2
 
 # Wide-batch single-exchange scoring (repartition(query_id) serving both the
@@ -315,7 +313,6 @@ def dispatch_top_k(
     seed_factor: int = 4,
     n_term_buckets: int | None = None,
     crossover_rows: int | None = None,
-    split: bool = False,
     stats: tuple[int, float] | None = None,
     allowed_bc=None,
     term_df_cache: dict | None = None,
@@ -328,8 +325,7 @@ def dispatch_top_k(
     filtered query reuses the measured brute/WAND dispatch unchanged
     (query/boolean.filtered_top_k).
 
-    Always returns ``(result, plan)`` — the stable-shape API (ADVICE r4);
-    ``top_k_auto`` is the thin wrapper for callers that only want the frame.
+    Always returns ``(result, plan)`` — the stable-shape API (ADVICE r4).
 
     Both paths answer from the same compressed blocks and are rank-identical
     (tests/test_wand.py); the ONLY difference is whether the θ-pruning
@@ -342,18 +338,16 @@ def dispatch_top_k(
     heavy-dominated batches are where pruning pays, and the volume SHARE —
     unlike the r4 batch mean — routes skewed mixes correctly). The plan
     records mean/max volume, per-query above/below counts and the heavy
-    share. Thresholds overridable per call or via
-    $SPARK_GRAFT_WAND_CROSSOVER_ROWS / $SPARK_GRAFT_WAND_HEAVY_SHARE.
+    share. ``crossover_rows`` overrides the crossover per call.
 
-    ``split=True`` instead routes EACH query to its own winning path and
-    unions the two results. Measured and rejected as the default
+    The WHOLE batch takes one path. Routing each query to its own winning
+    path and unioning the two results was measured and removed
     (BENCH/WAND_MIXED.json, 3.84 M docs): even on a designed 50/50
-    one-term/five-term batch the split ran 0.62-0.67× of EITHER forced
-    single path, because one-path batched execution amortizes the blocks
-    scan, decode and ranking machinery across the whole batch while the
-    split serializes two job sets — and WAND's penalty on the low-volume
-    half (0.87-0.97×) is far smaller than that amortization loss. Kept as
-    an explicit opt-in for re-measurement on other hosts/workloads.
+    one-term/five-term batch it ran 0.62-0.67× of EITHER forced single
+    path, because one-path batched execution amortizes the blocks scan,
+    decode and ranking machinery across the whole batch while a split
+    serializes two job sets — and WAND's penalty on the low-volume half
+    (0.87-0.97×) is far smaller than that amortization loss.
 
     Fixed-overhead control on the hot serving row:
     - corpus_stats is collected ONCE here and handed to the routed path(s);
@@ -366,11 +360,7 @@ def dispatch_top_k(
       qterms is NOT localCheckpoint-ed (single consumer — the brute path).
     """
     if crossover_rows is None:
-        crossover_rows = int(
-            os.environ.get(
-                "SPARK_GRAFT_WAND_CROSSOVER_ROWS", WAND_CROSSOVER_DECODE_ROWS
-            )
-        )
+        crossover_rows = WAND_CROSSOVER_DECODE_ROWS
     if stats is None:
         row = corpus_stats.collect()[0]
         stats = (int(row["n_docs"]), float(row["avgdl"]))
@@ -472,9 +462,6 @@ def dispatch_top_k(
     total = sum(vals)
     heavy = sum(est_rows[q] for q in above)
     heavy_share = heavy / total if total else 0.0
-    share_min = float(
-        os.environ.get("SPARK_GRAFT_WAND_HEAVY_SHARE", WAND_HEAVY_SHARE_MIN)
-    )
     plan.update(
         {
             "probed": True,
@@ -483,65 +470,24 @@ def dispatch_top_k(
             "n_above": len(above),
             "n_below": len(below),
             "heavy_volume_share": round(heavy_share, 3),
-            "heavy_share_min": share_min,
+            "heavy_share_min": WAND_HEAVY_SHARE_MIN,
         }
     )
-
-    def run_wand(qt: DataFrame) -> DataFrame:
-        return wand_top_k(
+    if heavy_share >= WAND_HEAVY_SHARE_MIN:
+        plan["path"] = "wand"
+        out = wand_top_k(
             spark, pruned, corpus_stats, queries, k=k,
             tokenizer=tokenizer, seed_factor=seed_factor, n_term_buckets=None,
-            qterms=qt, stats=stats, allowed_bc=allowed_bc, quantize=quantize,
+            qterms=qterms_all, stats=stats, allowed_bc=allowed_bc, quantize=quantize,
         )
-
-    def run_brute(qt: DataFrame) -> DataFrame:
-        return brute_top_k_stored(
-            spark, pruned, corpus_stats, queries, k=k,
-            tokenizer=tokenizer, n_term_buckets=None, qterms=qt, stats=stats,
-            allowed_bc=allowed_bc, quantize=quantize,
-        )
-
-    if not split or not above or not below:
-        # one path for the whole batch, routed by heavy-volume share —
-        # batched one-path execution amortizes scan/decode/rank machinery
-        # across every query (see the split docstring for the measurement)
-        if heavy_share >= share_min:
-            plan["path"] = "wand"
-            return run_wand(qterms_all), plan
-        plan["path"] = "brute_stored"
-        return run_brute(qterms_all), plan
-    plan["path"] = "split"
-    if qterms_all is None:
-        qterms_all = query_terms_df(spark, queries, tokenizer)
-    wand_out = run_wand(qterms_all.filter(F.col("query_id").isin(above)))
-    brute_out = run_brute(qterms_all.filter(F.col("query_id").isin(below)))
-    return wand_out.unionByName(brute_out), plan
-
-
-def top_k_auto(
-    spark: SparkSession,
-    posting_blocks: DataFrame,
-    corpus_stats: DataFrame,
-    queries,
-    k: int = 10,
-    tokenizer: str = "simple",
-    seed_factor: int = 4,
-    n_term_buckets: int | None = None,
-    crossover_rows: int | None = None,
-    return_plan: bool = False,
-    split: bool = False,
-) -> DataFrame:
-    """Thin wrapper over :func:`dispatch_top_k` (which see for dispatch
-    semantics). Returns the result frame; ``return_plan=True`` returns
-    ``(result, plan)``. Call sites that toggle the flag dynamically should
-    call ``dispatch_top_k`` directly — its return shape never changes."""
-    out, plan = dispatch_top_k(
-        spark, posting_blocks, corpus_stats, queries, k=k, tokenizer=tokenizer,
-        seed_factor=seed_factor, n_term_buckets=n_term_buckets,
-        crossover_rows=crossover_rows, split=split,
+        return out, plan
+    plan["path"] = "brute_stored"
+    out = brute_top_k_stored(
+        spark, pruned, corpus_stats, queries, k=k,
+        tokenizer=tokenizer, n_term_buckets=None, qterms=qterms_all, stats=stats,
+        allowed_bc=allowed_bc, quantize=quantize,
     )
-    return (out, plan) if return_plan else out
-
+    return out, plan
 
 def wand_top_k(
     spark: SparkSession,

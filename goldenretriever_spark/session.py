@@ -50,15 +50,11 @@ def get_spark(
         # GC threads pinned to the allotted cores: a containerized executor
         # with N cores gets ~N GC threads; unpinned, a local[2] JVM on a
         # 32-core host steals 32 GC threads and overstates small-N throughput
-        # in scaling measurements (set SPARK_GRAFT_PIN_GC=0 to disable)
+        # in scaling measurements
         .config(
             "spark.driver.extraJavaOptions",
             "-XX:+UseParallelGC"
-            + (
-                f" -XX:ParallelGCThreads={max(int(cores), 1)}"
-                if str(cores).isdigit() and os.environ.get("SPARK_GRAFT_PIN_GC", "1") == "1"
-                else ""
-            ),
+            + (f" -XX:ParallelGCThreads={max(int(cores), 1)}" if str(cores).isdigit() else ""),
         )
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
@@ -67,28 +63,18 @@ def get_spark(
         # In pure local[N] mode shuffle blocks never cross a NIC and live in
         # the page cache, so lz4 is pure CPU overhead — measured ~15-20% off
         # the pack rows (OPTIMIZATION_r07.md confsweep). Any distributed
-        # master (local-cluster, standalone, yarn, k8s) keeps compression ON;
-        # override either way with SPARK_GRAFT_SHUFFLE_COMPRESS=true/false.
+        # master (local-cluster, standalone, yarn, k8s) keeps compression ON.
         .config(
-            "spark.shuffle.compress",
-            os.environ.get(
-                "SPARK_GRAFT_SHUFFLE_COMPRESS",
-                "false" if master.startswith("local[") else "true",
-            ),
+            "spark.shuffle.compress", "false" if master.startswith("local[") else "true"
         )
         # CPU-heavy per-row work (tokenize+explode) needs more input splits
         # than the 128MB default gives on small-ish files; 4MB/256KB measured
         # best on the bench corpora (r7 split sweep, OPTIMIZATION_r07.md).
         # Production sequential scans over 128MB+ parquet files should
-        # override toward 512MB-1GB (guide §6) via these env knobs.
-        .config(
-            "spark.sql.files.maxPartitionBytes",
-            os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", str(4 * 1024 * 1024)),
-        )
-        .config(
-            "spark.sql.files.openCostInBytes",
-            os.environ.get("SPARK_GRAFT_OPEN_COST_BYTES", str(256 * 1024)),
-        )
+        # override toward 512MB-1GB (guide §6) via ``extra_conf``, which
+        # overrides every setting here.
+        .config("spark.sql.files.maxPartitionBytes", str(4 * 1024 * 1024))
+        .config("spark.sql.files.openCostInBytes", str(256 * 1024))
     )
     if master.startswith("local-cluster"):
         # third bracket param is WORKER memory (MB); executor memory must fit

@@ -151,7 +151,7 @@ def compact_streamed_index(
     the compressed, term-bucketed stored index (the serving format), closing
     the ingest->serve loop: readStream appends postings continuously;
     this job runs on a schedule and republishes the block index that
-    StoredIndex.search / top_k_auto answer from. The appended postings are
+    StoredIndex.search / wand.dispatch_top_k answer from. The appended postings are
     already (term, doc_id)-unique (batch dedupe above), so compaction is
     exactly the batch pack — no merge pass.
 

@@ -1,22 +1,25 @@
 """Phrase search over positional postings (query/phrase.py).
 
-Cross-checks the index path (broadcast phrase join over posexplode
-positions) against the scan path (single array expression) and against a
-pure-Python sliding-window reference on randomized corpora, plus the
-overlap / duplicate-term / short-doc edge cases, plus a roundtrip of
-position arrays through the grouped delta-varint codec (positions are
+Cross-checks the stored path (positional blocks packed from the rows,
+fused decode + start-vote) against the scan path (single array expression)
+and against a pure-Python sliding-window reference on randomized corpora,
+plus the overlap / duplicate-term / short-doc edge cases, plus a roundtrip
+of position arrays through the grouped delta-varint codec (positions are
 sorted ints exactly like doc-id runs, so the same storage format applies).
 """
 
 import random
+from functools import lru_cache
 
 import numpy as np
 import pytest
 
+from goldenretriever_spark.index.positions import pack_positional_blocks, positional_rows
 from goldenretriever_spark.query.phrase import (
-    phrase_match,
     phrase_match_scan,
-    positional_postings,
+    phrase_match_stored,
+    proximity_match_scan,
+    proximity_match_stored,
 )
 
 
@@ -31,16 +34,31 @@ def _tokens(text: str) -> list[str]:
     return [t for t in text.lower().strip().split() if t]
 
 
+def _docs(spark, rows):
+    return spark.createDataFrame(list(rows), "doc_id long, text string")
+
+
+@lru_cache(maxsize=2)
+def _blocks(spark, rows: tuple):
+    """Positional blocks packed from the tiny rows; 4-doc blocks so a term's
+    postings span several blocks."""
+    content = _docs(spark, rows).withColumnRenamed("text", "content")
+    return pack_positional_blocks(content, n_term_buckets=4, block_docs=4).localCheckpoint(
+        eager=True
+    )
+
+
 def _check(spark, rows, phrase):
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    idx = sorted(map(tuple, phrase_match(docs, phrase).collect()))
+    rows = tuple(rows)
+    docs = _docs(spark, rows)
+    stored = sorted(map(tuple, phrase_match_stored(_blocks(spark, rows), phrase).collect()))
     scan = sorted(map(tuple, phrase_match_scan(docs, phrase).collect()))
     ref = sorted(
         (d, _py_occurrences(_tokens(t), phrase))
         for d, t in rows
         if _py_occurrences(_tokens(t), phrase) > 0
     )
-    assert idx == scan == ref
+    assert stored == scan == ref
     return ref
 
 
@@ -80,18 +98,16 @@ def test_phrase_case_and_whitespace_normalization(spark):
 
 
 def test_phrase_empty_raises(spark):
-    docs = spark.createDataFrame([(1, "a")], "doc_id long, text string")
+    rows = ((1, "a"),)
     with pytest.raises(ValueError):
-        phrase_match(docs, [])
+        phrase_match_stored(_blocks(spark, rows), [])
     with pytest.raises(ValueError):
-        phrase_match_scan(docs, [])
+        phrase_match_scan(_docs(spark, rows), [])
 
 
-def test_positional_postings_positions(spark):
-    docs = spark.createDataFrame([(1, "a b a")], "doc_id long, text string")
-    got = sorted(
-        map(tuple, positional_postings(docs).select("term", "doc_id", "pos").collect())
-    )
+def test_positional_rows_positions(spark):
+    docs = _docs(spark, [(1, "a b a")]).withColumnRenamed("text", "content")
+    got = sorted(map(tuple, positional_rows(docs).collect()))
     assert got == [("a", 1, 0), ("a", 1, 2), ("b", 1, 1)]
 
 
@@ -129,20 +145,17 @@ def _py_windows(tokens: list[str], terms: list[str], w: int) -> int:
 
 
 def _check_prox(spark, rows, terms, w):
-    from goldenretriever_spark.query.phrase import (
-        proximity_match,
-        proximity_match_scan,
-    )
-
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    idx = sorted(map(tuple, proximity_match(docs, terms, w).collect()))
+    rows = tuple(rows)
+    docs = _docs(spark, rows)
+    blocks = _blocks(spark, rows)
+    stored = sorted(map(tuple, proximity_match_stored(blocks, terms, w).collect()))
     scan = sorted(map(tuple, proximity_match_scan(docs, terms, w).collect()))
     ref = sorted(
         (d, _py_windows(_tokens(t), terms, w))
         for d, t in rows
         if _py_windows(_tokens(t), terms, w) > 0
     )
-    assert idx == scan == ref
+    assert stored == scan == ref
     return ref
 
 
@@ -195,15 +208,11 @@ def test_proximity_randomized_cross_check(spark):
 
 
 def test_proximity_invalid_args(spark):
-    from goldenretriever_spark.query.phrase import (
-        proximity_match,
-        proximity_match_scan,
-    )
-
-    docs = spark.createDataFrame([(1, "a")], "doc_id long, text string")
+    rows = ((1, "a"),)
+    blocks = _blocks(spark, rows)
     with pytest.raises(ValueError):
-        proximity_match(docs, [], 3)
+        proximity_match_stored(blocks, [], 3)
     with pytest.raises(ValueError):
-        proximity_match(docs, ["a"], 0)
+        proximity_match_stored(blocks, ["a"], 0)
     with pytest.raises(ValueError):
-        proximity_match_scan(docs, ["a"], 0)
+        proximity_match_scan(_docs(spark, rows), ["a"], 0)

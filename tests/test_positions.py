@@ -14,9 +14,9 @@ from goldenretriever_spark.index.positions import (
     prune_blocks_for_terms,
 )
 from goldenretriever_spark.query.phrase import (
-    phrase_match,
+    phrase_match_scan,
     phrase_match_stored,
-    proximity_match,
+    proximity_match_scan,
     proximity_match_stored,
 )
 
@@ -84,7 +84,7 @@ def test_stored_phrase_matches_scan(spark, built):
     raw, blocks = built
     docs = raw.withColumn("doc_id", F.xxhash64("repo", "path", "commit"))
     for ph in PHRASES:
-        scan = _rows(phrase_match(docs, ph, text_col="content"))
+        scan = _rows(phrase_match_scan(docs, ph, text_col="content"))
         stored = _rows(phrase_match_stored(blocks, ph, n_term_buckets=8))
         assert stored == scan, f"phrase {ph} diverged"
     # at least one of the fixed phrases must actually match something
@@ -98,7 +98,7 @@ def test_stored_proximity_matches_scan(spark, built):
     docs = raw.withColumn("doc_id", F.xxhash64("repo", "path", "commit"))
     cases = [(["def", "return"], 6), (["for", "in", "range"], 5)]
     for terms, w in cases:
-        scan = _rows(proximity_match(docs, terms, w, text_col="content"))
+        scan = _rows(proximity_match_scan(docs, terms, w, text_col="content"))
         stored = _rows(proximity_match_stored(blocks, terms, w, n_term_buckets=8))
         assert stored == scan, f"proximity {terms} w={w} diverged"
 
@@ -143,11 +143,11 @@ def test_stored_index_phrase_end_to_end(spark, tmp_path):
     docs = with_doc_ids(raw).select("doc_id", "content")
     ph = ["return", "None"]
     assert _rows(stored.phrase(ph)) == _rows(
-        phrase_match(docs, ph, text_col="content")
+        phrase_match_scan(docs, ph, text_col="content")
     )
     terms, w = ["def", "return"], 8
     assert _rows(stored.proximity(terms, w)) == _rows(
-        proximity_match(docs, terms, w, text_col="content")
+        proximity_match_scan(docs, terms, w, text_col="content")
     )
 
 

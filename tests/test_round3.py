@@ -143,7 +143,7 @@ def test_jdbc_option_plumbing():
 
 
 def test_stored_index_search_dispatch(spark, tmp_path):
-    """StoredIndex.search = write_index -> top_k_auto with the persisted
+    """StoredIndex.search = write_index -> dispatch_top_k with the persisted
     bucket count; must equal the in-memory brute ranking."""
     import math
 
@@ -192,8 +192,8 @@ def test_multiprobe_radius2_recall_superset(spark):
     from goldenretriever_spark.operators import ann
 
     sf = "/root/testdata/sf0.001"
-    r1 = {(r["query_id"], r["vec_id"]) for r in ann.q_ann_lsh_multiprobe(spark, sf, k=20, radius=1).collect()}
-    r2 = ann.q_ann_lsh_multiprobe(spark, sf, k=20, radius=2)
+    r1 = {(r["query_id"], r["vec_id"]) for r in ann.q_ann_lsh(spark, sf, k=20, radius=1).collect()}
+    r2 = ann.q_ann_lsh(spark, sf, k=20, radius=2)
     assert r2.count() >= len(r1)
 
 

@@ -1,5 +1,5 @@
 """Round-5 coverage: pinned trained-IVF codebook (oracle drift guard),
-large-star/small-star connected components vs pointer doubling, and the
+large-star/small-star connected components vs union-find, and the
 non-convergence guard ADVICE r4 asked for."""
 
 import pytest
@@ -24,83 +24,78 @@ def test_trained_codebook_matches_pinned(spark):
 
 
 # ---------------------------------------------------------------------------
-# connected components: star alternation vs pointer doubling (VERDICT r4 #6)
+# connected components: star alternation vs union-find (VERDICT r4 #6)
 # ---------------------------------------------------------------------------
 
 def _components(df):
     return {(r["id"], r["component"]) for r in df.collect()}
 
 
-def _random_edges(spark, n_nodes=200, n_edges=300, seed=17):
+def _union_find(edge_list):
+    """Reference (id, min reachable id) pairs over every edge endpoint."""
+    parent = {x: x for e in edge_list for x in e}
+
+    def find(x):
+        while parent[x] != x:
+            x = parent[x]
+        return x
+
+    for a, b in edge_list:
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    return {(x, find(x)) for x in parent}
+
+
+def _random_edges(n_nodes=200, n_edges=300, seed=17):
     import numpy as np
 
     rng = np.random.default_rng(seed)
-    pairs = rng.integers(0, n_nodes, size=(n_edges, 2)).tolist()
-    return spark.createDataFrame(
-        [(int(a), int(b)) for a, b in pairs], "doc_a long, doc_b long"
-    )
+    return [(int(a), int(b)) for a, b in rng.integers(0, n_nodes, size=(n_edges, 2))]
 
 
-def _chain_edges(spark, n=400):
+def _chain_edges(n=400):
     """Adversarial long chain: diameter n-1, the worst case for plain
     neighbor propagation and a giant single component funneling every label
     through one value — the skew case the star variant is for."""
-    return spark.createDataFrame(
-        [(i, i + 1) for i in range(n)], "doc_a long, doc_b long"
-    )
+    return [(i, i + 1) for i in range(n)]
+
+
+def _edges_df(spark, edge_list):
+    return spark.createDataFrame(edge_list, "doc_a long, doc_b long")
 
 
 @pytest.mark.parametrize("graph", ["random", "chain"])
 def test_star_equals_pointer_doubling(spark, graph):
-    from goldenretriever_spark.operators.dedup import (
-        connected_components,
-        connected_components_star,
-    )
+    """The star rewrites equal a union-find reference (the name predates
+    the removal of the pointer-doubling variant this once compared to)."""
+    from goldenretriever_spark.operators.dedup import connected_components_star
 
-    edges = (
-        _random_edges(spark) if graph == "random" else _chain_edges(spark)
+    edge_list = _random_edges() if graph == "random" else _chain_edges()
+    star_out = _components(
+        connected_components_star(_edges_df(spark, edge_list), max_iter=60)
     )
-    pd_out = _components(connected_components(edges, max_iter=40))
-    star_out = _components(connected_components_star(edges, max_iter=60))
-    assert pd_out == star_out
-    # every label is the component minimum: no label exceeds its node id's
-    # reachable min — spot-check the chain collapses to a single 0 component
+    assert star_out == _union_find(edge_list)
     if graph == "chain":
-        assert {c for _, c in star_out} == {0}
+        assert star_out == {(i, 0) for i in range(401)}
 
 
 def test_star_handles_self_loops_and_duplicates(spark):
-    from goldenretriever_spark.operators.dedup import (
-        connected_components,
-        connected_components_star,
-    )
+    from goldenretriever_spark.operators.dedup import connected_components_star
 
-    edges = spark.createDataFrame(
-        [(5, 5), (1, 2), (2, 1), (2, 3), (7, 8), (8, 7), (9, 9)],
-        "doc_a long, doc_b long",
-    )
-    star_out = _components(connected_components_star(edges))
-    pd_out = _components(connected_components(edges))
-    # ADVICE r5: both variants cover the SAME node set — a node appearing
-    # only in self-loop edges is a singleton component of itself
-    assert pd_out == star_out
+    edge_list = [(5, 5), (1, 2), (2, 1), (2, 3), (7, 8), (8, 7), (9, 9)]
+    star_out = _components(connected_components_star(_edges_df(spark, edge_list)))
+    # ADVICE r5: a node appearing only in self-loop edges is a singleton
+    # component of itself
+    assert star_out == _union_find(edge_list)
     assert star_out == {(1, 1), (2, 1), (3, 1), (5, 5), (7, 7), (8, 7), (9, 9)}
 
 
 def test_nonconvergence_raises_and_warns(spark):
     """ADVICE r4: exhausting max_iter must not silently return wrong labels
-    — strict (default) raises, strict=False warns and returns partials."""
-    from goldenretriever_spark.operators.dedup import (
-        connected_components,
-        connected_components_star,
-    )
+    — non-convergence raises."""
+    from goldenretriever_spark.operators.dedup import connected_components_star
 
-    chain = _chain_edges(spark, n=60)  # needs ~log2(60) ≈ 6 doubling rounds
-    with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(chain, max_iter=1)
-    with pytest.warns(RuntimeWarning, match="did not converge"):
-        out = connected_components(chain, max_iter=1, strict=False)
-        assert out.count() == 61  # partial labels still one row per node
+    chain = _edges_df(spark, _chain_edges(n=60))
     with pytest.raises(RuntimeError, match="did not converge"):
         connected_components_star(chain, max_iter=1)
 

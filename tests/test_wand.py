@@ -89,10 +89,10 @@ def test_wand_prunes_something(built, spark):
     assert res.count() == 5
 
 
-def test_top_k_auto_dispatch_both_sides(built, spark):
-    """top_k_auto must be rank-identical to brute force on BOTH sides of the
-    crossover threshold (the dispatch changes the plan, never the answer)."""
-    from goldenretriever_spark.query.wand import top_k_auto
+def test_dispatch_top_k_both_sides(built, spark):
+    """dispatch_top_k must be rank-identical to brute force on BOTH sides of
+    the crossover threshold (the dispatch changes the plan, never the answer)."""
+    from goldenretriever_spark.query.wand import dispatch_top_k
 
     idx, blocks = built
     queries = corpus.reference_queries(15, seed=7)
@@ -100,13 +100,12 @@ def test_top_k_auto_dispatch_both_sides(built, spark):
     terms = bm25.query_terms_df(spark, qlist)
     brute = _collect_ranked(bm25.top_k(idx, terms, k=K).collect())
     # decode-rows crossover above any possible volume -> brute-stored path;
-    # at 0 every query clears it -> WAND path (a batch with absent-term
-    # queries would SPLIT at 1, which is its own test below); the plan
-    # record must confirm the route taken
+    # at 0 every query clears it -> WAND path; the plan record must confirm
+    # the route taken
     for crossover_rows, want_path in ((10**15, "brute_stored"), (0, "wand")):
-        out, plan = top_k_auto(
+        out, plan = dispatch_top_k(
             spark, blocks, idx.corpus_stats, qlist, k=K,
-            crossover_rows=crossover_rows, return_plan=True,
+            crossover_rows=crossover_rows,
         )
         assert plan["path"] == want_path, plan
         auto = _collect_ranked(out.collect())
@@ -174,45 +173,3 @@ def test_dispatch_is_volume_aware(built, spark):
         for qid in brute:
             assert [d for d, _ in brute[qid]] == [d for d, _ in auto[qid]]
     assert paths == {1: "brute_stored", 5: "wand"}
-
-
-def test_mixed_batch_split_optin(built, spark):
-    """VERDICT r4 #5 correctness half: split=True routes each query to its
-    own path (plan path 'split') and the unioned result is rank-identical
-    to brute force on every query. (The PERFORMANCE half was measured at
-    3.84 M docs and rejected as the default — BENCH/WAND_MIXED.json: the
-    split ran 0.62-0.67x of either forced single path because one-path
-    batched execution amortizes the scan/decode machinery — so split stays
-    an explicit opt-in and the default routes the WHOLE batch by the share
-    of decode volume sitting in heavy queries.)"""
-    from goldenretriever_spark.query.wand import dispatch_top_k, estimate_decode_rows
-
-    idx, blocks = built
-    q1 = corpus.fixed_length_queries(10, n_terms=1, seed=3)
-    q5 = corpus.fixed_length_queries(10, n_terms=5, seed=3)
-    qlist = [(int(r.query_id), r.query_str) for r in q1.itertuples()] + [
-        (100 + int(r.query_id), r.query_str) for r in q5.itertuples()
-    ]
-    est = {
-        r["query_id"]: int(r["est_rows"])
-        for r in estimate_decode_rows(
-            blocks, bm25.query_terms_df(spark, qlist)
-        ).collect()
-    }
-    vals = sorted(est.values())
-    threshold = vals[len(vals) // 2]  # median -> both sides non-empty
-    out, plan = dispatch_top_k(
-        spark, blocks, idx.corpus_stats, qlist, k=K, crossover_rows=threshold,
-        split=True,
-    )
-    assert plan["path"] == "split", plan
-    assert plan["n_above"] == sum(1 for v in est.values() if v >= threshold)
-    assert plan["n_above"] + plan["n_below"] == len(qlist)
-    terms = bm25.query_terms_df(spark, qlist)
-    brute = _collect_ranked(bm25.top_k(idx, terms, k=K).collect())
-    auto = _collect_ranked(out.collect())
-    assert set(brute) == set(auto)
-    for qid in brute:
-        assert [d for d, _ in brute[qid]] == [d for d, _ in auto[qid]], f"q{qid}"
-        for (_, sb), (_, sp) in zip(brute[qid], auto[qid]):
-            assert math.isclose(sb, sp, rel_tol=1e-9)

@@ -102,14 +102,14 @@ def main() -> None:
     truth = _topk_sets(ann.q_ann_brute_topk(spark, sf_dir, k=k, n_queries=n_queries).collect())
 
     variants = {
-        "lsh_single_probe": lambda: ann.q_ann_lsh_topk(spark, sf_dir, k=k, n_queries=n_queries),
-        "lsh_multiprobe_r1": lambda: ann.q_ann_lsh_multiprobe(
+        "lsh_single_probe": lambda: ann.q_ann_lsh(spark, sf_dir, k=k, n_queries=n_queries),
+        "lsh_multiprobe_r1": lambda: ann.q_ann_lsh(
             spark, sf_dir, k=k, radius=1, n_queries=n_queries
         ),
-        "lsh_multiprobe_r2": lambda: ann.q_ann_lsh_multiprobe(
+        "lsh_multiprobe_r2": lambda: ann.q_ann_lsh(
             spark, sf_dir, k=k, radius=2, n_queries=n_queries
         ),
-        "lsh_multitable_L4": lambda: ann.q_ann_lsh_multitable(
+        "lsh_multitable_L4": lambda: ann.q_ann_lsh(
             spark, sf_dir, k=k, n_tables=4, n_queries=n_queries
         ),
         "ivf_c8_probe2": lambda: ann.q_ann_ivf_topk(

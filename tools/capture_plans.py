@@ -80,16 +80,6 @@ def main() -> None:
             None,  # built below: needs both legs constructed first
         ),
         (
-            "Phrase match (positional start-vote, index path)",
-            "The arrays-contain conjunction prunes non-candidate docs BEFORE "
-            "posexplode (PushedFilters stay on the scan for parquet sources); "
-            "phrase offsets are a BroadcastHashJoin (2-row frame); both "
-            "groupBys are 2-phase HashAggregate with map-side combine over "
-            "(doc_id, start) — high-cardinality keys, no reducer hot-spot; "
-            "no Python anywhere in the plan.",
-            None,  # built below from the loaded docs frame
-        ),
-        (
             "ANN IVF (broadcast centroids, probe 2 lists)",
             "Centroid cross-joins are BroadcastNestedLoopJoin over a "
             "broadcast-hinted 8-row table (intended: assignment needs every "
@@ -116,14 +106,6 @@ def main() -> None:
     )
     sections[4] = (sections[4][0], sections[4][1], rrf_fuse([lex, vec], k=10))
 
-    from goldenretriever_spark.query.phrase import phrase_match
-
-    sections[5] = (
-        sections[5][0],
-        sections[5][1],
-        phrase_match(docs, ["hash", "join"], text_col="content"),
-    )
-
     # r6: stored positional serving + IVF from persisted lists (plans read
     # from real partitioned parquet so PartitionFilters show up)
     import tempfile
@@ -149,9 +131,8 @@ def main() -> None:
             "No corpus scan, no tokenizer: the scan reads positional_blocks "
             "with PartitionFilters on term_bucket (only the phrase terms' "
             "bucket directories listed) + a pushed term isin filter; decode "
-            "is one Arrow-batched mapInPandas; the start-vote aggs are the "
-            "same 2-phase map-side-combinable HashAggregates as the scan "
-            "path.",
+            "is one Arrow-batched mapInPandas that emits start votes; the "
+            "vote aggs share one Exchange on (query_id, doc_id).",
             phrase_match_stored(pos, ["hash", "join"], n_term_buckets=8),
         )
     )

@@ -82,11 +82,13 @@ def main() -> int:
         orows = [tuple(norm_value(v) for v in row) for row in ores.fetchall()]
         ok_count = len(srows) == len(orows)
         ok_schema = sorted(scols) == sorted(ocols)
-        ok_hash = value_hash(srows, scols) == value_hash(orows, ocols)
+        s_hash = value_hash(srows, scols)
+        ok_hash = s_hash == value_hash(orows, ocols)
         status = "OK" if (ok_count and ok_schema and ok_hash) else "FAIL"
         print(
             f"{name}: {status} rows={len(srows)}/{len(orows)} "
-            f"schema={'OK' if ok_schema else f'{sorted(scols)} vs {sorted(ocols)}'} hash={'OK' if ok_hash else 'MISMATCH'}"
+            f"schema={'OK' if ok_schema else f'{sorted(scols)} vs {sorted(ocols)}'} hash={'OK' if ok_hash else 'MISMATCH'} "
+            f"value_hash={s_hash[:16]}"
         )
         if status == "FAIL":
             failures.append(name)

@@ -59,7 +59,7 @@ def main() -> None:
     from goldenretriever_spark.query.phrase import (
         phrase_match_scan,
         phrase_match_stored,
-        proximity_match,
+        proximity_match_scan,
         proximity_match_stored,
     )
     from goldenretriever_spark.session import get_spark
@@ -121,7 +121,7 @@ def main() -> None:
         lambda: proximity_match_stored(pos_blocks, PROX_TERMS, PROX_WINDOW, n_term_buckets=nb)
     )
     t_pscan, r_pscan = best(
-        lambda: proximity_match(docs, PROX_TERMS, PROX_WINDOW, text_col="content"),
+        lambda: proximity_match_scan(docs, PROX_TERMS, PROX_WINDOW, text_col="content"),
         scan_runs,
     )
     assert r_pstored == r_pscan, "proximity stored != scan"
@@ -147,8 +147,9 @@ def main() -> None:
         "note": (
             "stored = phrase_match_stored over persisted positional blocks "
             "(term_bucket partition pruning + term filter, delta-varint decode); "
-            "scan = phrase_match_scan single-expression twin over the raw corpus "
-            "(re-tokenizes every doc). Identity asserted on full sorted results."
+            "scan = phrase_match_scan / proximity_match_scan single-expression "
+            "twins over the raw corpus (re-tokenize every doc). Identity "
+            "asserted on full sorted results."
         ),
     }
     os.makedirs(os.path.join(REPO, "BENCH"), exist_ok=True)

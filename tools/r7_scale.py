@@ -67,7 +67,7 @@ def main() -> None:
     )
     from goldenretriever_spark.query.wand import (
         brute_top_k_stored,
-        top_k_auto,
+        dispatch_top_k,
         wand_top_k,
     )
     from goldenretriever_spark.session import get_spark
@@ -157,7 +157,9 @@ def main() -> None:
             cell["wand_sec"] = round(t, 2)
             cell["r6_wand_sec"] = R6[f"wand_qlen{qlen}_k10_sec"]
         sc.setJobDescription(f"r7_scale auto qlen{qlen}")
-        t, r_a = best(lambda: top_k_auto(spark, blocks, cstats, qlist, k=10, n_term_buckets=nb))
+        t, r_a = best(
+            lambda: dispatch_top_k(spark, blocks, cstats, qlist, k=10, n_term_buckets=nb)[0]
+        )
         cell["auto_sec"] = round(t, 2)
         cell["r6_auto_sec"] = R6[f"auto_qlen{qlen}_k10_sec"]
         cell["loadavg"] = loadavg()
@@ -193,7 +195,9 @@ def main() -> None:
         spark, blocks, cstats, qlist, k=10, must=[sel_term],
         n_term_buckets=nb, pushdown=False))
     sc.setJobDescription("r7_scale unfiltered auto")
-    t_unf, _ = best(lambda: top_k_auto(spark, blocks, cstats, qlist, k=10, n_term_buckets=nb))
+    t_unf, _ = best(
+        lambda: dispatch_top_k(spark, blocks, cstats, qlist, k=10, n_term_buckets=nb)[0]
+    )
     out["filtered_cell"] = {
         "batch": 50, "query_len": 5, "k": 10,
         "pushdown_sec": round(t_push, 2),

@@ -7,7 +7,7 @@ Times, on the persisted compressed index (cached under /tmp, built if
 missing) with the standard 50-query reference batch:
     brute_top_k_stored  (unpruned decode)
     wand_top_k          (block-max pruning)
-    top_k_auto          (volume-aware dispatch + its actual decision)
+    dispatch_top_k      (volume-aware dispatch + its actual decision)
 Writes BENCH/SCALE_POINT.json. Rank-identity asserted across all three.
 
 Usage: python tools/scale_point.py [n_docs] [--runs R]   (default 3840000, 1)
@@ -30,7 +30,7 @@ def main() -> None:
     from goldenretriever_spark.index.storage import StoredIndex
     from goldenretriever_spark.query.wand import (
         brute_top_k_stored,
-        top_k_auto,
+        dispatch_top_k,
         wand_top_k,
     )
     from goldenretriever_spark.session import get_spark
@@ -55,9 +55,7 @@ def main() -> None:
     plan_box: dict = {}
 
     def run_auto():
-        out, plan = top_k_auto(
-            spark, blocks, cstats, qlist, k=10, n_term_buckets=nb, return_plan=True
-        )
+        out, plan = dispatch_top_k(spark, blocks, cstats, qlist, k=10, n_term_buckets=nb)
         plan_box.update(plan)
         return out
 

@@ -76,7 +76,7 @@ def sweep(n_docs: int, runs: int, ks: list[int], qlens: list[int]) -> None:
     from goldenretriever_spark.index.storage import StoredIndex
     from goldenretriever_spark.query.wand import (
         brute_top_k_stored,
-        top_k_auto,
+        dispatch_top_k,
         wand_top_k,
     )
     from goldenretriever_spark.session import get_spark
@@ -107,15 +107,14 @@ def sweep(n_docs: int, runs: int, ks: list[int], qlens: list[int]) -> None:
             }
             if k == 10:
                 # the volume-aware dispatcher on this same batch: the
-                # decision it ACTUALLY took (return_plan) + its wall time —
+                # decision it ACTUALLY took (its plan) + its wall time —
                 # the proof cell that 1-term batches route brute while
                 # 5-term batches route WAND at the same corpus size
                 plan_box = {}
 
                 def run_auto():
-                    out, plan = top_k_auto(
-                        spark, blocks, cstats, qlist, k=10,
-                        n_term_buckets=nb, return_plan=True,
+                    out, plan = dispatch_top_k(
+                        spark, blocks, cstats, qlist, k=10, n_term_buckets=nb
                     )
                     plan_box.update(plan)
                     return out
@@ -134,9 +133,8 @@ def sweep(n_docs: int, runs: int, ks: list[int], qlens: list[int]) -> None:
     plan_box = {}
 
     def run_auto_ref():
-        out, plan = top_k_auto(
-            spark, blocks, cstats, qlist, k=10, n_term_buckets=nb,
-            return_plan=True,
+        out, plan = dispatch_top_k(
+            spark, blocks, cstats, qlist, k=10, n_term_buckets=nb
         )
         plan_box.update(plan)
         return out
@@ -161,17 +159,15 @@ def sweep(n_docs: int, runs: int, ks: list[int], qlens: list[int]) -> None:
 def mixed(n_docs: int, runs: int, k: int = 10) -> None:
     """VERDICT r4 #5 measurement cell: a 50/50 batch of 1-term and 5-term
     queries at a corpus size where the two halves sit on OPPOSITE sides of
-    the decode-volume crossover. Times four routes on the same stored
-    index: forced brute-stored, forced WAND, the DEFAULT dispatcher
-    (whole batch routed by heavy-volume share, one single path), and the
-    opt-in per-query split. Outcome (first measurement, 3.84 M docs): the
-    split LOSES to both forced single paths (0.62-0.67x) — one-path batched
-    execution amortizes the blocks scan/decode/ranking machinery across the
-    whole batch, and that amortization is worth more than WAND's mild
-    penalty on the low-volume half — which is why split is opt-in and the
-    default routes the whole batch by the share of decode volume in heavy
-    queries. Rank-identity asserted across all routes. Writes
-    BENCH/WAND_MIXED.json."""
+    the decode-volume crossover. Times three routes on the same stored
+    index: forced brute-stored, forced WAND and the dispatcher (whole batch
+    routed by heavy-volume share, one single path). The committed
+    BENCH/WAND_MIXED.json (3.84 M docs) also timed a per-query split route,
+    since removed: it LOST to both forced single paths (0.62-0.67x) — one-
+    path batched execution amortizes the blocks scan/decode/ranking
+    machinery across the whole batch, and that amortization is worth more
+    than WAND's mild penalty on the low-volume half. Rank-identity asserted
+    across all routes. Writes BENCH/WAND_MIXED.json."""
     from goldenretriever_spark import corpus
     from goldenretriever_spark.index.storage import StoredIndex
     from goldenretriever_spark.query.wand import (
@@ -199,7 +195,7 @@ def mixed(n_docs: int, runs: int, k: int = 10) -> None:
     t_wand, r_wand = _time_best(
         lambda: wand_top_k(spark, blocks, cstats, qlist, k=k,
                            n_term_buckets=nb), runs)
-    auto_box, split_box = {}, {}
+    auto_box = {}
 
     def run_auto():
         out, plan = dispatch_top_k(
@@ -209,20 +205,8 @@ def mixed(n_docs: int, runs: int, k: int = 10) -> None:
         auto_box.update(plan)
         return out
 
-    def run_split():
-        out, plan = dispatch_top_k(
-            spark, blocks, cstats, qlist, k=k, n_term_buckets=nb, split=True
-        )
-        split_box.clear()
-        split_box.update(plan)
-        return out
-
     t_auto, r_auto = _time_best(run_auto, runs)
-    t_split, r_split = _time_best(run_split, runs)
-    assert (
-        _rank_key(r_brute) == _rank_key(r_wand)
-        == _rank_key(r_auto) == _rank_key(r_split)
-    )
+    assert _rank_key(r_brute) == _rank_key(r_wand) == _rank_key(r_auto)
     cell = {
         "n_docs": n_docs, "k": k, "runs": runs,
         "batch": "25x1-term + 25x5-term",
@@ -230,12 +214,7 @@ def mixed(n_docs: int, runs: int, k: int = 10) -> None:
         "forced_wand_sec": round(t_wand, 2),
         "auto_default_sec": round(t_auto, 2),
         "auto_dispatch": dict(auto_box),
-        "split_optin_sec": round(t_split, 2),
-        "split_vs_brute": round(t_brute / t_split, 2),
-        "split_vs_wand": round(t_wand / t_split, 2),
-        "split_beats_both": t_split < t_brute and t_split < t_wand,
         "auto_within_noise_of_best_single": t_auto <= min(t_brute, t_wand) * 1.15,
-        "split_dispatch": dict(split_box),
         "rank_identical": True,
     }
     print(json.dumps(cell), flush=True)
