@@ -1,10 +1,16 @@
-.PHONY: test verify bench scale scale-cluster sweep recall crossover package clean
+.PHONY: test tier1 perfbench-test verify bench scale scale-cluster sweep recall crossover package clean
 
 crossover:
 	python tools/wand_crossover.py 240000,960000,1920000 --runs=2
 
 test:
 	python -m pytest tests/ -x -q
+
+tier1:           # the ROADMAP tier-1 gate, verbatim
+	export SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local; timeout -k 10 2670 python -m pytest tests/ -q --continue-on-collection-errors -p no:cacheprovider
+
+perfbench-test:  # the benchmark's own tests (not part of tier-1)
+	python3 -m pytest perfbench/tests -q
 
 verify:
 	python tools/driver_sim.py

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from goldenretriever_spark.index.build import InvertedIndex
+from goldenretriever_spark.session import local_frame
 
 _UNSET = object()  # n_term_buckets memo sentinel (None is a valid value)
 
@@ -43,9 +44,8 @@ def write_meta(spark: SparkSession, path: str, n_term_buckets: int) -> None:
     if B at query time differs from build time the pruning silently drops the
     wrong buckets — so B is stored with the index, never trusted as a default.
     """
-    spark.createDataFrame([(n_term_buckets,)], META_SCHEMA).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(os.path.join(path, "_meta"))
+    meta = local_frame(spark, {"n_term_buckets": [n_term_buckets]}, META_SCHEMA)
+    meta.coalesce(1).write.mode("overwrite").parquet(os.path.join(path, "_meta"))
 
 
 def write_index(
@@ -99,6 +99,7 @@ class StoredIndex:
         # single-query serve latency (BENCH/SERVE_LATENCY.json)
         self._n_term_buckets: int | None | object = _UNSET
         self._stats: tuple[int, float] | None = None
+        self._corpus_stats: DataFrame | None = None
         self._posting_blocks: DataFrame | None = None
         self._positional_blocks: DataFrame | None = None
         # per-handle term -> df memo for the dispatch probe (VERDICT r6 #4):
@@ -144,7 +145,13 @@ class StoredIndex:
 
     @property
     def corpus_stats(self) -> DataFrame:
-        return self.spark.read.parquet(os.path.join(self.path, "corpus_stats"))
+        # memoized like posting_blocks: search/search_filtered/phrase_ranked
+        # pass it on every call, and each read runs a schema-inference job
+        if self._corpus_stats is None:
+            self._corpus_stats = self.spark.read.parquet(
+                os.path.join(self.path, "corpus_stats")
+            )
+        return self._corpus_stats
 
     @property
     def term_stats(self) -> DataFrame:
@@ -192,22 +199,26 @@ class StoredIndex:
         ``documents``: optional (doc_id, ...) table; when given, the ranked
         ids are joined back so results carry materialized content (the
         reference's ``make_query`` returns answer STRINGS, models.py:137-149).
-        LEFT join from the ranked frame (ADVICE r5): all n_queries x k ranked
-        rows survive, a doc_id missing from the doc table surfaces as a row
-        with null content instead of a silent gap in the rank sequence. On a
-        real warehouse the doc table is bucketed by doc_id (write_bucketed)
-        so only the tiny ranked side exchanges; an unbucketed sandbox table
-        pays one corpus shuffle here. ``with_plan=True`` also returns
-        the dispatch record (tools/serve_demo.py logs it).
+        The join is right-outer from ``documents`` (ADVICE r5): all
+        n_queries x k ranked rows survive, a doc_id missing from the doc
+        table surfaces as a row with null content instead of a silent gap in
+        the rank sequence. Spark builds an outer join on its non-preserved
+        side, here ``documents``: the executed plan is
+        ``BroadcastHashJoin RightOuter BuildLeft``, which broadcasts the
+        whole documents table on every call while it is under
+        ``spark.sql.autoBroadcastJoinThreshold``, and a sort-merge join over
+        the full table above it — an O(corpus) cost per call.
+        ``with_plan=True`` also returns the dispatch record
+        (tools/serve_demo.py logs it).
 
         ``content_pushdown=True`` (needs ``documents``) trades laziness for
         interactive latency: the ranked frame is materialized FIRST, the
         n_queries x k doc ids are collected (tiny), and the documents scan
         gets an explicit ``doc_id IN (...)`` predicate — parquet row-group
-        min/max pruning skips everything else instead of streaming the full
-        table behind the broadcast join (the 1.39 s single-query join-back
-        measured in BENCH/SERVE_LATENCY.json). Results are identical to the
-        lazy path (tests/test_round6.py)."""
+        min/max pruning skips everything else, so only the matching rows are
+        broadcast (the 1.39 s single-query join-back measured in
+        BENCH/SERVE_LATENCY.json). Results are identical to the lazy path
+        (tests/test_round6.py)."""
         from goldenretriever_spark.query.wand import dispatch_top_k
 
         ranked, plan = dispatch_top_k(
@@ -223,18 +234,17 @@ class StoredIndex:
         )
         if documents is not None:
             if content_pushdown:
-                rows = ranked.collect()
-                ids = sorted({r["doc_id"] for r in rows})
-                ranked = self.spark.createDataFrame(rows, schema=ranked.schema)
+                top = ranked.toArrow()
+                ids = sorted(set(top.column("doc_id").to_pylist()))
+                ranked = local_frame(self.spark, top, ranked.schema)
                 documents = documents.filter(F.col("doc_id").isin(ids))
-            # right-outer FROM documents (ADVICE r6): Spark cannot broadcast
-            # the left (build) side of a left-outer join, so
-            # ranked.join(documents, 'left') degraded to a full corpus
-            # sort-merge shuffle on unbucketed doc tables. Right-outer with
-            # the tiny ranked frame broadcast preserves every ranked row
-            # (same null-content semantics) while the doc table streams.
+            # right-outer FROM documents keeps every ranked row. Spark builds
+            # it on documents (BroadcastHashJoin RightOuter BuildLeft under
+            # the broadcast threshold, sort-merge above it), so this reads
+            # the whole doc table per call unless content_pushdown narrowed
+            # it; a broadcast hint on the ranked side cannot apply here.
             ranked = (
-                documents.join(F.broadcast(ranked), "doc_id", "right")
+                documents.join(ranked, "doc_id", "right")
                 .select(
                     "query_id", "doc_id", "score", "rank",
                     *[c for c in documents.columns if c != "doc_id"],
@@ -272,8 +282,9 @@ class StoredIndex:
         agg reuses the legs' partitioning — BENCH/PLANS.md 'Hybrid RRF
         fusion').
 
-        ``documents``: optional join-back, same left-join-from-ranked
-        pattern as :meth:`search` (all fused rows preserved).
+        ``documents``: optional join-back, the same right-outer join as
+        :meth:`search` (all fused rows preserved, the whole doc table read
+        per call).
         Returns (query_id, doc_id, rrf_q, rank [, doc columns])."""
         from goldenretriever_spark.operators.ann import (
             brute_topk,
@@ -298,8 +309,8 @@ class StoredIndex:
         )
         fused = rrf_fuse([lex, vec], k=k)
         if documents is not None:
-            # same broadcast-preserving right-outer as search() (ADVICE r6)
-            fused = documents.join(F.broadcast(fused), "doc_id", "right").select(
+            # same right-outer join-back, and plan, as search()
+            fused = documents.join(fused, "doc_id", "right").select(
                 "query_id", "doc_id", "rrf_q", "rank",
                 *[c for c in documents.columns if c != "doc_id"],
             )

@@ -30,6 +30,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from goldenretriever_spark.index.build import B, K1, InvertedIndex
+from goldenretriever_spark.session import local_frame
 from goldenretriever_spark.tokenizer import tokens_column
 
 def query_terms_df(spark: SparkSession, queries, tokenizer: str = "simple") -> DataFrame:
@@ -40,8 +41,10 @@ def query_terms_df(spark: SparkSession, queries, tokenizer: str = "simple") -> D
     engine tokenizer (equality-tested per input class, tests/test_round2) —
     a query batch is tiny, and the createDataFrame -> explode ->
     dropDuplicates plan it replaces paid a full shuffle + two stages inside
-    EVERY query call (r7, guide §2.4: remove shuffles outright). DataFrame
-    inputs (unknown size) keep the distributed plan."""
+    EVERY query call (r7, guide §2.4: remove shuffles outright). The terms
+    become an Arrow local relation (session.local_frame), so broadcasting
+    them runs no Spark job. DataFrame inputs (unknown size) keep the
+    distributed plan."""
     if isinstance(queries, DataFrame):
         return (
             queries.select(
@@ -57,7 +60,11 @@ def query_terms_df(spark: SparkSession, queries, tokenizer: str = "simple") -> D
         for qid, qstr in queries
         for t in dict.fromkeys(tokenize(qstr, tokenizer))
     ]
-    out = spark.createDataFrame(rows, "query_id long, term string")
+    out = local_frame(
+        spark,
+        {"query_id": [q for q, _ in rows], "term": [t for _, t in rows]},
+        "query_id long, term string",
+    )
     # batch-width hint for downstream plan selection (top_k's shared
     # agg/window exchange) — driver-known for list batches, absent otherwise
     out._gr_n_queries = len({qid for qid, _ in queries})

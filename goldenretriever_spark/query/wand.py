@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 
 from goldenretriever_spark.index.build import B, K1
 from goldenretriever_spark.query.bm25 import idf_col, query_terms_df
+from goldenretriever_spark.session import local_frame
 
 def _decode_scored(
     matched: DataFrame, avgdl: float, allowed_bc=None, repartition_q: bool = False
@@ -356,8 +357,10 @@ def dispatch_top_k(
     - for list-typed batches the max-terms bound comes from driver-side
       tokenization (oracle twin) — no Spark job.
     - the df probe is skipped when the driver-side upper bound
-      (max terms/query × n_docs) already rules WAND out, and in that case
-      qterms is NOT localCheckpoint-ed (single consumer — the brute path).
+      (max terms/query × n_docs) already rules WAND out.
+    - a list batch's query terms are an Arrow local relation, read by any
+      number of consumers without a job; only a DataFrame batch's terms
+      are localCheckpoint-ed, once.
     """
     if crossover_rows is None:
         crossover_rows = WAND_CROSSOVER_DECODE_ROWS
@@ -405,6 +408,10 @@ def dispatch_top_k(
             )
         per_q = qterms_all.groupBy("query_id").agg(F.count("*").alias("nt")).collect()
         max_terms = max((r["nt"] for r in per_q), default=0)
+    if qterms_all is None:
+        # list batch: an Arrow local relation, read by every consumer below
+        # (probe, routed path) without a job
+        qterms_all = query_terms_df(spark, queries, tokenizer)
     plan: dict = {
         "crossover_rows": crossover_rows,
         "n_docs": n_docs,
@@ -412,10 +419,7 @@ def dispatch_top_k(
     }
 
     if max_terms * n_docs < crossover_rows:
-        # probe skipped: single consumer ahead, keep qterms a lazy plan
         plan.update({"path": "brute_stored", "probed": False})
-        if qterms_all is None:
-            qterms_all = query_terms_df(spark, queries, tokenizer)
         out = brute_top_k_stored(
             spark, pruned, corpus_stats, queries, k=k,
             tokenizer=tokenizer, n_term_buckets=None, qterms=qterms_all, stats=stats,
@@ -423,11 +427,6 @@ def dispatch_top_k(
         )
         return out, plan
 
-    if qterms_all is None and (toksets is None or term_df_cache is None):
-        # several consumers from here (probe + routed paths) -> materialize
-        qterms_all = query_terms_df(spark, queries, tokenizer).localCheckpoint(
-            eager=True
-        )
     if toksets is not None and term_df_cache is not None:
         # per-handle df memo (VERDICT r6 #4): probe ONLY terms not yet seen
         # by this handle — a repeated term vocabulary (interactive serve,
@@ -604,8 +603,9 @@ def wand_top_k(
             .select("query_id", F.col("score").alias("theta"))
         )
         # schema comes from the plan, not a DDL literal: callers may pass a
-        # queries DataFrame whose query_id is not long
-        theta = spark.createDataFrame(theta_sel.collect(), theta_sel.schema)
+        # queries DataFrame whose query_id is not long. A local relation, so
+        # phase 2's broadcast of it runs no job.
+        theta = local_frame(spark, theta_sel.toArrow(), theta_sel.schema)
 
         # ---- phase 2: prune blocks, decode survivors, exact-score ----
         survivors = (

@@ -10,8 +10,11 @@ AQE coalescing trims the rest.
 from __future__ import annotations
 
 import os
+from collections.abc import Mapping, Sequence
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def get_spark(
@@ -101,3 +104,26 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(
+    spark: SparkSession,
+    data: pa.Table | Mapping[str, Sequence],
+    schema: str | StructType,
+) -> DataFrame:
+    """Driver-held rows as a DataFrame planned as a ``LocalRelation``.
+
+    ``data`` is a ``pyarrow.Table`` or a ``{column: values}`` mapping;
+    ``schema`` (DDL string or StructType) fixes the column types, so an
+    empty batch keeps them. ``createDataFrame`` over a Python list plans a
+    ``LogicalRDD`` of pickled rows instead: every broadcast or collect of it
+    runs a Spark job whose tasks start Python workers to unpickle a handful
+    of rows. An Arrow table is shipped into the plan itself, whether or not
+    ``spark.sql.execution.arrow.pyspark.enabled`` is set."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    if not isinstance(data, pa.Table):
+        data = pa.table(dict(data), schema=to_arrow_schema(schema))
+    return spark.createDataFrame(data, schema=schema)

@@ -125,3 +125,27 @@ def test_filtered_topk_wand_route_matches_brute(spark, monkeypatch):
     )
     assert _rows(wand_route) == _rows(baseline)
     blocks.unpersist()
+
+
+def test_filtered_topk_over_cap_fallback_matches_pushdown(spark, monkeypatch):
+    """A doc set over FILTER_PUSHDOWN_MAX_IDS takes the semi-join fallback,
+    recomputing the boolean plan, and returns the pushdown route's rows."""
+    from goldenretriever_spark.query import boolean, wand
+
+    idx, blocks, queries = _filtered_fixture(spark)
+    kw = dict(must=["def"], must_not=["deprecated"])
+    push = boolean.filtered_top_k(
+        spark, blocks, idx.corpus_stats, queries, k=5, pushdown=True, **kw
+    )
+
+    def no_dispatch(*args, **kwargs):
+        raise AssertionError("an over-cap doc set must not take the pushdown route")
+
+    monkeypatch.setattr(wand, "dispatch_top_k", no_dispatch)
+    monkeypatch.setattr(boolean, "FILTER_PUSHDOWN_MAX_IDS", 1)
+    fallback = boolean.filtered_top_k(
+        spark, blocks, idx.corpus_stats, queries, k=5, pushdown=True, **kw
+    )
+    assert _rows(fallback) == _rows(push)
+    assert len(push.collect()) > 0
+    blocks.unpersist()
