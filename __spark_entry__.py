@@ -17,7 +17,6 @@ from collections.abc import Callable
 from functools import partial, reduce
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 SF_SMOKE = "/root/testdata/sf0.001"
@@ -57,26 +56,32 @@ def _bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     A7-A8, W1-W3, F8 in one plan)."""
     from goldenretriever_spark.index.build import build_index
     from goldenretriever_spark.query import bm25
+    from goldenretriever_spark.query.wand import rank_top_k
 
     docs = _documents(spark, sf_dir)
     idx = build_index(docs, tokenizer="simple")
     terms = bm25.query_terms_df(spark, FLAGSHIP_QUERIES, tokenizer="simple")
     scores = bm25.score_candidates(idx, terms)
-    scored = scores.withColumn("score_q", F.round(F.col("score") * 10000).cast("long"))
-    w = Window.partitionBy("query_id").orderBy(F.desc("score_q"), F.asc("doc_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= K)
-        .select("query_id", "doc_id", "score_q", "rank")
+    return _score_q(rank_top_k(scores, K, quantize=True))
+
+
+def _score_q(ranked: DataFrame) -> DataFrame:
+    """An engine top-k cut at the quantized tie discipline (query_id, doc_id,
+    score, rank) -> the contract's (query_id, doc_id, score_q, rank)."""
+    return ranked.select(
+        "query_id",
+        "doc_id",
+        F.round(F.col("score") * 10000).cast("long").alias("score_q"),
+        "rank",
     )
 
 
 def _bm25_wand_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Block-max WAND top-k over the COMPRESSED stored-index path (SURVEY
     §2.5 W1-W3 on the pruned engine): same oracle as bm25_topk because
-    θ-pruning is lossless (Ding & Suel 2011; tests/test_wand.py). Ranking is
-    re-derived from quantized scores so the tie discipline matches the
-    oracle exactly."""
+    θ-pruning is lossless (Ding & Suel 2011; tests/test_wand.py). The
+    engine cuts at the quantized score (``quantize=True``), so the tie
+    discipline matches the oracle exactly."""
     from goldenretriever_spark.index.blocks import pack_blocks
     from goldenretriever_spark.index.build import build_index
     from goldenretriever_spark.query.wand import wand_top_k
@@ -84,13 +89,8 @@ def _bm25_wand_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _documents(spark, sf_dir)
     idx = build_index(docs, tokenizer="simple")
     blocks = pack_blocks(idx, block_size=16, target_docs_per_group=200)
-    res = wand_top_k(spark, blocks, idx.corpus_stats, FLAGSHIP_QUERIES, k=K)
-    scored = res.withColumn("score_q", F.round(F.col("score") * 10000).cast("long"))
-    w = Window.partitionBy("query_id").orderBy(F.desc("score_q"), F.asc("doc_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= K)
-        .select("query_id", "doc_id", "score_q", "rank")
+    return _score_q(
+        wand_top_k(spark, blocks, idx.corpus_stats, FLAGSHIP_QUERIES, k=K, quantize=True)
     )
 
 
@@ -379,16 +379,11 @@ def _ir_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     idx = build_index(_documents(spark, sf_dir), tokenizer="simple")
     blocks = pack_blocks(idx, block_size=16, target_docs_per_group=200)
-    res = filtered_top_k(
-        spark, blocks, idx.corpus_stats, FLAGSHIP_QUERIES, k=K,
-        must=FILTER_MUST, must_not=FILTER_MUST_NOT,
-    )
-    scored = res.withColumn("score_q", F.round(F.col("score") * 10000).cast("long"))
-    w = Window.partitionBy("query_id").orderBy(F.desc("score_q"), F.asc("doc_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= K)
-        .select("query_id", "doc_id", "score_q", "rank")
+    return _score_q(
+        filtered_top_k(
+            spark, blocks, idx.corpus_stats, FLAGSHIP_QUERIES, k=K,
+            must=FILTER_MUST, must_not=FILTER_MUST_NOT,
+        )
     )
 
 

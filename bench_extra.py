@@ -104,8 +104,8 @@ def cmd_profile():
         decode_positions,
         pack_positional_blocks,
         positional_rows,
-        prune_blocks_for_terms,
     )
+    from goldenretriever_spark.index.storage import prune_blocks_for_terms
     from goldenretriever_spark.query import bm25
     from goldenretriever_spark.query.phrase import phrase_match_stored_batch
     from goldenretriever_spark.query.wand import brute_top_k_stored, dispatch_top_k

@@ -35,9 +35,12 @@ from pyspark.sql import functions as F
 
 from goldenretriever_spark.index.build import B, K1, InvertedIndex
 from goldenretriever_spark.index.codec import (
+    decode_doc_ids,
+    decode_varints,
     delta_encode_grouped,
     varint_encode_grouped,
 )
+from goldenretriever_spark.index.storage import bucket_col
 
 BLOCK_SIZE = 128
 SALT_SPACE = 65536  # top 16 bits of signed doc_id -> contiguous range ids
@@ -82,7 +85,7 @@ def enriched_postings(
             "salt",
             F.floor(F.col("u16") * F.col("n_salts") / F.lit(SALT_SPACE)).cast("int"),
         )
-        .withColumn("term_bucket", F.pmod(F.xxhash64("term"), F.lit(n_term_buckets)).cast("int"))
+        .withColumn("term_bucket", bucket_col(n_term_buckets))
         .select("term", "salt", "doc_id", "tf", "doc_len", "df", "term_bucket")
     )
 
@@ -105,7 +108,7 @@ def pack_enriched(
     same work in ~vocab/P numpy slices per task.)
 
     Shuffle-byte discipline (r7, guide §2.3): ``term_bucket`` is a pure
-    function of ``term`` (pmod(xxhash64)), so it is recomputed on the packed
+    function of ``term`` (storage.bucket_col), so it is recomputed on the packed
     block rows (~|postings|/block_size of the input) by a plain projection
     instead of riding the exchange and the Arrow boundary on every posting
     row. ``df`` stays on the rows: re-attaching it post-pack would need a
@@ -186,10 +189,7 @@ def pack_enriched(
         .repartition(P, "term", "salt")
         .sortWithinPartitions("term", "salt", "doc_id")
         .mapInPandas(pack_partition, schema=BLOCKS_SCHEMA)
-        .withColumn(
-            "term_bucket",
-            F.pmod(F.xxhash64("term"), F.lit(n_term_buckets)).cast("int"),
-        )
+        .withColumn("term_bucket", bucket_col(n_term_buckets))
     )
 
 
@@ -212,31 +212,19 @@ def pack_blocks(
 
 def decode_blocks(blocks: DataFrame) -> DataFrame:
     """posting_blocks -> (term, doc_id, tf) via a vectorized mapInPandas
-    decode (numpy codec, no per-row Python)."""
-    from goldenretriever_spark.index.codec import delta_decode_sorted_ids, varint_decode
-
+    decode (codec batch decoders, no per-block Python)."""
     cols = ["term", "doc_ids_delta_varint", "tfs_varint"]
 
     def unpack(batches):
         for pdf in batches:
-            terms: list[str] = []
-            ids_parts: list[np.ndarray] = []
-            tf_parts: list[np.ndarray] = []
-            for term, id_buf, tf_buf in zip(
-                pdf["term"], pdf["doc_ids_delta_varint"], pdf["tfs_varint"]
-            ):
-                ids = delta_decode_sorted_ids(bytes(id_buf))
-                tfs = varint_decode(bytes(tf_buf)).astype(np.int64)
-                terms.extend([term] * len(ids))
-                ids_parts.append(ids)
-                tf_parts.append(tfs)
-            if not ids_parts:
+            ids, counts = decode_doc_ids(pdf["doc_ids_delta_varint"])
+            if ids.size == 0:
                 continue
             yield pd.DataFrame(
                 {
-                    "term": terms,
-                    "doc_id": np.concatenate(ids_parts),
-                    "tf": np.concatenate(tf_parts),
+                    "term": np.repeat(pdf["term"].to_numpy(), counts),
+                    "doc_id": ids,
+                    "tf": decode_varints(pdf["tfs_varint"]).astype(np.int64),
                 }
             )
 

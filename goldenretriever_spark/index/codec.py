@@ -9,6 +9,12 @@ All encode/decode work is whole-array numpy (no per-value Python loops):
 encode fans out over the ≤10 possible varint byte positions, decode walks the
 same ≤10 positions with boolean masks. Runs inside applyInPandas workers.
 
+This module is the one reader of the block format: the query-side workers
+call the batch decoders at the end (:func:`decode_doc_ids`,
+:func:`decode_varints`, :func:`decode_position_blocks`), which take a batch's
+blob column as a pandas Series and return flat numpy arrays. The per-block
+functions stay as the reference the grouped ones are tested against.
+
 Signed-int64 handling: doc_ids sort in *signed* order everywhere (the engine's
 tie-break discipline). Deltas of ascending signed int64 can exceed int64 range
 but are exact modulo 2^64, so diffs are viewed as uint64 and decode rebuilds
@@ -176,3 +182,47 @@ def delta_decode_grouped(deltas: np.ndarray, counts: np.ndarray) -> np.ndarray:
         cum0 = np.concatenate([[np.uint64(0)], acc])
         base = np.repeat(cum0[starts], counts)
         return (acc - base).view(np.int64)
+
+
+def _buffers(blobs) -> list[bytes]:
+    """An Arrow batch's binary column (pandas Series of bytes-likes) as
+    the list of buffers :func:`varint_decode_many` joins."""
+    return [bytes(x) for x in blobs]
+
+
+def decode_varints(blobs) -> np.ndarray:
+    """A batch of plain varint blobs (tfs, doc lengths, position counts)
+    -> all their values concatenated in row order, uint64."""
+    return varint_decode_many(_buffers(blobs))[0]
+
+
+def decode_doc_ids(blobs) -> tuple[np.ndarray, np.ndarray]:
+    """A batch of delta-varint doc-id blobs -> ``(ids, docs_per_block)``:
+    the signed int64 ids concatenated in row order, and each row's count."""
+    deltas, counts = varint_decode_many(_buffers(blobs))
+    return delta_decode_grouped(deltas, counts), counts
+
+
+def decode_position_blocks(
+    doc_id_blobs, pos_count_blobs, position_blobs
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """A batch of positional blocks -> ``(doc_per_pos, positions,
+    pos_per_block)``: one doc id and one token position per decoded
+    position, doc-major in row order, and how many positions each row holds.
+    Positions are delta-encoded with a reset at every doc boundary, so the
+    per-doc counts (== tf) delimit their runs."""
+    ids, docs_per_block = decode_doc_ids(doc_id_blobs)
+    counts = decode_varints(pos_count_blobs).astype(np.int64)
+    positions = delta_decode_grouped(
+        varint_decode_many(_buffers(position_blobs))[0], counts
+    )
+    # positions per block = Σ per-doc counts, segmented by block
+    pos_per_block = np.diff(_offsets(counts)[_offsets(docs_per_block)])
+    return np.repeat(ids, counts), positions, pos_per_block
+
+
+def _offsets(counts: np.ndarray) -> np.ndarray:
+    """Run start offsets with the total appended: [0, c0, c0+c1, ...]."""
+    out = np.zeros(counts.size + 1, dtype=np.int64)
+    np.cumsum(counts, out=out[1:])
+    return out

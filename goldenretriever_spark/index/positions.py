@@ -44,11 +44,11 @@ from pyspark.sql import functions as F
 
 from goldenretriever_spark.index.blocks import MAX_SALTS, SALT_SPACE
 from goldenretriever_spark.index.codec import (
-    delta_decode_grouped,
+    decode_position_blocks,
     delta_encode_grouped,
-    varint_decode_many,
     varint_encode_grouped,
 )
+from goldenretriever_spark.index.storage import bucket_col
 
 BLOCK_DOCS = 128
 
@@ -216,10 +216,7 @@ def pack_positions(
         enriched.repartition(P, "term", "salt")
         .sortWithinPartitions("term", "salt", "doc_id", "pos")
         .mapInPandas(pack_partition, schema=pack_schema)
-        .withColumn(
-            "term_bucket",
-            F.pmod(F.xxhash64("term"), F.lit(n_term_buckets)).cast("int"),
-        )
+        .withColumn("term_bucket", bucket_col(n_term_buckets))
     )
 
 
@@ -252,55 +249,40 @@ def pack_positional_blocks(
     )
 
 
+_DECODE_COLS = [
+    "term",
+    "doc_ids_delta_varint",
+    "pos_counts_varint",
+    "positions_delta_varint",
+]
+
+
+def _decode(pdf: pd.DataFrame) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    return decode_position_blocks(
+        pdf["doc_ids_delta_varint"],
+        pdf["pos_counts_varint"],
+        pdf["positions_delta_varint"],
+    )
+
+
 def decode_positions(blocks: DataFrame) -> DataFrame:
     """positional blocks -> (term, doc_id, pos) rows via one vectorized
-    mapInPandas decode (batched varint passes — codec.varint_decode_many —
-    so per-block numpy call overhead never dominates)."""
-    cols = [
-        "term",
-        "doc_ids_delta_varint",
-        "pos_counts_varint",
-        "positions_delta_varint",
-    ]
+    mapInPandas decode (codec.decode_position_blocks)."""
 
     def unpack(batches):
         for pdf in batches:
-            if pdf.empty:
-                continue
-            id_deltas, docs_per_block = varint_decode_many(
-                [bytes(b) for b in pdf["doc_ids_delta_varint"]]
-            )
-            docs_per_block = docs_per_block.astype(np.int64)
-            ids = delta_decode_grouped(id_deltas, docs_per_block)
-            cnts, _ = varint_decode_many(
-                [bytes(b) for b in pdf["pos_counts_varint"]]
-            )
-            cnts_i = cnts.astype(np.int64)
-            pos_deltas, _ = varint_decode_many(
-                [bytes(b) for b in pdf["positions_delta_varint"]]
-            )
-            positions = delta_decode_grouped(pos_deltas, cnts_i)
-            doc_per_pos = np.repeat(ids, cnts_i)
-            # positions per block = Σ per-doc counts, segmented by block
-            block_doc_starts = np.zeros(docs_per_block.size, dtype=np.int64)
-            np.cumsum(docs_per_block[:-1], out=block_doc_starts[1:])
-            pos_per_block = (
-                np.add.reduceat(cnts_i, block_doc_starts)
-                if cnts_i.size
-                else np.zeros(0, dtype=np.int64)
-            )
-            term_per_pos = np.repeat(pdf["term"].to_numpy(), pos_per_block)
+            doc_per_pos, positions, pos_per_block = _decode(pdf)
             if doc_per_pos.size == 0:
                 continue
             yield pd.DataFrame(
                 {
-                    "term": term_per_pos,
+                    "term": np.repeat(pdf["term"].to_numpy(), pos_per_block),
                     "doc_id": doc_per_pos,
-                    "pos": positions.astype(np.int64),
+                    "pos": positions,
                 }
             )
 
-    return blocks.select(*cols).mapInPandas(
+    return blocks.select(*_DECODE_COLS).mapInPandas(
         unpack, schema="term string, doc_id long, pos long"
     )
 
@@ -329,35 +311,11 @@ def decode_phrase_votes(
         for off, t in enumerate(ph):
             term2qo.setdefault(t, []).append((qid, off))
 
-    cols = [
-        "term",
-        "doc_ids_delta_varint",
-        "pos_counts_varint",
-        "positions_delta_varint",
-    ]
-
     def gen(batches):
         for pdf in batches:
-            if pdf.empty:
-                continue
-            id_deltas, docs_per_block = varint_decode_many(
-                [bytes(b) for b in pdf["doc_ids_delta_varint"]]
-            )
-            docs_per_block = docs_per_block.astype(np.int64)
-            ids = delta_decode_grouped(id_deltas, docs_per_block)
-            cnts, _ = varint_decode_many([bytes(b) for b in pdf["pos_counts_varint"]])
-            cnts_i = cnts.astype(np.int64)
-            pos_deltas, _ = varint_decode_many(
-                [bytes(b) for b in pdf["positions_delta_varint"]]
-            )
-            positions = delta_decode_grouped(pos_deltas, cnts_i)
-            doc_per_pos = np.repeat(ids, cnts_i)
+            doc_per_pos, positions, pos_per_block = _decode(pdf)
             if doc_per_pos.size == 0:
                 continue
-            # positions per block = Σ per-doc counts, segmented by block
-            block_doc_starts = np.zeros(docs_per_block.size, dtype=np.int64)
-            np.cumsum(docs_per_block[:-1], out=block_doc_starts[1:])
-            pos_per_block = np.add.reduceat(cnts_i, block_doc_starts)
             # per-term position slices via a term-code indirection (no
             # per-position string materialization)
             term_codes, uniq_terms = pd.factorize(pdf["term"])
@@ -388,7 +346,7 @@ def decode_phrase_votes(
                 }
             )
 
-    return blocks.select(*cols).mapInPandas(
+    return blocks.select(*_DECODE_COLS).mapInPandas(
         gen, schema="query_id long, doc_id long, start long"
     )
 
@@ -401,34 +359,12 @@ def decode_position_codes(blocks: DataFrame, terms: list[str]) -> DataFrame:
     a repeated term string (r7, guide §4.2); rows whose term is not in
     ``terms`` are dropped (the pruned scan normally contains none)."""
     code_of = {t: i for i, t in enumerate(terms)}
-    cols = [
-        "term",
-        "doc_ids_delta_varint",
-        "pos_counts_varint",
-        "positions_delta_varint",
-    ]
 
     def unpack(batches):
         for pdf in batches:
-            if pdf.empty:
-                continue
-            id_deltas, docs_per_block = varint_decode_many(
-                [bytes(b) for b in pdf["doc_ids_delta_varint"]]
-            )
-            docs_per_block = docs_per_block.astype(np.int64)
-            ids = delta_decode_grouped(id_deltas, docs_per_block)
-            cnts, _ = varint_decode_many([bytes(b) for b in pdf["pos_counts_varint"]])
-            cnts_i = cnts.astype(np.int64)
-            pos_deltas, _ = varint_decode_many(
-                [bytes(b) for b in pdf["positions_delta_varint"]]
-            )
-            positions = delta_decode_grouped(pos_deltas, cnts_i)
-            doc_per_pos = np.repeat(ids, cnts_i)
+            doc_per_pos, positions, pos_per_block = _decode(pdf)
             if doc_per_pos.size == 0:
                 continue
-            block_doc_starts = np.zeros(docs_per_block.size, dtype=np.int64)
-            np.cumsum(docs_per_block[:-1], out=block_doc_starts[1:])
-            pos_per_block = np.add.reduceat(cnts_i, block_doc_starts)
             codes_per_block = np.array(
                 [code_of.get(t, -1) for t in pdf["term"]], dtype=np.int64
             )
@@ -444,31 +380,10 @@ def decode_position_codes(blocks: DataFrame, terms: list[str]) -> DataFrame:
                 {
                     "code": code_per_pos,
                     "doc_id": doc_per_pos,
-                    "pos": positions.astype(np.int64),
+                    "pos": positions,
                 }
             )
 
-    return blocks.select(*cols).mapInPandas(
+    return blocks.select(*_DECODE_COLS).mapInPandas(
         unpack, schema="code long, doc_id long, pos long"
     )
-
-
-def prune_blocks_for_terms(
-    blocks: DataFrame, terms: list[str], n_term_buckets: int | None
-) -> DataFrame:
-    """Restrict a positional-blocks frame to the given query terms.
-
-    Two pruning layers, mirroring query/wand.py's stored-path scan: the
-    ``term_bucket`` isin filter prunes PARTITION DIRECTORIES (only the
-    buckets holding query terms are ever listed/read — the reason the layout
-    partitions by term_bucket), then the term equi-filter prunes rows via
-    parquet min/max. Bucket ids come from the pytest-locked driver-side
-    XXH64 twin (goldenretriever_spark/xxh64.py) — zero Spark jobs; the r6
-    one-row createDataFrame+collect job cost ~100 ms per call."""
-    if terms and n_term_buckets and "term_bucket" in blocks.columns:
-        from goldenretriever_spark.xxh64 import term_buckets
-
-        blocks = blocks.filter(
-            F.col("term_bucket").isin(term_buckets(terms, n_term_buckets))
-        )
-    return blocks.filter(F.col("term").isin(list(terms)))

@@ -8,9 +8,10 @@ writer degrades to plain Parquet ``partitionBy`` — call-sites are isolated
 here so a real cluster flips ``format='iceberg'`` only.
 
 Layout (designed for 10^12-file scale):
-- posting_blocks/  partitioned by term_bucket (pmod(xxhash64(term), B)) —
-  query-time scans prune to the buckets holding the query's terms; the
-  per-bucket file count is what checkpointing tracks.
+- posting_blocks/  partitioned by term_bucket (:func:`bucket_col`) —
+  query-time scans prune to the buckets holding the query's terms
+  (:func:`prune_blocks_for_terms`, the one bucket filter of the read path);
+  the per-bucket file count is what checkpointing tracks.
 - doc_stats/       repartitioned by doc_id so the query-time doc_len join is
   co-partitioned (bucketed-table join on a real warehouse).
 - corpus_stats/    single row.
@@ -30,8 +31,32 @@ from goldenretriever_spark.session import local_frame
 _UNSET = object()  # n_term_buckets memo sentinel (None is a valid value)
 
 
-def bucket_col(term_col: str = "term", n_buckets: int = 64):
-    return F.pmod(F.xxhash64(term_col), F.lit(n_buckets)).cast("int")
+def bucket_col(n_buckets: int):
+    """The stored layout's partition key, ``pmod(xxhash64(term), B)``: the
+    writers attach it to block and term-stat rows, and
+    :func:`prune_blocks_for_terms` recomputes it driver-side."""
+    return F.pmod(F.xxhash64("term"), F.lit(n_buckets)).cast("int")
+
+
+def prune_blocks_for_terms(
+    blocks: DataFrame, terms: list[str], n_term_buckets: int | None
+) -> DataFrame:
+    """Restrict a posting- or positional-blocks frame to the given terms.
+
+    Two pruning layers: the ``term_bucket`` isin filter prunes PARTITION
+    DIRECTORIES (only the buckets holding query terms are ever listed/read —
+    the reason the layout partitions by term_bucket), then the term
+    equi-filter prunes rows via parquet min/max. Bucket ids come from the
+    pytest-locked driver-side XXH64 twin (goldenretriever_spark/xxh64.py) —
+    zero Spark jobs; the r6 one-row createDataFrame+collect job cost ~100 ms
+    per call."""
+    if terms and n_term_buckets and "term_bucket" in blocks.columns:
+        from goldenretriever_spark.xxh64 import term_buckets
+
+        blocks = blocks.filter(
+            F.col("term_bucket").isin(term_buckets(terms, n_term_buckets))
+        )
+    return blocks.filter(F.col("term").isin(list(terms)))
 
 
 META_SCHEMA = "n_term_buckets int"
@@ -40,9 +65,10 @@ META_SCHEMA = "n_term_buckets int"
 def write_meta(spark: SparkSession, path: str, n_term_buckets: int) -> None:
     """Persist build-time parameters the query path must agree on.
 
-    ``wand_top_k`` prunes partitions by recomputing pmod(xxhash64(term), B);
-    if B at query time differs from build time the pruning silently drops the
-    wrong buckets — so B is stored with the index, never trusted as a default.
+    The read path prunes partitions by recomputing :func:`bucket_col`'s
+    hash driver-side; if B at query time differs from build time the pruning
+    silently drops the wrong buckets — so B is stored with the index, never
+    trusted as a default.
     """
     meta = local_frame(spark, {"n_term_buckets": [n_term_buckets]}, META_SCHEMA)
     meta.coalesce(1).write.mode("overwrite").parquet(os.path.join(path, "_meta"))
@@ -78,7 +104,7 @@ def write_index(
     )
     index.corpus_stats.write.mode(mode).parquet(os.path.join(path, "corpus_stats"))
     (
-        index.term_stats.withColumn("term_bucket", bucket_col("term", n_term_buckets))
+        index.term_stats.withColumn("term_bucket", bucket_col(n_term_buckets))
         .repartition("term_bucket")
         .write.mode(mode)
         .partitionBy("term_bucket")

@@ -26,49 +26,46 @@ Tie-break: asc(doc_id) everywhere (SURVEY §2.5 W1).
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession
-from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from goldenretriever_spark.index.build import B, K1, InvertedIndex
 from goldenretriever_spark.session import local_frame
-from goldenretriever_spark.tokenizer import tokens_column
 
-def query_terms_df(spark: SparkSession, queries, tokenizer: str = "simple") -> DataFrame:
-    """queries: DataFrame(query_id, query_str) or list[(id, str)] ->
-    (query_id, term) with unique terms per query (BM25 dedups query terms).
-
-    List-typed batches tokenize ON THE DRIVER with the oracle twin of the
-    engine tokenizer (equality-tested per input class, tests/test_round2) —
-    a query batch is tiny, and the createDataFrame -> explode ->
-    dropDuplicates plan it replaces paid a full shuffle + two stages inside
-    EVERY query call (r7, guide §2.4: remove shuffles outright). The terms
-    become an Arrow local relation (session.local_frame), so broadcasting
-    them runs no Spark job. DataFrame inputs (unknown size) keep the
-    distributed plan."""
-    if isinstance(queries, DataFrame):
-        return (
-            queries.select(
-                "query_id",
-                F.explode(tokens_column(F.col("query_str"), tokenizer)).alias("term"),
-            )
-            .dropDuplicates(["query_id", "term"])
-        )
+def query_tokens(queries, tokenizer: str = "simple") -> list[tuple[int, list[str]]]:
+    """list[(query_id, query_str)] -> [(query_id, unique terms in first-seen
+    order)], tokenized ON THE DRIVER with the oracle twin of the engine
+    tokenizer (equality-tested per input class, tests/test_round2): a
+    query batch is tiny, and tokenizing it in Spark costs a shuffle and two
+    stages inside every query call (r7, guide §2.4)."""
     from goldenretriever_spark.oracle import tokenize
 
-    rows = [
-        (int(qid), t)
+    return [
+        (int(qid), list(dict.fromkeys(tokenize(qstr, tokenizer))))
         for qid, qstr in queries
-        for t in dict.fromkeys(tokenize(qstr, tokenizer))
     ]
+
+
+def terms_frame(spark: SparkSession, qtoks: list[tuple[int, list[str]]]) -> DataFrame:
+    """:func:`query_tokens` output -> the (query_id, term) frame, an Arrow
+    local relation (session.local_frame), so broadcasting it runs no Spark
+    job."""
+    rows = [(qid, t) for qid, ts in qtoks for t in ts]
     out = local_frame(
         spark,
         {"query_id": [q for q, _ in rows], "term": [t for _, t in rows]},
         "query_id long, term string",
     )
     # batch-width hint for downstream plan selection (top_k's shared
-    # agg/window exchange) — driver-known for list batches, absent otherwise
-    out._gr_n_queries = len({qid for qid, _ in queries})
+    # agg/window exchange)
+    out._gr_n_queries = len({qid for qid, _ in qtoks})
     return out
+
+
+def query_terms_df(spark: SparkSession, queries, tokenizer: str = "simple") -> DataFrame:
+    """list[(query_id, query_str)] -> (query_id, term) with unique terms per
+    query (BM25 dedups query terms): :func:`query_tokens` then
+    :func:`terms_frame`."""
+    return terms_frame(spark, query_tokens(queries, tokenizer))
 
 
 def idf_col(n_docs: Column, df: Column) -> Column:
@@ -142,7 +139,7 @@ def top_k(index: InvertedIndex, terms: DataFrame, k: int = 10) -> DataFrame:
     orderBy().limit(k); the window form handles query batches in one pass.
 
     Wide batches (r7, guide §2.4): when the batch is at least as wide as
-    the shuffle-partition count (driver-known via query_terms_df's hint),
+    the shuffle-partition count (driver-known via terms_frame's hint),
     an explicit ``repartition(query_id)`` BEFORE the aggregation lets the
     (query_id, doc_id) hash-agg AND the per-query window share ONE
     exchange — hash-partitioning on query_id satisfies both clusterings —
@@ -170,12 +167,9 @@ def top_k(index: InvertedIndex, terms: DataFrame, k: int = 10) -> DataFrame:
         )
     else:
         scores = score_candidates(index, terms)
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        scores.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "doc_id", "score", "rank")
-    )
+    from goldenretriever_spark.query.wand import rank_top_k
+
+    return rank_top_k(scores, k)
 
 
 def search(

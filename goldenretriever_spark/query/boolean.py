@@ -26,9 +26,12 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from goldenretriever_spark.index.codec import decode_doc_ids
+from goldenretriever_spark.index.storage import prune_blocks_for_terms
+
 # filtered_top_k pushes the boolean doc set into the decode workers only up
 # to this many ids (int64 -> ~32 MB on the driver); above it the exact
-# semi-join plan runs instead.
+# semi-join plan runs instead. Read at call time (0 forces the semi-join).
 FILTER_PUSHDOWN_MAX_IDS = 4_000_000
 
 
@@ -36,35 +39,18 @@ def _term_docs(
     posting_blocks: DataFrame, terms: list[str], n_term_buckets: int | None
 ) -> DataFrame:
     """(term, doc_id) rows for the given terms from the compressed blocks:
-    bucket-prune + term filter + doc-id-only varint decode. The blob
-    columns for tf/doc_len stay unread (ReadSchema carries only the doc-id
-    blob)."""
-    from goldenretriever_spark.index.codec import (
-        delta_decode_grouped,
-        varint_decode_many,
-    )
-
+    bucket-prune + term filter (storage.prune_blocks_for_terms) + doc-id-only
+    decode. The blob columns for tf/doc_len stay unread (ReadSchema carries
+    only the doc-id blob)."""
     if not terms:
         raise ValueError("terms must be non-empty")
-    tset = sorted(set(terms))
-    if n_term_buckets and "term_bucket" in posting_blocks.columns:
-        from goldenretriever_spark.xxh64 import term_buckets
-
-        posting_blocks = posting_blocks.filter(
-            F.col("term_bucket").isin(term_buckets(tset, n_term_buckets))
-        )
-    pruned = posting_blocks.filter(F.col("term").isin(tset)).select(
-        "term", "doc_ids_delta_varint"
-    )
+    pruned = prune_blocks_for_terms(
+        posting_blocks, sorted(set(terms)), n_term_buckets
+    ).select("term", "doc_ids_delta_varint")
 
     def unpack(batches):
         for pdf in batches:
-            if pdf.empty:
-                continue
-            deltas, counts = varint_decode_many(
-                [bytes(x) for x in pdf["doc_ids_delta_varint"]]
-            )
-            ids = delta_decode_grouped(deltas, counts)
+            ids, counts = decode_doc_ids(pdf["doc_ids_delta_varint"])
             if ids.size == 0:
                 continue
             yield pd.DataFrame(
@@ -152,7 +138,6 @@ def filtered_top_k(
     tokenizer: str = "simple",
     n_term_buckets: int | None = None,
     stats: tuple[int, float] | None = None,
-    pushdown: bool = True,
 ) -> DataFrame:
     """Ranked retrieval under a boolean filter — Elasticsearch's
     ``bool{filter, must_not} + match`` shape, the most common production
@@ -183,10 +168,9 @@ def filtered_top_k(
 
     Returns (query_id, doc_id, score, rank).
     """
-    from pyspark.sql import Window
-
     from goldenretriever_spark.query.wand import (
         dispatch_top_k,
+        rank_top_k,
         stored_score_candidates,
     )
 
@@ -199,18 +183,12 @@ def filtered_top_k(
         n_term_buckets=n_term_buckets,
     ).select("doc_id")
 
-    allowed_bc = None
-    if pushdown:
-        # the doc set's one materialization: an Arrow-path collect capped at
-        # cap+1 rows, which also decides cap overflow without a count job;
-        # 4M int64 ids ≈ 32 MB on the driver
-        probe = allowed.limit(FILTER_PUSHDOWN_MAX_IDS + 1).toPandas()
-        if len(probe) <= FILTER_PUSHDOWN_MAX_IDS:
-            ids = np.sort(probe["doc_id"].to_numpy(dtype=np.int64))
-            allowed_bc = spark.sparkContext.broadcast(ids)
-
-    w = Window.partitionBy("query_id").orderBy(F.desc("score_q"), F.asc("doc_id"))
-    if allowed_bc is not None:
+    # the doc set's one materialization: an Arrow-path collect capped at
+    # cap+1 rows, which also decides cap overflow without a count job;
+    # 4M int64 ids ≈ 32 MB on the driver
+    probe = allowed.limit(FILTER_PUSHDOWN_MAX_IDS + 1).toPandas()
+    if len(probe) <= FILTER_PUSHDOWN_MAX_IDS:
+        ids = np.sort(probe["doc_id"].to_numpy(dtype=np.int64))
         # quantize=True: both dispatcher routes cut at k by the quantized
         # tie discipline (WAND with a one-quantum θ slack), so this path
         # returns EXACTLY the semi-join/oracle rows — verified at the
@@ -225,10 +203,10 @@ def filtered_top_k(
             tokenizer=tokenizer,
             n_term_buckets=n_term_buckets,
             stats=stats,
-            allowed_bc=allowed_bc,
+            allowed_bc=spark.sparkContext.broadcast(ids),
             quantize=True,
         )
-        return ranked.select("query_id", "doc_id", "score", "rank")
+        return ranked
 
     scored = stored_score_candidates(
         spark,
@@ -239,10 +217,4 @@ def filtered_top_k(
         n_term_buckets=n_term_buckets,
         stats=stats,
     )
-    kept = scored.join(allowed, "doc_id", "left_semi")
-    return (
-        kept.withColumn("score_q", F.round(F.col("score") * 10000).cast("long"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "doc_id", "score", "rank")
-    )
+    return rank_top_k(scored.join(allowed, "doc_id", "left_semi"), k, quantize=True)

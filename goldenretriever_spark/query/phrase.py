@@ -64,10 +64,8 @@ def phrase_match_stored_batch(
     plan's two agg exchanges collapse into one. The n_need check is a
     literal map lookup instead of a broadcast join. Row multiset into the
     first agg is identical to the join-based plan (identity pytest)."""
-    from goldenretriever_spark.index.positions import (
-        decode_phrase_votes,
-        prune_blocks_for_terms,
-    )
+    from goldenretriever_spark.index.positions import decode_phrase_votes
+    from goldenretriever_spark.index.storage import prune_blocks_for_terms
 
     if not phrases:
         raise ValueError("phrases must be non-empty")
@@ -175,10 +173,8 @@ def proximity_match_stored(
     (doc, start) keys). Partial aggregation BEFORE each exchange is what
     bounds per-task memory here (guide §2.3 'aggregate before you
     shuffle')."""
-    from goldenretriever_spark.index.positions import (
-        decode_position_codes,
-        prune_blocks_for_terms,
-    )
+    from goldenretriever_spark.index.positions import decode_position_codes
+    from goldenretriever_spark.index.storage import prune_blocks_for_terms
 
     tset = sorted(set(terms))
     if not tset:
@@ -306,24 +302,19 @@ def _phrase_boost_rank(
     """Shared tail of the phrase-ranked paths: LEFT-join the occurrence
     counts onto the full candidate scores, fold the saturating boost, rank.
     The join is keyed (query_id, doc_id) over candidate-sized frames only."""
-    boosted = scored.join(occ, ["query_id", "doc_id"], "left").withColumn(
-        "score_q",
-        F.round(
-            (
-                F.col("score")
-                + F.lit(float(boost))
-                * F.log(F.lit(1) + F.coalesce(F.col("occurrences"), F.lit(0)))
-            )
-            * 10000
-        ).cast("long"),
-    )
-    from pyspark.sql import Window
+    from goldenretriever_spark.query.wand import rank_top_k
 
-    w = Window.partitionBy("query_id").orderBy(F.desc("score_q"), F.asc("doc_id"))
-    return (
-        boosted.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "doc_id", "score_q", "rank")
+    boosted = scored.join(occ, ["query_id", "doc_id"], "left").withColumn(
+        "score",
+        F.col("score")
+        + F.lit(float(boost))
+        * F.log(F.lit(1) + F.coalesce(F.col("occurrences"), F.lit(0))),
+    )
+    return rank_top_k(boosted, k, quantize=True).select(
+        "query_id",
+        "doc_id",
+        F.round(F.col("score") * 10000).cast("long").alias("score_q"),
+        "rank",
     )
 
 

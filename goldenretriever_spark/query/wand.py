@@ -6,7 +6,7 @@ sequential. The set-oriented equivalent here keeps the pruning math but
 expresses it as two DataFrame phases, which is what distributes:
 
 Phase 1 (θ seeding): per query, decode only the highest-upper-bound blocks
-(cumulative n ≥ seed_factor*k docs), score them exactly for the decoded terms
+(cumulative n ≥ WAND_SEED_FACTOR*k docs), score them exactly for the decoded terms
 only. Partial BM25 sums are LOWER bounds of true scores, so the kth best
 partial score is a valid pruning threshold θ.
 
@@ -21,10 +21,13 @@ query in tests/test_wand.py).
 Everything is DataFrame ops: block metadata joins are broadcast (query side
 is tiny), decode is a vectorized mapInPandas over the surviving block rows,
 and the storage layout (partitionBy term_bucket) turns the initial block
-lookup into a partition-pruned parquet scan.
+lookup into a partition-pruned parquet scan (storage.prune_blocks_for_terms).
+Every entry point resolves its list batch once (:func:`_resolve_batch`).
 """
 
 from __future__ import annotations
+
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -32,8 +35,15 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from goldenretriever_spark.index.build import B, K1
-from goldenretriever_spark.query.bm25 import idf_col, query_terms_df
+from goldenretriever_spark.index.codec import decode_doc_ids, decode_varints
+from goldenretriever_spark.index.storage import prune_blocks_for_terms
+from goldenretriever_spark.query.bm25 import idf_col, query_tokens, terms_frame
 from goldenretriever_spark.session import local_frame
+
+# Phase 1 decodes the highest-bound blocks until they hold at least
+# WAND_SEED_FACTOR * k docs per query; read at call time.
+WAND_SEED_FACTOR = 4
+
 
 def _decode_scored(
     matched: DataFrame, avgdl: float, allowed_bc=None, repartition_q: bool = False
@@ -58,27 +68,18 @@ def _decode_scored(
     filter cuts the Arrow return, the shuffle and the aggregation to the
     qualifying docs instead of only post-score rows (searchsorted
     membership: no false positives/negatives, so scores are unchanged)."""
-    from goldenretriever_spark.index.codec import (
-        delta_decode_grouped,
-        varint_decode_many,
-    )
 
     def unpack(batches):
-        # grouped decode: ONE vectorized varint pass per column per Arrow
-        # batch instead of three numpy calls per block row — the unpruned
-        # scan decodes ~10^6 block rows, where per-call overhead dominated
+        # grouped decode (codec batch decoders): ONE vectorized varint pass
+        # per column per Arrow batch — the unpruned scan decodes ~10^6
+        # block rows, where per-block call overhead dominated
         allowed = allowed_bc.value if allowed_bc is not None else None
         for pdf in batches:
-            if pdf.empty:
-                continue
-            deltas, counts = varint_decode_many(
-                [bytes(x) for x in pdf["doc_ids_delta_varint"]]
-            )
-            ids = delta_decode_grouped(deltas, counts)
+            ids, counts = decode_doc_ids(pdf["doc_ids_delta_varint"])
             if ids.size == 0:
                 continue
-            tfs, _ = varint_decode_many([bytes(x) for x in pdf["tfs_varint"]])
-            dls, _ = varint_decode_many([bytes(x) for x in pdf["dls_varint"]])
+            tfs = decode_varints(pdf["tfs_varint"])
+            dls = decode_varints(pdf["dls_varint"])
             idfs = np.repeat(pdf["idf"].to_numpy(np.float64), counts)
             qids = np.repeat(pdf["query_id"].to_numpy(np.int64), counts)
             if allowed is not None:
@@ -107,24 +108,71 @@ def _decode_scored(
     return decoded.groupBy("query_id", "doc_id").agg(F.sum("c").alias("score"))
 
 
-def _bucket_ids(
-    queries, tokenizer: str, qterms: DataFrame, n_term_buckets: int
-) -> list[int]:
-    """Distinct term_bucket ids for a query batch. List-typed batches use
-    the pytest-locked driver-side XXH64 twin (goldenretriever_spark/xxh64.py)
-    — zero Spark jobs; DataFrame batches fall back to one tiny distinct+
-    collect over qterms (term set unknown on the driver)."""
-    toksets = _driver_side_toksets(queries, tokenizer)
-    if toksets is not None:
-        from goldenretriever_spark.xxh64 import term_buckets
+class _Batch(NamedTuple):
+    pruned: DataFrame  # the blocks, pruned to the batch's buckets and terms
+    qterms: DataFrame  # (query_id, term), an Arrow local relation
+    toksets: dict[int, set[str]]  # unique terms per query, driver-side
+    stats: tuple[int, float]  # (n_docs, avgdl)
 
-        return term_buckets({t for ts in toksets.values() for t in ts}, n_term_buckets)
-    return [
-        r["b"]
-        for r in qterms.select(
-            F.pmod(F.xxhash64("term"), F.lit(n_term_buckets)).cast("int").alias("b")
-        ).distinct().collect()
-    ]
+
+def _resolve_batch(
+    spark: SparkSession,
+    posting_blocks: DataFrame,
+    corpus_stats: DataFrame,
+    queries,
+    tokenizer: str,
+    n_term_buckets: int | None,
+    stats: tuple[int, float] | None,
+) -> _Batch:
+    """Resolve one stored top-k call's query batch, once.
+
+    ``queries`` is a list of (query_id, query_str); it is tokenized on the
+    driver (bm25.query_tokens, zero Spark jobs), its terms become the
+    local-relation ``qterms``, and the blocks are pruned to the batch's
+    term buckets and terms (storage.prune_blocks_for_terms). ``stats``
+    (n_docs, avgdl) is read from ``corpus_stats`` only when not given — a
+    StoredIndex handle memoizes it.
+
+    ``n_term_buckets`` must be the BUILD-time bucket count — pass
+    ``StoredIndex(spark, path).n_term_buckets`` (persisted in the index's
+    ``_meta``). None skips partition pruning: a wrong guess would silently
+    drop buckets and return incomplete top-k."""
+    if not isinstance(queries, (list, tuple)):
+        raise TypeError(
+            "queries must be a list of (query_id, query_str) pairs, not "
+            f"{type(queries).__name__}"
+        )
+    qtoks = query_tokens(queries, tokenizer)
+    toksets = {qid: set(ts) for qid, ts in qtoks}
+    terms = sorted({t for ts in toksets.values() for t in ts})
+    pruned = prune_blocks_for_terms(posting_blocks, terms, n_term_buckets)
+    if stats is None:
+        row = corpus_stats.collect()[0]
+        stats = (int(row["n_docs"]), float(row["avgdl"]))
+    return _Batch(pruned, terms_frame(spark, qtoks), toksets, stats)
+
+
+def _score(spark: SparkSession, batch: _Batch, allowed_bc=None) -> DataFrame:
+    """(query_id, doc_id, score) over every candidate of a resolved batch."""
+    n_docs, avgdl = batch.stats
+    max_terms = max((len(ts) for ts in batch.toksets.values()), default=0)
+    P = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    # Wide-batch single-exchange plan (see bm25.top_k) ONLY when the batch
+    # is wide AND the per-query decode volume is provably small: clustering
+    # on query_id gives at most n_queries parallel chunks with no map-side
+    # pre-aggregation, which LOST to the uniform (q,d) exchange at the
+    # 3.84M-doc scale point (BENCH/R7_SCALE.json qlen1 cell) while winning
+    # at bench scale. Bound: Σdf per query ≤ max_terms × n_docs, zero jobs.
+    wide = (
+        len(batch.toksets) >= P
+        and max_terms * n_docs <= WIDE_BATCH_MAX_ROWS_PER_QUERY
+    )
+    matched = batch.pruned.join(F.broadcast(batch.qterms), "term").withColumn(
+        "idf", idf_col(F.lit(float(n_docs)), F.col("df").cast("double"))
+    )
+    return _decode_scored(
+        matched, avgdl, allowed_bc=allowed_bc, repartition_q=wide
+    )
 
 
 def stored_score_candidates(
@@ -134,7 +182,6 @@ def stored_score_candidates(
     queries,
     tokenizer: str = "simple",
     n_term_buckets: int | None = None,
-    qterms: DataFrame | None = None,
     stats: tuple[int, float] | None = None,
     allowed_bc=None,
 ) -> DataFrame:
@@ -143,46 +190,13 @@ def stored_score_candidates(
     bucket-prune, decode the query terms' blocks, exact BM25 sums, no rank
     cut. Consumers that need the full candidate scores (phrase-boosted
     ranking, explain-style attribution) build on this; brute_top_k_stored
-    is exactly this + a window top-k. ``allowed_bc``: boolean-filter doc-id
-    pushdown, see :func:`_decode_scored`."""
-    if stats is None:
-        row = corpus_stats.collect()[0]
-        stats = (int(row["n_docs"]), float(row["avgdl"]))
-    n_docs, avgdl = stats
-    if qterms is None:
-        qterms = query_terms_df(spark, queries, tokenizer)
-    if n_term_buckets and "term_bucket" in posting_blocks.columns:
-        posting_blocks = posting_blocks.filter(
-            F.col("term_bucket").isin(
-                _bucket_ids(queries, tokenizer, qterms, n_term_buckets)
-            )
-        )
-    n_queries = max_terms = None
-    if not isinstance(queries, DataFrame) and queries is not None:
-        toksets = _driver_side_toksets(queries, tokenizer)
-        n_queries = len(toksets)
-        max_terms = max((len(ts) for ts in toksets.values()), default=0)
-    elif qterms is not None:
-        n_queries = getattr(qterms, "_gr_n_queries", None)
-    P = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    # Wide-batch single-exchange plan (see bm25.top_k) ONLY when the batch
-    # is wide AND the per-query decode volume is provably small: clustering
-    # on query_id gives at most n_queries parallel chunks with no map-side
-    # pre-aggregation, which LOST to the uniform (q,d) exchange at the
-    # 3.84M-doc scale point (BENCH/R7_SCALE.json qlen1 cell) while winning
-    # at bench scale. Bound: Σdf per query ≤ max_terms × n_docs, zero jobs.
-    wide = (
-        n_queries is not None
-        and n_queries >= P
-        and max_terms is not None
-        and max_terms * n_docs <= WIDE_BATCH_MAX_ROWS_PER_QUERY
+    is exactly this + :func:`rank_top_k`. ``allowed_bc``: boolean-filter
+    doc-id pushdown, see :func:`_decode_scored`; the other arguments, see
+    :func:`_resolve_batch`."""
+    batch = _resolve_batch(
+        spark, posting_blocks, corpus_stats, queries, tokenizer, n_term_buckets, stats
     )
-    matched = posting_blocks.join(F.broadcast(qterms), "term").withColumn(
-        "idf", idf_col(F.lit(float(n_docs)), F.col("df").cast("double"))
-    )
-    return _decode_scored(
-        matched, avgdl, allowed_bc=allowed_bc, repartition_q=wide
-    )
+    return _score(spark, batch, allowed_bc)
 
 
 def brute_top_k_stored(
@@ -193,44 +207,36 @@ def brute_top_k_stored(
     k: int = 10,
     tokenizer: str = "simple",
     n_term_buckets: int | None = None,
-    qterms: DataFrame | None = None,
     stats: tuple[int, float] | None = None,
     allowed_bc=None,
     quantize: bool = False,
 ) -> DataFrame:
     """Exact top-k over the STORED index with NO pruning: decode every block
-    of every query term, score, rank. ``quantize=True`` cuts at k by the
-    engine-wide x10000-quantized score with doc_id-asc ties (the oracle
-    discipline — used by filtered_top_k so its two plans agree exactly even
-    when quantized ties are dense near the k boundary). This is the baseline wand_top_k must
-    beat — same storage, same decode path, identical results; the only
-    difference is the θ-pruning machinery (tools/wand_crossover.py measures
-    where pruning starts paying for itself). ``qterms`` lets a caller that
-    already tokenized the batch (the dispatcher) pass it through; ``stats``
-    is a pre-collected (n_docs, avgdl) so the dispatcher's corpus_stats read
-    is not repeated here."""
-    scores = stored_score_candidates(
-        spark, posting_blocks, corpus_stats, queries, tokenizer=tokenizer,
-        n_term_buckets=n_term_buckets, qterms=qterms, stats=stats,
-        allowed_bc=allowed_bc,
+    of every query term, score, rank (:func:`rank_top_k`; ``quantize`` as
+    there — filtered_top_k uses it so its two plans agree exactly even when
+    quantized ties are dense near the k boundary). This is the baseline
+    wand_top_k must beat — same storage, same decode path, identical
+    results; the only difference is the θ-pruning machinery
+    (tools/wand_crossover.py measures where pruning starts paying for
+    itself)."""
+    batch = _resolve_batch(
+        spark, posting_blocks, corpus_stats, queries, tokenizer, n_term_buckets, stats
     )
-    w_rank = Window.partitionBy("query_id").orderBy(*_rank_order(quantize))
+    return rank_top_k(_score(spark, batch, allowed_bc), k, quantize)
+
+
+def rank_top_k(scores: DataFrame, k: int, quantize: bool = False) -> DataFrame:
+    """The engine's one rank tail: (query_id, doc_id, score) -> the k best
+    rows per query as (query_id, doc_id, score, rank), ties broken by
+    doc_id ascending. ``quantize=True`` orders by the x10000-quantized score
+    as a long (the oracle tie discipline) instead of the raw score."""
+    key = F.round(F.col("score") * 10000).cast("long") if quantize else F.col("score")
+    w = Window.partitionBy("query_id").orderBy(key.desc(), F.asc("doc_id"))
     return (
-        scores.withColumn("rank", F.row_number().over(w_rank))
+        scores.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select("query_id", "doc_id", "score", "rank")
     )
-
-
-def _rank_order(quantize: bool):
-    """Engine rank ordering: raw score by default; the x10000-quantized
-    long (oracle tie discipline) when ``quantize``."""
-    if quantize:
-        return (
-            F.desc(F.round(F.col("score") * 10000).cast("long")),
-            F.asc("doc_id"),
-        )
-    return (F.desc("score"), F.asc("doc_id"))
 
 
 # Measured brute-stored vs WAND crossover on the bench host, in estimated
@@ -290,20 +296,6 @@ def estimate_decode_rows(posting_blocks: DataFrame, qterms: DataFrame) -> DataFr
     )
 
 
-def _driver_side_toksets(queries, tokenizer: str) -> dict | None:
-    """For list-typed batches, the per-query UNIQUE term sets computed on the
-    driver with the oracle twin of the engine tokenizer — ZERO Spark jobs.
-    The twins are equality-tested on every input class (tests/test_round2),
-    so the term COUNT bound derived here is exactly what query_terms_df would
-    produce. Returns None for DataFrame inputs (unknown size; tokenize
-    distributed instead)."""
-    if isinstance(queries, DataFrame):
-        return None
-    from goldenretriever_spark.oracle import tokenize
-
-    return {int(qid): set(tokenize(qstr, tokenizer)) for qid, qstr in queries}
-
-
 def dispatch_top_k(
     spark: SparkSession,
     posting_blocks: DataFrame,
@@ -311,9 +303,7 @@ def dispatch_top_k(
     queries,
     k: int = 10,
     tokenizer: str = "simple",
-    seed_factor: int = 4,
     n_term_buckets: int | None = None,
-    crossover_rows: int | None = None,
     stats: tuple[int, float] | None = None,
     allowed_bc=None,
     term_df_cache: dict | None = None,
@@ -339,7 +329,7 @@ def dispatch_top_k(
     heavy-dominated batches are where pruning pays, and the volume SHARE —
     unlike the r4 batch mean — routes skewed mixes correctly). The plan
     records mean/max volume, per-query above/below counts and the heavy
-    share. ``crossover_rows`` overrides the crossover per call.
+    share. Both constants are read at call time.
 
     The WHOLE batch takes one path. Routing each query to its own winning
     path and unioning the two results was measured and removed
@@ -351,67 +341,24 @@ def dispatch_top_k(
     (0.87-0.97×) is far smaller than that amortization loss.
 
     Fixed-overhead control on the hot serving row:
-    - corpus_stats is collected ONCE here and handed to the routed path(s);
-      a caller holding the (n_docs, avgdl) tuple already (StoredIndex
-      memoizes it per handle) passes ``stats=`` and skips even that job.
-    - for list-typed batches the max-terms bound comes from driver-side
-      tokenization (oracle twin) — no Spark job.
+    - the batch is resolved once (:func:`_resolve_batch`) and the routed
+      path reuses it: one driver-side tokenization, one local-relation
+      terms frame read by the probe and the path without a job, one prune.
+    - corpus_stats is read only when ``stats`` is not given; StoredIndex
+      memoizes the (n_docs, avgdl) tuple per handle.
     - the df probe is skipped when the driver-side upper bound
       (max terms/query × n_docs) already rules WAND out.
-    - a list batch's query terms are an Arrow local relation, read by any
-      number of consumers without a job; only a DataFrame batch's terms
-      are localCheckpoint-ed, once.
     """
-    if crossover_rows is None:
-        crossover_rows = WAND_CROSSOVER_DECODE_ROWS
-    if stats is None:
-        row = corpus_stats.collect()[0]
-        stats = (int(row["n_docs"]), float(row["avgdl"]))
-    n_docs = stats[0]
-
-    toksets = _driver_side_toksets(queries, tokenizer)
-    qterms_all: DataFrame | None = None  # built lazily; checkpointed only if reused
-
-    if n_term_buckets and "term_bucket" in posting_blocks.columns:
-        if toksets is not None:
-            # distinct terms known driver-side -> bucket ids from the
-            # XXH64 twin (xxh64.py), zero Spark jobs
-            from goldenretriever_spark.xxh64 import term_buckets
-
-            buckets = term_buckets(
-                {t for ts in toksets.values() for t in ts}, n_term_buckets
-            )
-        else:
-            qterms_all = query_terms_df(spark, queries, tokenizer).localCheckpoint(
-                eager=True
-            )
-            buckets = [
-                r["b"]
-                for r in qterms_all.select(
-                    F.pmod(F.xxhash64("term"), F.lit(n_term_buckets))
-                    .cast("int")
-                    .alias("b")
-                ).distinct().collect()
-            ]
-        pruned = posting_blocks.filter(F.col("term_bucket").isin(buckets))
-    else:
-        pruned = posting_blocks
+    batch = _resolve_batch(
+        spark, posting_blocks, corpus_stats, queries, tokenizer, n_term_buckets, stats
+    )
+    crossover_rows = WAND_CROSSOVER_DECODE_ROWS
+    n_docs = batch.stats[0]
+    toksets = batch.toksets
 
     # driver-side bound: Σdf per query ≤ (terms in query) × n_docs; if even
     # the largest query cannot reach the crossover, skip the blocks probe
-    if toksets is not None:
-        max_terms = max((len(ts) for ts in toksets.values()), default=0)
-    else:
-        if qterms_all is None:
-            qterms_all = query_terms_df(spark, queries, tokenizer).localCheckpoint(
-                eager=True
-            )
-        per_q = qterms_all.groupBy("query_id").agg(F.count("*").alias("nt")).collect()
-        max_terms = max((r["nt"] for r in per_q), default=0)
-    if qterms_all is None:
-        # list batch: an Arrow local relation, read by every consumer below
-        # (probe, routed path) without a job
-        qterms_all = query_terms_df(spark, queries, tokenizer)
+    max_terms = max((len(ts) for ts in toksets.values()), default=0)
     plan: dict = {
         "crossover_rows": crossover_rows,
         "n_docs": n_docs,
@@ -420,14 +367,9 @@ def dispatch_top_k(
 
     if max_terms * n_docs < crossover_rows:
         plan.update({"path": "brute_stored", "probed": False})
-        out = brute_top_k_stored(
-            spark, pruned, corpus_stats, queries, k=k,
-            tokenizer=tokenizer, n_term_buckets=None, qterms=qterms_all, stats=stats,
-            allowed_bc=allowed_bc, quantize=quantize,
-        )
-        return out, plan
+        return rank_top_k(_score(spark, batch, allowed_bc), k, quantize), plan
 
-    if toksets is not None and term_df_cache is not None:
+    if term_df_cache is not None:
         # per-handle df memo (VERDICT r6 #4): probe ONLY terms not yet seen
         # by this handle — a repeated term vocabulary (interactive serve,
         # the hybrid lexical leg) pays the metadata probe once, later calls
@@ -439,7 +381,7 @@ def dispatch_top_k(
         if unknown:
             found = {
                 r["term"]: int(r["df"])
-                for r in pruned.select("term", "df")
+                for r in batch.pruned.select("term", "df")
                 .filter(F.col("term").isin(unknown))
                 .groupBy("term")
                 .agg(F.first("df").alias("df"))
@@ -453,7 +395,7 @@ def dispatch_top_k(
     else:
         est_rows = {
             r["query_id"]: int(r["est_rows"])
-            for r in estimate_decode_rows(pruned, qterms_all).collect()
+            for r in estimate_decode_rows(batch.pruned, batch.qterms).collect()
         }
     above = [q for q, v in est_rows.items() if v >= crossover_rows]
     below = [q for q, v in est_rows.items() if v < crossover_rows]
@@ -474,19 +416,10 @@ def dispatch_top_k(
     )
     if heavy_share >= WAND_HEAVY_SHARE_MIN:
         plan["path"] = "wand"
-        out = wand_top_k(
-            spark, pruned, corpus_stats, queries, k=k,
-            tokenizer=tokenizer, seed_factor=seed_factor, n_term_buckets=None,
-            qterms=qterms_all, stats=stats, allowed_bc=allowed_bc, quantize=quantize,
-        )
-        return out, plan
+        return _wand(spark, batch, k, allowed_bc, quantize), plan
     plan["path"] = "brute_stored"
-    out = brute_top_k_stored(
-        spark, pruned, corpus_stats, queries, k=k,
-        tokenizer=tokenizer, n_term_buckets=None, qterms=qterms_all, stats=stats,
-        allowed_bc=allowed_bc, quantize=quantize,
-    )
-    return out, plan
+    return rank_top_k(_score(spark, batch, allowed_bc), k, quantize), plan
+
 
 def wand_top_k(
     spark: SparkSession,
@@ -495,9 +428,7 @@ def wand_top_k(
     queries,
     k: int = 10,
     tokenizer: str = "simple",
-    seed_factor: int = 4,
     n_term_buckets: int | None = None,
-    qterms: DataFrame | None = None,
     stats: tuple[int, float] | None = None,
     allowed_bc=None,
     quantize: bool = False,
@@ -519,30 +450,19 @@ def wand_top_k(
     necessary at 3.84M docs where quantized ties near the k boundary are
     dense (BENCH/R7_SCALE.json filtered cell).
 
-    ``n_term_buckets`` must be the BUILD-time bucket count — pass
-    ``StoredIndex(spark, path).n_term_buckets`` (persisted in the index's
-    ``_meta``). The default is None (no partition pruning): a wrong guess
-    would silently drop buckets and return incomplete top-k, so pruning is
-    opt-in with the persisted value only. ``qterms``: pre-tokenized batch
-    pass-through (the dispatcher supplies it; avoids re-tokenizing).
-    ``stats``: pre-collected (n_docs, avgdl), same contract as
-    brute_top_k_stored.
+    ``n_term_buckets`` and ``stats``: see :func:`_resolve_batch`.
     """
-    if stats is None:
-        row = corpus_stats.collect()[0]
-        stats = (int(row["n_docs"]), float(row["avgdl"]))
-    n_docs, avgdl = stats
+    batch = _resolve_batch(
+        spark, posting_blocks, corpus_stats, queries, tokenizer, n_term_buckets, stats
+    )
+    return _wand(spark, batch, k, allowed_bc, quantize)
 
-    if qterms is None:
-        qterms = query_terms_df(spark, queries, tokenizer)
 
-    if n_term_buckets and "term_bucket" in posting_blocks.columns:
-        # partition pruning: only scan buckets that contain a query term
-        posting_blocks = posting_blocks.filter(
-            F.col("term_bucket").isin(
-                _bucket_ids(queries, tokenizer, qterms, n_term_buckets)
-            )
-        )
+def _wand(
+    spark: SparkSession, batch: _Batch, k: int, allowed_bc, quantize: bool
+) -> DataFrame:
+    """:func:`wand_top_k` over a resolved batch."""
+    n_docs, avgdl = batch.stats
 
     # metadata-only plan: the cached frame carries block STATS, never the
     # varint blobs — at 10^12-file scale the matched blobs of one hot term
@@ -552,13 +472,13 @@ def wand_top_k(
     meta_cols = ["term", "block_id", "n", "df", "block_max_tf_norm"]
     blob_cols = ["term", "block_id", "doc_ids_delta_varint", "tfs_varint", "dls_varint"]
     meta = (
-        posting_blocks.select(*meta_cols)
-        .join(F.broadcast(qterms), "term")
+        batch.pruned.select(*meta_cols)
+        .join(F.broadcast(batch.qterms), "term")
         .withColumn("idf", idf_col(F.lit(float(n_docs)), F.col("df").cast("double")))
         .withColumn("ub", F.col("idf") * F.col("block_max_tf_norm"))
     )
     meta = meta.cache()
-    blobs = posting_blocks.select(*blob_cols)
+    blobs = batch.pruned.select(*blob_cols)
 
     def decode_keys(keys: DataFrame, broadcast_keys: bool) -> DataFrame:
         """(query_id, term, idf, block_id) -> (query_id, doc_id, score),
@@ -588,13 +508,12 @@ def wand_top_k(
                 "cum_n",
                 F.sum("n").over(w_ub.rowsBetween(Window.unboundedPreceding, -1)),
             )
-            .filter(F.coalesce(F.col("cum_n"), F.lit(0)) < seed_factor * k)
+            .filter(F.coalesce(F.col("cum_n"), F.lit(0)) < WAND_SEED_FACTOR * k)
         )
         seed_scores = decode_keys(seed_blocks, broadcast_keys=True)
         w_theta = Window.partitionBy("query_id").orderBy(
             F.desc("score"), F.asc("doc_id")
         )
-        w_rank = Window.partitionBy("query_id").orderBy(*_rank_order(quantize))
         # θ is tiny (≤1 row per query) — collect it eagerly; this also
         # populates the meta cache before phase 2 reuses it
         theta_sel = (
@@ -602,9 +521,7 @@ def wand_top_k(
             .filter(F.col("rn") == k)
             .select("query_id", F.col("score").alias("theta"))
         )
-        # schema comes from the plan, not a DDL literal: callers may pass a
-        # queries DataFrame whose query_id is not long. A local relation, so
-        # phase 2's broadcast of it runs no job.
+        # a local relation, so phase 2's broadcast of it runs no job
         theta = local_frame(spark, theta_sel.toArrow(), theta_sel.schema)
 
         # ---- phase 2: prune blocks, decode survivors, exact-score ----
@@ -621,12 +538,7 @@ def wand_top_k(
                 | (F.col("bound") >= F.col("theta") - F.lit(1e-4 if quantize else 0.0))
             )
         )
-        scores = decode_keys(survivors, broadcast_keys=False)
-        result = (
-            scores.withColumn("rank", F.row_number().over(w_rank))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "doc_id", "score", "rank")
-        )
+        result = rank_top_k(decode_keys(survivors, broadcast_keys=False), k, quantize)
         # materialize + truncate lineage so meta can be unpersisted without
         # the returned DataFrame recomputing the pruned scan later; the
         # checkpointed blocks are freed with the DataFrame by ContextCleaner

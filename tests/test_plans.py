@@ -92,6 +92,31 @@ def test_no_per_row_python_udf_in_package():
     assert not offenders, offenders
 
 
+def test_stored_layout_is_read_in_one_place():
+    """The stored-index read path knows the block format and the bucket
+    layout once: the batch varint decoders live only in index/codec.py, the
+    term-bucket hash only in index/storage.py, and the query modules take
+    list batches only."""
+    import pathlib
+    import re
+
+    pkg = pathlib.Path(__file__).parent.parent / "goldenretriever_spark"
+    rules = [
+        (r"\bvarint_decode_many\b|\bdelta_decode_grouped\b", {"index/codec.py"}),
+        (r"\[bytes\(\w+\) for \w+ in pdf\[", {"index/codec.py"}),
+        (r"""xxhash64\(\s*["']term["']\s*\)""", {"index/storage.py"}),
+        (r"isinstance\(\s*queries\s*,\s*DataFrame\s*\)", set()),
+    ]
+    offenders = []
+    for p in pkg.rglob("*.py"):
+        rel = p.relative_to(pkg).as_posix()
+        text = p.read_text()
+        for pattern, allowed in rules:
+            if rel not in allowed and re.search(pattern, text):
+                offenders.append(f"{rel}: {pattern}")
+    assert not offenders, offenders
+
+
 def test_ann_ivf_centroid_join_is_broadcast(spark):
     """IVF assignment must broadcast the tiny centroid table (never a
     shuffled cartesian) and the probe->list join must be a hash join."""

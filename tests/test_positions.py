@@ -11,8 +11,8 @@ from goldenretriever_spark.index.positions import (
     decode_positions,
     pack_positional_blocks,
     positional_rows,
-    prune_blocks_for_terms,
 )
+from goldenretriever_spark.index.storage import prune_blocks_for_terms
 from goldenretriever_spark.query.phrase import (
     phrase_match_scan,
     phrase_match_stored,

@@ -65,9 +65,8 @@ def _edges_df(spark, edge_list):
 
 
 @pytest.mark.parametrize("graph", ["random", "chain"])
-def test_star_equals_pointer_doubling(spark, graph):
-    """The star rewrites equal a union-find reference (the name predates
-    the removal of the pointer-doubling variant this once compared to)."""
+def test_star_equals_union_find(spark, graph):
+    """The star rewrites equal a union-find reference."""
     from goldenretriever_spark.operators.dedup import connected_components_star
 
     edge_list = _random_edges() if graph == "random" else _chain_edges()

@@ -89,19 +89,17 @@ def _rows(df):
     return sorted((r.query_id, r.rank, r.doc_id, round(r.score * 10000)) for r in df.collect())
 
 
-def test_filtered_topk_pushdown_matches_semi_join(spark):
+def test_filtered_topk_pushdown_matches_semi_join(spark, monkeypatch):
     """The broadcast doc-id pushdown route (decode-side filtering + the
     brute/WAND dispatcher) returns exactly the semi-join fallback's rows."""
+    from goldenretriever_spark.query import boolean
     from goldenretriever_spark.query.boolean import filtered_top_k
 
     idx, blocks, queries = _filtered_fixture(spark)
     kw = dict(must=["def"], must_not=["deprecated"])
-    push = filtered_top_k(
-        spark, blocks, idx.corpus_stats, queries, k=5, pushdown=True, **kw
-    )
-    semi = filtered_top_k(
-        spark, blocks, idx.corpus_stats, queries, k=5, pushdown=False, **kw
-    )
+    push = filtered_top_k(spark, blocks, idx.corpus_stats, queries, k=5, **kw)
+    monkeypatch.setattr(boolean, "FILTER_PUSHDOWN_MAX_IDS", 0)
+    semi = filtered_top_k(spark, blocks, idx.corpus_stats, queries, k=5, **kw)
     assert _rows(push) == _rows(semi)
     assert len(push.collect()) > 0
     blocks.unpersist()
@@ -111,18 +109,16 @@ def test_filtered_topk_wand_route_matches_brute(spark, monkeypatch):
     """Forcing the dispatcher to the WAND route (crossover=1 -> every query
     heavy) under the filter pushdown returns the same filtered top-k: θ
     seeded from filtered partials is a valid pruning threshold."""
-    from goldenretriever_spark.query import wand
+    from goldenretriever_spark.query import boolean, wand
     from goldenretriever_spark.query.boolean import filtered_top_k
 
     idx, blocks, queries = _filtered_fixture(spark)
     kw = dict(must=["def"], must_not=["deprecated"])
-    baseline = filtered_top_k(
-        spark, blocks, idx.corpus_stats, queries, k=5, pushdown=False, **kw
-    )
+    with monkeypatch.context() as m:
+        m.setattr(boolean, "FILTER_PUSHDOWN_MAX_IDS", 0)
+        baseline = filtered_top_k(spark, blocks, idx.corpus_stats, queries, k=5, **kw)
     monkeypatch.setattr(wand, "WAND_CROSSOVER_DECODE_ROWS", 1)
-    wand_route = filtered_top_k(
-        spark, blocks, idx.corpus_stats, queries, k=5, pushdown=True, **kw
-    )
+    wand_route = filtered_top_k(spark, blocks, idx.corpus_stats, queries, k=5, **kw)
     assert _rows(wand_route) == _rows(baseline)
     blocks.unpersist()
 
@@ -134,18 +130,14 @@ def test_filtered_topk_over_cap_fallback_matches_pushdown(spark, monkeypatch):
 
     idx, blocks, queries = _filtered_fixture(spark)
     kw = dict(must=["def"], must_not=["deprecated"])
-    push = boolean.filtered_top_k(
-        spark, blocks, idx.corpus_stats, queries, k=5, pushdown=True, **kw
-    )
+    push = boolean.filtered_top_k(spark, blocks, idx.corpus_stats, queries, k=5, **kw)
 
     def no_dispatch(*args, **kwargs):
         raise AssertionError("an over-cap doc set must not take the pushdown route")
 
     monkeypatch.setattr(wand, "dispatch_top_k", no_dispatch)
     monkeypatch.setattr(boolean, "FILTER_PUSHDOWN_MAX_IDS", 1)
-    fallback = boolean.filtered_top_k(
-        spark, blocks, idx.corpus_stats, queries, k=5, pushdown=True, **kw
-    )
+    fallback = boolean.filtered_top_k(spark, blocks, idx.corpus_stats, queries, k=5, **kw)
     assert _rows(fallback) == _rows(push)
     assert len(push.collect()) > 0
     blocks.unpersist()

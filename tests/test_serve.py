@@ -104,3 +104,69 @@ def test_single_query_search_job_budget(spark, served):
         sc.setLocalProperty("spark.job.description", None)
     assert len(rows) == 10
     assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 4
+
+
+def test_empty_filter_raises(served):
+    stored, _ = served
+    with pytest.raises(ValueError):
+        stored.search_filtered([(0, "def return")], k=10, must=None, should=None)
+
+
+def test_all_matching_filter_returns_oracle_quantized_top_k(served):
+    """A filter every candidate passes (should= the query's own terms)
+    leaves the ranking alone: the rows are the oracle's top-k in the
+    quantized (score_q desc, doc_id asc) order."""
+    from goldenretriever_spark.oracle import top_k as oracle_top_k
+
+    stored, oidx = served
+    query, k = "def return", 10
+    every = oracle_top_k(oidx, query, k=10**6)
+    # Spark's round is HALF_UP; scores are positive
+    expected = sorted(every, key=lambda ds: (-math.floor(ds[1] * 10000 + 0.5), ds[0]))[:k]
+    rows = sorted(
+        stored.search_filtered([(0, query)], k=k, should=["def", "return"]).collect(),
+        key=lambda r: r["rank"],
+    )
+    assert [r["rank"] for r in rows] == list(range(1, k + 1))
+    assert [r["doc_id"] for r in rows] == [d for d, _ in expected]
+    for r, (_, score) in zip(rows, expected):
+        assert math.isclose(r["score"], score, rel_tol=1e-9, abs_tol=1e-12)
+
+
+def test_missing_bucket_partition_prunes_to_no_rows(spark, served, tmp_path):
+    """A copy of the index with one posting_blocks/term_bucket=b directory
+    deleted: a query whose terms all hash to b returns no rows without
+    raising, and a query with no term in b returns the full index's rows."""
+    import os
+    import shutil
+
+    from goldenretriever_spark.index.storage import StoredIndex
+    from goldenretriever_spark.xxh64 import term_bucket
+
+    stored, _ = served
+    b = term_bucket("def", 64)
+    other = "class import"
+    assert all(term_bucket(t, 64) != b for t in other.split())
+    path = str(tmp_path / "idx")
+    shutil.copytree(stored.path, path)
+    shutil.rmtree(os.path.join(path, "posting_blocks", f"term_bucket={b}"))
+    broken = StoredIndex(spark, path)
+
+    assert broken.search([(0, "def")], k=10).collect() == []
+
+    def rows(handle):
+        return sorted(
+            (r["rank"], r["doc_id"], r["score"])
+            for r in handle.search([(0, other)], k=10).collect()
+        )
+
+    want = rows(stored)
+    assert len(want) == 10
+    assert rows(broken) == want
+
+
+def test_dataframe_query_batch_raises_type_error(spark, served):
+    stored, _ = served
+    batch = spark.createDataFrame([(0, "def")], "query_id long, query_str string")
+    with pytest.raises(TypeError):
+        stored.search(batch, k=10)

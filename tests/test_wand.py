@@ -8,7 +8,7 @@ import pytest
 from goldenretriever_spark import corpus
 from goldenretriever_spark.index.blocks import pack_blocks
 from goldenretriever_spark.index.build import build_index
-from goldenretriever_spark.query import bm25
+from goldenretriever_spark.query import bm25, wand
 from goldenretriever_spark.query.wand import wand_top_k
 
 N_DOCS = 250
@@ -34,18 +34,16 @@ def _collect_ranked(rows):
 
 
 @pytest.mark.parametrize("seed_factor", [1, 4])
-def test_wand_equals_brute_force(built, spark, seed_factor):
+def test_wand_equals_brute_force(built, spark, seed_factor, monkeypatch):
     idx, blocks = built
+    monkeypatch.setattr(wand, "WAND_SEED_FACTOR", seed_factor)
     queries = corpus.reference_queries(40, seed=5)
     qlist = [(int(r.query_id), r.query_str) for r in queries.itertuples()]
 
     terms = bm25.query_terms_df(spark, qlist)
     brute = _collect_ranked(bm25.top_k(idx, terms, k=K).collect())
     pruned = _collect_ranked(
-        wand_top_k(
-            spark, blocks, idx.corpus_stats, qlist,
-            k=K, seed_factor=seed_factor,
-        ).collect()
+        wand_top_k(spark, blocks, idx.corpus_stats, qlist, k=K).collect()
     )
     assert set(brute) == set(pruned)
     for qid in brute:
@@ -89,7 +87,7 @@ def test_wand_prunes_something(built, spark):
     assert res.count() == 5
 
 
-def test_dispatch_top_k_both_sides(built, spark):
+def test_dispatch_top_k_both_sides(built, spark, monkeypatch):
     """dispatch_top_k must be rank-identical to brute force on BOTH sides of
     the crossover threshold (the dispatch changes the plan, never the answer)."""
     from goldenretriever_spark.query.wand import dispatch_top_k
@@ -103,10 +101,8 @@ def test_dispatch_top_k_both_sides(built, spark):
     # at 0 every query clears it -> WAND path; the plan record must confirm
     # the route taken
     for crossover_rows, want_path in ((10**15, "brute_stored"), (0, "wand")):
-        out, plan = dispatch_top_k(
-            spark, blocks, idx.corpus_stats, qlist, k=K,
-            crossover_rows=crossover_rows,
-        )
+        monkeypatch.setattr(wand, "WAND_CROSSOVER_DECODE_ROWS", crossover_rows)
+        out, plan = dispatch_top_k(spark, blocks, idx.corpus_stats, qlist, k=K)
         assert plan["path"] == want_path, plan
         auto = _collect_ranked(out.collect())
         assert set(brute) == set(auto), f"crossover_rows={crossover_rows}"
@@ -118,7 +114,7 @@ def test_dispatch_top_k_both_sides(built, spark):
                 assert math.isclose(sb, sp, rel_tol=1e-9)
 
 
-def test_dispatch_is_volume_aware(built, spark):
+def test_dispatch_is_volume_aware(built, spark, monkeypatch):
     """VERDICT r3 #2: the dispatcher keys on estimated decode volume
     (batch-mean Σdf per query), not corpus size — at the SAME index, a
     1-term batch and a 5-term batch must route to different paths when the
@@ -151,12 +147,10 @@ def test_dispatch_is_volume_aware(built, spark):
     )
     assert share5 >= 0.2, f"generator drift: 5-term heavy share {share5}"
 
+    monkeypatch.setattr(wand, "WAND_CROSSOVER_DECODE_ROWS", threshold)
     paths = {}
     for qlen, qlist in batches.items():
-        out, plan = dispatch_top_k(
-            spark, blocks, idx.corpus_stats, qlist, k=K,
-            crossover_rows=threshold,
-        )
+        out, plan = dispatch_top_k(spark, blocks, idx.corpus_stats, qlist, k=K)
         paths[qlen] = plan["path"]
         if plan["probed"]:
             want_above = sum(1 for v in per_query[qlen].values() if v >= threshold)

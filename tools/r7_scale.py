@@ -4,7 +4,8 @@ Re-measures the r7-optimized stored paths against the ROUND-6 artifact
 numbers recorded on the same host class (BENCH/PHRASE_SCALE.json,
 BENCH/WAND_SWEEP.json), and adds the filtered-retrieval cell VERDICT r6 #3
 asked for: a selective boolean filter (<1% of docs) must materially beat
-the unfiltered query AND the r6-shaped semi-join plan (pushdown=False).
+the unfiltered query AND the r6-shaped semi-join plan (forced by
+``query.boolean.FILTER_PUSHDOWN_MAX_IDS = 0``).
 
 Loadavg is recorded per cell — the sandbox shares a host with noisy
 neighbors (see the r6 drift note) and cross-ROUND deltas carry that caveat;
@@ -60,6 +61,7 @@ def best(fn, runs=2):
 def main() -> None:
     from goldenretriever_spark import corpus
     from goldenretriever_spark.index.storage import StoredIndex
+    from goldenretriever_spark.query import boolean
     from goldenretriever_spark.query.boolean import filtered_top_k
     from goldenretriever_spark.query.phrase import (
         phrase_match_stored,
@@ -188,12 +190,15 @@ def main() -> None:
 
     sc.setJobDescription("r7_scale filtered pushdown")
     t_push, r_push = best(lambda: filtered_top_k(
-        spark, blocks, cstats, qlist, k=10, must=[sel_term],
-        n_term_buckets=nb, pushdown=True))
+        spark, blocks, cstats, qlist, k=10, must=[sel_term], n_term_buckets=nb))
     sc.setJobDescription("r7_scale filtered semi-join (r6 shape)")
-    t_semi, r_semi = best(lambda: filtered_top_k(
-        spark, blocks, cstats, qlist, k=10, must=[sel_term],
-        n_term_buckets=nb, pushdown=False))
+    cap = boolean.FILTER_PUSHDOWN_MAX_IDS
+    boolean.FILTER_PUSHDOWN_MAX_IDS = 0  # every doc set takes the semi-join
+    try:
+        t_semi, r_semi = best(lambda: filtered_top_k(
+            spark, blocks, cstats, qlist, k=10, must=[sel_term], n_term_buckets=nb))
+    finally:
+        boolean.FILTER_PUSHDOWN_MAX_IDS = cap
     sc.setJobDescription("r7_scale unfiltered auto")
     t_unf, _ = best(
         lambda: dispatch_top_k(spark, blocks, cstats, qlist, k=10, n_term_buckets=nb)[0]
