@@ -1,4 +1,5 @@
-"""Compressed posting blocks: salted repartition-by-term + applyInPandas pack.
+"""Compressed block tables: the one blocking both tables share, and the
+posting blocks.
 
 The reference persists its index as an Annoy file + pickle
 (/root/reference/src/prebuilt_index.py:44-72). Here the persistent index is a
@@ -19,7 +20,13 @@ by CONTIGUOUS doc_id ranges (top 16 bits of the signed doc_id), so:
   remain globally sorted runs per term (block-max WAND needs ordered ranges)
 - salt is computed from data already on the row — no extra shuffle stage
 
-Block contents per (term, salt) group, packed in one applyInPandas pass:
+Both block tables — ``posting_blocks`` here and ``positional_blocks``
+(index/positions.py) — are cut by this module, so a change to the cut is a
+one-module change: :func:`salt_col` is the salt (sized by df here, by Σtf
+there), :func:`split_blocks` the block split over doc runs with the shared
+head columns, and :func:`pack_exchange` the one pack exchange.
+
+Block contents per (term, salt) group, packed in one mapInPandas pass:
 doc_ids sorted ascending (signed), delta-gap + varint (codec.py); tfs varint;
 ``block_max_tf_norm`` = max over the block of tf/(tf + k1*(1-b+b*dl/avgdl)) —
 the term-independent part of the BM25 upper bound used by WAND pruning
@@ -28,9 +35,11 @@ the term-independent part of the BM25 upper bound used by WAND pruning
 
 from __future__ import annotations
 
+from typing import Callable
+
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from goldenretriever_spark.index.build import B, K1, InvertedIndex
@@ -53,6 +62,104 @@ BLOCKS_SCHEMA = (
 )
 
 
+def salt_col(freq: Column, target: int) -> Column:
+    """A row's contiguous doc-id-range salt, sized by its term's frequency
+    ``freq`` (df for posting blocks, Σtf for positional blocks): the term
+    gets ``ceil(freq / target)`` salt groups (at most MAX_SALTS; one when
+    ``freq`` is null), and the row's salt is the top 16 bits of its signed
+    doc_id mapped to [0, 65536), then scaled down to [0, n_salts) — ranges
+    stay ordered and disjoint."""
+    n_salts = F.least(
+        F.lit(MAX_SALTS), F.coalesce(F.ceil(freq / F.lit(target)), F.lit(1))
+    ).cast("int")
+    u16 = (F.shiftright(F.col("doc_id"), 48) + F.lit(32768)).cast("long")
+    return F.floor(u16 * n_salts / F.lit(SALT_SPACE)).cast("int")
+
+
+def split_blocks(
+    terms: np.ndarray, salts: np.ndarray, doc_ids: np.ndarray, block_size: int
+) -> tuple[np.ndarray, np.ndarray, dict[str, np.ndarray]]:
+    """Doc runs sorted by (term, salt, doc_id) -> blocks: a block starts at
+    every (term, salt) group start and every block_size-th doc within its
+    group. Returns each block's start and end index into the runs and the
+    head columns both block tables share (``term, salt, block_id, n,
+    doc_id_min, doc_id_max, doc_ids_delta_varint``).
+
+    Fully vectorized (no per-block Python loop — a 10^6-block partition
+    paid ~100µs of numpy call overhead per block, 3 varint calls each,
+    before this)."""
+    n_runs = doc_ids.size
+    salts = salts.astype(np.int64)
+    change = np.empty(n_runs, dtype=bool)
+    change[0] = True
+    change[1:] = (terms[1:] != terms[:-1]) | (salts[1:] != salts[:-1])
+    grp_starts = np.flatnonzero(change)
+    grp_sizes = np.diff(np.append(grp_starts, n_runs))
+    off = np.arange(n_runs, dtype=np.int64) - np.repeat(grp_starts, grp_sizes)
+    starts = np.flatnonzero(off % block_size == 0)
+    ends = np.append(starts[1:], n_runs)
+    salts_b = salts[starts]
+    head = {
+        "term": terms[starts],
+        "salt": salts_b,
+        # globally ordered within term: salt-major, then local
+        "block_id": (salts_b << 32) | (off[starts] // block_size),
+        "n": (ends - starts).astype(np.int32),
+        "doc_id_min": doc_ids[starts],
+        "doc_id_max": doc_ids[ends - 1],
+        "doc_ids_delta_varint": varint_encode_grouped(
+            delta_encode_grouped(doc_ids, starts), starts, ends
+        ),
+    }
+    return starts, ends, head
+
+
+def pack_exchange(
+    rows: DataFrame,
+    order: list[str],
+    pack: Callable[[pd.DataFrame], pd.DataFrame],
+    schema: str,
+    n_term_buckets: int,
+) -> DataFrame:
+    """The one pack exchange of both block tables.
+
+    ``repartition(P, term, salt)`` + ``sortWithinPartitions(term, salt,
+    *order)`` so every (term, salt) group is one contiguous sorted run
+    inside exactly one partition, then ONE mapInPandas call per partition
+    packs all of its groups: ``pack`` maps the partition's sorted rows to
+    its block rows. (A groupBy().applyInPandas() here would pay per-group
+    pandas overhead for every rare term — vocabularies are mostly df=1
+    tails, which made the pack stage the build bottleneck.) P is
+    ``spark.sql.shuffle.partitions``; a partition holds ~|rows|/P rows, so
+    it bounds per-task memory in the Python worker.
+
+    Shuffle-byte discipline (r7, guide §2.3): ``term_bucket`` is a pure
+    function of ``term`` (storage.bucket_col), so it is computed on the
+    packed block rows (~|rows|/block_size of the input) by a plain
+    projection instead of riding the exchange and the Arrow boundary on
+    every input row. ``n_term_buckets`` must match the build-time bucket
+    count (the checkpointed builder passes its own).
+    """
+    P = int(rows.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+
+    def pack_partition(batches):
+        # materialize first: empty shuffle partitions (P > occupied hash
+        # slots) yield zero batches and pd.concat([]) raises
+        batches = list(batches)
+        if not batches:
+            return
+        pdf = pd.concat(batches, ignore_index=True)
+        if not pdf.empty:
+            yield pack(pdf)
+
+    return (
+        rows.repartition(P, "term", "salt")
+        .sortWithinPartitions("term", "salt", *order)
+        .mapInPandas(pack_partition, schema=schema)
+        .withColumn("term_bucket", bucket_col(n_term_buckets))
+    )
+
+
 def enriched_postings(
     index: InvertedIndex,
     target_docs_per_group: int = 250_000,
@@ -68,25 +175,14 @@ def enriched_postings(
     # broadcast it explicitly — at extreme vocab sizes drop the hint and let
     # AQE pick the strategy.
     ts = F.broadcast(index.term_stats)
-    return (
-        index.postings
-        .join(ts, "term")
-        .withColumn(
-            "n_salts",
-            F.least(
-                F.lit(MAX_SALTS),
-                F.ceil(F.col("df") / F.lit(target_docs_per_group)),
-            ).cast("int"),
-        )
-        # contiguous-range salt: map signed doc_id's top 16 bits to [0, 65536)
-        # then scale down to [0, n_salts) — ranges stay ordered and disjoint
-        .withColumn("u16", (F.shiftright(F.col("doc_id"), 48) + F.lit(32768)).cast("long"))
-        .withColumn(
-            "salt",
-            F.floor(F.col("u16") * F.col("n_salts") / F.lit(SALT_SPACE)).cast("int"),
-        )
-        .withColumn("term_bucket", bucket_col(n_term_buckets))
-        .select("term", "salt", "doc_id", "tf", "doc_len", "df", "term_bucket")
+    return index.postings.join(ts, "term").select(
+        "term",
+        salt_col(F.col("df"), target_docs_per_group).alias("salt"),
+        "doc_id",
+        "tf",
+        "doc_len",
+        "df",
+        bucket_col(n_term_buckets).alias("term_bucket"),
     )
 
 
@@ -94,102 +190,46 @@ def pack_enriched(
     enriched: DataFrame,
     avgdl: float,
     block_size: int = BLOCK_SIZE,
-    pack_partitions: int | None = None,
     n_term_buckets: int = 64,
 ) -> DataFrame:
-    """Enriched postings -> compressed posting_blocks.
+    """Enriched postings -> compressed posting_blocks in one exchange
+    (:func:`pack_exchange`). Each posting is one doc run of
+    :func:`split_blocks`; the worker adds ``df`` (it stays on the rows:
+    re-attaching it post-pack would need a vocab-sized broadcast join,
+    which does not survive 100 TB vocabularies), the block-max BM25 bound
+    and the tf and doc_len streams."""
 
-    One shuffle: ``repartition(P, term, salt)`` + ``sortWithinPartitions`` so
-    every (term, salt) group is one contiguous sorted run inside exactly one
-    partition, then ONE mapInPandas call per partition packs all of its
-    groups. (A groupBy().applyInPandas() here would pay per-group pandas
-    overhead for every rare term — vocabularies are mostly df=1 tails, which
-    made the pack stage the build bottleneck. Partition-wise packing does the
-    same work in ~vocab/P numpy slices per task.)
-
-    Shuffle-byte discipline (r7, guide §2.3): ``term_bucket`` is a pure
-    function of ``term`` (storage.bucket_col), so it is recomputed on the packed
-    block rows (~|postings|/block_size of the input) by a plain projection
-    instead of riding the exchange and the Arrow boundary on every posting
-    row. ``df`` stays on the rows: re-attaching it post-pack would need a
-    vocab-sized broadcast join, which does not survive 100 TB vocabularies.
-    ``n_term_buckets`` must match the build-time bucket count (the
-    checkpointed builder passes its own).
-
-    P (pack_partitions) bounds per-task memory: partitions hold
-    ~|postings|/P rows; size it so a partition fits comfortably in a Python
-    worker (the builder passes shuffle-partition-scaled defaults).
-    """
-    spark = enriched.sparkSession
-    P = pack_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-
-    def pack_partition(batches):
-        # materialize first: empty shuffle partitions (P > occupied hash
-        # slots) yield zero batches and pd.concat([]) raises
-        batches = list(batches)
-        if not batches:
-            return
-        pdf = pd.concat(batches, ignore_index=True)
-        if pdf.empty:
-            return
-        terms = pdf["term"].to_numpy()
-        salts = pdf["salt"].to_numpy()
-        ids_all = pdf["doc_id"].to_numpy(dtype=np.int64)
-        tfs_all = pdf["tf"].to_numpy(dtype=np.int64)
-        dls_all = pdf["doc_len"].to_numpy(dtype=np.int64)
-        dfs_all = pdf["df"].to_numpy(dtype=np.int64)
-        tf_norm_all = tfs_all / (tfs_all + K1 * (1.0 - B + B * dls_all / avgdl))
-
-        n_rows = len(pdf)
-        change = np.empty(n_rows, dtype=bool)
-        change[0] = True
-        change[1:] = (terms[1:] != terms[:-1]) | (salts[1:] != salts[:-1])
-        grp_starts = np.flatnonzero(change)
-
-        # Fully vectorized block split (no per-block Python loop — a 10^6-
-        # block partition paid ~100µs of numpy call overhead per block, 3
-        # varint calls each, before this): a block starts at every group
-        # start and every block_size-th row within its group.
-        grp_sizes = np.diff(np.append(grp_starts, n_rows))
-        grp_start_per_row = np.repeat(grp_starts, grp_sizes)
-        off = np.arange(n_rows, dtype=np.int64) - grp_start_per_row
-        blk_starts = np.flatnonzero(off % block_size == 0)
-        blk_ends = np.append(blk_starts[1:], n_rows)
-        local = off[blk_starts] // block_size
-        salts_b = salts[blk_starts].astype(np.int64)
-
-        yield pd.DataFrame(
+    def pack(pdf: pd.DataFrame) -> pd.DataFrame:
+        ids = pdf["doc_id"].to_numpy(dtype=np.int64)
+        tfs = pdf["tf"].to_numpy(dtype=np.int64)
+        dls = pdf["doc_len"].to_numpy(dtype=np.int64)
+        tf_norm = tfs / (tfs + K1 * (1.0 - B + B * dls / avgdl))
+        starts, ends, head = split_blocks(
+            pdf["term"].to_numpy(), pdf["salt"].to_numpy(), ids, block_size
+        )
+        return pd.DataFrame(
             {
-                "term": terms[blk_starts],
-                "salt": salts_b,
-                # globally ordered within term: salt-major, then local
-                "block_id": (salts_b << 32) | local,
-                "n": blk_ends - blk_starts,
-                "df": dfs_all[blk_starts],
-                "doc_id_min": ids_all[blk_starts],
-                "doc_id_max": ids_all[blk_ends - 1],
+                **head,
+                "df": pdf["df"].to_numpy(dtype=np.int64)[starts],
                 # segmented max over each block's tf_norm run
-                "block_max_tf_norm": np.maximum.reduceat(tf_norm_all, blk_starts),
-                "doc_ids_delta_varint": varint_encode_grouped(
-                    delta_encode_grouped(ids_all, blk_starts), blk_starts, blk_ends
-                ),
+                "block_max_tf_norm": np.maximum.reduceat(tf_norm, starts),
                 "tfs_varint": varint_encode_grouped(
-                    tfs_all.astype(np.uint64), blk_starts, blk_ends
+                    tfs.astype(np.uint64), starts, ends
                 ),
                 # per-posting doc_len (varint, ~1-2B) makes blocks fully
                 # self-contained for BM25 — no doc_stats join at query time
                 "dls_varint": varint_encode_grouped(
-                    dls_all.astype(np.uint64), blk_starts, blk_ends
+                    dls.astype(np.uint64), starts, ends
                 ),
             }
         )
 
-    return (
-        enriched.select("term", "salt", "doc_id", "tf", "doc_len", "df")
-        .repartition(P, "term", "salt")
-        .sortWithinPartitions("term", "salt", "doc_id")
-        .mapInPandas(pack_partition, schema=BLOCKS_SCHEMA)
-        .withColumn("term_bucket", bucket_col(n_term_buckets))
+    return pack_exchange(
+        enriched.select("term", "salt", "doc_id", "tf", "doc_len", "df"),
+        ["doc_id"],
+        pack,
+        BLOCKS_SCHEMA,
+        n_term_buckets,
     )
 
 

@@ -193,7 +193,10 @@ def build_index(
     totals = postings.agg(F.coalesce(F.sum("tf"), F.lit(0)).alias("total_len"))
     corpus_stats = n_docs_df.crossJoin(totals).select(
         "n_docs",
-        (F.col("total_len").cast("double") / F.col("n_docs")).alias("avgdl"),
+        # an empty corpus has avgdl 0.0 (ANSI mode raises on the 0/0)
+        F.when(F.col("n_docs") == 0, F.lit(0.0))
+        .otherwise(F.col("total_len").cast("double") / F.col("n_docs"))
+        .alias("avgdl"),
     )
 
     term_stats = postings.groupBy("term").agg(F.count(F.lit(1)).alias("df"))

@@ -3,12 +3,14 @@
 Phrase and proximity search (query/phrase.py) consume ``(term, doc_id, pos)``
 rows. Serving them by re-tokenizing the corpus per query is a full scan — the
 one scale-killer the r5 audit named. This module persists the positional
-postings ONCE at index-build time, in the same shape as the BM25 posting
-blocks (index/blocks.py): fixed-size doc-aligned blocks, salted
-repartition-by-term for hot-term skew, delta-gap + varint compression
-(index/codec.py — positions are sorted ints exactly like doc-id runs), and
-``term_bucket`` partitioning so a phrase query's scan prunes to the buckets
-holding its terms.
+postings ONCE at index-build time. It holds only what is positional: the
+``posexplode`` token rows, their collapse into doc runs, the positions
+payload and its decoders. The blocking is index/blocks.py's, shared with the
+BM25 posting blocks — the same contiguous doc-id-range salt, block split and
+one ``(term, salt)`` pack exchange — so both tables are cut identically:
+delta-gap + varint compression (index/codec.py — positions are sorted ints
+exactly like doc-id runs) and ``term_bucket`` partitioning so a phrase
+query's scan prunes to the buckets holding its terms.
 
 The reference engine has no positional index at all (its retrieval is
 embedding / bag-of-words, /root/reference/src/models.py:114-149); the layout
@@ -28,11 +30,10 @@ Block schema::
 - ``positions_delta_varint``: all the block's token positions concatenated
   doc-major, delta-encoded WITH A RESET at each doc boundary, varint
 
-Skew: the salt is the same contiguous top-16-bit doc_id-range split as
-blocks.py, sized by COLLECTION frequency (total positions, not df) because a
-positional group's row count is Σtf, not doc count — a scorching-hot term
-("def") splits into bounded, ordered, disjoint ranges with no extra shuffle
-stage.
+Skew: the salt (blocks.salt_col) is sized by COLLECTION frequency (total
+positions, not df) because a positional group's row count is Σtf, not doc
+count — a scorching-hot term ("def") splits into bounded, ordered, disjoint
+ranges with no extra shuffle stage.
 """
 
 from __future__ import annotations
@@ -42,21 +43,23 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from goldenretriever_spark.index.blocks import MAX_SALTS, SALT_SPACE
+from goldenretriever_spark.index.blocks import (
+    BLOCK_SIZE,
+    pack_exchange,
+    salt_col,
+    split_blocks,
+)
 from goldenretriever_spark.index.codec import (
     decode_position_blocks,
     delta_encode_grouped,
     varint_encode_grouped,
 )
-from goldenretriever_spark.index.storage import bucket_col
-
-BLOCK_DOCS = 128
 
 POS_BLOCKS_SCHEMA = (
     "term string, salt int, block_id long, n int, "
     "doc_id_min long, doc_id_max long, "
     "doc_ids_delta_varint binary, pos_counts_varint binary, "
-    "positions_delta_varint binary, term_bucket int"
+    "positions_delta_varint binary"
 )
 
 
@@ -74,35 +77,29 @@ def positional_rows(
     ).select("term", "doc_id", "pos")
 
 
-def term_cf(rows: DataFrame) -> DataFrame:
-    """(term, cf) collection frequencies from positional rows. The groupBy
-    partially aggregates map-side, so the shuffle is vocab-sized regardless
-    of corpus size. Builders that already hold cached BM25 postings should
-    pass ``index.postings.groupBy('term').agg(sum(tf))`` instead and skip
-    this second pass over the tokens."""
-    return rows.groupBy("term").agg(F.count(F.lit(1)).cast("long").alias("cf"))
-
-
 def pack_positions(
     rows: DataFrame,
-    cf: DataFrame,
+    postings: DataFrame | None = None,
     target_positions_per_group: int = 1_000_000,
     n_term_buckets: int = 64,
-    block_docs: int = BLOCK_DOCS,
-    pack_partitions: int | None = None,
+    block_docs: int = BLOCK_SIZE,
 ) -> DataFrame:
     """(term, doc_id, pos) rows -> compressed positional blocks.
 
-    Same one-shuffle pack shape as blocks.pack_enriched: join the broadcast
-    vocab-sized ``cf`` frame for the adaptive salt, ``repartition(P, term,
-    salt)`` + ``sortWithinPartitions(term, salt, doc_id, pos)`` so every
-    (term, salt) group is one contiguous doc-major sorted run inside exactly
-    one partition, then ONE mapInPandas pass packs all of a partition's
-    groups with whole-array numpy (no per-block or per-doc Python loops).
-    """
-    spark = rows.sparkSession
-    P = pack_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
+    The salt is sized by collection frequency cf = Σtf per term (a
+    positional group's row count). ``postings``: pass the (usually cached)
+    BM25 postings to sum their tf and skip a second pass over the tokens;
+    without them every row counts once. The cf groupBy partially
+    aggregates map-side, so its shuffle is vocab-sized.
 
+    The worker collapses the (term, salt, doc_id, pos)-sorted token rows
+    into doc runs, which the shared block split (blocks.split_blocks) cuts
+    into blocks, and adds the positions payload — whole-array numpy, no
+    per-block or per-doc Python loops.
+    """
+    counted = postings if postings is not None else rows.select(
+        "term", F.lit(1).alias("tf")
+    )
     # Only terms hot enough to need MORE than one salt group matter to the
     # salt computation (cf < target -> ceil(cf/target) = 1 -> salt 0), and
     # those are the vocabulary HEAD — a handful of rows. Broadcasting just
@@ -110,47 +107,26 @@ def pack_positions(
     # per-row probe against a tiny map and the broadcast build O(hot terms)
     # (r7, guide §3.1; the full-cf aggregate still runs once to FIND the
     # hot terms, but never ships per-row).
-    hot_cf = cf.filter(F.col("cf") >= target_positions_per_group)
-    enriched = (
-        rows.join(F.broadcast(hot_cf), "term", "left")
-        .withColumn(
-            "n_salts",
-            F.least(
-                F.lit(MAX_SALTS),
-                F.coalesce(
-                    F.ceil(F.col("cf") / F.lit(target_positions_per_group)),
-                    F.lit(1),
-                ),
-            ).cast("int"),
-        )
-        .withColumn(
-            "u16", (F.shiftright(F.col("doc_id"), 48) + F.lit(32768)).cast("long")
-        )
-        .withColumn(
-            "salt",
-            F.floor(F.col("u16") * F.col("n_salts") / F.lit(SALT_SPACE)).cast("int"),
-        )
-        # shuffle-byte discipline (r7, guide §2.3): term_bucket is a pure
-        # function of term, so it is attached AFTER packing (block rows are
-        # ~1/block_docs of the position rows) instead of riding the exchange
-        # and the Arrow boundary on every token row
-        .select("term", "salt", "doc_id", "pos")
+    hot_cf = (
+        counted.groupBy("term")
+        .agg(F.sum("tf").cast("long").alias("cf"))
+        .filter(F.col("cf") >= target_positions_per_group)
+    )
+    salted = rows.join(F.broadcast(hot_cf), "term", "left").select(
+        "term",
+        salt_col(F.col("cf"), target_positions_per_group).alias("salt"),
+        "doc_id",
+        "pos",
     )
 
-    def pack_partition(batches):
-        batches = list(batches)
-        if not batches:
-            return
-        pdf = pd.concat(batches, ignore_index=True)
-        if pdf.empty:
-            return
+    def pack(pdf: pd.DataFrame) -> pd.DataFrame:
         terms = pdf["term"].to_numpy()
         salts = pdf["salt"].to_numpy(dtype=np.int64)
         ids = pdf["doc_id"].to_numpy(dtype=np.int64)
-        poss = pdf["pos"].to_numpy(dtype=np.int64)
         n_rows = len(pdf)
 
-        # doc-run boundaries over the (term, salt, doc_id, pos)-sorted rows
+        # collapse token rows into doc runs: a run starts wherever
+        # (term, salt, doc_id) changes
         doc_change = np.empty(n_rows, dtype=bool)
         doc_change[0] = True
         doc_change[1:] = (
@@ -160,63 +136,33 @@ def pack_positions(
         )
         doc_starts = np.flatnonzero(doc_change)
         doc_ends = np.append(doc_starts[1:], n_rows)
-        pos_counts = (doc_ends - doc_starts).astype(np.uint64)
-        d_ids = ids[doc_starts]
-        d_terms = terms[doc_starts]
-        d_salts = salts[doc_starts]
-        nd = doc_starts.size
+        starts, ends, head = split_blocks(
+            terms[doc_starts], salts[doc_starts], ids[doc_starts], block_docs
+        )
 
-        # (term, salt) group boundaries at the doc level, then block split:
-        # a block starts at every group start and every block_docs-th doc
-        # within its group (identical split logic to blocks.pack_enriched)
-        g_change = np.empty(nd, dtype=bool)
-        g_change[0] = True
-        g_change[1:] = (d_terms[1:] != d_terms[:-1]) | (d_salts[1:] != d_salts[:-1])
-        g_starts = np.flatnonzero(g_change)
-        g_sizes = np.diff(np.append(g_starts, nd))
-        g_start_per_doc = np.repeat(g_starts, g_sizes)
-        off = np.arange(nd, dtype=np.int64) - g_start_per_doc
-        blk_d_starts = np.flatnonzero(off % block_docs == 0)
-        blk_d_ends = np.append(blk_d_starts[1:], nd)
-        local = off[blk_d_starts] // block_docs
-        salts_b = d_salts[blk_d_starts]
-
-        # row-level block boundaries for the positions buffer: blocks tile
-        # the doc runs contiguously, so each block's rows are one slice
-        blk_r_starts = doc_starts[blk_d_starts]
-        blk_r_ends = np.append(blk_r_starts[1:], n_rows)
+        # blocks tile the doc runs contiguously, so each block's token rows
+        # are one slice of the positions buffer
+        r_starts = doc_starts[starts]
+        r_ends = np.append(r_starts[1:], n_rows)
         # positions delta-encoded with a reset at EVERY doc boundary — the
         # decode rebuilds per-doc runs from pos_counts alone
-        pos_deltas = delta_encode_grouped(poss, doc_starts)
-
-        yield pd.DataFrame(
+        pos_deltas = delta_encode_grouped(
+            pdf["pos"].to_numpy(dtype=np.int64), doc_starts
+        )
+        return pd.DataFrame(
             {
-                "term": d_terms[blk_d_starts],
-                "salt": salts_b,
-                "block_id": (salts_b << 32) | local,
-                "n": (blk_d_ends - blk_d_starts).astype(np.int32),
-                "doc_id_min": d_ids[blk_d_starts],
-                "doc_id_max": d_ids[blk_d_ends - 1],
-                "doc_ids_delta_varint": varint_encode_grouped(
-                    delta_encode_grouped(d_ids, blk_d_starts),
-                    blk_d_starts,
-                    blk_d_ends,
-                ),
+                **head,
                 "pos_counts_varint": varint_encode_grouped(
-                    pos_counts, blk_d_starts, blk_d_ends
+                    (doc_ends - doc_starts).astype(np.uint64), starts, ends
                 ),
                 "positions_delta_varint": varint_encode_grouped(
-                    pos_deltas, blk_r_starts, blk_r_ends
+                    pos_deltas, r_starts, r_ends
                 ),
             }
         )
 
-    pack_schema = POS_BLOCKS_SCHEMA.rsplit(", term_bucket int", 1)[0]
-    return (
-        enriched.repartition(P, "term", "salt")
-        .sortWithinPartitions("term", "salt", "doc_id", "pos")
-        .mapInPandas(pack_partition, schema=pack_schema)
-        .withColumn("term_bucket", bucket_col(n_term_buckets))
+    return pack_exchange(
+        salted, ["doc_id", "pos"], pack, POS_BLOCKS_SCHEMA, n_term_buckets
     )
 
 
@@ -226,26 +172,16 @@ def pack_positional_blocks(
     postings: DataFrame | None = None,
     target_positions_per_group: int = 1_000_000,
     n_term_buckets: int = 64,
-    block_docs: int = BLOCK_DOCS,
-    pack_partitions: int | None = None,
+    block_docs: int = BLOCK_SIZE,
 ) -> DataFrame:
-    """Convenience: corpus -> compressed positional blocks in one plan.
-
-    ``postings``: pass the (usually cached) BM25 postings to derive the
-    salt's collection frequencies as Σtf per term — avoids a second
-    tokenize pass; without it, cf comes from the rows themselves."""
-    rows = positional_rows(documents, tokenizer)
-    if postings is not None:
-        cf = postings.groupBy("term").agg(F.sum("tf").cast("long").alias("cf"))
-    else:
-        cf = term_cf(rows)
+    """Convenience: corpus -> compressed positional blocks in one plan
+    (``postings``: see :func:`pack_positions`)."""
     return pack_positions(
-        rows,
-        cf,
+        positional_rows(documents, tokenizer),
+        postings,
         target_positions_per_group=target_positions_per_group,
         n_term_buckets=n_term_buckets,
         block_docs=block_docs,
-        pack_partitions=pack_partitions,
     )
 
 

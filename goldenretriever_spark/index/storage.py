@@ -8,10 +8,11 @@ writer degrades to plain Parquet ``partitionBy`` — call-sites are isolated
 here so a real cluster flips ``format='iceberg'`` only.
 
 Layout (designed for 10^12-file scale):
-- posting_blocks/  partitioned by term_bucket (:func:`bucket_col`) —
-  query-time scans prune to the buckets holding the query's terms
-  (:func:`prune_blocks_for_terms`, the one bucket filter of the read path);
-  the per-bucket file count is what checkpointing tracks.
+- posting_blocks/, positional_blocks/  partitioned by term_bucket
+  (:func:`bucket_col`) — query-time scans prune to the buckets holding the
+  query's terms (:func:`prune_blocks_for_terms`, the one bucket filter of
+  the read path); read with their packers' schemas, never inferred; the
+  per-bucket file count is what checkpointing tracks.
 - doc_stats/       repartitioned by doc_id so the query-time doc_len join is
   co-partitioned (bucketed-table join on a real warehouse).
 - corpus_stats/    single row.
@@ -139,9 +140,9 @@ class StoredIndex:
         # term_bucket directories at plan time, per search call. A DataFrame
         # is an immutable plan, so handing the same one out is safe.
         if self._posting_blocks is None:
-            self._posting_blocks = self.spark.read.parquet(
-                os.path.join(self.path, "posting_blocks")
-            )
+            from goldenretriever_spark.index.blocks import BLOCKS_SCHEMA
+
+            self._posting_blocks = self._read_blocks("posting_blocks", BLOCKS_SCHEMA)
         return self._posting_blocks
 
     @property
@@ -149,13 +150,24 @@ class StoredIndex:
         """Persisted positional blocks (index/positions.py); raises if the
         index was built without them — check :meth:`has_positional`.
         Memoized per handle like posting_blocks (ADVICE r6): re-reading
-        re-ran schema inference + term_bucket partition discovery on every
+        re-ran term_bucket partition discovery on every
         phrase/proximity/phrase_ranked call."""
         if self._positional_blocks is None:
-            self._positional_blocks = self.spark.read.parquet(
-                os.path.join(self.path, "positional_blocks")
+            from goldenretriever_spark.index.positions import POS_BLOCKS_SCHEMA
+
+            self._positional_blocks = self._read_blocks(
+                "positional_blocks", POS_BLOCKS_SCHEMA
             )
         return self._positional_blocks
+
+    def _read_blocks(self, table: str, schema: str) -> DataFrame:
+        """A block table read with its packer's schema plus the term_bucket
+        partition column, never by inference: a table with no rows (an
+        empty corpus writes only ``_SUCCESS``) reads as an empty frame
+        instead of failing schema inference."""
+        return self.spark.read.schema(f"{schema}, term_bucket int").parquet(
+            os.path.join(self.path, table)
+        )
 
     def has_positional(self) -> bool:
         """Cheap existence probe (ADVICE r6): a filesystem check instead of
@@ -213,7 +225,6 @@ class StoredIndex:
         tokenizer: str = "simple",
         documents: DataFrame | None = None,
         with_plan: bool = False,
-        content_pushdown: bool = False,
     ):
         """Top-k over this stored index with measured brute/WAND dispatch and
         the persisted term-bucket count for partition pruning — the one-call
@@ -234,17 +245,7 @@ class StoredIndex:
         whole documents table on every call while it is under
         ``spark.sql.autoBroadcastJoinThreshold``, and a sort-merge join over
         the full table above it — an O(corpus) cost per call.
-        ``with_plan=True`` also returns the dispatch record
-        (tools/serve_demo.py logs it).
-
-        ``content_pushdown=True`` (needs ``documents``) trades laziness for
-        interactive latency: the ranked frame is materialized FIRST, the
-        n_queries x k doc ids are collected (tiny), and the documents scan
-        gets an explicit ``doc_id IN (...)`` predicate — parquet row-group
-        min/max pruning skips everything else, so only the matching rows are
-        broadcast (the 1.39 s single-query join-back measured in
-        BENCH/SERVE_LATENCY.json). Results are identical to the lazy path
-        (tests/test_round6.py)."""
+        ``with_plan=True`` also returns the dispatch record."""
         from goldenretriever_spark.query.wand import dispatch_top_k
 
         ranked, plan = dispatch_top_k(
@@ -259,16 +260,11 @@ class StoredIndex:
             term_df_cache=self._term_df,
         )
         if documents is not None:
-            if content_pushdown:
-                top = ranked.toArrow()
-                ids = sorted(set(top.column("doc_id").to_pylist()))
-                ranked = local_frame(self.spark, top, ranked.schema)
-                documents = documents.filter(F.col("doc_id").isin(ids))
             # right-outer FROM documents keeps every ranked row. Spark builds
             # it on documents (BroadcastHashJoin RightOuter BuildLeft under
             # the broadcast threshold, sort-merge above it), so this reads
-            # the whole doc table per call unless content_pushdown narrowed
-            # it; a broadcast hint on the ranked side cannot apply here.
+            # the whole doc table per call; a broadcast hint on the ranked
+            # side cannot apply here.
             ranked = (
                 documents.join(ranked, "doc_id", "right")
                 .select(

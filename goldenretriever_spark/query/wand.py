@@ -274,28 +274,6 @@ WAND_HEAVY_SHARE_MIN = 0.2
 WIDE_BATCH_MAX_ROWS_PER_QUERY = 2_000_000
 
 
-def estimate_decode_rows(posting_blocks: DataFrame, qterms: DataFrame) -> DataFrame:
-    """Per-query estimated decode volume: Σ df over the query's distinct
-    terms == exactly the postings an unpruned stored-index scan decodes.
-    Metadata-only: reads (term, df) from the (bucket-pruned) blocks scan —
-    parquet column pruning keeps the blob columns untouched. LEFT join with
-    df coalesced to 0 (ADVICE r4): every query with at least one token
-    contributes a row (a query tokenizing to ZERO terms has no qterms rows
-    and is absent here — harmless, it returns nothing on any path), so a
-    batch mixing no-HIT queries with heavy ones does not overstate the
-    volume signal and misroute to WAND."""
-    tdf = (
-        posting_blocks.select("term", "df")
-        .groupBy("term")
-        .agg(F.first("df").alias("df"))
-    )
-    return (
-        qterms.join(tdf, "term", "left")
-        .groupBy("query_id")
-        .agg(F.sum(F.coalesce(F.col("df"), F.lit(0))).alias("est_rows"))
-    )
-
-
 def dispatch_top_k(
     spark: SparkSession,
     posting_blocks: DataFrame,
@@ -369,34 +347,31 @@ def dispatch_top_k(
         plan.update({"path": "brute_stored", "probed": False})
         return rank_top_k(_score(spark, batch, allowed_bc), k, quantize), plan
 
-    if term_df_cache is not None:
-        # per-handle df memo (VERDICT r6 #4): probe ONLY terms not yet seen
-        # by this handle — a repeated term vocabulary (interactive serve,
-        # the hybrid lexical leg) pays the metadata probe once, later calls
-        # route with zero probe jobs. Missing terms are cached as df=0,
-        # matching estimate_decode_rows' left-join coalesce semantics.
-        unknown = sorted(
-            {t for ts in toksets.values() for t in ts} - term_df_cache.keys()
-        )
-        if unknown:
-            found = {
-                r["term"]: int(r["df"])
-                for r in batch.pruned.select("term", "df")
-                .filter(F.col("term").isin(unknown))
-                .groupBy("term")
-                .agg(F.first("df").alias("df"))
-                .collect()
-            }
-            for t in unknown:
-                term_df_cache[t] = found.get(t, 0)
-        est_rows = {
-            qid: sum(term_df_cache[t] for t in ts) for qid, ts in toksets.items()
+    # the df probe reads only terms not yet in ``term_df_cache`` — the
+    # per-handle memo StoredIndex passes (VERDICT r6 #4), so a repeated
+    # vocabulary (interactive serve, the hybrid lexical leg) pays the
+    # metadata probe once; without one, a dict local to this call. Terms
+    # absent from the index are cached as df=0, and a query with no terms
+    # has volume 0.
+    if term_df_cache is None:
+        term_df_cache = {}
+    unknown = sorted(
+        {t for ts in toksets.values() for t in ts} - term_df_cache.keys()
+    )
+    if unknown:
+        found = {
+            r["term"]: int(r["df"])
+            for r in batch.pruned.select("term", "df")
+            .filter(F.col("term").isin(unknown))
+            .groupBy("term")
+            .agg(F.first("df").alias("df"))
+            .collect()
         }
-    else:
-        est_rows = {
-            r["query_id"]: int(r["est_rows"])
-            for r in estimate_decode_rows(batch.pruned, batch.qterms).collect()
-        }
+        for t in unknown:
+            term_df_cache[t] = found.get(t, 0)
+    est_rows = {
+        qid: sum(term_df_cache[t] for t in ts) for qid, ts in toksets.items()
+    }
     above = [q for q, v in est_rows.items() if v >= crossover_rows]
     below = [q for q, v in est_rows.items() if v < crossover_rows]
     vals = list(est_rows.values())

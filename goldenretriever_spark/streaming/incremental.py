@@ -181,11 +181,9 @@ def compact_streamed_index(
         )
 
         segs = spark.read.parquet(os.path.join(out_dir, "positional_blocks"))
-        rows = decode_positions(segs)
-        cf = idx.postings.groupBy("term").agg(
-            F.sum("tf").cast("long").alias("cf")
+        pos_blocks = pack_positions(
+            decode_positions(segs), idx.postings, n_term_buckets=n_term_buckets
         )
-        pos_blocks = pack_positions(rows, cf, n_term_buckets=n_term_buckets)
     write_index(
         idx,
         idx_path,

@@ -82,3 +82,26 @@ def test_block_max_bound_is_tight(built, spark):
             for d, tf in zip(ids.tolist(), tfs.tolist())
         ]
         assert math.isclose(max(norms), r["block_max_tf_norm"], rel_tol=1e-12)
+
+
+@pytest.mark.parametrize("packer", ["posting", "positional"])
+def test_pack_survives_excess_partitions(spark, packer):
+    """P >> occupied (term,salt) slots leaves empty shuffle partitions; the
+    shared pack exchange must skip them, not crash on pd.concat([])."""
+    from goldenretriever_spark.index.blocks import enriched_postings, pack_enriched
+    from goldenretriever_spark.index.positions import pack_positional_blocks
+
+    docs = spark.createDataFrame(corpus.synth_corpus_pandas(5, seed=3))
+    idx = build_index(docs, persist=False)
+    conf = spark.conf
+    saved = conf.get("spark.sql.shuffle.partitions")
+    conf.set("spark.sql.shuffle.partitions", "64")
+    try:
+        if packer == "posting":
+            avgdl = float(idx.corpus_stats.collect()[0]["avgdl"])
+            blocks = pack_enriched(enriched_postings(idx), avgdl)
+        else:
+            blocks = pack_positional_blocks(docs, postings=idx.postings)
+        assert blocks.count() > 0
+    finally:
+        conf.set("spark.sql.shuffle.partitions", saved)

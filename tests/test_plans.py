@@ -93,10 +93,11 @@ def test_no_per_row_python_udf_in_package():
 
 
 def test_stored_layout_is_read_in_one_place():
-    """The stored-index read path knows the block format and the bucket
-    layout once: the batch varint decoders live only in index/codec.py, the
-    term-bucket hash only in index/storage.py, and the query modules take
-    list batches only."""
+    """The stored index knows its block format and bucket layout once: the
+    batch varint decoders live only in index/codec.py, the term-bucket hash
+    only in index/storage.py, the blocking of both block tables (salt,
+    block id, pack exchange) only in index/blocks.py, and the query modules
+    take list batches only."""
     import pathlib
     import re
 
@@ -106,6 +107,11 @@ def test_stored_layout_is_read_in_one_place():
         (r"\[bytes\(\w+\) for \w+ in pdf\[", {"index/codec.py"}),
         (r"""xxhash64\(\s*["']term["']\s*\)""", {"index/storage.py"}),
         (r"isinstance\(\s*queries\s*,\s*DataFrame\s*\)", set()),
+        (r"""shiftright\(\s*F\.col\(\s*["']doc_id["']\s*\)\s*,\s*48\s*\)""", {"index/blocks.py"}),
+        (r"<<\s*32\s*\)\s*\|", {"index/blocks.py"}),
+        (r"""repartition\(\s*P\s*,\s*["']term["']\s*,\s*["']salt["']\s*\)""", {"index/blocks.py"}),
+        (r"\bdef\s+term_cf\b", set()),
+        (r"\bpack_partitions\b", set()),
     ]
     offenders = []
     for p in pkg.rglob("*.py"):

@@ -176,21 +176,6 @@ def test_simple_tokenizer_whitespace_parity(spark):
     assert engine == oracle == duck == ["a b", "c d", "e", "f", "g"]
 
 
-# ---------------------------------------------------------------- pack guard
-
-def test_pack_blocks_survives_excess_partitions(spark):
-    """P >> occupied (term,salt) slots leaves empty shuffle partitions; the
-    pack must skip them, not crash on pd.concat([])."""
-    from goldenretriever_spark.index.blocks import enriched_postings, pack_enriched
-    from goldenretriever_spark.index.build import build_index
-
-    docs = spark.createDataFrame(corpus.synth_corpus_pandas(5, seed=3))
-    idx = build_index(docs, persist=False)
-    avgdl = float(idx.corpus_stats.collect()[0]["avgdl"])
-    blocks = pack_enriched(enriched_postings(idx), avgdl, pack_partitions=64)
-    assert blocks.count() > 0
-
-
 # ---------------------------------------------------------------- pdf source
 
 def test_pdf_parse_end_to_end(spark, tmp_path):

@@ -157,37 +157,6 @@ def test_phrase_batch_equals_per_phrase(spark):
     assert any(q == 0 for q, _, _ in got), "batch must have real matches"
 
 
-def test_content_pushdown_matches_lazy_joinback(spark, tmp_path):
-    """search(content_pushdown=True) must return exactly the lazy
-    broadcast-join path's rows — including a ranked doc_id missing from the
-    documents table surfacing as null content (the ADVICE r5 left-join
-    contract)."""
-    from goldenretriever_spark import corpus
-    from goldenretriever_spark.index.blocks import pack_blocks
-    from goldenretriever_spark.index.build import build_index, with_doc_ids
-    from goldenretriever_spark.index.storage import StoredIndex, write_index
-
-    docs = with_doc_ids(spark.createDataFrame(corpus.synth_corpus_pandas(120, seed=4)))
-    idx = build_index(docs, tokenizer="simple")
-    blocks = pack_blocks(idx, block_size=32, target_docs_per_group=1000, n_term_buckets=8)
-    idx_path = str(tmp_path / "idx")
-    write_index(idx, idx_path, blocks=blocks, n_term_buckets=8)
-    stored = StoredIndex(spark, idx_path)
-
-    # drop one doc from the content table to exercise the null-content path
-    some_id = docs.select("doc_id").orderBy("doc_id").limit(1).collect()[0][0]
-    content = docs.select("doc_id", "content").filter(F.col("doc_id") != some_id)
-
-    qlist = [(0, "def return"), (1, "import os")]
-    key = lambda df: sorted(  # noqa: E731
-        (r["query_id"], r["rank"], r["doc_id"], r["content"]) for r in df.collect()
-    )
-    want = key(stored.search(qlist, k=8, documents=content))
-    got = key(stored.search(qlist, k=8, documents=content, content_pushdown=True))
-    assert got == want
-    assert len(got) == 16
-
-
 def test_boolean_match_stored_semantics(spark):
     """Boolean retrieval over packed blocks vs a direct token-membership
     recomputation: conjunction, disjunction with min_should_match, negation,

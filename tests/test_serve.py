@@ -5,27 +5,35 @@ as Arrow local relations, and the per-call Spark job budget."""
 import math
 
 import pytest
+from pyspark.sql import functions as F
 
 from goldenretriever_spark.query import wand
 from goldenretriever_spark.query.bm25 import query_terms_df
 
 
 @pytest.fixture(scope="module")
-def served(spark, tmp_path_factory):
-    """(StoredIndex, OracleIndex) over one 400-doc synthetic corpus."""
+def documents(spark):
+    """One 400-doc synthetic corpus with its doc ids."""
     from goldenretriever_spark import corpus
+    from goldenretriever_spark.index.build import with_doc_ids
+
+    return with_doc_ids(corpus.synth_corpus(spark, 400, seed=13))
+
+
+@pytest.fixture(scope="module")
+def served(spark, documents, tmp_path_factory):
+    """(StoredIndex, OracleIndex) over the ``documents`` corpus."""
     from goldenretriever_spark.index.blocks import pack_blocks
-    from goldenretriever_spark.index.build import build_index, with_doc_ids
+    from goldenretriever_spark.index.build import build_index
     from goldenretriever_spark.index.storage import StoredIndex, write_index
     from goldenretriever_spark.oracle import build_oracle_index
 
-    docs = with_doc_ids(corpus.synth_corpus(spark, 400, seed=13))
-    idx = build_index(docs, tokenizer="simple")
+    idx = build_index(documents, tokenizer="simple")
     blocks = pack_blocks(idx, block_size=16, target_docs_per_group=200)
     path = str(tmp_path_factory.mktemp("serve") / "idx")
     write_index(idx, path, blocks=blocks, n_term_buckets=64)
     oidx = build_oracle_index(
-        [(r["doc_id"], r["content"]) for r in docs.select("doc_id", "content").collect()]
+        [(r["doc_id"], r["content"]) for r in documents.select("doc_id", "content").collect()]
     )
     return StoredIndex(spark, path), oidx
 
@@ -170,3 +178,55 @@ def test_dataframe_query_batch_raises_type_error(spark, served):
     batch = spark.createDataFrame([(0, "def")], "query_id long, query_str string")
     with pytest.raises(TypeError):
         stored.search(batch, k=10)
+
+
+def test_content_joinback_keeps_every_ranked_row(served, documents):
+    """search(documents=) joins content back onto every ranked row: with one
+    query's rank-1 doc missing from the content table, all n_queries x k
+    rows still come back in rank order, and exactly that doc's rows have
+    null content."""
+    stored, _ = served
+    qlist, k = [(0, "def return"), (1, "class import")], 8
+
+    def ranked(df):
+        return sorted(df.collect(), key=lambda r: (r["query_id"], r["rank"]))
+
+    bare = ranked(stored.search(qlist, k=k))
+    dropped = bare[0]["doc_id"]
+    assert (bare[0]["query_id"], bare[0]["rank"]) == (0, 1)
+    content = documents.select("doc_id", "content").filter(F.col("doc_id") != dropped)
+    rows = ranked(stored.search(qlist, k=k, documents=content))
+
+    assert len(rows) == len(qlist) * k
+    for qid, _ in qlist:
+        assert [r["rank"] for r in rows if r["query_id"] == qid] == list(range(1, k + 1))
+    key = ("query_id", "rank", "doc_id", "score")
+    assert [tuple(r[c] for c in key) for r in rows] == [
+        tuple(r[c] for c in key) for r in bare
+    ]
+    assert all((r["content"] is None) == (r["doc_id"] == dropped) for r in rows)
+
+
+def test_empty_corpus_builds_and_serves(spark, documents, tmp_path):
+    """An index built from zero documents has stats (0, 0.0), and search,
+    filtered search and phrase each return no rows without raising."""
+    from goldenretriever_spark.index.blocks import pack_blocks
+    from goldenretriever_spark.index.build import build_index
+    from goldenretriever_spark.index.positions import pack_positional_blocks
+    from goldenretriever_spark.index.storage import StoredIndex, write_index
+
+    docs = documents.limit(0)
+    idx = build_index(docs, tokenizer="simple")
+    path = str(tmp_path / "idx")
+    write_index(
+        idx,
+        path,
+        blocks=pack_blocks(idx),
+        positional=pack_positional_blocks(docs, postings=idx.postings),
+    )
+    stored = StoredIndex(spark, path)
+
+    assert stored.stats == (0, 0.0)
+    assert stored.search([(0, "def return")], k=10).collect() == []
+    assert stored.search_filtered([(0, "def")], k=10, must=["return"]).collect() == []
+    assert stored.phrase(["def", "return"]).collect() == []

@@ -119,11 +119,13 @@ def test_dispatch_is_volume_aware(built, spark, monkeypatch):
     (batch-mean Σdf per query), not corpus size — at the SAME index, a
     1-term batch and a 5-term batch must route to different paths when the
     threshold sits between their mean decode volumes; the plan's per-query
-    diagnostic counts (n_above/n_below) must equal the per-query est-rows
-    verdicts."""
-    from goldenretriever_spark.query.wand import dispatch_top_k, estimate_decode_rows
+    diagnostic counts (n_above/n_below) must equal the per-query verdicts
+    on Σdf taken from the index's term_stats, independently of the blocks
+    the dispatcher probes."""
+    from goldenretriever_spark.query.wand import dispatch_top_k
 
     idx, blocks = built
+    term_df = {r["term"]: int(r["df"]) for r in idx.term_stats.collect()}
     mean_rows = {}
     per_query = {}
     batches = {}
@@ -131,8 +133,9 @@ def test_dispatch_is_volume_aware(built, spark, monkeypatch):
         qs = corpus.fixed_length_queries(20, n_terms=qlen, seed=3)
         qlist = [(int(r.query_id), r.query_str) for r in qs.itertuples()]
         batches[qlen] = qlist
-        est = estimate_decode_rows(blocks, bm25.query_terms_df(spark, qlist))
-        rows = {r["query_id"]: int(r["est_rows"]) for r in est.collect()}
+        rows = {qid: 0 for qid, _ in qlist}
+        for r in bm25.query_terms_df(spark, qlist).collect():
+            rows[r["query_id"]] += term_df.get(r["term"], 0)
         per_query[qlen] = rows
         mean_rows[qlen] = sum(rows.values()) / len(rows)
     assert mean_rows[1] < mean_rows[5]
