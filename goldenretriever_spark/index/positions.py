@@ -185,7 +185,7 @@ def pack_positional_blocks(
     )
 
 
-_DECODE_COLS = [
+DECODE_COLS = [
     "term",
     "doc_ids_delta_varint",
     "pos_counts_varint",
@@ -218,8 +218,65 @@ def decode_positions(blocks: DataFrame) -> DataFrame:
                 }
             )
 
-    return blocks.select(*_DECODE_COLS).mapInPandas(
+    return blocks.select(*DECODE_COLS).mapInPandas(
         unpack, schema="term string, doc_id long, pos long"
+    )
+
+
+def phrase_offsets(phrases: list[tuple[int, list[str]]]) -> dict[str, list[tuple[int, int]]]:
+    """term -> every (query_id, offset) at which it occurs in ``phrases``."""
+    term2qo: dict[str, list[tuple[int, int]]] = {}
+    for qid, ph in phrases:
+        for off, t in enumerate(ph):
+            term2qo.setdefault(t, []).append((qid, off))
+    return term2qo
+
+
+def phrase_votes(
+    pdf: pd.DataFrame, term2qo: dict[str, list[tuple[int, int]]]
+) -> pd.DataFrame | None:
+    """One batch of positional block rows (``DECODE_COLS``) -> phrase
+    start-votes ``(query_id, doc_id, start)``, or None when it emits none:
+    each decoded position of term t votes once per (query_id, offset) pair
+    of :func:`phrase_offsets` whose phrase contains t, with
+    ``start = pos - offset``. The body of both hosts:
+    :func:`decode_phrase_votes`' workers and the in-process
+    query/phrase.phrase_match_local.
+
+    The expansion loop is per (term, query, offset) — bounded by the QUERY
+    batch size, never by data volume; inside it everything is whole-array
+    numpy over the term's decoded positions."""
+    doc_per_pos, positions, pos_per_block = _decode(pdf)
+    if doc_per_pos.size == 0:
+        return None
+    # per-term position slices via a term-code indirection (no
+    # per-position string materialization)
+    term_codes, uniq_terms = pd.factorize(pdf["term"])
+    code_per_pos = np.repeat(term_codes, pos_per_block)
+    q_parts: list[np.ndarray] = []
+    d_parts: list[np.ndarray] = []
+    s_parts: list[np.ndarray] = []
+    for code, term in enumerate(uniq_terms):
+        pairs = term2qo.get(term)
+        if not pairs:
+            continue
+        mask = code_per_pos == code
+        t_pos = positions[mask]
+        t_doc = doc_per_pos[mask]
+        if t_pos.size == 0:
+            continue
+        for qid, off in pairs:
+            q_parts.append(np.full(t_pos.size, qid, dtype=np.int64))
+            d_parts.append(t_doc)
+            s_parts.append(t_pos - off)
+    if not q_parts:
+        return None
+    return pd.DataFrame(
+        {
+            "query_id": np.concatenate(q_parts),
+            "doc_id": np.concatenate(d_parts),
+            "start": np.concatenate(s_parts),
+        }
     )
 
 
@@ -227,62 +284,24 @@ def decode_phrase_votes(
     blocks: DataFrame, phrases: list[tuple[int, list[str]]]
 ) -> DataFrame:
     """Positional blocks -> phrase start-votes ``(query_id, doc_id, start)``
-    in ONE worker pass (r7, guide §4.2).
+    in ONE worker pass (r7, guide §4.2; the body is :func:`phrase_votes`).
 
     Fuses :func:`decode_positions` with the vote expansion that used to be a
-    JVM broadcast join: each decoded position of term t emits one row per
-    (query_id, offset) pair whose phrase contains t, with
-    ``start = pos - offset``. Exactly the row multiset the join produced
-    (same uniqueness argument: (start, offset) determines pos), but term
-    strings never cross Arrow back to the JVM and the downstream plan needs
-    no join — callers repartition by (query_id, doc_id) once and run both
-    vote aggregations exchange-free (query/phrase.phrase_match_stored_batch).
-
-    The expansion loop is per (term, query, offset) — bounded by the QUERY
-    batch size, never by data volume; inside it everything is whole-array
-    numpy over the term's decoded positions.
+    JVM broadcast join: exactly the row multiset the join produced (same
+    uniqueness argument: (start, offset) determines pos), but term strings
+    never cross Arrow back to the JVM and the downstream plan needs no join
+    — callers repartition by (query_id, doc_id) once and run both vote
+    aggregations exchange-free (query/phrase.phrase_match_stored_batch).
     """
-    term2qo: dict[str, list[tuple[int, int]]] = {}
-    for qid, ph in phrases:
-        for off, t in enumerate(ph):
-            term2qo.setdefault(t, []).append((qid, off))
+    term2qo = phrase_offsets(phrases)
 
     def gen(batches):
         for pdf in batches:
-            doc_per_pos, positions, pos_per_block = _decode(pdf)
-            if doc_per_pos.size == 0:
-                continue
-            # per-term position slices via a term-code indirection (no
-            # per-position string materialization)
-            term_codes, uniq_terms = pd.factorize(pdf["term"])
-            code_per_pos = np.repeat(term_codes, pos_per_block)
-            q_parts: list[np.ndarray] = []
-            d_parts: list[np.ndarray] = []
-            s_parts: list[np.ndarray] = []
-            for code, term in enumerate(uniq_terms):
-                pairs = term2qo.get(term)
-                if not pairs:
-                    continue
-                mask = code_per_pos == code
-                t_pos = positions[mask]
-                t_doc = doc_per_pos[mask]
-                if t_pos.size == 0:
-                    continue
-                for qid, off in pairs:
-                    q_parts.append(np.full(t_pos.size, qid, dtype=np.int64))
-                    d_parts.append(t_doc)
-                    s_parts.append(t_pos - off)
-            if not q_parts:
-                continue
-            yield pd.DataFrame(
-                {
-                    "query_id": np.concatenate(q_parts),
-                    "doc_id": np.concatenate(d_parts),
-                    "start": np.concatenate(s_parts),
-                }
-            )
+            votes = phrase_votes(pdf, term2qo)
+            if votes is not None:
+                yield votes
 
-    return blocks.select(*_DECODE_COLS).mapInPandas(
+    return blocks.select(*DECODE_COLS).mapInPandas(
         gen, schema="query_id long, doc_id long, start long"
     )
 
@@ -320,6 +339,6 @@ def decode_position_codes(blocks: DataFrame, terms: list[str]) -> DataFrame:
                 }
             )
 
-    return blocks.select(*_DECODE_COLS).mapInPandas(
+    return blocks.select(*DECODE_COLS).mapInPandas(
         unpack, schema="code long, doc_id long, pos long"
     )

@@ -17,14 +17,22 @@ Layout (designed for 10^12-file scale):
   co-partitioned (bucketed-table join on a real warehouse).
 - corpus_stats/    single row.
 - term_stats/      partitioned by term_bucket like posting_blocks.
+
+The same bucket-pruned reads also run in-process (:func:`open_table`,
+:func:`read_terms`): a ``pyarrow.dataset`` scan with the table's schema,
+for the calls whose decode volume is too small to pay for Spark jobs.
 """
 
 from __future__ import annotations
 
 import os
 
+import pyarrow as pa
+import pyarrow.dataset as ds
+import pyarrow.fs as pafs
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from goldenretriever_spark.index.build import InvertedIndex
 from goldenretriever_spark.session import local_frame
@@ -60,7 +68,75 @@ def prune_blocks_for_terms(
     return blocks.filter(F.col("term").isin(list(terms)))
 
 
+def open_table(filesystem: pafs.FileSystem, path: str, schema: str) -> ds.Dataset:
+    """A term-bucketed table (block table or term_stats) at ``path`` on
+    ``filesystem`` as an in-process ``pyarrow.dataset``, typed by its
+    writer's schema plus the ``term_bucket`` partition column, never
+    inferred. Files whose names start with ``_`` are skipped, so a table
+    holding only ``_SUCCESS`` reads as zero rows, as
+    :meth:`StoredIndex._read_blocks` does."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow = to_arrow_schema(StructType.fromDDL(f"{schema}, term_bucket int"))
+    return ds.dataset(
+        path,
+        filesystem=filesystem,
+        schema=arrow,
+        format="parquet",
+        partitioning=ds.partitioning(pa.schema([arrow.field("term_bucket")]), flavor="hive"),
+    )
+
+
+def read_terms(
+    table: ds.Dataset, terms, n_term_buckets: int | None, columns: list[str]
+) -> pa.Table:
+    """The rows of ``terms`` from an :func:`open_table` dataset: the
+    in-process twin of :func:`prune_blocks_for_terms` plus the scan. The
+    ``term_bucket`` filter prunes partition directories (bucket ids from the
+    same ``xxh64.term_buckets``; ``n_term_buckets=None`` reads every bucket,
+    and a missing bucket directory holds no rows), the term filter prunes
+    row groups by their min/max. No terms read no files."""
+    from goldenretriever_spark.xxh64 import term_buckets
+
+    terms = sorted(set(terms))
+    if not terms:
+        return table.schema.empty_table().select(columns)
+    cond = ds.field("term").isin(pa.array(terms, pa.string()))
+    if n_term_buckets:
+        cond = ds.field("term_bucket").isin(term_buckets(terms, n_term_buckets)) & cond
+    return table.to_table(columns=columns, filter=cond)
+
+
+TERM_STATS_SCHEMA = "term string, df long"
+
 META_SCHEMA = "n_term_buckets int"
+
+# Calls whose estimated decode volume (Σdf over each query's terms, summed
+# over the batch; for search_filtered plus the filter terms' Σdf; for phrase
+# each term's df once per offset it fills) is BELOW this many rows are
+# served in the driver process: bucket-pruned pyarrow read, the workers' own
+# decode/score/vote functions, numpy rank cut, local-relation result, zero
+# Spark jobs. Above it the Spark routes run. Read at call time (0 sends
+# every call to Spark).
+# Calibrated on a 4-core host (BENCH/LOCAL_CROSSOVER.json, from
+# ``tools/wand_crossover.py --local``: warm single calls, synth corpora of
+# 10k/100k/400k docs, local vs brute_top_k_stored for search and vs
+# phrase_match_stored for phrase):
+#   - time never crossed: local search won every cell, 7-25x below 10^5
+#     rows, 4.1-5.2x at 0.3-0.4M rows and 2.1x at 1.19M rows (748 vs
+#     1542 ms); local phrase won 5.5-6.2x at 20-30k rows, 1.4-1.7x at
+#     0.2-0.3M rows and 1.0-1.5x at 0.8-1.2M rows.
+#   - memory binds first: a local call's driver peak (Python heap plus
+#     Arrow buffers) is at most ~175 B per estimated row for search and
+#     ~1,550 B for phrase, which decodes every position of its terms
+#     (1.77 GB for a 3-term phrase at 1.19M rows). The budget is Spark's
+#     own ceiling on what one action may bring into the driver,
+#     spark.driver.maxResultSize (1 GiB by default), which the phrase
+#     ratio reaches at ~692k rows.
+LOCAL_CROSSOVER_DECODE_ROWS = 690_000
+
+_RANKED_SCHEMA = "query_id long, doc_id long, score double, rank int"
+_SCORE_COLS = ["term", "df", "doc_ids_delta_varint", "tfs_varint", "dls_varint"]
 
 
 def write_meta(spark: SparkSession, path: str, n_term_buckets: int) -> None:
@@ -129,10 +205,14 @@ class StoredIndex:
         self._corpus_stats: DataFrame | None = None
         self._posting_blocks: DataFrame | None = None
         self._positional_blocks: DataFrame | None = None
-        # per-handle term -> df memo for the dispatch probe (VERDICT r6 #4):
-        # the index is immutable, so df values never go stale; repeated
-        # vocabularies (interactive serve, hybrid lexical leg) probe once
+        # per-handle term -> df memo, filled by an in-process term_stats read
+        # (_est_rows): it picks the serve route and spares the dispatch probe
+        # its job. The index is immutable, so df values never go stale.
         self._term_df: dict[str, int] = {}
+        # in-process datasets (open_table), each opened once per handle, on
+        # the filesystem resolved once by _filesystem
+        self._tables: dict[str, ds.Dataset] = {}
+        self._fs: tuple[pafs.FileSystem, str] | None = None
 
     @property
     def posting_blocks(self) -> DataFrame:
@@ -147,11 +227,12 @@ class StoredIndex:
 
     @property
     def positional_blocks(self) -> DataFrame:
-        """Persisted positional blocks (index/positions.py); raises if the
-        index was built without them — check :meth:`has_positional`.
-        Memoized per handle like posting_blocks (ADVICE r6): re-reading
-        re-ran term_bucket partition discovery on every
-        phrase/proximity/phrase_ranked call."""
+        """Persisted positional blocks (index/positions.py); raises
+        ``ValueError`` if the index was built without them — check
+        :meth:`has_positional`. Memoized per handle like posting_blocks
+        (ADVICE r6): re-reading re-ran term_bucket partition discovery on
+        every phrase/proximity/phrase_ranked call."""
+        self._require_positional()
         if self._positional_blocks is None:
             from goldenretriever_spark.index.positions import POS_BLOCKS_SCHEMA
 
@@ -169,13 +250,97 @@ class StoredIndex:
             os.path.join(self.path, table)
         )
 
+    def _filesystem(self) -> tuple[pafs.FileSystem, str]:
+        """(filesystem, root) of the index for the in-process reads and
+        :meth:`has_positional`, resolved once per handle: a URI
+        (``file://``, ``hdfs://``, ``s3://``) on its scheme's filesystem, a
+        scheme-less path on the driver's local one. Spark resolves a
+        scheme-less path through ``fs.defaultFS`` instead, so an index on a
+        non-local default filesystem is opened by its full URI."""
+        if self._fs is None:
+            self._fs = pafs.FileSystem.from_uri(
+                self.path if "://" in self.path else os.path.abspath(self.path)
+            )
+        return self._fs
+
     def has_positional(self) -> bool:
         """Cheap existence probe (ADVICE r6): a filesystem check instead of
-        a full parquet read; local paths and any Hadoop-visible FS agree
-        with what spark.read.parquet would accept."""
+        a full parquet read, on the filesystem the in-process reads use."""
         if self._positional_blocks is not None:
             return True
-        return os.path.isdir(os.path.join(self.path, "positional_blocks"))
+        fs, root = self._filesystem()
+        info = fs.get_file_info(f"{root}/positional_blocks")
+        return info.type == pafs.FileType.Directory
+
+    def _require_positional(self) -> None:
+        """The one error for phrase, proximity and phrase_ranked on an index
+        written without positional blocks, raised before any route runs."""
+        if not self.has_positional():
+            raise ValueError(
+                f"index {self.path} has no positional_blocks table; write it "
+                "with write_index(positional=pack_positional_blocks(...))"
+            )
+
+    def _rows(self, table: str, schema: str, terms, columns: list[str]):
+        """In-process, bucket-pruned read of ``terms``' rows of one table
+        (:func:`read_terms`) as pandas; zero Spark jobs."""
+        if table not in self._tables:
+            fs, root = self._filesystem()
+            self._tables[table] = open_table(fs, f"{root}/{table}", schema)
+        return read_terms(
+            self._tables[table], terms, self.n_term_buckets, columns
+        ).to_pandas()
+
+    def _est_rows(self, term_lists) -> int:
+        """Estimated decode volume: Σdf over each term list, summed. Terms
+        not yet in the per-handle ``_term_df`` memo are read from term_stats
+        in-process; a term absent from the index counts 0."""
+        unknown = {t for ts in term_lists for t in ts} - self._term_df.keys()
+        if unknown:
+            found = self._rows("term_stats", TERM_STATS_SCHEMA, unknown, ["term", "df"])
+            df_of = dict(zip(found["term"], found["df"]))
+            for t in unknown:
+                self._term_df[t] = int(df_of.get(t, 0))
+        return sum(self._term_df[t] for ts in term_lists for t in ts)
+
+    def _local_ranked(self, qtoks, k: int, allowed=None, quantize: bool = False):
+        """The local route's top-k (wand.local_top_k) over the blocks of
+        ``qtoks``' terms, as an Arrow table in ``_RANKED_SCHEMA``."""
+        from goldenretriever_spark.index.blocks import BLOCKS_SCHEMA
+        from goldenretriever_spark.query.wand import local_top_k
+
+        terms = {t for _, ts in qtoks for t in ts}
+        blocks = self._rows("posting_blocks", BLOCKS_SCHEMA, terms, _SCORE_COLS)
+        return local_top_k(blocks, qtoks, self.stats, k, allowed, quantize)
+
+    def _with_content(self, ranked: pa.Table, documents: DataFrame) -> DataFrame:
+        """The local route's join-back: ``documents``' other columns
+        attached to ``ranked`` in-process, with the Spark route's
+        right-outer contract (every ranked row comes back, in rank order,
+        once per matching content row; a doc missing from ``documents``
+        gets nulls). The ranked ids are known here, so one pushed-down
+        ``isin`` collect fetches their rows: one Spark job, none when
+        nothing ranked."""
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        cols = [c for c in documents.columns if c != "doc_id"]
+        content = documents.select("doc_id", *cols)
+        ids = sorted(set(ranked["doc_id"].to_pylist()))
+        if ids:
+            content = content.filter(F.col("doc_id").isin(ids)).toArrow()
+        else:
+            content = to_arrow_schema(content.schema).empty_table()
+        out = (
+            ranked.append_column("_i", pa.array(range(ranked.num_rows), pa.int64()))
+            .join(content, keys="doc_id", join_type="left outer")
+            .sort_by("_i")
+            .select([*ranked.column_names, *cols])
+        )
+        schema = StructType(
+            StructType.fromDDL(_RANKED_SCHEMA).fields
+            + [documents.schema[c] for c in cols]
+        )
+        return local_frame(self.spark, out, schema)
 
     @property
     def doc_stats(self) -> DataFrame:
@@ -226,12 +391,24 @@ class StoredIndex:
         documents: DataFrame | None = None,
         with_plan: bool = False,
     ):
-        """Top-k over this stored index with measured brute/WAND dispatch and
-        the persisted term-bucket count for partition pruning — the one-call
-        serving path (reference models.py:114-149 analog on the compressed
-        index). The WHOLE batch is routed by the share of estimated decode
-        volume in heavy queries (wand.WAND_HEAVY_SHARE_MIN); per-query batch
-        splitting measured slower and was removed (BENCH/WAND_MIXED.json).
+        """Top-k over this stored index — the one-call serving path
+        (reference models.py:114-149 analog on the compressed index). Three
+        routes answer from the same blocks with the same ranks:
+
+        - ``local``: the call's estimated decode volume (``est_rows``: Σdf
+          over each query's terms, summed over the batch, from the
+          per-handle df memo, which an in-process term_stats read fills) is
+          below ``LOCAL_CROSSOVER_DECODE_ROWS``. The blocks are read
+          in-process (:func:`read_terms`) and decoded, scored and cut in the
+          driver by the Spark workers' own functions (wand.local_top_k):
+          zero Spark jobs, a local-relation result.
+        - ``brute_stored`` / ``wand``: above it, wand.dispatch_top_k's
+          measured dispatch with the persisted term-bucket count for
+          partition pruning. The memo is passed in, so its df probe runs no
+          job. The WHOLE batch is routed by the share of estimated decode
+          volume in heavy queries (wand.WAND_HEAVY_SHARE_MIN); per-query
+          batch splitting measured slower and was removed
+          (BENCH/WAND_MIXED.json).
 
         ``documents``: optional (doc_id, ...) table; when given, the ranked
         ids are joined back so results carry materialized content (the
@@ -239,14 +416,31 @@ class StoredIndex:
         The join is right-outer from ``documents`` (ADVICE r5): all
         n_queries x k ranked rows survive, a doc_id missing from the doc
         table surfaces as a row with null content instead of a silent gap in
-        the rank sequence. Spark builds an outer join on its non-preserved
-        side, here ``documents``: the executed plan is
+        the rank sequence. On the local route the ranked ids are known in
+        the driver, so one pushed-down ``isin`` collect fetches their
+        content (:meth:`_with_content`, one Spark job). It still scans the
+        content table, O(corpus) bytes, because hash doc ids defeat
+        row-group pruning. On the Spark routes Spark builds the outer join
+        on its non-preserved side, here ``documents``: the executed plan is
         ``BroadcastHashJoin RightOuter BuildLeft``, which broadcasts the
         whole documents table on every call while it is under
         ``spark.sql.autoBroadcastJoinThreshold``, and a sort-merge join over
-        the full table above it — an O(corpus) cost per call.
-        ``with_plan=True`` also returns the dispatch record."""
+        the full table above it — an O(corpus) shuffle or broadcast per
+        call. ``with_plan=True`` also returns the route record: ``path``
+        and ``est_rows``, plus the dispatch fields on the Spark routes."""
+        from goldenretriever_spark.query.bm25 import query_tokens
         from goldenretriever_spark.query.wand import dispatch_top_k
+
+        qtoks = query_tokens(queries, tokenizer)
+        est = self._est_rows([ts for _, ts in qtoks])
+        if est < LOCAL_CROSSOVER_DECODE_ROWS:
+            plan = {"path": "local", "est_rows": est}
+            ranked = self._local_ranked(qtoks, k)
+            if documents is not None:
+                ranked = self._with_content(ranked, documents)
+            else:
+                ranked = local_frame(self.spark, ranked, _RANKED_SCHEMA)
+            return (ranked, plan) if with_plan else ranked
 
         ranked, plan = dispatch_top_k(
             self.spark,
@@ -259,6 +453,7 @@ class StoredIndex:
             stats=self.stats,
             term_df_cache=self._term_df,
         )
+        plan["est_rows"] = est
         if documents is not None:
             # right-outer FROM documents keeps every ranked row. Spark builds
             # it on documents (BroadcastHashJoin RightOuter BuildLeft under
@@ -286,7 +481,7 @@ class StoredIndex:
         documents: DataFrame | None = None,
     ) -> DataFrame:
         """One-call hybrid serve: the lexical stored-index top-k (with the
-        same brute/WAND dispatch as :meth:`search`) fused with a cosine
+        same routes as :meth:`search`) fused with a cosine
         vector top-k by reciprocal-rank fusion (query/hybrid.rrf_fuse) — the
         production move the reference's two SEPARATE endpoints (BM25-ish ES
         text match vs Annoy cosine, models.py make_query) stop short of.
@@ -305,8 +500,8 @@ class StoredIndex:
         fusion').
 
         ``documents``: optional join-back, the same right-outer join as
-        :meth:`search` (all fused rows preserved, the whole doc table read
-        per call).
+        :meth:`search`'s Spark routes (all fused rows preserved, the whole
+        doc table read per call).
         Returns (query_id, doc_id, rrf_q, rank [, doc columns])."""
         from goldenretriever_spark.operators.ann import (
             brute_topk,
@@ -341,9 +536,28 @@ class StoredIndex:
     def phrase(self, phrase: list[str]) -> DataFrame:
         """Exact phrase search from the persisted positional blocks — no
         corpus scan, no re-tokenization; only the phrase terms' term_bucket
-        partitions are read (query/phrase.phrase_match_stored)."""
-        from goldenretriever_spark.query.phrase import phrase_match_stored
+        partitions are read. Routed like :meth:`search` by the phrase
+        terms' Σdf: in-process (query/phrase.phrase_match_local) below
+        ``LOCAL_CROSSOVER_DECODE_ROWS``, else
+        query/phrase.phrase_match_stored. ``ValueError`` on an index
+        without positional blocks."""
+        from goldenretriever_spark.index.positions import DECODE_COLS, POS_BLOCKS_SCHEMA
+        from goldenretriever_spark.query.phrase import (
+            check_phrases,
+            phrase_match_local,
+            phrase_match_stored,
+        )
 
+        self._require_positional()
+        check_phrases([(0, phrase)])
+        if self._est_rows([phrase]) < LOCAL_CROSSOVER_DECODE_ROWS:
+            blocks = self._rows("positional_blocks", POS_BLOCKS_SCHEMA, phrase, DECODE_COLS)
+            found = phrase_match_local(blocks, [(0, phrase)])
+            return local_frame(
+                self.spark,
+                {"doc_id": found["doc_id"], "occurrences": found["occurrences"]},
+                "doc_id long, occurrences long",
+            )
         return phrase_match_stored(
             self.positional_blocks, phrase, n_term_buckets=self.n_term_buckets
         )
@@ -381,9 +595,35 @@ class StoredIndex:
     ) -> DataFrame:
         """BM25 top-k restricted to docs satisfying a boolean filter — the
         filter prunes the candidate set BEFORE ranking, so the k returned
-        are the k best qualifying docs (query/boolean.filtered_top_k)."""
-        from goldenretriever_spark.query.boolean import filtered_top_k
+        are the k best qualifying docs, cut by the quantized score. Routed
+        like :meth:`search`, with the filter terms' Σdf added to the
+        volume: in-process below ``LOCAL_CROSSOVER_DECODE_ROWS`` (the
+        allowed set from query/boolean.boolean_match_local, then the local
+        top-k masked to it), else query/boolean.filtered_top_k."""
+        from goldenretriever_spark.index.blocks import BLOCKS_SCHEMA
+        from goldenretriever_spark.query.bm25 import query_tokens
+        from goldenretriever_spark.query.boolean import (
+            boolean_clauses,
+            boolean_match_local,
+            filtered_top_k,
+        )
 
+        must, should, must_not, min_should_match = boolean_clauses(
+            must, should, must_not, min_should_match
+        )
+        qtoks = query_tokens(queries, tokenizer)
+        clause_terms = {*must, *should, *must_not}
+        est = self._est_rows([ts for _, ts in qtoks] + [clause_terms])
+        if est < LOCAL_CROSSOVER_DECODE_ROWS:
+            term_docs = self._rows(
+                "posting_blocks", BLOCKS_SCHEMA, clause_terms,
+                ["term", "doc_ids_delta_varint"],
+            )
+            allowed = boolean_match_local(
+                term_docs, must, should, must_not, min_should_match
+            )
+            ranked = self._local_ranked(qtoks, k, allowed, quantize=True)
+            return local_frame(self.spark, ranked, _RANKED_SCHEMA)
         return filtered_top_k(
             self.spark,
             self.posting_blocks,

@@ -25,6 +25,7 @@ Tie-break: asc(doc_id) everywhere (SURVEY §2.5 W1).
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -36,9 +37,15 @@ def query_tokens(queries, tokenizer: str = "simple") -> list[tuple[int, list[str
     order)], tokenized ON THE DRIVER with the oracle twin of the engine
     tokenizer (equality-tested per input class, tests/test_round2): a
     query batch is tiny, and tokenizing it in Spark costs a shuffle and two
-    stages inside every query call (r7, guide §2.4)."""
+    stages inside every query call (r7, guide §2.4). Any other batch type
+    raises ``TypeError``."""
     from goldenretriever_spark.oracle import tokenize
 
+    if not isinstance(queries, (list, tuple)):
+        raise TypeError(
+            "queries must be a list of (query_id, query_str) pairs, not "
+            f"{type(queries).__name__}"
+        )
     return [
         (int(qid), list(dict.fromkeys(tokenize(qstr, tokenizer))))
         for qid, qstr in queries
@@ -70,6 +77,11 @@ def query_terms_df(spark: SparkSession, queries, tokenizer: str = "simple") -> D
 
 def idf_col(n_docs: Column, df: Column) -> Column:
     return F.log(1.0 + (n_docs - df + 0.5) / (df + 0.5))
+
+
+def idf(n_docs: float, df: np.ndarray) -> np.ndarray:
+    """:func:`idf_col`'s formula over a float64 df array (in-process route)."""
+    return np.log(1.0 + (n_docs - df + 0.5) / (df + 0.5))
 
 
 def tfnorm_col(tf: Column, doc_len: Column, avgdl: Column) -> Column:

@@ -50,14 +50,36 @@ def _term_docs(
 
     def unpack(batches):
         for pdf in batches:
-            ids, counts = decode_doc_ids(pdf["doc_ids_delta_varint"])
-            if ids.size == 0:
-                continue
-            yield pd.DataFrame(
-                {"term": np.repeat(pdf["term"].to_numpy(), counts), "doc_id": ids}
-            )
+            rows = term_doc_rows(pdf)
+            if len(rows):
+                yield rows
 
     return pruned.mapInPandas(unpack, schema="term string, doc_id long")
+
+
+def term_doc_rows(pdf: pd.DataFrame) -> pd.DataFrame:
+    """One batch of (term, doc_ids_delta_varint) block rows -> its (term,
+    doc_id) postings: the body of both hosts, :func:`_term_docs`' workers
+    and the in-process :func:`boolean_match_local`."""
+    ids, counts = decode_doc_ids(pdf["doc_ids_delta_varint"])
+    return pd.DataFrame(
+        {"term": np.repeat(pdf["term"].to_numpy(), counts), "doc_id": ids}
+    )
+
+
+def boolean_clauses(must, should, must_not, min_should_match):
+    """Validated, deduplicated clauses and the effective min_should_match
+    (see :func:`boolean_match_stored`)."""
+    must = sorted(set(must or []))
+    should = sorted(set(should or []))
+    must_not = sorted(set(must_not or []))
+    if not must and not should:
+        raise ValueError("boolean query needs at least one must or should term")
+    if min_should_match is None:
+        min_should_match = 1 if not must else 0
+    if min_should_match > len(should):
+        raise ValueError("min_should_match exceeds the number of should terms")
+    return must, should, must_not, min_should_match
 
 
 def boolean_match_stored(
@@ -79,15 +101,9 @@ def boolean_match_stored(
     At least one positive clause (must or should) is required — a pure
     negation over an index is unbounded by construction.
     """
-    must = sorted(set(must or []))
-    should = sorted(set(should or []))
-    must_not = sorted(set(must_not or []))
-    if not must and not should:
-        raise ValueError("boolean query needs at least one must or should term")
-    if min_should_match is None:
-        min_should_match = 1 if not must else 0
-    if min_should_match > len(should):
-        raise ValueError("min_should_match exceeds the number of should terms")
+    must, should, must_not, min_should_match = boolean_clauses(
+        must, should, must_not, min_should_match
+    )
 
     if must:
         cand = (
@@ -123,6 +139,42 @@ def boolean_match_stored(
         ).distinct()
         out = out.join(excl, "doc_id", "left_anti")
     return out
+
+
+def boolean_match_local(
+    blocks: pd.DataFrame,
+    must: list[str] | None = None,
+    should: list[str] | None = None,
+    must_not: list[str] | None = None,
+    min_should_match: int | None = None,
+) -> np.ndarray:
+    """In-process twin of :func:`boolean_match_stored`'s algebra, same
+    semantics and errors: ``blocks`` are the (term, doc_ids_delta_varint)
+    block rows of the clause terms, decoded by :func:`term_doc_rows`.
+    Returns the qualifying doc ids, sorted int64."""
+    must, should, must_not, min_should_match = boolean_clauses(
+        must, should, must_not, min_should_match
+    )
+    rows = term_doc_rows(blocks).drop_duplicates()
+
+    def hits(clause: list[str]) -> pd.Series:
+        """doc_id -> count of distinct ``clause`` terms it contains."""
+        return rows[rows["term"].isin(clause)].groupby("doc_id").size()
+
+    out = None
+    if must:
+        nm = hits(must)
+        out = nm.index[nm.to_numpy() == len(must)].to_numpy(np.int64)
+    if should:
+        ns = hits(should)
+        passing = ns.index[ns.to_numpy() >= min_should_match].to_numpy(np.int64)
+        if out is None:
+            out = passing
+        elif min_should_match > 0:
+            out = np.intersect1d(out, passing)
+    if must_not:
+        out = np.setdiff1d(out, hits(must_not).index.to_numpy(np.int64))
+    return np.unique(out)
 
 
 def filtered_top_k(

@@ -40,10 +40,20 @@ three times), matching the DuckDB oracle's exact sliding-window count.
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from goldenretriever_spark.tokenizer import simple_tokens
+
+
+def check_phrases(phrases: list[tuple[int, list[str]]]) -> None:
+    """The phrase entry points' one ValueError: no phrases, or an empty one."""
+    if not phrases:
+        raise ValueError("phrases must be non-empty")
+    if any(not ph for _, ph in phrases):
+        raise ValueError("phrase must be non-empty")
 
 
 def phrase_match_stored_batch(
@@ -67,10 +77,7 @@ def phrase_match_stored_batch(
     from goldenretriever_spark.index.positions import decode_phrase_votes
     from goldenretriever_spark.index.storage import prune_blocks_for_terms
 
-    if not phrases:
-        raise ValueError("phrases must be non-empty")
-    if any(not ph for _, ph in phrases):
-        raise ValueError("phrase must be non-empty")
+    check_phrases(phrases)
     all_terms = sorted({t for _, ph in phrases for t in ph})
     pruned = prune_blocks_for_terms(positional_blocks, all_terms, n_term_buckets)
     votes = decode_phrase_votes(pruned, phrases)
@@ -85,6 +92,31 @@ def phrase_match_stored_batch(
         .groupBy("query_id", "doc_id")
         .agg(F.count(F.lit(1)).cast("long").alias("occurrences"))
     )
+
+
+def phrase_match_local(
+    blocks: pd.DataFrame, phrases: list[tuple[int, list[str]]]
+) -> pd.DataFrame:
+    """In-process host of :func:`phrase_match_stored_batch`: ``blocks`` are
+    the positional block rows (positions.DECODE_COLS) of the phrases'
+    terms, already bucket-pruned; the votes come from the workers' own
+    positions.phrase_votes. The two vote aggregations' pandas twin: a
+    (query_id, doc_id, start) that collects all n offsets of its query's
+    phrase is one occurrence. Returns (query_id, doc_id, occurrences)."""
+    from goldenretriever_spark.index.positions import phrase_offsets, phrase_votes
+
+    check_phrases(phrases)
+    votes = phrase_votes(blocks, phrase_offsets(phrases))
+    if votes is None:
+        return pd.DataFrame(
+            {c: np.empty(0, np.int64) for c in ("query_id", "doc_id", "occurrences")}
+        )
+    need = {qid: len(ph) for qid, ph in phrases}
+    hits = votes.groupby(["query_id", "doc_id", "start"], sort=False).size()
+    n_need = hits.index.get_level_values("query_id").map(need).to_numpy()
+    hits = hits[hits.to_numpy() == n_need]
+    occ = hits.groupby(level=["query_id", "doc_id"], sort=False).size()
+    return occ.rename("occurrences").reset_index().astype(np.int64)
 
 
 def phrase_match_stored(

@@ -31,18 +31,56 @@ from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from goldenretriever_spark.index.build import B, K1
 from goldenretriever_spark.index.codec import decode_doc_ids, decode_varints
 from goldenretriever_spark.index.storage import prune_blocks_for_terms
-from goldenretriever_spark.query.bm25 import idf_col, query_tokens, terms_frame
+from goldenretriever_spark.query.bm25 import idf, idf_col, query_tokens, terms_frame
 from goldenretriever_spark.session import local_frame
 
 # Phase 1 decodes the highest-bound blocks until they hold at least
 # WAND_SEED_FACTOR * k docs per query; read at call time.
 WAND_SEED_FACTOR = 4
+
+
+def scored_postings(
+    pdf: pd.DataFrame, avgdl: float, allowed: np.ndarray | None = None
+) -> pd.DataFrame | None:
+    """One batch of (query_id, idf, doc_ids_delta_varint, tfs_varint,
+    dls_varint) block rows -> (query_id, doc_id, c), the per-posting BM25
+    contributions, or None when nothing survives. The body of both hosts:
+    :func:`_decode_scored`'s workers and the in-process
+    :func:`local_top_k`.
+
+    Grouped decode (codec batch decoders): ONE vectorized varint pass per
+    column per batch — the unpruned scan decodes ~10^6 block rows, where
+    per-block call overhead dominated. ``allowed``: optional SORTED int64
+    array of allowed doc ids; postings outside it are dropped before
+    scoring (see :func:`_decode_scored`)."""
+    ids, counts = decode_doc_ids(pdf["doc_ids_delta_varint"])
+    if ids.size == 0:
+        return None
+    tfs = decode_varints(pdf["tfs_varint"])
+    dls = decode_varints(pdf["dls_varint"])
+    idfs = np.repeat(pdf["idf"].to_numpy(np.float64), counts)
+    qids = np.repeat(pdf["query_id"].to_numpy(np.int64), counts)
+    if allowed is not None:
+        if allowed.size == 0:
+            return None
+        pos = np.searchsorted(allowed, ids)
+        pos_c = np.minimum(pos, allowed.size - 1)
+        keep = (pos < allowed.size) & (allowed[pos_c] == ids)
+        if not keep.any():
+            return None
+        ids, tfs, dls = ids[keep], tfs[keep], dls[keep]
+        idfs, qids = idfs[keep], qids[keep]
+    tf = tfs.astype(np.float64)
+    dl = dls.astype(np.float64)
+    c = idfs * (tf / (tf + K1 * (1.0 - B + B * dl / avgdl)))
+    return pd.DataFrame({"query_id": qids, "doc_id": ids, "c": c})
 
 
 def _decode_scored(
@@ -60,7 +98,8 @@ def _decode_scored(
     instead of six (term strings, idf, tf, doc_len dropped). The JVM side
     is just the map-side-combinable sum. Summation order across terms was
     already partition-arbitrary before; the engine-wide x10000 quantization
-    absorbs it (rank-identity suite + oracle hashes unchanged).
+    absorbs it (rank-identity suite + oracle hashes unchanged). The worker
+    body is :func:`scored_postings`.
 
     ``allowed_bc``: optional broadcast of a SORTED int64 numpy array of
     allowed doc_ids (boolean filter pushdown, query/boolean.filtered_top_k).
@@ -70,32 +109,11 @@ def _decode_scored(
     membership: no false positives/negatives, so scores are unchanged)."""
 
     def unpack(batches):
-        # grouped decode (codec batch decoders): ONE vectorized varint pass
-        # per column per Arrow batch — the unpruned scan decodes ~10^6
-        # block rows, where per-block call overhead dominated
         allowed = allowed_bc.value if allowed_bc is not None else None
         for pdf in batches:
-            ids, counts = decode_doc_ids(pdf["doc_ids_delta_varint"])
-            if ids.size == 0:
-                continue
-            tfs = decode_varints(pdf["tfs_varint"])
-            dls = decode_varints(pdf["dls_varint"])
-            idfs = np.repeat(pdf["idf"].to_numpy(np.float64), counts)
-            qids = np.repeat(pdf["query_id"].to_numpy(np.int64), counts)
-            if allowed is not None:
-                if allowed.size == 0:
-                    continue
-                pos = np.searchsorted(allowed, ids)
-                pos_c = np.minimum(pos, allowed.size - 1)
-                keep = (pos < allowed.size) & (allowed[pos_c] == ids)
-                if not keep.any():
-                    continue
-                ids, tfs, dls = ids[keep], tfs[keep], dls[keep]
-                idfs, qids = idfs[keep], qids[keep]
-            tf = tfs.astype(np.float64)
-            dl = dls.astype(np.float64)
-            c = idfs * (tf / (tf + K1 * (1.0 - B + B * dl / avgdl)))
-            yield pd.DataFrame({"query_id": qids, "doc_id": ids, "c": c})
+            out = scored_postings(pdf, avgdl, allowed)
+            if out is not None:
+                yield out
 
     cols = ["query_id", "idf", "doc_ids_delta_varint", "tfs_varint", "dls_varint"]
     decoded = matched.select(*cols).mapInPandas(
@@ -106,6 +124,37 @@ def _decode_scored(
         # both this aggregation and the caller's per-query window
         decoded = decoded.repartition("query_id")
     return decoded.groupBy("query_id", "doc_id").agg(F.sum("c").alias("score"))
+
+
+def local_top_k(
+    blocks: pd.DataFrame,
+    qtoks: list[tuple[int, list[str]]],
+    stats: tuple[int, float],
+    k: int,
+    allowed: np.ndarray | None = None,
+    quantize: bool = False,
+) -> pa.Table:
+    """The in-process host of the brute-stored top-k: ``blocks`` (term, df
+    and the three blobs, already bucket-pruned to the batch's terms) joined
+    to each query's unique terms, idf as :func:`idf_col`, decode and
+    contributions by :func:`scored_postings`, sums per (query, doc), cut by
+    :func:`rank_top_k_local`. ``allowed`` as in :func:`scored_postings`."""
+    n_docs, avgdl = stats
+    qterms = pd.DataFrame(
+        [(qid, t) for qid, ts in qtoks for t in ts], columns=["query_id", "term"]
+    ).astype({"query_id": np.int64, "term": object})
+    matched = blocks.merge(qterms, on="term")
+    matched["idf"] = idf(float(n_docs), matched["df"].to_numpy(np.float64))
+    scored = scored_postings(matched, avgdl, allowed)
+    if scored is None:
+        q = d = np.empty(0, np.int64)
+        s = np.empty(0, np.float64)
+    else:
+        sums = scored.groupby(["query_id", "doc_id"], sort=False)["c"].sum()
+        q = sums.index.get_level_values(0).to_numpy(np.int64)
+        d = sums.index.get_level_values(1).to_numpy(np.int64)
+        s = sums.to_numpy(np.float64)
+    return rank_top_k_local(q, d, s, k, quantize)
 
 
 class _Batch(NamedTuple):
@@ -126,8 +175,9 @@ def _resolve_batch(
 ) -> _Batch:
     """Resolve one stored top-k call's query batch, once.
 
-    ``queries`` is a list of (query_id, query_str); it is tokenized on the
-    driver (bm25.query_tokens, zero Spark jobs), its terms become the
+    ``queries`` is a list of (query_id, query_str) (anything else raises
+    ``TypeError``); it is tokenized on the driver (bm25.query_tokens, zero
+    Spark jobs), its terms become the
     local-relation ``qterms``, and the blocks are pruned to the batch's
     term buckets and terms (storage.prune_blocks_for_terms). ``stats``
     (n_docs, avgdl) is read from ``corpus_stats`` only when not given — a
@@ -137,11 +187,6 @@ def _resolve_batch(
     ``StoredIndex(spark, path).n_term_buckets`` (persisted in the index's
     ``_meta``). None skips partition pruning: a wrong guess would silently
     drop buckets and return incomplete top-k."""
-    if not isinstance(queries, (list, tuple)):
-        raise TypeError(
-            "queries must be a list of (query_id, query_str) pairs, not "
-            f"{type(queries).__name__}"
-        )
     qtoks = query_tokens(queries, tokenizer)
     toksets = {qid: set(ts) for qid, ts in qtoks}
     terms = sorted({t for ts in toksets.values() for t in ts})
@@ -236,6 +281,43 @@ def rank_top_k(scores: DataFrame, k: int, quantize: bool = False) -> DataFrame:
         scores.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select("query_id", "doc_id", "score", "rank")
+    )
+
+
+def _round_half_up(x: np.ndarray) -> np.ndarray:
+    """Spark ``round(x, 0)`` on doubles (HALF_UP on the exact binary value)
+    as int64: floor and fraction are exact, so no ``x + 0.5`` rounding."""
+    a = np.abs(x)
+    f = np.floor(a)
+    return (np.sign(x) * (f + (a - f >= 0.5))).astype(np.int64)
+
+
+def rank_top_k_local(
+    query_id: np.ndarray,
+    doc_id: np.ndarray,
+    score: np.ndarray,
+    k: int,
+    quantize: bool = False,
+) -> pa.Table:
+    """Numpy twin of :func:`rank_top_k`'s cut over (query, doc, score)
+    arrays: per query, score desc (``quantize``: the x10000 HALF_UP
+    quantized score) then doc_id asc, the first k, ranks from 1. Returns
+    (query_id, doc_id, score, rank int32)."""
+    key = _round_half_up(score * 10000) if quantize else score
+    order = np.lexsort((doc_id, -key, query_id))
+    q = query_id[order]
+    first = np.ones(q.size, dtype=bool)
+    first[1:] = q[1:] != q[:-1]
+    idx = np.arange(q.size)
+    rank = idx - np.maximum.accumulate(np.where(first, idx, 0)) + 1
+    keep = order[rank <= k]
+    return pa.table(
+        {
+            "query_id": query_id[keep],
+            "doc_id": doc_id[keep],
+            "score": score[keep],
+            "rank": rank[rank <= k].astype(np.int32),
+        }
     )
 
 

@@ -95,9 +95,13 @@ def test_no_per_row_python_udf_in_package():
 def test_stored_layout_is_read_in_one_place():
     """The stored index knows its block format and bucket layout once: the
     batch varint decoders live only in index/codec.py, the term-bucket hash
-    only in index/storage.py, the blocking of both block tables (salt,
-    block id, pack exchange) only in index/blocks.py, and the query modules
-    take list batches only."""
+    and the in-process (pyarrow.dataset) reader only in index/storage.py,
+    the blocking of both block tables (salt, block id, pack exchange) only
+    in index/blocks.py, and the query modules take list batches only. The
+    decode bodies shared by the Spark workers and the in-process route
+    exist once: the numpy BM25 contribution in query/wand.py (the other
+    matches are the pack-time block bound, the Catalyst form and the
+    pure-Python oracle) and the phrase vote emission in index/positions.py."""
     import pathlib
     import re
 
@@ -112,6 +116,15 @@ def test_stored_layout_is_read_in_one_place():
         (r"""repartition\(\s*P\s*,\s*["']term["']\s*,\s*["']salt["']\s*\)""", {"index/blocks.py"}),
         (r"\bdef\s+term_cf\b", set()),
         (r"\bpack_partitions\b", set()),
+        (r"\bpyarrow\.dataset\b", {"index/storage.py"}),
+    ]
+    # pattern -> {file: exact number of matches}; zero everywhere else
+    counted = [
+        (
+            r"K1 \* \(1\.0 - B \+ B \*",
+            {"query/wand.py": 1, "index/blocks.py": 1, "query/bm25.py": 1, "oracle.py": 1},
+        ),
+        (r"\w+ - off\b", {"index/positions.py": 1}),
     ]
     offenders = []
     for p in pkg.rglob("*.py"):
@@ -119,6 +132,9 @@ def test_stored_layout_is_read_in_one_place():
         text = p.read_text()
         for pattern, allowed in rules:
             if rel not in allowed and re.search(pattern, text):
+                offenders.append(f"{rel}: {pattern}")
+        for pattern, counts in counted:
+            if len(re.findall(pattern, text)) != counts.get(rel, 0):
                 offenders.append(f"{rel}: {pattern}")
     assert not offenders, offenders
 

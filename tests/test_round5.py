@@ -132,7 +132,7 @@ def test_stored_search_content_joinback(spark, tmp_path):
     for r in rows:
         assert r["content"] == truth[r["doc_id"]]
         assert hashlib.sha256(r["content"].encode()).hexdigest()  # non-empty
-    assert plan["path"] in ("brute_stored", "wand")
+    assert plan["path"] == "local"
 
 
 # ---------------------------------------------------------------------------

@@ -1,14 +1,18 @@
 """The per-call serve path of a persisted index (StoredIndex): edge-case
-results pinned against the pure-Python oracle, driver-built frames planned
-as Arrow local relations, and the per-call Spark job budget."""
+results pinned against the pure-Python oracle on both serve routes (the
+in-process ``local`` route and the Spark routes), driver-built frames
+planned as Arrow local relations, and the per-call Spark job budgets."""
 
 import math
 
 import pytest
 from pyspark.sql import functions as F
 
+from goldenretriever_spark.index import storage
 from goldenretriever_spark.query import wand
 from goldenretriever_spark.query.bm25 import query_terms_df
+
+ROUTES = ("local", "spark")
 
 
 @pytest.fixture(scope="module")
@@ -20,52 +24,110 @@ def documents(spark):
     return with_doc_ids(corpus.synth_corpus(spark, 400, seed=13))
 
 
-@pytest.fixture(scope="module")
-def served(spark, documents, tmp_path_factory):
-    """(StoredIndex, OracleIndex) over the ``documents`` corpus."""
+def _write(documents, path: str, positional: bool) -> None:
     from goldenretriever_spark.index.blocks import pack_blocks
     from goldenretriever_spark.index.build import build_index
-    from goldenretriever_spark.index.storage import StoredIndex, write_index
-    from goldenretriever_spark.oracle import build_oracle_index
+    from goldenretriever_spark.index.positions import pack_positional_blocks
+    from goldenretriever_spark.index.storage import write_index
 
     idx = build_index(documents, tokenizer="simple")
     blocks = pack_blocks(idx, block_size=16, target_docs_per_group=200)
+    pos = pack_positional_blocks(documents, postings=idx.postings) if positional else None
+    write_index(idx, path, blocks=blocks, n_term_buckets=64, positional=pos)
+
+
+@pytest.fixture(scope="module")
+def served(spark, documents, tmp_path_factory):
+    """(StoredIndex, OracleIndex) over the ``documents`` corpus; the index
+    has no positional blocks."""
+    from goldenretriever_spark.index.storage import StoredIndex
+    from goldenretriever_spark.oracle import build_oracle_index
+
     path = str(tmp_path_factory.mktemp("serve") / "idx")
-    write_index(idx, path, blocks=blocks, n_term_buckets=64)
+    _write(documents, path, positional=False)
     oidx = build_oracle_index(
         [(r["doc_id"], r["content"]) for r in documents.select("doc_id", "content").collect()]
     )
     return StoredIndex(spark, path), oidx
 
 
+@pytest.fixture(scope="module")
+def served_positional(spark, documents, tmp_path_factory):
+    """A StoredIndex over the same corpus, with positional blocks."""
+    from goldenretriever_spark.index.storage import StoredIndex
+
+    path = str(tmp_path_factory.mktemp("serve_pos") / "idx")
+    _write(documents, path, positional=True)
+    return StoredIndex(spark, path)
+
+
+@pytest.fixture
+def route(monkeypatch):
+    """``route(name)`` forces the serve route of the StoredIndex calls after
+    it: ``"local"`` (every call on these small indexes is under the
+    crossover) or ``"spark"`` (a crossover of 0). The edge-case tests run
+    their body once per name in ``ROUTES``."""
+    crossover = storage.LOCAL_CROSSOVER_DECODE_ROWS
+
+    def force(name: str) -> str:
+        monkeypatch.setattr(
+            storage, "LOCAL_CROSSOVER_DECODE_ROWS", crossover if name == "local" else 0
+        )
+        return name
+
+    return force
+
+
 def _plan(df) -> str:
     return df._jdf.queryExecution().optimizedPlan().toString()
 
 
+def _jobs(spark, group: str, call):
+    """``call()``'s result and the number of Spark jobs it ran, counted
+    under a job group of its own."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = call()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 @pytest.mark.parametrize("query", ["", "zzzunknownterm"])
-def test_empty_or_unknown_query_returns_no_rows(served, query):
+def test_empty_or_unknown_query_returns_no_rows(served, route, query):
     stored, _ = served
-    assert stored.search([(0, query)], k=10).collect() == []
+    for name in map(route, ROUTES):
+        ranked, plan = stored.search([(0, query)], k=10, with_plan=True)
+        assert (plan["path"] == "local") == (name == "local")
+        assert plan["est_rows"] == 0
+        assert ranked.collect() == [], name
 
 
-def test_filtered_search_with_unknown_term_returns_no_rows(served):
+def test_filtered_search_with_unknown_term_returns_no_rows(served, route):
     stored, _ = served
-    out = stored.search_filtered([(0, "zzzunknownterm")], k=10, must=["def"])
-    assert out.collect() == []
+    for name in map(route, ROUTES):
+        out = stored.search_filtered([(0, "zzzunknownterm")], k=10, must=["def"])
+        assert out.collect() == [], name
 
 
-def test_k_above_match_count_returns_every_match_in_oracle_order(served):
+def test_k_above_match_count_returns_every_match_in_oracle_order(served, route):
     from goldenretriever_spark.oracle import top_k as oracle_top_k
 
     stored, oidx = served
     query = "def return"
     expected = oracle_top_k(oidx, query, k=1000)
     assert 0 < len(expected) < 1000
-    rows = sorted(stored.search([(0, query)], k=1000).collect(), key=lambda r: r["rank"])
-    assert [r["rank"] for r in rows] == list(range(1, len(expected) + 1))
-    assert [r["doc_id"] for r in rows] == [d for d, _ in expected]
-    for r, (_, score) in zip(rows, expected):
-        assert math.isclose(r["score"], score, rel_tol=1e-9, abs_tol=1e-12)
+    for name in map(route, ROUTES):
+        ranked, plan = stored.search([(0, query)], k=1000, with_plan=True)
+        assert (plan["path"] == "local") == (name == "local")
+        assert plan["est_rows"] == sum(oidx.df(t) for t in query.split())
+        rows = sorted(ranked.collect(), key=lambda r: r["rank"])
+        assert [r["rank"] for r in rows] == list(range(1, len(expected) + 1)), name
+        assert [r["doc_id"] for r in rows] == [d for d, _ in expected], name
+        for r, (_, score) in zip(rows, expected):
+            assert math.isclose(r["score"], score, rel_tol=1e-9, abs_tol=1e-12), name
 
 
 def test_query_terms_are_a_local_relation(spark):
@@ -74,7 +136,7 @@ def test_query_terms_are_a_local_relation(spark):
     assert "LogicalRDD" not in plan
 
 
-def test_wand_theta_frame_is_a_local_relation(served, monkeypatch):
+def test_wand_theta_frame_is_a_local_relation(served, route, monkeypatch):
     """The θ frame WAND builds from its seed scores is a local relation
     (broadcasting it into phase 2 runs no job)."""
     stored, _ = served
@@ -86,6 +148,7 @@ def test_wand_theta_frame_is_a_local_relation(served, monkeypatch):
         built.append(df)
         return df
 
+    route("spark")
     monkeypatch.setattr(wand, "WAND_CROSSOVER_DECODE_ROWS", 1)
     monkeypatch.setattr(wand, "local_frame", spy)
     ranked, plan = stored.search([(0, "def return")], k=5, with_plan=True)
@@ -97,30 +160,44 @@ def test_wand_theta_frame_is_a_local_relation(served, monkeypatch):
     assert "LogicalRDD" not in _plan(theta[0])
 
 
-def test_single_query_search_job_budget(spark, served):
-    """A single-query search on a warm handle runs at most 4 Spark jobs:
-    the query terms and the corpus stats add none."""
-    stored, _ = served
-    sc = spark.sparkContext
+def test_single_query_search_job_budget(spark, served_positional, documents, route, tmp_path):
+    """Spark jobs per call on a warm handle. The local route runs none for a
+    ranked-only search, a filtered search or a phrase, and exactly one for a
+    search with content from a Parquet table (the ``isin`` collect of the
+    ranked ids' rows). A search forced onto the Spark route runs at most 4:
+    the query terms, the corpus stats and the df probe add none."""
+    stored = served_positional
+    documents.select("doc_id", "content").write.parquet(str(tmp_path / "content"))
+    content = spark.read.parquet(str(tmp_path / "content"))
+    q = [(0, "class import")]
     stored.search([(0, "def return")], k=10).collect()  # memoize handle metadata
-    group = "test_serve_job_budget"
-    sc.setJobGroup(group, "single-query search")
-    try:
-        rows = stored.search([(0, "class import")], k=10).collect()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
+    calls = [
+        ("search", 0, lambda: stored.search(q, k=10).collect()),
+        ("search_filtered", 0, lambda: stored.search_filtered(
+            q, k=10, must=["def"], must_not=["return"]).collect()),
+        ("phrase", 0, lambda: stored.phrase(["def", "return"]).collect()),
+        ("search_documents", 1, lambda: stored.search(q, k=10, documents=content).collect()),
+    ]
+    for name, budget, call in calls:
+        rows, n = _jobs(spark, f"test_serve_local_{name}", call)
+        assert rows, name
+        assert n == budget, (name, n)
+
+    route("spark")
+    stored.search([(0, "def return")], k=10).collect()  # memoize the Spark reads
+    rows, n = _jobs(spark, "test_serve_spark_search", calls[0][2])
     assert len(rows) == 10
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 4
+    assert n <= 4
 
 
-def test_empty_filter_raises(served):
+def test_empty_filter_raises(served, route):
     stored, _ = served
-    with pytest.raises(ValueError):
-        stored.search_filtered([(0, "def return")], k=10, must=None, should=None)
+    for name in map(route, ROUTES):
+        with pytest.raises(ValueError):
+            stored.search_filtered([(0, "def return")], k=10, must=None, should=None)
 
 
-def test_all_matching_filter_returns_oracle_quantized_top_k(served):
+def test_all_matching_filter_returns_oracle_quantized_top_k(served, route):
     """A filter every candidate passes (should= the query's own terms)
     leaves the ranking alone: the rows are the oracle's top-k in the
     quantized (score_q desc, doc_id asc) order."""
@@ -129,19 +206,25 @@ def test_all_matching_filter_returns_oracle_quantized_top_k(served):
     stored, oidx = served
     query, k = "def return", 10
     every = oracle_top_k(oidx, query, k=10**6)
-    # Spark's round is HALF_UP; scores are positive
-    expected = sorted(every, key=lambda ds: (-math.floor(ds[1] * 10000 + 0.5), ds[0]))[:k]
-    rows = sorted(
-        stored.search_filtered([(0, query)], k=k, should=["def", "return"]).collect(),
-        key=lambda r: r["rank"],
-    )
-    assert [r["rank"] for r in rows] == list(range(1, k + 1))
-    assert [r["doc_id"] for r in rows] == [d for d, _ in expected]
-    for r, (_, score) in zip(rows, expected):
-        assert math.isclose(r["score"], score, rel_tol=1e-9, abs_tol=1e-12)
+    expected = _quantized(every)[:k]
+    for name in map(route, ROUTES):
+        rows = sorted(
+            stored.search_filtered([(0, query)], k=k, should=["def", "return"]).collect(),
+            key=lambda r: r["rank"],
+        )
+        assert [r["rank"] for r in rows] == list(range(1, k + 1)), name
+        assert [r["doc_id"] for r in rows] == [d for d, _ in expected], name
+        for r, (_, score) in zip(rows, expected):
+            assert math.isclose(r["score"], score, rel_tol=1e-9, abs_tol=1e-12), name
 
 
-def test_missing_bucket_partition_prunes_to_no_rows(spark, served, tmp_path):
+def _quantized(scored):
+    """(doc_id, score) pairs in the quantized cut's order: Spark's round is
+    HALF_UP and scores are positive."""
+    return sorted(scored, key=lambda ds: (-math.floor(ds[1] * 10000 + 0.5), ds[0]))
+
+
+def test_missing_bucket_partition_prunes_to_no_rows(spark, served, route, tmp_path):
     """A copy of the index with one posting_blocks/term_bucket=b directory
     deleted: a query whose terms all hash to b returns no rows without
     raising, and a query with no term in b returns the full index's rows."""
@@ -158,9 +241,6 @@ def test_missing_bucket_partition_prunes_to_no_rows(spark, served, tmp_path):
     path = str(tmp_path / "idx")
     shutil.copytree(stored.path, path)
     shutil.rmtree(os.path.join(path, "posting_blocks", f"term_bucket={b}"))
-    broken = StoredIndex(spark, path)
-
-    assert broken.search([(0, "def")], k=10).collect() == []
 
     def rows(handle):
         return sorted(
@@ -168,9 +248,54 @@ def test_missing_bucket_partition_prunes_to_no_rows(spark, served, tmp_path):
             for r in handle.search([(0, other)], k=10).collect()
         )
 
-    want = rows(stored)
-    assert len(want) == 10
-    assert rows(broken) == want
+    for name in map(route, ROUTES):
+        broken = StoredIndex(spark, path)
+        assert broken.search([(0, "def")], k=10).collect() == [], name
+        want = rows(stored)
+        assert len(want) == 10
+        assert rows(broken) == want, name
+
+
+def test_calls_without_terms_open_no_block_file(spark, served, route, tmp_path):
+    """A blank query and an empty filter read no posting block file on
+    either route: on an index copy whose posting_blocks files are all
+    corrupt, the blank search returns no rows and the empty filter raises
+    its clause ValueError before any read."""
+    import os
+    import shutil
+
+    from goldenretriever_spark.index.storage import StoredIndex
+
+    stored, _ = served
+    path = str(tmp_path / "idx")
+    shutil.copytree(stored.path, path)
+    for root, _, files in os.walk(os.path.join(path, "posting_blocks")):
+        for f in files:
+            if f.endswith(".parquet"):
+                with open(os.path.join(root, f), "wb") as out:
+                    out.write(b"not parquet")
+    for name in map(route, ROUTES):
+        broken = StoredIndex(spark, path)
+        assert broken.search([(0, "")], k=10).collect() == [], name
+        with pytest.raises(ValueError, match="must or should"):
+            broken.search_filtered([(0, "def")], k=10, must=None, should=None)
+
+
+def test_uri_index_path_serves_from_its_filesystem(spark, served_positional, route):
+    """A ``file://`` URI opens the same index as its plain path: the
+    positional check and the in-process reads resolve the URI's filesystem,
+    and every route returns the plain path's rows."""
+    from goldenretriever_spark.index.storage import StoredIndex
+
+    uri = StoredIndex(spark, "file://" + served_positional.path)
+    assert uri.has_positional()
+    for name in map(route, ROUTES):
+        assert sorted(uri.phrase(["def", "return"]).collect()) == sorted(
+            served_positional.phrase(["def", "return"]).collect()
+        ), name
+        assert sorted(uri.search([(0, "def return")], k=10).collect()) == sorted(
+            served_positional.search([(0, "def return")], k=10).collect()
+        ), name
 
 
 def test_dataframe_query_batch_raises_type_error(spark, served):
@@ -180,7 +305,7 @@ def test_dataframe_query_batch_raises_type_error(spark, served):
         stored.search(batch, k=10)
 
 
-def test_content_joinback_keeps_every_ranked_row(served, documents):
+def test_content_joinback_keeps_every_ranked_row(served, documents, route):
     """search(documents=) joins content back onto every ranked row: with one
     query's rank-1 doc missing from the content table, all n_queries x k
     rows still come back in rank order, and exactly that doc's rows have
@@ -191,23 +316,24 @@ def test_content_joinback_keeps_every_ranked_row(served, documents):
     def ranked(df):
         return sorted(df.collect(), key=lambda r: (r["query_id"], r["rank"]))
 
-    bare = ranked(stored.search(qlist, k=k))
-    dropped = bare[0]["doc_id"]
-    assert (bare[0]["query_id"], bare[0]["rank"]) == (0, 1)
-    content = documents.select("doc_id", "content").filter(F.col("doc_id") != dropped)
-    rows = ranked(stored.search(qlist, k=k, documents=content))
+    for name in map(route, ROUTES):
+        bare = ranked(stored.search(qlist, k=k))
+        dropped = bare[0]["doc_id"]
+        assert (bare[0]["query_id"], bare[0]["rank"]) == (0, 1)
+        content = documents.select("doc_id", "content").filter(F.col("doc_id") != dropped)
+        rows = ranked(stored.search(qlist, k=k, documents=content))
 
-    assert len(rows) == len(qlist) * k
-    for qid, _ in qlist:
-        assert [r["rank"] for r in rows if r["query_id"] == qid] == list(range(1, k + 1))
-    key = ("query_id", "rank", "doc_id", "score")
-    assert [tuple(r[c] for c in key) for r in rows] == [
-        tuple(r[c] for c in key) for r in bare
-    ]
-    assert all((r["content"] is None) == (r["doc_id"] == dropped) for r in rows)
+        assert len(rows) == len(qlist) * k, name
+        for qid, _ in qlist:
+            assert [r["rank"] for r in rows if r["query_id"] == qid] == list(range(1, k + 1))
+        key = ("query_id", "rank", "doc_id", "score")
+        assert [tuple(r[c] for c in key) for r in rows] == [
+            tuple(r[c] for c in key) for r in bare
+        ], name
+        assert all((r["content"] is None) == (r["doc_id"] == dropped) for r in rows), name
 
 
-def test_empty_corpus_builds_and_serves(spark, documents, tmp_path):
+def test_empty_corpus_builds_and_serves(spark, documents, route, tmp_path):
     """An index built from zero documents has stats (0, 0.0), and search,
     filtered search and phrase each return no rows without raising."""
     from goldenretriever_spark.index.blocks import pack_blocks
@@ -224,9 +350,104 @@ def test_empty_corpus_builds_and_serves(spark, documents, tmp_path):
         blocks=pack_blocks(idx),
         positional=pack_positional_blocks(docs, postings=idx.postings),
     )
-    stored = StoredIndex(spark, path)
+    for name in map(route, ROUTES):
+        stored = StoredIndex(spark, path)
+        assert stored.stats == (0, 0.0)
+        assert stored.search([(0, "def return")], k=10).collect() == [], name
+        assert stored.search_filtered([(0, "def")], k=10, must=["return"]).collect() == []
+        assert stored.phrase(["def", "return"]).collect() == [], name
 
-    assert stored.stats == (0, 0.0)
-    assert stored.search([(0, "def return")], k=10).collect() == []
-    assert stored.search_filtered([(0, "def")], k=10, must=["return"]).collect() == []
-    assert stored.phrase(["def", "return"]).collect() == []
+
+def test_positional_calls_without_positional_blocks_raise_value_error(served):
+    """phrase, proximity and phrase_ranked on an index written without
+    positional blocks raise one ValueError naming the missing table, before
+    any route runs."""
+    stored, _ = served
+    assert not stored.has_positional()
+    calls = [
+        lambda: stored.phrase(["def", "return"]),
+        lambda: stored.proximity(["def", "return"], 3),
+        lambda: stored.phrase_ranked([(0, ["def", "return"])], k=5),
+    ]
+    for call in calls:
+        with pytest.raises(ValueError, match="positional_blocks"):
+            call()
+
+
+def test_local_route_matches_spark_route_and_oracle(served_positional, documents, route):
+    """On the 400-doc index the local route returns the Spark route's rows
+    and ranks, and both equal the oracle's, scores within 1e-12 relative:
+    a 2-query search, a must + must_not filtered search, a should filter
+    with min_should_match=2, and a phrase with a repeated term."""
+    from goldenretriever_spark.oracle import build_oracle_index, tokenize
+    from goldenretriever_spark.oracle import top_k as oracle_top_k
+
+    stored = served_positional
+    docs = {r["doc_id"]: r["content"] for r in documents.select("doc_id", "content").collect()}
+    oidx = build_oracle_index(list(docs.items()))
+    toks = {d: tokenize(c) for d, c in docs.items()}
+    qlist, k = [(0, "def return"), (1, "class import self")], 10
+    must, must_not = ["def"], ["import"]
+    should = ["def", "return", "class"]
+    phrase = ["def", "return", "def"]
+
+    def search_rows():
+        return sorted(
+            (r["query_id"], r["rank"], r["doc_id"], r["score"])
+            for r in stored.search(qlist, k=k).collect()
+        )
+
+    def filtered_rows(**clauses):
+        return sorted(
+            (r["query_id"], r["rank"], r["doc_id"], r["score"])
+            for r in stored.search_filtered(qlist, k=k, **clauses).collect()
+        )
+
+    calls = {
+        "search": search_rows,
+        "must_not": lambda: filtered_rows(must=must, must_not=must_not),
+        "should": lambda: filtered_rows(should=should, min_should_match=2),
+        "phrase": lambda: sorted(tuple(r) for r in stored.phrase(phrase).collect()),
+    }
+
+    def oracle_filtered(ok):
+        return sorted(
+            (qid, rank, d, s)
+            for qid, q in qlist
+            for rank, (d, s) in enumerate(
+                _quantized([ds for ds in oracle_top_k(oidx, q, k=10**6) if ok(ds[0])])[:k],
+                start=1,
+            )
+        )
+
+    def occurrences(d):
+        t, n = toks[d], len(phrase)
+        return sum(t[i : i + n] == phrase for i in range(len(t) - n + 1))
+
+    oracle = {
+        "search": sorted(
+            (qid, rank, d, s)
+            for qid, q in qlist
+            for rank, (d, s) in enumerate(oracle_top_k(oidx, q, k=k), start=1)
+        ),
+        "must_not": oracle_filtered(
+            lambda d: set(must) <= set(toks[d]) and not set(must_not) & set(toks[d])
+        ),
+        "should": oracle_filtered(lambda d: len(set(should) & set(toks[d])) >= 2),
+        "phrase": sorted((d, n) for d in docs if (n := occurrences(d))),
+    }
+    assert all(oracle.values())
+    assert phrase.count("def") == 2
+
+    got = {name: {call: fn() for call, fn in calls.items()} for name in map(route, ROUTES)}
+    for call, want in oracle.items():
+        for name in ROUTES:
+            rows = got[name][call]
+            assert [r[:-1] for r in rows] == [w[:-1] for w in want], (name, call)
+            if call == "phrase":
+                assert rows == want, name
+                continue
+            for r, w in zip(rows, want):
+                assert math.isclose(r[-1], w[-1], rel_tol=1e-12), (name, call)
+        for r, s in zip(got["local"][call], got["spark"][call]):
+            assert r[:-1] == s[:-1] and math.isclose(r[-1], s[-1], rel_tol=1e-12), call

@@ -14,6 +14,16 @@ summary; paste into BENCH/BASELINE.md.
 
 Usage: python tools/wand_crossover.py [sizes_csv] [--runs R] [--k K]
 Corpora/indexes are cached in /tmp across invocations.
+
+``--local`` calibrates the other serve crossover,
+storage.LOCAL_CROSSOVER_DECODE_ROWS: warm single StoredIndex calls on the
+in-process route against their Spark routes, per corpus size — searches
+(1-term hot, 3-term mid, 3-term hot) against brute_top_k_stored and hot
+phrases (2 and 3 terms, and one with a repeated term) against
+phrase_match_stored — with identical results asserted in every cell and
+each local call's driver memory peak; writes BENCH/LOCAL_CROSSOVER.json:
+
+    python tools/wand_crossover.py 10000,100000,400000 --local --runs=7
 """
 
 from __future__ import annotations
@@ -32,6 +42,7 @@ def ensure_index(spark, n_docs: int) -> str:
     from goldenretriever_spark import corpus
     from goldenretriever_spark.index.blocks import pack_blocks
     from goldenretriever_spark.index.build import build_index
+    from goldenretriever_spark.index.positions import pack_positional_blocks
     from goldenretriever_spark.index.storage import write_index
 
     cache = f"/tmp/gr_bench_corpus_{n_docs}.parquet"
@@ -40,12 +51,15 @@ def ensure_index(spark, n_docs: int) -> str:
         corpus.synth_corpus(spark, n_docs, seed=42, partitions=256).write.mode(
             "overwrite"
         ).parquet(cache)
-    if not os.path.exists(os.path.join(idx_path, "corpus_stats")):
+    if not os.path.exists(os.path.join(idx_path, "positional_blocks")):
         docs = spark.read.parquet(cache)
         idx = build_index(docs, tokenizer="simple")
         blocks = pack_blocks(idx, block_size=128, target_docs_per_group=250_000,
                              n_term_buckets=N_BUCKETS)
-        write_index(idx, idx_path, blocks=blocks, n_term_buckets=N_BUCKETS)
+        positional = pack_positional_blocks(docs, postings=idx.postings,
+                                            n_term_buckets=N_BUCKETS)
+        write_index(idx, idx_path, blocks=blocks, n_term_buckets=N_BUCKETS,
+                    positional=positional)
     return idx_path
 
 
@@ -224,6 +238,183 @@ def mixed(n_docs: int, runs: int, k: int = 10) -> None:
         json.dump(cell, f, indent=2)
 
 
+def _driver_peak_mb(call) -> float:
+    """The driver memory ``call`` holds at its peak, MB: the Python-heap
+    peak (tracemalloc: numpy, pandas, Python objects) plus the Arrow buffer
+    peak (a proxy of Arrow's default pool, fresh for this call), summed as
+    an upper bound."""
+    import tracemalloc
+
+    import pyarrow as pa
+
+    base = pa.default_memory_pool()
+    arrow = pa.proxy_memory_pool(base)
+    pa.set_memory_pool(arrow)
+    tracemalloc.start()
+    try:
+        call()
+        py_peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+        pa.set_memory_pool(base)
+    assert arrow.bytes_allocated() == 0, "an Arrow buffer outlived the call"
+    return (py_peak + arrow.max_memory()) / 2**20
+
+
+def local(sizes: list[int], runs: int, k: int) -> None:
+    """Local-route calibration cells: per corpus size and query, the median
+    wall of ``runs`` warm single calls on each host — StoredIndex's
+    in-process route (forced by an unbounded crossover) and the Spark route
+    of the same operator (brute_top_k_stored for search,
+    phrase_match_stored for phrase) — plus the local call's driver memory
+    peak (:func:`_driver_peak_mb`, one extra untimed call).
+
+    The suggested crossover is the least of each operator's fitted time
+    crossover and the memory cap: the driver memory budget, Spark's own
+    per-action ceiling on what one call brings into the driver
+    (``spark.driver.maxResultSize`` of the session), over the largest
+    measured bytes per estimated row of either operator. A phrase's
+    estimated rows count each term's df once per offset it fills, but it
+    decodes positions, so its bytes per row are the larger ratio."""
+    import statistics
+
+    import numpy as np
+
+    from goldenretriever_spark.index import storage
+    from goldenretriever_spark.index.storage import StoredIndex
+    from goldenretriever_spark.query.phrase import phrase_match_stored
+    from goldenretriever_spark.query.wand import brute_top_k_stored
+    from goldenretriever_spark.session import get_spark
+
+    cores = len(os.sched_getaffinity(0))
+    spark = get_spark("gr-local-crossover", cores=cores)
+    max_result = spark.conf.get("spark.driver.maxResultSize", "1g")
+    budget = spark.sparkContext._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+        max_result
+    )
+
+    def query_classes(stored) -> tuple[dict[str, tuple[str, list]], dict[str, int]]:
+        """Search: hot1, the 3 highest-df terms, one per query; mid3, 3
+        seeded 3-term queries over the terms in 1-10% of the docs; hot3,
+        the 3 highest-df terms as one query, the largest search volume a
+        corpus size offers. Phrase: the 2 and the 3 highest-df terms, and
+        the 2 highest with the first repeated (``a b a``). Also returns
+        term -> df."""
+        ts = stored.term_stats.select("term", "df").toPandas()
+        ts = ts.sort_values(["df", "term"], ascending=[False, True])
+        n_docs = stored.stats[0]
+        mid = ts[(ts["df"] >= 0.01 * n_docs) & (ts["df"] <= 0.1 * n_docs)]["term"].tolist()
+        rng = np.random.default_rng(42)
+        hot = ts["term"].head(3).tolist()
+        return {
+            "hot1": ("search", hot),
+            "mid3": ("search", [" ".join(rng.choice(mid, 3, replace=False)) for _ in range(3)]),
+            "hot3": ("search", [" ".join(hot)]),
+            "phrase2": ("phrase", [hot[:2]]),
+            "phrase3": ("phrase", [hot]),
+            "phrase_aba": ("phrase", [[hot[0], hot[1], hot[0]]]),
+        }, dict(zip(ts["term"], ts["df"]))
+
+    def median_ms(call) -> tuple[float, list]:
+        rows = call()  # warm
+        times = []
+        for _ in range(runs):
+            t0 = time.perf_counter()
+            rows = call()
+            times.append((time.perf_counter() - t0) * 1000.0)
+        return statistics.median(times), rows
+
+    def phrase_key(rows):
+        return sorted((r["doc_id"], r["occurrences"]) for r in rows)
+
+    cells = []
+    storage.LOCAL_CROSSOVER_DECODE_ROWS = 1 << 62
+    for n in sizes:
+        stored = StoredIndex(spark, ensure_index(spark, n))
+        nb, blocks, cstats = stored.n_term_buckets, stored.posting_blocks, stored.corpus_stats
+        classes, df_of = query_classes(stored)
+        for cls, (op, queries) in classes.items():
+            for q in queries:
+                if op == "search":
+                    qlist = [(0, q)]
+                    _, plan = stored.search(qlist, k=k, with_plan=True)
+                    assert plan["path"] == "local"
+                    est, spark_route, key = plan["est_rows"], "brute_top_k_stored", _rank_key
+
+                    def local_call():
+                        return stored.search(qlist, k=k).collect()
+
+                    def spark_call():
+                        return brute_top_k_stored(
+                            spark, blocks, cstats, qlist, k=k, n_term_buckets=nb,
+                            stats=stored.stats).collect()
+                else:
+                    est = int(sum(df_of[t] for t in q))
+                    spark_route, key = "phrase_match_stored", phrase_key
+
+                    def local_call():
+                        return stored.phrase(q).collect()
+
+                    def spark_call():
+                        return phrase_match_stored(
+                            stored.positional_blocks, q, n_term_buckets=nb).collect()
+                t_local, r_local = median_ms(local_call)
+                t_spark, r_spark = median_ms(spark_call)
+                assert key(r_local) == key(r_spark), (n, q)
+                cell = {
+                    "n_docs": n, "op": op, "query_class": cls,
+                    "query": q if op == "search" else " ".join(q),
+                    "est_rows": est,
+                    "local_ms": round(t_local, 1),
+                    "spark_route": spark_route,
+                    "spark_ms": round(t_spark, 1),
+                    "speedup": round(t_spark / t_local, 1),
+                    "local_peak_mb": round(_driver_peak_mb(local_call), 1),
+                    "identical": True,
+                }
+                cells.append(cell)
+                print(json.dumps(cell), flush=True)
+
+    # the time crossovers are fitted on the large-volume cells only: below
+    # ~10^5 rows the Spark route's fixed cost (~0.5 s of jobs) is all they
+    # measure
+    per_op = {}
+    for op in ("search", "phrase"):
+        large = [c for c in cells if c["op"] == op and c["est_rows"] >= 100_000]
+        est = np.array([c["est_rows"] for c in large], dtype=np.float64)
+        fit = {
+            arm: np.polyfit(est, [c[f"{arm}_ms"] for c in large], 1).tolist()
+            for arm in ("local", "spark")
+        }
+        (b_l, a_l), (b_s, a_s) = fit["local"], fit["spark"]
+        time_rows = (a_s - a_l) / (b_l - b_s) if b_l > b_s else None
+        per_op[op] = {
+            "fit_ms_per_row_and_intercept": fit,
+            "time_crossover_rows": None if time_rows is None else round(time_rows),
+            "local_bytes_per_row_max": round(
+                max(c["local_peak_mb"] * 2**20 / c["est_rows"] for c in large), 1
+            ),
+        }
+    bytes_per_row = max(o["local_bytes_per_row_max"] for o in per_op.values())
+    memory_rows = budget / bytes_per_row
+    time_rows = [o["time_crossover_rows"] for o in per_op.values()
+                 if o["time_crossover_rows"] is not None]
+    summary = {
+        "cores": cores, "runs": runs, "k": k,
+        "fit_rows_min": 100_000,
+        **per_op,
+        "memory_budget": f"spark.driver.maxResultSize = {max_result}",
+        "memory_budget_bytes": budget,
+        "memory_rows": round(memory_rows),
+        "suggested_crossover_rows": round(min([memory_rows, *time_rows])),
+    }
+    print(json.dumps(summary), flush=True)
+    out_path = os.path.join(os.path.dirname(os.path.dirname(
+        os.path.abspath(__file__))), "BENCH", "LOCAL_CROSSOVER.json")
+    with open(out_path, "w") as f:
+        json.dump({**summary, "cells": cells}, f, indent=2)
+
+
 def main() -> None:
     from goldenretriever_spark import corpus
     from goldenretriever_spark.index.storage import StoredIndex
@@ -248,6 +439,9 @@ def main() -> None:
         return
     if "--mixed" in sys.argv:
         mixed(sizes[0], runs, k)
+        return
+    if "--local" in sys.argv:
+        local(sizes, runs, k)
         return
 
     spark = get_spark("gr-wand-crossover", cores=32, shuffle_partitions=32)
