@@ -84,14 +84,14 @@ def _bm25_wand_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     discipline matches the oracle exactly."""
     from goldenretriever_spark.index.blocks import pack_blocks
     from goldenretriever_spark.index.build import build_index
+    from goldenretriever_spark.index.storage import to_doc_ids
     from goldenretriever_spark.query.wand import wand_top_k
 
     docs = _documents(spark, sf_dir)
     idx = build_index(docs, tokenizer="simple")
     blocks = pack_blocks(idx, block_size=16, target_docs_per_group=200)
-    return _score_q(
-        wand_top_k(spark, blocks, idx.corpus_stats, FLAGSHIP_QUERIES, k=K, quantize=True)
-    )
+    ranked = wand_top_k(spark, blocks, idx.corpus_stats, FLAGSHIP_QUERIES, k=K, quantize=True)
+    return _score_q(to_doc_ids(ranked, idx.doc_stats))
 
 
 def _hybrid_rrf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -248,13 +248,17 @@ SELECT query_id, doc_id, rrf_q, rank FROM (
 def _postings_tf(spark: SparkSession, sf_dir: str) -> DataFrame:
     from goldenretriever_spark.index.build import build_index
 
-    return build_index(_documents(spark, sf_dir), tokenizer="simple").postings
+    return build_index(_documents(spark, sf_dir), tokenizer="simple").postings.select(
+        "term", "doc_id", "tf", "doc_len"
+    )
 
 
 def _doc_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from goldenretriever_spark.index.build import build_index
 
-    return build_index(_documents(spark, sf_dir), tokenizer="simple").doc_stats
+    return build_index(_documents(spark, sf_dir), tokenizer="simple").doc_stats.select(
+        "doc_id", "doc_len", "sha256"
+    )
 
 
 def _corpus_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -280,15 +284,17 @@ PHRASE_QUERIES: list[tuple[int, list[str]]] = [
 ]
 
 
-_POS_BLOCKS_MEMO: dict[str, DataFrame] = {}
+_POS_BLOCKS_MEMO: dict[str, tuple] = {}
 
 
-def _positional_blocks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Packed positional blocks over the driver corpus (index/positions.py),
-    cached so multi-phrase contract queries pack once. At production scale
-    these are persisted by write_index(positional=...) and read back via
-    StoredIndex — here the driver re-derives them per query run, exercising
-    the same pack -> prune -> decode -> match path end-to-end.
+def _positional_blocks(spark: SparkSession, sf_dir: str):
+    """(index, packed positional blocks) over the driver corpus
+    (index/positions.py), the blocks cached so multi-phrase contract
+    queries pack once. At production scale these are persisted by
+    write_index(positional=...) and read back via StoredIndex — here the
+    driver re-derives them per query run, exercising the same pack -> prune
+    -> decode -> match path end-to-end. The blocks hold docnos; the index's
+    doc_stats maps result rows back to doc_ids.
 
     Memoized per sf_dir (ADVICE r6): the three positional contract queries
     (_ir_phrase_match / _ir_proximity_match / _ir_phrase_ranked_topk) now
@@ -296,11 +302,14 @@ def _positional_blocks(spark: SparkSession, sf_dir: str) -> DataFrame:
     memo = _POS_BLOCKS_MEMO.get(sf_dir)
     if memo is not None:
         return memo
+    from goldenretriever_spark.index.build import build_index
     from goldenretriever_spark.index.positions import pack_positional_blocks
 
-    blocks = pack_positional_blocks(_documents(spark, sf_dir), tokenizer="simple").cache()
-    _POS_BLOCKS_MEMO[sf_dir] = blocks
-    return blocks
+    docs = _documents(spark, sf_dir)
+    idx = build_index(docs, tokenizer="simple", persist=False)
+    blocks = pack_positional_blocks(docs, tokenizer="simple", postings=idx.postings).cache()
+    _POS_BLOCKS_MEMO[sf_dir] = (idx, blocks)
+    return idx, blocks
 
 
 def _ir_phrase_match(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -310,16 +319,17 @@ def _ir_phrase_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     occurrence count. The corpus is tokenized once at pack time; each query
     touches only its terms' blocks (stored-vs-scan identity:
     tests/test_positions.py)."""
+    from goldenretriever_spark.index.storage import to_doc_ids
     from goldenretriever_spark.query.phrase import phrase_match_stored
 
-    blocks = _positional_blocks(spark, sf_dir)
+    idx, blocks = _positional_blocks(spark, sf_dir)
     outs = [
         phrase_match_stored(blocks, ph).select(
             F.lit(pid).cast("long").alias("phrase_id"), "doc_id", "occurrences"
         )
         for pid, ph in PHRASE_QUERIES
     ]
-    return reduce(DataFrame.unionByName, outs)
+    return to_doc_ids(reduce(DataFrame.unionByName, outs), idx.doc_stats)
 
 
 # Fixed proximity queries (terms, window) for the past-cap contract row:
@@ -335,16 +345,17 @@ def _ir_proximity_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     blocks (query/phrase.proximity_match_stored): docs where all query terms
     co-occur within a W-token window, plus the count of distinct satisfying
     window starts."""
+    from goldenretriever_spark.index.storage import to_doc_ids
     from goldenretriever_spark.query.phrase import proximity_match_stored
 
-    blocks = _positional_blocks(spark, sf_dir)
+    idx, blocks = _positional_blocks(spark, sf_dir)
     outs = [
         proximity_match_stored(blocks, terms, w).select(
             F.lit(pid).cast("long").alias("prox_id"), "doc_id", "n_windows"
         )
         for pid, terms, w in PROXIMITY_QUERIES
     ]
-    return reduce(DataFrame.unionByName, outs)
+    return to_doc_ids(reduce(DataFrame.unionByName, outs), idx.doc_stats)
 
 
 def _ir_phrase_ranked_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -352,11 +363,9 @@ def _ir_phrase_ranked_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     BM25 over each phrase's terms plus a saturating ln(1+occurrences)
     exact-phrase boost from the stored positional blocks — the positional
     index as a retrieval consumer, not a boolean endpoint."""
-    from goldenretriever_spark.index.build import build_index
     from goldenretriever_spark.query.phrase import phrase_ranked_topk
 
-    idx = build_index(_documents(spark, sf_dir), tokenizer="simple")
-    blocks = _positional_blocks(spark, sf_dir)
+    idx, blocks = _positional_blocks(spark, sf_dir)
     return phrase_ranked_topk(idx, blocks, PHRASE_QUERIES, k=K, boost=1.0)
 
 
@@ -375,16 +384,16 @@ def _ir_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     not a post-filter of the unfiltered top-k."""
     from goldenretriever_spark.index.blocks import pack_blocks
     from goldenretriever_spark.index.build import build_index
+    from goldenretriever_spark.index.storage import to_doc_ids
     from goldenretriever_spark.query.boolean import filtered_top_k
 
     idx = build_index(_documents(spark, sf_dir), tokenizer="simple")
     blocks = pack_blocks(idx, block_size=16, target_docs_per_group=200)
-    return _score_q(
-        filtered_top_k(
-            spark, blocks, idx.corpus_stats, FLAGSHIP_QUERIES, k=K,
-            must=FILTER_MUST, must_not=FILTER_MUST_NOT,
-        )
+    ranked = filtered_top_k(
+        spark, blocks, idx.corpus_stats, FLAGSHIP_QUERIES, k=K,
+        must=FILTER_MUST, must_not=FILTER_MUST_NOT,
     )
+    return _score_q(to_doc_ids(ranked, idx.doc_stats))
 
 
 # Fixed boolean queries (must / should / must_not) for the contract row —
@@ -403,6 +412,7 @@ def _ir_boolean_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     pruning (query/boolean.boolean_match_stored)."""
     from goldenretriever_spark.index.blocks import pack_blocks
     from goldenretriever_spark.index.build import build_index
+    from goldenretriever_spark.index.storage import to_doc_ids
     from goldenretriever_spark.query.boolean import boolean_match_stored
 
     idx = build_index(_documents(spark, sf_dir), tokenizer="simple")
@@ -413,7 +423,7 @@ def _ir_boolean_match(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         for bid, spec in BOOLEAN_QUERIES
     ]
-    return reduce(DataFrame.unionByName, outs)
+    return to_doc_ids(reduce(DataFrame.unionByName, outs), idx.doc_stats)
 
 
 def _kb_build_flatten(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -144,9 +144,12 @@ def main() -> None:
     # plan; the serve row reads from partitioned parquet so term_bucket
     # partition pruning is exercised exactly as in production.
     from goldenretriever_spark.index.positions import pack_positional_blocks
+    from goldenretriever_spark.index.storage import FORMAT_VERSION
     from goldenretriever_spark.query.phrase import phrase_match_stored_batch
 
-    POS_CACHE = f"/tmp/gr_bench_posblocks_{BENCH_DOCS}"
+    # keyed by the index format, so a cache written in another format is
+    # never read back
+    POS_CACHE = f"/tmp/gr_bench_posblocks_v{FORMAT_VERSION}_{BENCH_DOCS}"
 
     def bench_pos_pack():
         pack_positional_blocks(docs, postings=idx.postings).count()

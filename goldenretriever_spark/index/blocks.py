@@ -5,18 +5,26 @@ The reference persists its index as an Annoy file + pickle
 (/root/reference/src/prebuilt_index.py:44-72). Here the persistent index is a
 columnar table of fixed-size compressed blocks:
 
-    posting_blocks(term, salt, block_id, n, df, doc_id_min, doc_id_max,
-                   block_max_tf_norm, doc_ids_delta_varint, tfs_varint,
-                   term_bucket)
+    posting_blocks(term, salt, block_id, n, df, docno_min, docno_max,
+                   block_max_tf_norm, docnos_delta_varint, tfs_varint,
+                   dls_varint, term_bucket)
+
+Documents are named by their ``docno`` (index format v2): the dense rank
+of the doc_id in signed order, assigned once per build
+(build.number_docs). Docno order is doc_id order, so every doc_id-asc tie
+rule holds on docnos unchanged, and a block's docno gaps are small (~n_docs
+/ df) where hash-id gaps cost ~8 varint bytes each. Only result rows are
+mapped back to doc_ids (storage.to_doc_ids).
 
 Skew handling (north_rule: explicit, not only AQE): hot terms like ``def``
 appear in nearly every document, so a plain repartition('term') sends one
 term's postings to one task. Instead each term gets an adaptive salt count
 ``ceil(df / target_docs_per_group)`` and postings are split into salt groups
-by CONTIGUOUS doc_id ranges (top 16 bits of the signed doc_id), so:
+by CONTIGUOUS doc ranges (top 16 bits of the signed doc_id, which is a
+contiguous docno range because docno order is doc_id order), so:
 
 - groups are bounded (~target_docs_per_group rows) regardless of df
-- each (term, salt) group covers a disjoint, ordered doc_id range, so blocks
+- each (term, salt) group covers a disjoint, ordered docno range, so blocks
   remain globally sorted runs per term (block-max WAND needs ordered ranges)
 - salt is computed from data already on the row — no extra shuffle stage
 
@@ -27,7 +35,8 @@ there), :func:`split_blocks` the block split over doc runs with the shared
 head columns, and :func:`pack_exchange` the one pack exchange.
 
 Block contents per (term, salt) group, packed in one mapInPandas pass:
-doc_ids sorted ascending (signed), delta-gap + varint (codec.py); tfs varint;
+docnos sorted ascending, delta-gap + varint (codec.py); tfs and doc
+lengths varint;
 ``block_max_tf_norm`` = max over the block of tf/(tf + k1*(1-b+b*dl/avgdl)) —
 the term-independent part of the BM25 upper bound used by WAND pruning
 (Ding & Suel, SIGIR 2011), exact because dl/avgdl are known at build time.
@@ -52,23 +61,25 @@ from goldenretriever_spark.index.codec import (
 from goldenretriever_spark.index.storage import bucket_col
 
 BLOCK_SIZE = 128
-SALT_SPACE = 65536  # top 16 bits of signed doc_id -> contiguous range ids
+SALT_SPACE = 65536  # top 16 bits of signed doc_id -> contiguous docno ranges
 MAX_SALTS = SALT_SPACE
 
 BLOCKS_SCHEMA = (
     "term string, salt int, block_id long, n int, df long, "
-    "doc_id_min long, doc_id_max long, block_max_tf_norm double, "
-    "doc_ids_delta_varint binary, tfs_varint binary, dls_varint binary"
+    "docno_min long, docno_max long, block_max_tf_norm double, "
+    "docnos_delta_varint binary, tfs_varint binary, dls_varint binary"
 )
 
 
 def salt_col(freq: Column, target: int) -> Column:
-    """A row's contiguous doc-id-range salt, sized by its term's frequency
+    """A row's contiguous docno-range salt, sized by its term's frequency
     ``freq`` (df for posting blocks, Σtf for positional blocks): the term
     gets ``ceil(freq / target)`` salt groups (at most MAX_SALTS; one when
     ``freq`` is null), and the row's salt is the top 16 bits of its signed
-    doc_id mapped to [0, 65536), then scaled down to [0, n_salts) — ranges
-    stay ordered and disjoint."""
+    doc_id mapped to [0, 65536), then scaled down to [0, n_salts). The
+    salt is monotone in doc_id, hence in docno, so each group is one
+    contiguous docno range, ordered and disjoint; the uniform hash keeps
+    the groups balanced without knowing n_docs on the row."""
     n_salts = F.least(
         F.lit(MAX_SALTS), F.coalesce(F.ceil(freq / F.lit(target)), F.lit(1))
     ).cast("int")
@@ -77,18 +88,18 @@ def salt_col(freq: Column, target: int) -> Column:
 
 
 def split_blocks(
-    terms: np.ndarray, salts: np.ndarray, doc_ids: np.ndarray, block_size: int
+    terms: np.ndarray, salts: np.ndarray, docnos: np.ndarray, block_size: int
 ) -> tuple[np.ndarray, np.ndarray, dict[str, np.ndarray]]:
-    """Doc runs sorted by (term, salt, doc_id) -> blocks: a block starts at
+    """Doc runs sorted by (term, salt, docno) -> blocks: a block starts at
     every (term, salt) group start and every block_size-th doc within its
     group. Returns each block's start and end index into the runs and the
     head columns both block tables share (``term, salt, block_id, n,
-    doc_id_min, doc_id_max, doc_ids_delta_varint``).
+    docno_min, docno_max, docnos_delta_varint``).
 
     Fully vectorized (no per-block Python loop — a 10^6-block partition
     paid ~100µs of numpy call overhead per block, 3 varint calls each,
     before this)."""
-    n_runs = doc_ids.size
+    n_runs = docnos.size
     salts = salts.astype(np.int64)
     change = np.empty(n_runs, dtype=bool)
     change[0] = True
@@ -105,10 +116,10 @@ def split_blocks(
         # globally ordered within term: salt-major, then local
         "block_id": (salts_b << 32) | (off[starts] // block_size),
         "n": (ends - starts).astype(np.int32),
-        "doc_id_min": doc_ids[starts],
-        "doc_id_max": doc_ids[ends - 1],
-        "doc_ids_delta_varint": varint_encode_grouped(
-            delta_encode_grouped(doc_ids, starts), starts, ends
+        "docno_min": docnos[starts],
+        "docno_max": docnos[ends - 1],
+        "docnos_delta_varint": varint_encode_grouped(
+            delta_encode_grouped(docnos, starts), starts, ends
         ),
     }
     return starts, ends, head
@@ -165,7 +176,8 @@ def enriched_postings(
     target_docs_per_group: int = 250_000,
     n_term_buckets: int = 64,
 ) -> DataFrame:
-    """postings + doc_len + df + adaptive contiguous-range salt + term_bucket.
+    """postings (with docnos) + df + adaptive contiguous-range salt +
+    term_bucket.
 
     This is the stageable intermediate of the build: the checkpointed builder
     writes it to a staging table once (one pass over the corpus), then packs
@@ -178,7 +190,7 @@ def enriched_postings(
     return index.postings.join(ts, "term").select(
         "term",
         salt_col(F.col("df"), target_docs_per_group).alias("salt"),
-        "doc_id",
+        "docno",
         "tf",
         "doc_len",
         "df",
@@ -200,7 +212,7 @@ def pack_enriched(
     and the tf and doc_len streams."""
 
     def pack(pdf: pd.DataFrame) -> pd.DataFrame:
-        ids = pdf["doc_id"].to_numpy(dtype=np.int64)
+        ids = pdf["docno"].to_numpy(dtype=np.int64)
         tfs = pdf["tf"].to_numpy(dtype=np.int64)
         dls = pdf["doc_len"].to_numpy(dtype=np.int64)
         tf_norm = tfs / (tfs + K1 * (1.0 - B + B * dls / avgdl))
@@ -225,8 +237,8 @@ def pack_enriched(
         )
 
     return pack_exchange(
-        enriched.select("term", "salt", "doc_id", "tf", "doc_len", "df"),
-        ["doc_id"],
+        enriched.select("term", "salt", "docno", "tf", "doc_len", "df"),
+        ["docno"],
         pack,
         BLOCKS_SCHEMA,
         n_term_buckets,
@@ -239,8 +251,9 @@ def pack_blocks(
     target_docs_per_group: int = 250_000,
     n_term_buckets: int = 64,
 ) -> DataFrame:
-    """Convenience: postings + doc_stats -> compressed posting_blocks in one
-    plan (non-checkpointed path)."""
+    """Convenience: an index -> compressed posting_blocks in one plan
+    (non-checkpointed path). corpus_stats is a local relation, so reading
+    avgdl runs no job."""
     avgdl = float(index.corpus_stats.collect()[0]["avgdl"])
     return pack_enriched(
         enriched_postings(index, target_docs_per_group, n_term_buckets),
@@ -252,12 +265,13 @@ def pack_blocks(
 
 def decode_blocks(blocks: DataFrame) -> DataFrame:
     """posting_blocks -> (term, doc_id, tf) via a vectorized mapInPandas
-    decode (codec batch decoders, no per-block Python)."""
-    cols = ["term", "doc_ids_delta_varint", "tfs_varint"]
+    decode (codec batch decoders, no per-block Python); ``doc_id`` carries
+    the blocks' docnos, as in every block decoder of the query layer."""
+    cols = ["term", "docnos_delta_varint", "tfs_varint"]
 
     def unpack(batches):
         for pdf in batches:
-            ids, counts = decode_doc_ids(pdf["doc_ids_delta_varint"])
+            ids, counts = decode_doc_ids(pdf["docnos_delta_varint"])
             if ids.size == 0:
                 continue
             yield pd.DataFrame(

@@ -7,27 +7,33 @@ job graph that is pure DataFrame ops until the (optional) compression stage:
 
     documents ──ids+sha──► docs' ──tokenize──► tokens
         tokens ──explode──► (doc_id, term)
-        (doc_id, term) ──groupBy(term,doc_id).count()──► postings(term,doc_id,tf)
-        tokens ──size()──► doc_stats(doc_id, doc_len, sha256)
-        doc_stats ──agg──► corpus_stats(n_docs, avgdl)
+        (doc_id, term) ──groupBy(term,doc_id).count()──► (term, doc_id, tf)
+        docs' ──range sort, tokenize, count──► doc_stats(docno, doc_id, doc_len,
+                                               sha256) + corpus_stats(n_docs, avgdl)
+        (term, doc_id, tf) ──⋈ docno──► postings(term, doc_id, tf, doc_len, docno)
         postings ──groupBy(term)──► term_stats(term, df)
 
 Scale notes (designed for 10^12 files / 1000 executors):
 - doc_id = xxhash64(repo, path, commit): assigned map-side, no global sort.
+- docno = dense rank of doc_id in signed order (index format v2): the stored
+  blocks encode docnos, whose gaps are small, instead of 64-bit hash ids.
+  Assigning it is one range exchange over the doc-level rows (~1/|doc| of
+  the token rows) and one driver collect of per-partition counts.
 - tf aggregation is a single shuffle on (term, doc_id); Spark's 2-phase hash
   aggregation does map-side partial counts, so hot terms like ``def`` do NOT
   concentrate on one reducer at this stage (the key includes doc_id).
 - df/term_stats aggregates from postings with partial aggregation; exact
   counts (not approx_count_distinct) because BM25 rank-identity needs exact df.
 - The only skew-sensitive shuffle is repartition-by-term for block packing;
-  that lives in blocks.py and salts hot terms by contiguous doc_id ranges.
+  that lives in blocks.py and salts hot terms by contiguous doc ranges.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame
+from pyspark import StorageLevel
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from goldenretriever_spark.tokenizer import tokens_column
@@ -41,9 +47,9 @@ class InvertedIndex:
     """In-memory handle to the index tables (each a DataFrame; persisted
     variants are written/read by storage.py)."""
 
-    postings: DataFrame      # term:string, doc_id:long, tf:long, doc_len:long
-    doc_stats: DataFrame     # doc_id:long, doc_len:long, sha256:string
-    corpus_stats: DataFrame  # n_docs:long, avgdl:double
+    postings: DataFrame      # term:string, doc_id:long, tf:long, doc_len:long, docno:long
+    doc_stats: DataFrame     # docno:long, doc_id:long, doc_len:long, sha256:string
+    corpus_stats: DataFrame  # n_docs:long, avgdl:double (a local relation)
     term_stats: DataFrame    # term:string, df:long
 
 
@@ -134,6 +140,125 @@ def tokenized(
     )
 
 
+def staging_tables(toks: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """Tokenized rows (doc_id, sha256, tokens) -> ``(postings, doc_rows)``
+    in hash-id space, before any docno exists: postings (term, doc_id, tf,
+    doc_len) and one doc row (doc_id, doc_len, sha256) per input row. The
+    streaming fold appends exactly these per micro-batch;
+    :func:`number_index` turns them into an index.
+
+    doc_len rides along in the postings' groupBy key (same cardinality as
+    (term, doc_id)), so neither the build nor the query path ever needs a
+    10^12-row join back to doc_stats for BM25's dl term."""
+    doc_len = F.size("tokens").cast("long").alias("doc_len")
+    postings = (
+        toks.select("doc_id", doc_len, F.explode("tokens").alias("term"))
+        .groupBy("term", "doc_id", "doc_len")
+        .agg(F.count(F.lit(1)).alias("tf"))
+        .select("term", "doc_id", "tf", "doc_len")
+    )
+    return postings, toks.select("doc_id", doc_len, "sha256")
+
+
+def number_docs(
+    rows: DataFrame, doc_len: Column, sha256: Column
+) -> tuple[DataFrame, int, int]:
+    """The one docno assignment: ``rows``, one per input row with its
+    ``doc_id``, -> ``(doc_stats, n_rows, total_len)``. ``doc_len`` and
+    ``sha256`` are evaluated on ``rows`` after the exchange, so a raw
+    corpus (doc_id, content) crosses it untokenized and the range
+    partitioner's sampling pass only scans it: the corpus is tokenized once
+    here.
+
+    ``doc_stats`` is (docno, doc_id, doc_len, sha256), one row per distinct
+    doc_id, where docno is the doc_id's dense rank (0..n-1) in signed
+    order, sorted by docno in partition order. Because docno order is
+    doc_id order, every doc_id-asc tie rule holds unchanged on docnos.
+
+    Plan: one range-partitioned exchange on doc_id (duplicates of a doc_id
+    land in one partition, and partition i holds smaller ids than i+1), a
+    per-partition dedupe + sort, a row number from
+    ``monotonically_increasing_id`` (partition index in the bits above 33,
+    row within the partition below), a ``localCheckpoint`` so those numbers
+    are computed once, and ONE collect of the per-partition counts, whose
+    prefix sums become each partition's docno offset — no single-partition
+    Window, no Python RDD. The same collect returns ``n_rows`` (input
+    rows, duplicates included) and ``total_len`` (Σ doc_len over input
+    rows, = Σtf of the postings), from which the caller derives
+    corpus_stats without another job."""
+    P = int(rows.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    ranged = (
+        rows.repartitionByRange(P, "doc_id")
+        .select("doc_id", doc_len.alias("doc_len"), sha256.alias("sha256"))
+        .groupBy("doc_id")
+        .agg(
+            F.min("doc_len").alias("doc_len"),
+            F.min("sha256").alias("sha256"),
+            F.count(F.lit(1)).alias("_rows"),
+            F.sum("doc_len").alias("_len"),
+        )
+        .sortWithinPartitions("doc_id")
+        .withColumn("_i", F.monotonically_increasing_id())
+        .localCheckpoint(eager=False)
+    )
+    part = F.shiftright("_i", 33)
+    counts = {
+        r["p"]: r
+        for r in ranged.groupBy(part.alias("p"))
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum("_rows").alias("rows"),
+            F.sum("_len").alias("len"),
+        )
+        .collect()
+    }
+    offsets, acc = [], 0
+    for p in range(max(counts, default=0) + 1):
+        offsets.append(acc)
+        acc += counts[p]["n"] if p in counts else 0
+    docno = F.element_at(
+        F.array(*[F.lit(o).cast("long") for o in offsets]), (part + 1).cast("int")
+    ) + F.col("_i").bitwiseAND(F.lit((1 << 33) - 1))
+    doc_stats = ranged.select(docno.alias("docno"), "doc_id", "doc_len", "sha256")
+    n_rows = sum(int(r["rows"]) for r in counts.values())
+    total_len = sum(int(r["len"]) for r in counts.values())
+    return doc_stats, n_rows, total_len
+
+
+def number_index(
+    postings: DataFrame,
+    numbered: tuple[DataFrame, int, int],
+    persist: bool = True,
+) -> InvertedIndex:
+    """Postings (term, doc_id, tf, doc_len) and their corpus'
+    :func:`number_docs` result -> the index: the docnos attached to the
+    postings by a broadcast join on doc_id (the doc-level side is ~1/|doc|
+    of the postings rows; at extreme corpus sizes drop the hint and let AQE
+    choose), corpus_stats as a driver-built local relation from the
+    numbering's collect, term_stats from postings.
+
+    n_docs is the input row count and avgdl = Σdoc_len / n_docs in double
+    arithmetic (0.0 for an empty corpus): the same values, bit for bit, as
+    a count over the raw rows and Σtf over the postings."""
+    from goldenretriever_spark.session import local_frame
+
+    doc_stats, n_docs, total_len = numbered
+    postings = postings.join(
+        F.broadcast(doc_stats.select("doc_id", "docno")), "doc_id"
+    ).select("term", "doc_id", "tf", "doc_len", "docno")
+    if persist:
+        postings = postings.persist(StorageLevel.MEMORY_AND_DISK)
+    corpus_stats = local_frame(
+        doc_stats.sparkSession,
+        {"n_docs": [n_docs], "avgdl": [total_len / n_docs if n_docs else 0.0]},
+        "n_docs long, avgdl double",
+    )
+    term_stats = postings.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
+    return InvertedIndex(
+        postings=postings, doc_stats=doc_stats, corpus_stats=corpus_stats, term_stats=term_stats
+    )
+
+
 def build_index(
     documents: DataFrame,
     tokenizer: str = "simple",
@@ -142,66 +267,27 @@ def build_index(
 ) -> InvertedIndex:
     """Build the uncompressed logical index from an input_hint corpus.
 
-    Single-cache design: only POSTINGS are persisted; every build-path stat
-    derives from them —
-      * term_stats: groupBy(term) over cached postings
-      * total token count: Σ doc_len = Σ_postings tf (exact long arithmetic)
-      * n_docs: count over the raw scan (parquet row-count metadata, ~free)
-      * avgdl = total/n_docs — exact incl. zero-token docs (they add 0 to the
-        numerator and 1 to the denominator)
-    The earlier design also cached the tokenized frame (doc_id, sha256,
-    tokens) — at 1.9M docs that is a multi-GB columnar cache written once and
+    Runs the docno numbering eagerly (:func:`number_docs`: one range
+    exchange over the doc-level rows, checkpointed, one collect); the rest
+    stays lazy. Only POSTINGS are persisted. The tokenized frame is never
+    cached: at 1.9M docs that is a multi-GB columnar cache written once and
     read twice, pure memory-bandwidth cost that destroyed N->4N scaling on
-    bandwidth-limited hosts and bought nothing the postings don't already
-    carry (doc_len rides in the groupBy key, so no 10^12-row doc_stats join
-    exists anywhere in the build or query path).
-
-    doc_stats (doc_id, doc_len, sha256) stays LAZY: consumers that actually
-    want per-doc rows (sha256 invariant checks, the stored-index doc_stats
-    table) re-run scan+tokenize once — trading a cheap CPU pass that scales
-    with cores for a cache that burns shared bandwidth.
+    bandwidth-limited hosts. The numbering and the postings each tokenize
+    the corpus once; doc_stats is the numbering's checkpoint, so writing it
+    re-tokenizes nothing, and corpus_stats comes from the numbering's
+    collect, so it runs no job of its own.
     """
-    from pyspark import StorageLevel
-
-    toks = tokenized(
-        documents, tokenizer, resolve_collisions=resolve_collisions
-    ).select("doc_id", "sha256", "tokens")
-
-    # doc_len rides along in the groupBy key (same cardinality as
-    # (term,doc_id)) so neither the build nor the query path ever needs a
-    # 10^12-row join back to doc_stats for BM25's dl term.
-    postings = (
-        toks.select(
-            "doc_id",
-            F.size("tokens").cast("long").alias("doc_len"),
-            F.explode("tokens").alias("term"),
-        )
-        .groupBy("term", "doc_id", "doc_len")
-        .agg(F.count(F.lit(1)).alias("tf"))
-        .select("term", "doc_id", "tf", "doc_len")
+    docs = with_doc_ids(documents, resolve_collisions=resolve_collisions)
+    postings, _ = staging_tables(
+        docs.select("doc_id", "sha256", tokens_column(F.col("content"), tokenizer).alias("tokens"))
     )
-    if persist:
-        postings = postings.persist(StorageLevel.MEMORY_AND_DISK)
-
-    doc_stats = toks.select(
-        "doc_id",
-        F.size("tokens").cast("long").alias("doc_len"),
-        "sha256",
+    content = F.col("content")
+    numbered = number_docs(
+        docs.select("doc_id", "content"),
+        F.size(tokens_column(content, tokenizer)).cast("long"),
+        F.sha2(content, 256),
     )
-
-    n_docs_df = documents.select(F.count(F.lit(1)).alias("n_docs"))
-    totals = postings.agg(F.coalesce(F.sum("tf"), F.lit(0)).alias("total_len"))
-    corpus_stats = n_docs_df.crossJoin(totals).select(
-        "n_docs",
-        # an empty corpus has avgdl 0.0 (ANSI mode raises on the 0/0)
-        F.when(F.col("n_docs") == 0, F.lit(0.0))
-        .otherwise(F.col("total_len").cast("double") / F.col("n_docs"))
-        .alias("avgdl"),
-    )
-
-    term_stats = postings.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-
-    return InvertedIndex(postings=postings, doc_stats=doc_stats, corpus_stats=corpus_stats, term_stats=term_stats)
+    return number_index(postings, numbered, persist)
 
 
 def check_doc_id_collisions(documents: DataFrame) -> int:

@@ -2,7 +2,7 @@
 
 Replaces the reference's pickle-an-Annoy-index persistence
 (/root/reference/src/prebuilt_index.py:44-72) with a compressed columnar
-posting format: sorted int64 doc_id runs are delta-gapped then varint-packed
+posting format: sorted int64 docno runs are delta-gapped then varint-packed
 into a BinaryType column; term frequencies are varint-packed directly.
 
 All encode/decode work is whole-array numpy (no per-value Python loops):
@@ -16,9 +16,13 @@ blob column as a pandas Series and return flat numpy arrays. The per-block
 functions stay as the reference the grouped ones are tested against.
 
 Signed-int64 handling: doc_ids sort in *signed* order everywhere (the engine's
-tie-break discipline). Deltas of ascending signed int64 can exceed int64 range
-but are exact modulo 2^64, so diffs are viewed as uint64 and decode rebuilds
-via wrapping cumsum — bit-exact roundtrip for any sorted signed input.
+tie-break discipline). A format-v2 index stores docnos, each doc_id's dense
+rank in that order (0..n-1), so its block runs are small non-negative ints
+whose gaps take 1-2 varint bytes. The codec stays general: deltas of any
+ascending signed int64 run can exceed int64 range but are exact modulo 2^64,
+so diffs are viewed as uint64 and decode rebuilds via wrapping cumsum —
+bit-exact roundtrip for any sorted signed input, which the streaming store's
+hash-id segments still rely on.
 """
 
 from __future__ import annotations

@@ -1,4 +1,4 @@
-"""Persisted positional postings: compressed (term, doc_id, positions) blocks.
+"""Persisted positional postings: compressed (term, docno, positions) blocks.
 
 Phrase and proximity search (query/phrase.py) consume ``(term, doc_id, pos)``
 rows. Serving them by re-tokenizing the corpus per query is a full scan — the
@@ -19,13 +19,15 @@ columnar Spark table.
 
 Block schema::
 
-    positional_blocks(term, salt, block_id, n, doc_id_min, doc_id_max,
-                      doc_ids_delta_varint, pos_counts_varint,
+    positional_blocks(term, salt, block_id, n, docno_min, docno_max,
+                      docnos_delta_varint, pos_counts_varint,
                       positions_delta_varint, term_bucket)
 
 - one block covers up to ``block_docs`` consecutive docs of one (term, salt)
-  group, doc_ids ascending (signed order, the engine-wide tie discipline)
-- ``doc_ids_delta_varint``: the block's doc ids, delta-gap + varint
+  group, docnos ascending (docno order is signed doc_id order, the
+  engine-wide tie discipline)
+- ``docnos_delta_varint``: the block's docnos (index format v2, the same
+  numbering as posting_blocks: build.number_docs), delta-gap + varint
 - ``pos_counts_varint``: positions-per-doc counts (== tf), varint
 - ``positions_delta_varint``: all the block's token positions concatenated
   doc-major, delta-encoded WITH A RESET at each doc boundary, varint
@@ -57,8 +59,8 @@ from goldenretriever_spark.index.codec import (
 
 POS_BLOCKS_SCHEMA = (
     "term string, salt int, block_id long, n int, "
-    "doc_id_min long, doc_id_max long, "
-    "doc_ids_delta_varint binary, pos_counts_varint binary, "
+    "docno_min long, docno_max long, "
+    "docnos_delta_varint binary, pos_counts_varint binary, "
     "positions_delta_varint binary"
 )
 
@@ -84,7 +86,8 @@ def pack_positions(
     n_term_buckets: int = 64,
     block_docs: int = BLOCK_SIZE,
 ) -> DataFrame:
-    """(term, doc_id, pos) rows -> compressed positional blocks.
+    """(term, doc_id, docno, pos) rows -> compressed positional blocks
+    keyed by docno (doc_id only feeds the salt).
 
     The salt is sized by collection frequency cf = Σtf per term (a
     positional group's row count). ``postings``: pass the (usually cached)
@@ -92,7 +95,7 @@ def pack_positions(
     without them every row counts once. The cf groupBy partially
     aggregates map-side, so its shuffle is vocab-sized.
 
-    The worker collapses the (term, salt, doc_id, pos)-sorted token rows
+    The worker collapses the (term, salt, docno, pos)-sorted token rows
     into doc runs, which the shared block split (blocks.split_blocks) cuts
     into blocks, and adds the positions payload — whole-array numpy, no
     per-block or per-doc Python loops.
@@ -115,18 +118,18 @@ def pack_positions(
     salted = rows.join(F.broadcast(hot_cf), "term", "left").select(
         "term",
         salt_col(F.col("cf"), target_positions_per_group).alias("salt"),
-        "doc_id",
+        "docno",
         "pos",
     )
 
     def pack(pdf: pd.DataFrame) -> pd.DataFrame:
         terms = pdf["term"].to_numpy()
         salts = pdf["salt"].to_numpy(dtype=np.int64)
-        ids = pdf["doc_id"].to_numpy(dtype=np.int64)
+        ids = pdf["docno"].to_numpy(dtype=np.int64)
         n_rows = len(pdf)
 
         # collapse token rows into doc runs: a run starts wherever
-        # (term, salt, doc_id) changes
+        # (term, salt, docno) changes
         doc_change = np.empty(n_rows, dtype=bool)
         doc_change[0] = True
         doc_change[1:] = (
@@ -162,7 +165,7 @@ def pack_positions(
         )
 
     return pack_exchange(
-        salted, ["doc_id", "pos"], pack, POS_BLOCKS_SCHEMA, n_term_buckets
+        salted, ["docno", "pos"], pack, POS_BLOCKS_SCHEMA, n_term_buckets
     )
 
 
@@ -174,10 +177,21 @@ def pack_positional_blocks(
     n_term_buckets: int = 64,
     block_docs: int = BLOCK_SIZE,
 ) -> DataFrame:
-    """Convenience: corpus -> compressed positional blocks in one plan
-    (``postings``: see :func:`pack_positions`)."""
+    """Convenience: corpus -> compressed positional blocks in one plan.
+
+    ``postings``: the index's postings (build.build_index over the same
+    ``documents``). They carry each doc's docno, which a broadcast of their
+    doc-level (doc_id, docno) pairs attaches to the token rows, and their
+    tf sums the salt's cf (see :func:`pack_positions`). Without them the
+    postings are built here, numbering the corpus once more: docno is a
+    function of the corpus, so both numberings agree."""
+    if postings is None:
+        from goldenretriever_spark.index.build import build_index
+
+        postings = build_index(documents, tokenizer, persist=False).postings
+    docnos = postings.select("doc_id", "docno").distinct()
     return pack_positions(
-        positional_rows(documents, tokenizer),
+        positional_rows(documents, tokenizer).join(F.broadcast(docnos), "doc_id"),
         postings,
         target_positions_per_group=target_positions_per_group,
         n_term_buckets=n_term_buckets,
@@ -187,7 +201,7 @@ def pack_positional_blocks(
 
 DECODE_COLS = [
     "term",
-    "doc_ids_delta_varint",
+    "docnos_delta_varint",
     "pos_counts_varint",
     "positions_delta_varint",
 ]
@@ -195,7 +209,7 @@ DECODE_COLS = [
 
 def _decode(pdf: pd.DataFrame) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     return decode_position_blocks(
-        pdf["doc_ids_delta_varint"],
+        pdf["docnos_delta_varint"],
         pdf["pos_counts_varint"],
         pdf["positions_delta_varint"],
     )
@@ -203,7 +217,8 @@ def _decode(pdf: pd.DataFrame) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
 
 def decode_positions(blocks: DataFrame) -> DataFrame:
     """positional blocks -> (term, doc_id, pos) rows via one vectorized
-    mapInPandas decode (codec.decode_position_blocks)."""
+    mapInPandas decode (codec.decode_position_blocks); ``doc_id`` carries
+    the blocks' doc keys (docnos in a v2 index)."""
 
     def unpack(batches):
         for pdf in batches:

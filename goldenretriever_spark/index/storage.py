@@ -13,10 +13,22 @@ Layout (designed for 10^12-file scale):
   query's terms (:func:`prune_blocks_for_terms`, the one bucket filter of
   the read path); read with their packers' schemas, never inferred; the
   per-bucket file count is what checkpointing tracks.
-- doc_stats/       repartitioned by doc_id so the query-time doc_len join is
-  co-partitioned (bucketed-table join on a real warehouse).
+- doc_stats/       (docno, doc_id, doc_len, sha256), written sorted by docno
+  straight from the build's numbering (build.number_docs), so a docno
+  filter prunes row groups by their min/max. It is the one docno -> doc_id
+  lookup (:func:`to_doc_ids`); BM25 never joins it, since doc_len rides in
+  the blocks.
 - corpus_stats/    single row.
 - term_stats/      partitioned by term_bucket like posting_blocks.
+- _meta/           n_term_buckets and the ``format_version`` token.
+
+Format version 2 (:data:`FORMAT_VERSION`): both block tables name documents
+by docno, the dense rank of the doc_id in signed order, instead of the
+64-bit hash doc_id. Docno order is doc_id order, so ranking, WAND, the
+boolean algebra and the phrase votes run unchanged on docnos (the block
+operators' ``doc_id`` output column carries them) and only result rows are
+mapped back. :class:`StoredIndex` reads ``_meta`` in-process when it opens
+an index and refuses any other version with one ``ValueError``.
 
 The same bucket-pruned reads also run in-process (:func:`open_table`,
 :func:`read_terms`): a ``pyarrow.dataset`` scan with the table's schema,
@@ -36,9 +48,6 @@ from pyspark.sql.types import StructType
 
 from goldenretriever_spark.index.build import InvertedIndex
 from goldenretriever_spark.session import local_frame
-
-_UNSET = object()  # n_term_buckets memo sentinel (None is a valid value)
-
 
 def bucket_col(n_buckets: int):
     """The stored layout's partition key, ``pmod(xxhash64(term), B)``: the
@@ -107,9 +116,46 @@ def read_terms(
     return table.to_table(columns=columns, filter=cond)
 
 
+def to_doc_ids(rows, doc_stats):
+    """The one docno -> doc_id lookup: result ``rows`` whose ``doc_id``
+    column holds docnos (every block operator's output on a v2 index) ->
+    the same rows, same column order, carrying the hash doc_ids.
+
+    Two hosts, one contract: a Spark ``DataFrame`` is joined with the
+    ``doc_stats`` frame on docno (the Spark routes and the driver queries);
+    a ``pyarrow.Table`` (the local route) is looked up in the in-process
+    ``doc_stats`` dataset with the docno filter pushed down, so only the row
+    groups holding the result's docnos are read: zero Spark jobs and no
+    O(n_docs) array in the driver. Every docno of a v2 index is in its
+    doc_stats, so no row is lost."""
+    if isinstance(rows, DataFrame):
+        return (
+            rows.withColumnRenamed("doc_id", "docno")
+            .join(doc_stats.select("docno", "doc_id"), "docno")
+            .select(*rows.columns)
+        )
+    docnos = pa.array(sorted(set(rows["doc_id"].to_pylist())), pa.int64())
+    lookup = doc_stats.to_table(
+        columns=["docno", "doc_id"], filter=ds.field("docno").isin(docnos)
+    )
+    return (
+        rows.rename_columns(["docno" if c == "doc_id" else c for c in rows.column_names])
+        .append_column("_i", pa.array(range(rows.num_rows), pa.int64()))
+        .join(lookup, keys="docno")
+        .sort_by("_i")
+        .select(rows.column_names)
+    )
+
+
 TERM_STATS_SCHEMA = "term string, df long"
 
-META_SCHEMA = "n_term_buckets int"
+DOC_STATS_SCHEMA = "docno long, doc_id long, doc_len long, sha256 string"
+
+# On-disk format token written to _meta and required on open: 2 = block
+# tables keyed by docno (1, never written as a token, keyed them by doc_id).
+FORMAT_VERSION = 2
+
+META_SCHEMA = "n_term_buckets int, format_version int"
 
 # Calls whose estimated decode volume (Σdf over each query's terms, summed
 # over the batch; for search_filtered plus the filter terms' Σdf; for phrase
@@ -136,7 +182,7 @@ META_SCHEMA = "n_term_buckets int"
 LOCAL_CROSSOVER_DECODE_ROWS = 690_000
 
 _RANKED_SCHEMA = "query_id long, doc_id long, score double, rank int"
-_SCORE_COLS = ["term", "df", "doc_ids_delta_varint", "tfs_varint", "dls_varint"]
+_SCORE_COLS = ["term", "df", "docnos_delta_varint", "tfs_varint", "dls_varint"]
 
 
 def write_meta(spark: SparkSession, path: str, n_term_buckets: int) -> None:
@@ -147,7 +193,11 @@ def write_meta(spark: SparkSession, path: str, n_term_buckets: int) -> None:
     silently drops the wrong buckets — so B is stored with the index, never
     trusted as a default.
     """
-    meta = local_frame(spark, {"n_term_buckets": [n_term_buckets]}, META_SCHEMA)
+    meta = local_frame(
+        spark,
+        {"n_term_buckets": [n_term_buckets], "format_version": [FORMAT_VERSION]},
+        META_SCHEMA,
+    )
     meta.coalesce(1).write.mode("overwrite").parquet(os.path.join(path, "_meta"))
 
 
@@ -176,9 +226,9 @@ def write_index(
             .partitionBy("term_bucket")
             .parquet(os.path.join(path, "positional_blocks"))
         )
-    index.doc_stats.repartition(F.col("doc_id")).write.mode(mode).parquet(
-        os.path.join(path, "doc_stats")
-    )
+    # already sorted by docno, partition i below partition i+1: written as
+    # is, so the files and their row groups are docno ranges
+    index.doc_stats.write.mode(mode).parquet(os.path.join(path, "doc_stats"))
     index.corpus_stats.write.mode(mode).parquet(os.path.join(path, "corpus_stats"))
     (
         index.term_stats.withColumn("term_bucket", bucket_col(n_term_buckets))
@@ -190,19 +240,20 @@ def write_index(
 
 
 class StoredIndex:
-    """Handle to a persisted index directory."""
+    """Handle to a persisted index directory of format
+    :data:`FORMAT_VERSION`; opening any other raises ``ValueError``."""
 
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
         self.path = path
         # an opened index is immutable (republication writes a new path /
         # Iceberg snapshot), so per-handle memoization of the tiny metadata
-        # is safe — without it every search() pays 2 extra driver jobs
-        # (_meta read + corpus_stats collect), a measurable slice of
+        # is safe — without it every search() pays extra driver jobs
+        # (corpus_stats collect, schema inference), a measurable slice of
         # single-query serve latency (BENCH/SERVE_LATENCY.json)
-        self._n_term_buckets: int | None | object = _UNSET
         self._stats: tuple[int, float] | None = None
         self._corpus_stats: DataFrame | None = None
+        self._doc_stats: DataFrame | None = None
         self._posting_blocks: DataFrame | None = None
         self._positional_blocks: DataFrame | None = None
         # per-handle term -> df memo, filled by an in-process term_stats read
@@ -213,6 +264,32 @@ class StoredIndex:
         # the filesystem resolved once by _filesystem
         self._tables: dict[str, ds.Dataset] = {}
         self._fs: tuple[pafs.FileSystem, str] | None = None
+        self._n_term_buckets = self._read_meta()
+
+    def _read_meta(self) -> int:
+        """Check the ``_meta`` format token and return the build-time bucket
+        count: one in-process pyarrow read per handle, zero Spark jobs. An
+        index without a readable v2 token (every index written before the
+        token existed, a missing or corrupt ``_meta``) raises one
+        ``ValueError`` naming the format version, before any route runs: its
+        blocks would decode to ids this reader cannot map back."""
+        fs, root = self._filesystem()
+        try:
+            meta = ds.dataset(f"{root}/_meta", filesystem=fs, format="parquet").to_table()
+        except (OSError, pa.ArrowException) as e:
+            raise ValueError(
+                f"index {self.path} has no readable _meta ({e}), so no index "
+                f"format version; this reader needs format version {FORMAT_VERSION}"
+            ) from e
+        row = meta.to_pylist()[0] if meta.num_rows else {}
+        version = row.get("format_version")
+        if version != FORMAT_VERSION:
+            raise ValueError(
+                f"index {self.path} is index format version {version or 1}; this "
+                f"reader needs format version {FORMAT_VERSION}: rebuild it with "
+                "this version's write_index"
+            )
+        return int(row["n_term_buckets"])
 
     @property
     def posting_blocks(self) -> DataFrame:
@@ -344,7 +421,40 @@ class StoredIndex:
 
     @property
     def doc_stats(self) -> DataFrame:
-        return self.spark.read.parquet(os.path.join(self.path, "doc_stats"))
+        """(docno, doc_id, doc_len, sha256), read with its schema and
+        memoized like posting_blocks: the Spark routes join it once per
+        call (:func:`to_doc_ids`)."""
+        if self._doc_stats is None:
+            self._doc_stats = self.spark.read.schema(DOC_STATS_SCHEMA).parquet(
+                os.path.join(self.path, "doc_stats")
+            )
+        return self._doc_stats
+
+    def _doc_ids(self, rows):
+        """Result rows (docnos) -> hash doc_ids with :func:`to_doc_ids`: a
+        DataFrame against :attr:`doc_stats`, an Arrow table against the
+        in-process doc_stats dataset (opened once per handle)."""
+        if isinstance(rows, DataFrame):
+            return to_doc_ids(rows, self.doc_stats)
+        if "doc_stats" not in self._tables:
+            from pyspark.sql.pandas.types import to_arrow_schema
+
+            fs, root = self._filesystem()
+            self._tables["doc_stats"] = ds.dataset(
+                f"{root}/doc_stats",
+                filesystem=fs,
+                schema=to_arrow_schema(StructType.fromDDL(DOC_STATS_SCHEMA)),
+                format="parquet",
+            )
+        return to_doc_ids(rows, self._tables["doc_stats"])
+
+    def _collected(self, ranked: DataFrame, schema: str) -> DataFrame:
+        """A Spark route's top-k rows — O(k x queries) — collected once and
+        mapped to doc_ids in-process (:meth:`_doc_ids`), returned as a local
+        relation: the lookup adds no job to the ranking's own, where a join
+        with doc_stats would add its broadcast. Unbounded results (boolean,
+        phrase, proximity matches) stay lazy and join doc_stats instead."""
+        return local_frame(self.spark, self._doc_ids(ranked.toArrow()), schema)
 
     @property
     def corpus_stats(self) -> DataFrame:
@@ -361,19 +471,10 @@ class StoredIndex:
         return self.spark.read.parquet(os.path.join(self.path, "term_stats"))
 
     @property
-    def n_term_buckets(self) -> int | None:
-        """Build-time bucket count from _meta; None for pre-meta indexes
-        (query paths then skip partition pruning rather than guess).
-        Memoized per handle (see __init__)."""
-        if self._n_term_buckets is not _UNSET:
-            return self._n_term_buckets
-        try:
-            rows = self.spark.read.parquet(os.path.join(self.path, "_meta")).collect()
-            val = int(rows[0]["n_term_buckets"]) if rows else None
-        except Exception:
-            val = None
-        self._n_term_buckets = val
-        return val
+    def n_term_buckets(self) -> int:
+        """Build-time bucket count, read from _meta when the handle opened
+        the index (:meth:`_read_meta`)."""
+        return self._n_term_buckets
 
     @property
     def stats(self) -> tuple[int, float]:
@@ -400,15 +501,18 @@ class StoredIndex:
           per-handle df memo, which an in-process term_stats read fills) is
           below ``LOCAL_CROSSOVER_DECODE_ROWS``. The blocks are read
           in-process (:func:`read_terms`) and decoded, scored and cut in the
-          driver by the Spark workers' own functions (wand.local_top_k):
-          zero Spark jobs, a local-relation result.
+          driver by the Spark workers' own functions (wand.local_top_k),
+          and the k docnos are looked up in doc_stats in-process
+          (:func:`to_doc_ids`): zero Spark jobs, a local-relation result.
         - ``brute_stored`` / ``wand``: above it, wand.dispatch_top_k's
           measured dispatch with the persisted term-bucket count for
           partition pruning. The memo is passed in, so its df probe runs no
           job. The WHOLE batch is routed by the share of estimated decode
           volume in heavy queries (wand.WAND_HEAVY_SHARE_MIN); per-query
           batch splitting measured slower and was removed
-          (BENCH/WAND_MIXED.json).
+          (BENCH/WAND_MIXED.json). The k ranked rows per query are then
+          collected and their docnos looked up in-process like the local
+          route's (:meth:`_collected`), so the mapping adds no job.
 
         ``documents``: optional (doc_id, ...) table; when given, the ranked
         ids are joined back so results carry materialized content (the
@@ -435,7 +539,7 @@ class StoredIndex:
         est = self._est_rows([ts for _, ts in qtoks])
         if est < LOCAL_CROSSOVER_DECODE_ROWS:
             plan = {"path": "local", "est_rows": est}
-            ranked = self._local_ranked(qtoks, k)
+            ranked = self._doc_ids(self._local_ranked(qtoks, k))
             if documents is not None:
                 ranked = self._with_content(ranked, documents)
             else:
@@ -453,6 +557,7 @@ class StoredIndex:
             stats=self.stats,
             term_df_cache=self._term_df,
         )
+        ranked = self._collected(ranked, _RANKED_SCHEMA)
         plan["est_rows"] = est
         if documents is not None:
             # right-outer FROM documents keeps every ranked row. Spark builds
@@ -552,14 +657,15 @@ class StoredIndex:
         check_phrases([(0, phrase)])
         if self._est_rows([phrase]) < LOCAL_CROSSOVER_DECODE_ROWS:
             blocks = self._rows("positional_blocks", POS_BLOCKS_SCHEMA, phrase, DECODE_COLS)
-            found = phrase_match_local(blocks, [(0, phrase)])
+            found = phrase_match_local(blocks, [(0, phrase)])[["doc_id", "occurrences"]]
+            found = pa.Table.from_pandas(found, preserve_index=False)
             return local_frame(
-                self.spark,
-                {"doc_id": found["doc_id"], "occurrences": found["occurrences"]},
-                "doc_id long, occurrences long",
+                self.spark, self._doc_ids(found), "doc_id long, occurrences long"
             )
-        return phrase_match_stored(
-            self.positional_blocks, phrase, n_term_buckets=self.n_term_buckets
+        return self._doc_ids(
+            phrase_match_stored(
+                self.positional_blocks, phrase, n_term_buckets=self.n_term_buckets
+            )
         )
 
     def boolean(
@@ -574,13 +680,15 @@ class StoredIndex:
         doc-id-only decode (query/boolean.boolean_match_stored)."""
         from goldenretriever_spark.query.boolean import boolean_match_stored
 
-        return boolean_match_stored(
-            self.posting_blocks,
-            must=must,
-            should=should,
-            must_not=must_not,
-            min_should_match=min_should_match,
-            n_term_buckets=self.n_term_buckets,
+        return self._doc_ids(
+            boolean_match_stored(
+                self.posting_blocks,
+                must=must,
+                should=should,
+                must_not=must_not,
+                min_should_match=min_should_match,
+                n_term_buckets=self.n_term_buckets,
+            )
         )
 
     def search_filtered(
@@ -617,14 +725,14 @@ class StoredIndex:
         if est < LOCAL_CROSSOVER_DECODE_ROWS:
             term_docs = self._rows(
                 "posting_blocks", BLOCKS_SCHEMA, clause_terms,
-                ["term", "doc_ids_delta_varint"],
+                ["term", "docnos_delta_varint"],
             )
             allowed = boolean_match_local(
                 term_docs, must, should, must_not, min_should_match
             )
             ranked = self._local_ranked(qtoks, k, allowed, quantize=True)
-            return local_frame(self.spark, ranked, _RANKED_SCHEMA)
-        return filtered_top_k(
+            return local_frame(self.spark, self._doc_ids(ranked), _RANKED_SCHEMA)
+        ranked = filtered_top_k(
             self.spark,
             self.posting_blocks,
             self.corpus_stats,
@@ -638,6 +746,7 @@ class StoredIndex:
             n_term_buckets=self.n_term_buckets,
             stats=self.stats,
         )
+        return self._collected(ranked, _RANKED_SCHEMA)
 
     def phrase_ranked(
         self,
@@ -652,7 +761,7 @@ class StoredIndex:
         (query/phrase.phrase_ranked_topk_stored)."""
         from goldenretriever_spark.query.phrase import phrase_ranked_topk_stored
 
-        return phrase_ranked_topk_stored(
+        ranked = phrase_ranked_topk_stored(
             self.spark,
             self.posting_blocks,
             self.corpus_stats,
@@ -663,17 +772,20 @@ class StoredIndex:
             n_term_buckets=self.n_term_buckets,
             stats=self.stats,
         )
+        return self._collected(ranked, "query_id long, doc_id long, score_q long, rank int")
 
     def proximity(self, terms: list[str], window: int) -> DataFrame:
         """Order-free proximity search from the persisted positional blocks
         (query/phrase.proximity_match_stored)."""
         from goldenretriever_spark.query.phrase import proximity_match_stored
 
-        return proximity_match_stored(
-            self.positional_blocks,
-            terms,
-            window,
-            n_term_buckets=self.n_term_buckets,
+        return self._doc_ids(
+            proximity_match_stored(
+                self.positional_blocks,
+                terms,
+                window,
+                n_term_buckets=self.n_term_buckets,
+            )
         )
 
 

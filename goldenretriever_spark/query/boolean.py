@@ -16,7 +16,9 @@ unread — and the set algebra is three map-side-combinable aggregations:
 
 At 100 TB each leg's cost is the posting volume of ITS terms only; no
 corpus scan, no full-index pass, no Python beyond the Arrow-batched varint
-decode shared with every other stored reader.
+decode shared with every other stored reader. The ``doc_id`` decoded from
+format-v2 blocks is a docno; callers map results back with
+storage.to_doc_ids.
 """
 
 from __future__ import annotations
@@ -46,7 +48,7 @@ def _term_docs(
         raise ValueError("terms must be non-empty")
     pruned = prune_blocks_for_terms(
         posting_blocks, sorted(set(terms)), n_term_buckets
-    ).select("term", "doc_ids_delta_varint")
+    ).select("term", "docnos_delta_varint")
 
     def unpack(batches):
         for pdf in batches:
@@ -58,10 +60,10 @@ def _term_docs(
 
 
 def term_doc_rows(pdf: pd.DataFrame) -> pd.DataFrame:
-    """One batch of (term, doc_ids_delta_varint) block rows -> its (term,
+    """One batch of (term, docnos_delta_varint) block rows -> its (term,
     doc_id) postings: the body of both hosts, :func:`_term_docs`' workers
     and the in-process :func:`boolean_match_local`."""
-    ids, counts = decode_doc_ids(pdf["doc_ids_delta_varint"])
+    ids, counts = decode_doc_ids(pdf["docnos_delta_varint"])
     return pd.DataFrame(
         {"term": np.repeat(pdf["term"].to_numpy(), counts), "doc_id": ids}
     )
@@ -149,7 +151,7 @@ def boolean_match_local(
     min_should_match: int | None = None,
 ) -> np.ndarray:
     """In-process twin of :func:`boolean_match_stored`'s algebra, same
-    semantics and errors: ``blocks`` are the (term, doc_ids_delta_varint)
+    semantics and errors: ``blocks`` are the (term, docnos_delta_varint)
     block rows of the clause terms, decoded by :func:`term_doc_rows`.
     Returns the qualifying doc ids, sorted int64."""
     must, should, must_not, min_should_match = boolean_clauses(

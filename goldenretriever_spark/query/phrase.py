@@ -35,7 +35,9 @@ tests/test_phrase.py and tests/test_positions.py):
    the cross-check and for one-off queries where no index exists.
 
 Both count OVERLAPPING occurrences (token-level: "a a a a" contains "a a"
-three times), matching the DuckDB oracle's exact sliding-window count.
+three times), matching the DuckDB oracle's exact sliding-window count. The
+stored path's ``doc_id`` is the blocks' docno (index format v2); callers map
+results back with storage.to_doc_ids.
 """
 
 from __future__ import annotations
@@ -304,7 +306,8 @@ def phrase_ranked_topk(
     Plan shape: the BM25 leg is the stock score_candidates plan (broadcast
     query terms, one map-side-combinable shuffle); the phrase leg is ONE
     batched vote over the union of the batch's positional buckets
-    (:func:`phrase_match_stored_batch` — P phrases never pay P scans); the
+    (:func:`phrase_match_stored_batch` — P phrases never pay P scans),
+    whose docnos ``index.doc_stats`` maps to doc_ids; the
     two meet in a LEFT join keyed (query_id, doc_id) — every
     phrase-matching doc contains the phrase's terms, so the left side
     (scored) already covers all matches and no candidate is lost.
@@ -313,6 +316,7 @@ def phrase_ranked_topk(
     quantized x10000 with the engine-wide (score desc, doc_id asc) tie
     discipline.
     """
+    from goldenretriever_spark.index.storage import to_doc_ids
     from goldenretriever_spark.query import bm25
 
     if not phrases:
@@ -322,8 +326,10 @@ def phrase_ranked_topk(
         spark, [(qid, " ".join(ph)) for qid, ph in phrases], tokenizer="simple"
     )
     scored = bm25.score_candidates(index, terms)
-    occ = phrase_match_stored_batch(
-        positional_blocks, phrases, n_term_buckets=n_term_buckets
+    # the in-memory postings score hash doc_ids, the blocks vote on docnos
+    occ = to_doc_ids(
+        phrase_match_stored_batch(positional_blocks, phrases, n_term_buckets=n_term_buckets),
+        index.doc_stats,
     )
     return _phrase_boost_rank(scored, occ, k, boost)
 

@@ -23,6 +23,9 @@ is tiny), decode is a vectorized mapInPandas over the surviving block rows,
 and the storage layout (partitionBy term_bucket) turns the initial block
 lookup into a partition-pruned parquet scan (storage.prune_blocks_for_terms).
 Every entry point resolves its list batch once (:func:`_resolve_batch`).
+On a format-v2 index the blocks hold docnos, so the ``doc_id`` these
+operators emit is a docno (same order, same ties); callers map result rows
+back with storage.to_doc_ids.
 """
 
 from __future__ import annotations
@@ -49,7 +52,7 @@ WAND_SEED_FACTOR = 4
 def scored_postings(
     pdf: pd.DataFrame, avgdl: float, allowed: np.ndarray | None = None
 ) -> pd.DataFrame | None:
-    """One batch of (query_id, idf, doc_ids_delta_varint, tfs_varint,
+    """One batch of (query_id, idf, docnos_delta_varint, tfs_varint,
     dls_varint) block rows -> (query_id, doc_id, c), the per-posting BM25
     contributions, or None when nothing survives. The body of both hosts:
     :func:`_decode_scored`'s workers and the in-process
@@ -60,7 +63,7 @@ def scored_postings(
     per-block call overhead dominated. ``allowed``: optional SORTED int64
     array of allowed doc ids; postings outside it are dropped before
     scoring (see :func:`_decode_scored`)."""
-    ids, counts = decode_doc_ids(pdf["doc_ids_delta_varint"])
+    ids, counts = decode_doc_ids(pdf["docnos_delta_varint"])
     if ids.size == 0:
         return None
     tfs = decode_varints(pdf["tfs_varint"])
@@ -115,7 +118,7 @@ def _decode_scored(
             if out is not None:
                 yield out
 
-    cols = ["query_id", "idf", "doc_ids_delta_varint", "tfs_varint", "dls_varint"]
+    cols = ["query_id", "idf", "docnos_delta_varint", "tfs_varint", "dls_varint"]
     decoded = matched.select(*cols).mapInPandas(
         unpack, schema="query_id long, doc_id long, c double"
     )
@@ -527,7 +530,7 @@ def _wand(
     # makes this scan read only the small columns; blob columns are fetched
     # later by a join-back restricted to the blocks that actually decode.
     meta_cols = ["term", "block_id", "n", "df", "block_max_tf_norm"]
-    blob_cols = ["term", "block_id", "doc_ids_delta_varint", "tfs_varint", "dls_varint"]
+    blob_cols = ["term", "block_id", "docnos_delta_varint", "tfs_varint", "dls_varint"]
     meta = (
         batch.pruned.select(*meta_cols)
         .join(F.broadcast(batch.qterms), "term")

@@ -30,8 +30,6 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from goldenretriever_spark.index.build import build_index
-
 DOCS_SCHEMA = "repo string, path string, commit string, lang string, content string"
 
 
@@ -60,11 +58,17 @@ def incremental_postings_build(
     batches hold disjoint doc_ids by the dedupe above), while periodic
     compaction (:func:`compact_streamed_index`) republishes globally-packed
     blocks with collection-frequency-sized salts. Per-batch salts use the
-    batch's own cf — locally right-sized; only compaction sees the global cf."""
+    batch's own cf — locally right-sized; only compaction sees the global cf.
+    Segments are staging data: their blocks are keyed by the hash doc_id
+    itself, since docnos exist only once compaction numbers the store."""
     stream = spark.readStream.schema(schema or DOCS_SCHEMA).parquet(input_dir)
 
     def fold_batch(batch_df: DataFrame, batch_id: int) -> None:
-        from goldenretriever_spark.index.build import with_doc_ids
+        from goldenretriever_spark.index.build import (
+            staging_tables,
+            tokenized,
+            with_doc_ids,
+        )
 
         if not batch_df.take(1):
             return
@@ -95,19 +99,23 @@ def incremental_postings_build(
             # no parquet read remains in the plan and later consumers are
             # immune to the invalidation.
             docs = docs.localCheckpoint(eager=True)
-        idx = build_index(docs, tokenizer=tokenizer, persist=False)
-        idx.postings.write.mode("append").parquet(os.path.join(out_dir, "postings"))
-        idx.doc_stats.write.mode("append").parquet(stats_path)
+        # staging data in hash-id space: docnos are assigned once, by
+        # compaction, over the whole store
+        postings, doc_rows = staging_tables(
+            tokenized(docs, tokenizer).select("doc_id", "sha256", "tokens")
+        )
+        postings.write.mode("append").parquet(os.path.join(out_dir, "postings"))
+        doc_rows.write.mode("append").parquet(stats_path)
         if positional:
-            from goldenretriever_spark.index.positions import pack_positional_blocks
+            from goldenretriever_spark.index.positions import (
+                pack_positions,
+                positional_rows,
+            )
 
+            # a segment's block keys are the hash doc_ids themselves
+            rows = positional_rows(docs, tokenizer).withColumn("docno", F.col("doc_id"))
             (
-                pack_positional_blocks(
-                    docs,
-                    tokenizer=tokenizer,
-                    postings=idx.postings,
-                    n_term_buckets=n_term_buckets,
-                )
+                pack_positions(rows, postings, n_term_buckets=n_term_buckets)
                 .write.mode("append")
                 .partitionBy("term_bucket")
                 .parquet(os.path.join(out_dir, "positional_blocks"))
@@ -123,18 +131,17 @@ def incremental_postings_build(
 
 
 def streamed_index_views(spark: SparkSession, out_dir: str):
-    """Assemble the logical index over the streamed postings store:
-    corpus/term stats recomputed as aggregates (cheap relative to postings)."""
-    from goldenretriever_spark.index.build import InvertedIndex
+    """Assemble the logical index over the streamed store: the staged
+    postings and doc rows numbered once over the whole store
+    (build.number_index — docnos, corpus/term stats; one numbering pass,
+    cheap relative to the postings)."""
+    from goldenretriever_spark.index.build import number_docs, number_index
 
-    postings = spark.read.parquet(os.path.join(out_dir, "postings"))
-    doc_stats = spark.read.parquet(os.path.join(out_dir, "doc_stats"))
-    corpus_stats = doc_stats.agg(
-        F.count(F.lit(1)).alias("n_docs"), F.avg("doc_len").alias("avgdl")
-    )
-    term_stats = postings.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    return InvertedIndex(
-        postings=postings, doc_stats=doc_stats, corpus_stats=corpus_stats, term_stats=term_stats
+    doc_rows = spark.read.parquet(os.path.join(out_dir, "doc_stats"))
+    return number_index(
+        spark.read.parquet(os.path.join(out_dir, "postings")),
+        number_docs(doc_rows, F.col("doc_len"), F.col("sha256")),
+        persist=False,
     )
 
 
@@ -181,8 +188,12 @@ def compact_streamed_index(
         )
 
         segs = spark.read.parquet(os.path.join(out_dir, "positional_blocks"))
+        # segments are keyed by hash doc_id: attach the store-wide docnos
+        docnos = F.broadcast(idx.doc_stats.select("doc_id", "docno"))
         pos_blocks = pack_positions(
-            decode_positions(segs), idx.postings, n_term_buckets=n_term_buckets
+            decode_positions(segs).join(docnos, "doc_id"),
+            idx.postings,
+            n_term_buckets=n_term_buckets,
         )
     write_index(
         idx,

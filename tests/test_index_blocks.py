@@ -24,7 +24,8 @@ def built(spark):
 def test_roundtrip_blocks_equal_postings(built, spark):
     idx, blocks = built
     decoded = decode_blocks(blocks)
-    orig = {(r["term"], r["doc_id"]): r["tf"] for r in idx.postings.collect()}
+    # the blocks hold docnos, which the decoders emit as doc_id
+    orig = {(r["term"], r["docno"]): r["tf"] for r in idx.postings.collect()}
     got = {(r["term"], r["doc_id"]): r["tf"] for r in decoded.collect()}
     assert got == orig
 
@@ -43,10 +44,10 @@ def test_hot_terms_are_salted(built):
 
 def test_salt_ranges_are_disjoint_and_ordered(built):
     _, blocks = built
-    rows = blocks.select("term", "salt", "doc_id_min", "doc_id_max").collect()
+    rows = blocks.select("term", "salt", "docno_min", "docno_max").collect()
     by_term: dict[str, list] = {}
     for r in rows:
-        by_term.setdefault(r["term"], []).append((r["salt"], r["doc_id_min"], r["doc_id_max"]))
+        by_term.setdefault(r["term"], []).append((r["salt"], r["docno_min"], r["docno_max"]))
     for term, bl in by_term.items():
         bl.sort()
         # blocks ordered by (salt, min) must have non-overlapping id ranges
@@ -71,11 +72,11 @@ def test_block_max_bound_is_tight(built, spark):
 
     idx, blocks = built
     avgdl = idx.corpus_stats.collect()[0]["avgdl"]
-    dl = {r["doc_id"]: r["doc_len"] for r in idx.doc_stats.collect()}
+    dl = {r["docno"]: r["doc_len"] for r in idx.doc_stats.collect()}
     from goldenretriever_spark.index.codec import delta_decode_sorted_ids, varint_decode
 
     for r in blocks.limit(200).collect():
-        ids = delta_decode_sorted_ids(bytes(r["doc_ids_delta_varint"]))
+        ids = delta_decode_sorted_ids(bytes(r["docnos_delta_varint"]))
         tfs = varint_decode(bytes(r["tfs_varint"]))
         norms = [
             tf / (tf + 1.2 * (1 - 0.75 + 0.75 * dl[d] / avgdl))

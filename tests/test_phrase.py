@@ -48,10 +48,28 @@ def _blocks(spark, rows: tuple):
     )
 
 
+@lru_cache(maxsize=2)
+def _doc_stats(spark, rows: tuple):
+    """The tiny rows' doc_stats: their docno -> doc_id lookup."""
+    from goldenretriever_spark.index.build import build_index
+
+    content = _docs(spark, rows).withColumnRenamed("text", "content")
+    return build_index(content, persist=False).doc_stats
+
+
+def _stored(spark, rows: tuple, match):
+    """A stored match over the rows' blocks, docnos mapped to doc_ids."""
+    from goldenretriever_spark.index.storage import to_doc_ids
+
+    return sorted(
+        map(tuple, to_doc_ids(match(_blocks(spark, rows)), _doc_stats(spark, rows)).collect())
+    )
+
+
 def _check(spark, rows, phrase):
     rows = tuple(rows)
     docs = _docs(spark, rows)
-    stored = sorted(map(tuple, phrase_match_stored(_blocks(spark, rows), phrase).collect()))
+    stored = _stored(spark, rows, lambda b: phrase_match_stored(b, phrase))
     scan = sorted(map(tuple, phrase_match_scan(docs, phrase).collect()))
     ref = sorted(
         (d, _py_occurrences(_tokens(t), phrase))
@@ -147,8 +165,7 @@ def _py_windows(tokens: list[str], terms: list[str], w: int) -> int:
 def _check_prox(spark, rows, terms, w):
     rows = tuple(rows)
     docs = _docs(spark, rows)
-    blocks = _blocks(spark, rows)
-    stored = sorted(map(tuple, proximity_match_stored(blocks, terms, w).collect()))
+    stored = _stored(spark, rows, lambda b: proximity_match_stored(b, terms, w))
     scan = sorted(map(tuple, proximity_match_scan(docs, terms, w).collect()))
     ref = sorted(
         (d, _py_windows(_tokens(t), terms, w))

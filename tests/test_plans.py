@@ -97,7 +97,9 @@ def test_stored_layout_is_read_in_one_place():
     batch varint decoders live only in index/codec.py, the term-bucket hash
     and the in-process (pyarrow.dataset) reader only in index/storage.py,
     the blocking of both block tables (salt, block id, pack exchange) only
-    in index/blocks.py, and the query modules take list batches only. The
+    in index/blocks.py, the docno numbering only in index/build.py and the
+    docno -> doc_id lookup only in index/storage.py, and the query modules
+    take list batches only. The
     decode bodies shared by the Spark workers and the in-process route
     exist once: the numpy BM25 contribution in query/wand.py (the other
     matches are the pack-time block bound, the Catalyst form and the
@@ -125,6 +127,18 @@ def test_stored_layout_is_read_in_one_place():
             {"query/wand.py": 1, "index/blocks.py": 1, "query/bm25.py": 1, "oracle.py": 1},
         ),
         (r"\w+ - off\b", {"index/positions.py": 1}),
+        # docno assignment: one function (build.number_docs), the only
+        # place that numbers rows
+        (r"\bdef number_docs\b", {"index/build.py": 1}),
+        (r"\bmonotonically_increasing_id\(", {"index/build.py": 1}),
+        # docno -> doc_id lookup: one function in index/storage.py, whose
+        # Spark and in-process hosts are the only (docno, doc_id)
+        # projections of doc_stats
+        (r"\bdef to_doc_ids\b", {"index/storage.py": 1}),
+        (
+            r"""(select\(|\[)\s*["']docno["']\s*,\s*["']doc_id["']""",
+            {"index/storage.py": 2},
+        ),
     ]
     offenders = []
     for p in pkg.rglob("*.py"):

@@ -24,7 +24,10 @@ from goldenretriever_spark.query.phrase import (
 @pytest.fixture(scope="module")
 def built(spark, tmp_path_factory):
     """120-doc synthetic corpus + packed positional blocks, with tiny blocks
-    and a tiny salt target so multi-block and multi-salt paths are real."""
+    and a tiny salt target so multi-block and multi-salt paths are real,
+    + the corpus' doc_stats (the blocks' docno -> doc_id lookup)."""
+    from goldenretriever_spark.index.build import build_index
+
     raw = spark.createDataFrame(corpus.synth_corpus_pandas(120, seed=31))
     blocks = pack_positional_blocks(
         raw,
@@ -33,33 +36,37 @@ def built(spark, tmp_path_factory):
         n_term_buckets=8,
         block_docs=16,
     ).localCheckpoint(eager=True)
-    return raw, blocks
+    return raw, blocks, build_index(raw, persist=False).doc_stats
 
 
-def _rows(df):
+def _rows(df, doc_stats=None):
+    """Sorted row tuples; with ``doc_stats``, block docnos mapped to doc_ids."""
+    from goldenretriever_spark.index.storage import to_doc_ids
+
+    if doc_stats is not None:
+        df = to_doc_ids(df, doc_stats)
     return sorted(map(tuple, df.collect()))
 
 
 def test_pack_decode_roundtrip(spark, built):
     """decode(pack(corpus)) must reproduce the posexplode positional rows
     bit-exactly — every (term, doc_id, pos) token occurrence."""
-    raw, blocks = built
-    from goldenretriever_spark.index.build import tokenized
+    raw, blocks, doc_stats = built
 
     expected = _rows(positional_rows(raw, "simple"))
-    got = _rows(decode_positions(blocks))
+    got = _rows(decode_positions(blocks), doc_stats)
     assert got == expected
     assert len(got) > 1000  # non-trivial corpus
 
 
 def test_block_invariants(built):
-    _, blocks = built
+    _, blocks, _ = built
     rows = blocks.collect()
     assert rows, "no blocks packed"
     multi_salt_terms = set()
     for r in rows:
         assert 1 <= r["n"] <= 16
-        assert r["doc_id_min"] <= r["doc_id_max"]
+        assert r["docno_min"] <= r["docno_max"]
         assert 0 <= r["term_bucket"] < 8
         if r["salt"] > 0:
             multi_salt_terms.add(r["term"])
@@ -81,11 +88,11 @@ PHRASES = [
 
 
 def test_stored_phrase_matches_scan(spark, built):
-    raw, blocks = built
+    raw, blocks, doc_stats = built
     docs = raw.withColumn("doc_id", F.xxhash64("repo", "path", "commit"))
     for ph in PHRASES:
         scan = _rows(phrase_match_scan(docs, ph, text_col="content"))
-        stored = _rows(phrase_match_stored(blocks, ph, n_term_buckets=8))
+        stored = _rows(phrase_match_stored(blocks, ph, n_term_buckets=8), doc_stats)
         assert stored == scan, f"phrase {ph} diverged"
     # at least one of the fixed phrases must actually match something
     assert any(
@@ -94,19 +101,19 @@ def test_stored_phrase_matches_scan(spark, built):
 
 
 def test_stored_proximity_matches_scan(spark, built):
-    raw, blocks = built
+    raw, blocks, doc_stats = built
     docs = raw.withColumn("doc_id", F.xxhash64("repo", "path", "commit"))
     cases = [(["def", "return"], 6), (["for", "in", "range"], 5)]
     for terms, w in cases:
         scan = _rows(proximity_match_scan(docs, terms, w, text_col="content"))
-        stored = _rows(proximity_match_stored(blocks, terms, w, n_term_buckets=8))
+        stored = _rows(proximity_match_stored(blocks, terms, w, n_term_buckets=8), doc_stats)
         assert stored == scan, f"proximity {terms} w={w} diverged"
 
 
 def test_bucket_pruning_is_lossless(spark, built):
     """Pruning to the query terms' buckets must not change results vs an
     unpruned term filter (the bucket filter is a superset restriction)."""
-    _, blocks = built
+    _, blocks, _ = built
     ph = ["return", "None"]
     unpruned = _rows(phrase_match_stored(blocks, ph, n_term_buckets=None))
     pruned = _rows(phrase_match_stored(blocks, ph, n_term_buckets=8))

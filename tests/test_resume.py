@@ -16,16 +16,16 @@ def _blocks_snapshot(spark, path):
     rows = (
         StoredIndex(spark, path)
         .posting_blocks.select(
-            "term", "salt", "block_id", "n", "df", "doc_id_min", "doc_id_max",
-            "block_max_tf_norm", "doc_ids_delta_varint", "tfs_varint",
+            "term", "salt", "block_id", "n", "df", "docno_min", "docno_max",
+            "block_max_tf_norm", "docnos_delta_varint", "tfs_varint",
         )
         .collect()
     )
     return sorted(
         (
             r["term"], r["salt"], r["block_id"], r["n"], r["df"],
-            r["doc_id_min"], r["doc_id_max"], round(r["block_max_tf_norm"], 12),
-            bytes(r["doc_ids_delta_varint"]), bytes(r["tfs_varint"]),
+            r["docno_min"], r["docno_max"], round(r["block_max_tf_norm"], 12),
+            bytes(r["docnos_delta_varint"]), bytes(r["tfs_varint"]),
         )
         for r in rows
     )

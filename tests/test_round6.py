@@ -164,6 +164,7 @@ def test_boolean_match_stored_semantics(spark):
     from goldenretriever_spark import corpus
     from goldenretriever_spark.index.blocks import pack_blocks
     from goldenretriever_spark.index.build import build_index, with_doc_ids
+    from goldenretriever_spark.index.storage import to_doc_ids
     from goldenretriever_spark.query.boolean import boolean_match_stored
     from goldenretriever_spark.tokenizer import simple_tokens
 
@@ -199,7 +200,9 @@ def test_boolean_match_stored_semantics(spark):
     for spec in cases:
         got = sorted(
             (r["doc_id"], r["n_should_hit"])
-            for r in boolean_match_stored(blocks, n_term_buckets=8, **spec).collect()
+            for r in to_doc_ids(
+                boolean_match_stored(blocks, n_term_buckets=8, **spec), idx.doc_stats
+            ).collect()
         )
         want = truth(
             spec.get("must", ()), spec.get("should", ()), spec.get("must_not", ()),
@@ -314,8 +317,9 @@ def test_streamed_positional_parity(spark, tmp_path):
     after compaction the stored phrase/proximity results equal a clean batch
     build over the union of inputs."""
     from goldenretriever_spark import corpus
-    from goldenretriever_spark.index.build import with_doc_ids
+    from goldenretriever_spark.index.build import build_index, with_doc_ids
     from goldenretriever_spark.index.positions import pack_positional_blocks
+    from goldenretriever_spark.index.storage import to_doc_ids
     from goldenretriever_spark.query.phrase import (
         phrase_match_stored,
         proximity_match_stored,
@@ -335,17 +339,25 @@ def test_streamed_positional_parity(spark, tmp_path):
     phrase = ["def", "return"]
     prox_terms, prox_w = ["def", "import"], 6
 
-    clean_blocks = pack_positional_blocks(
-        with_doc_ids(spark.createDataFrame(all_docs)), n_term_buckets=8
-    )
+    clean_docs = with_doc_ids(spark.createDataFrame(all_docs))
+    clean_blocks = pack_positional_blocks(clean_docs, n_term_buckets=8)
+    # the clean blocks hold docnos; the segments and the compacted index
+    # answer in doc_ids
+    clean_stats = build_index(clean_docs, persist=False).doc_stats
     want_phrase = sorted(
-        map(tuple, phrase_match_stored(clean_blocks, phrase, n_term_buckets=8).collect())
+        map(
+            tuple,
+            to_doc_ids(
+                phrase_match_stored(clean_blocks, phrase, n_term_buckets=8), clean_stats
+            ).collect(),
+        )
     )
     want_prox = sorted(
         map(
             tuple,
-            proximity_match_stored(
-                clean_blocks, prox_terms, prox_w, n_term_buckets=8
+            to_doc_ids(
+                proximity_match_stored(clean_blocks, prox_terms, prox_w, n_term_buckets=8),
+                clean_stats,
             ).collect(),
         )
     )

@@ -451,3 +451,169 @@ def test_local_route_matches_spark_route_and_oracle(served_positional, documents
                 assert math.isclose(r[-1], w[-1], rel_tol=1e-12), (name, call)
         for r, s in zip(got["local"][call], got["spark"][call]):
             assert r[:-1] == s[:-1] and math.isclose(r[-1], s[-1], rel_tol=1e-12), call
+
+
+def _decoded(path: str, table: str, decode):
+    """Every block row of one table of a written index, decoded in-process:
+    ``decode(batch) -> (ids, per_row_counts)``, repeated per row's term."""
+    import numpy as np
+    import pyarrow.dataset as ds
+
+    t = ds.dataset(f"{path}/{table}", format="parquet", partitioning="hive").to_table().to_pandas()
+    ids, counts = decode(t)
+    return np.repeat(t["term"].to_numpy(), counts), ids
+
+
+def test_docno_is_the_dense_doc_id_rank_in_every_table(spark, documents, served_positional):
+    """docno is the dense signed-order rank of doc_id (doc_stats, written in
+    docno order), and one document carries the same docno in
+    posting_blocks, positional_blocks and doc_stats: both block tables,
+    mapped back through doc_stats, hold exactly the corpus' (term, doc_id)
+    postings."""
+    import numpy as np
+    import pyarrow.dataset as ds
+
+    from goldenretriever_spark.index.codec import decode_doc_ids, decode_position_blocks
+    from goldenretriever_spark.tokenizer import simple_tokens
+
+    path = served_positional.path
+    stats = ds.dataset(f"{path}/doc_stats", format="parquet").to_table().to_pandas()
+    ids = np.sort(np.array([r["doc_id"] for r in documents.select("doc_id").collect()]))
+    assert stats["docno"].tolist() == list(range(len(ids)))
+    assert stats["doc_id"].tolist() == ids.tolist()
+    to_id = dict(zip(stats["docno"], stats["doc_id"]))
+
+    want = {
+        (r["term"], r["doc_id"])
+        for r in documents.select(
+            "doc_id", F.explode(simple_tokens(F.col("content"))).alias("term")
+        )
+        .distinct()
+        .collect()
+    }
+    terms, docnos = _decoded(
+        path, "posting_blocks", lambda t: decode_doc_ids(t["docnos_delta_varint"])
+    )
+    assert {(t, to_id[d]) for t, d in zip(terms, docnos)} == want
+    assert len(docnos) == len(want)
+
+    def positional(t):
+        out = decode_position_blocks(
+            t["docnos_delta_varint"], t["pos_counts_varint"], t["positions_delta_varint"]
+        )
+        return out[0], out[2]
+
+    terms, docnos = _decoded(path, "positional_blocks", positional)
+    assert {(t, to_id[d]) for t, d in zip(terms, docnos)} == want
+
+
+def test_duplicated_input_row_gets_one_docno_and_unchanged_results(
+    spark, documents, route, tmp_path
+):
+    """A corpus with one row repeated: doc_stats holds one row (one docno)
+    per distinct doc_id, corpus_stats still counts input rows, and both
+    serve routes return the rows of the hash-id brute path over the
+    in-memory postings, which runs no docno."""
+    from goldenretriever_spark.index.build import build_index
+    from goldenretriever_spark.index.storage import StoredIndex
+    from goldenretriever_spark.query.bm25 import top_k
+
+    doubled = documents.unionByName(documents.limit(1))
+    path = str(tmp_path / "idx")
+    _write(doubled, path, positional=True)
+    stored = StoredIndex(spark, path)
+    assert stored.doc_stats.count() == stored.doc_stats.select("doc_id").distinct().count() == 400
+    assert stored.stats[0] == 401
+    idx = build_index(doubled)
+    query = [(0, "def return import")]
+    want = sorted(
+        (r["rank"], r["doc_id"], r["score"])
+        for r in top_k(idx, query_terms_df(spark, query), k=20).collect()
+    )
+    for name in map(route, ROUTES):
+        got = sorted(
+            (r["rank"], r["doc_id"], r["score"]) for r in stored.search(query, k=20).collect()
+        )
+        assert [g[:2] for g in got] == [w[:2] for w in want], name
+        assert all(math.isclose(g[2], w[2], rel_tol=1e-12) for g, w in zip(got, want)), name
+    idx.postings.unpersist()
+
+
+def test_ties_at_the_k_cut_come_back_in_doc_id_order(spark, route, tmp_path):
+    """Equal-score documents (identical content) whose input order is the
+    reverse of their doc_id order: the k cut keeps the smallest doc_ids, in
+    doc_id-asc order, on both routes and for both cuts (raw and quantized)."""
+    from goldenretriever_spark.index.build import with_doc_ids
+    from goldenretriever_spark.index.storage import StoredIndex
+
+    rows = [("r", f"p{i}", "c", "py", "alpha beta gamma") for i in range(12)]
+    rows += [("r", f"q{i}", "c", "py", "delta epsilon") for i in range(20)]
+    schema = "repo string, path string, commit string, lang string, content string"
+    docs = with_doc_ids(spark.createDataFrame(rows, schema))
+    order = {r["path"]: r["doc_id"] for r in docs.collect()}
+    tied = sorted(order[f"p{i}"] for i in range(12))
+    docs = docs.orderBy(F.col("doc_id").desc())
+    assert [r["doc_id"] for r in docs.collect()][:3] != tied[:3]
+    path = str(tmp_path / "idx")
+    _write(docs, path, positional=False)
+    stored = StoredIndex(spark, path)
+    for name in map(route, ROUTES):
+        got = stored.search([(0, "alpha")], k=5).orderBy("rank").collect()
+        assert [r["doc_id"] for r in got] == tied[:5], name
+        got = stored.search_filtered([(0, "alpha")], k=5, must=["beta"]).orderBy("rank").collect()
+        assert [r["doc_id"] for r in got] == tied[:5], name
+
+
+def _without_format_token(src: str, tmp_path) -> str:
+    """A copy of the index at ``src`` whose _meta keeps n_term_buckets but
+    lost the format_version token, as every index written before it reads."""
+    import os
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "idx")
+    shutil.copytree(src, path)
+    shutil.rmtree(os.path.join(path, "_meta"))
+    os.makedirs(os.path.join(path, "_meta"))
+    pq.write_table(
+        pa.table({"n_term_buckets": pa.array([64], pa.int32())}),
+        os.path.join(path, "_meta", "part-0.parquet"),
+    )
+    return path
+
+
+def test_index_without_the_format_token_raises_on_open(spark, served, route, tmp_path):
+    """A copy of a v2 index whose _meta lost its format_version token (what
+    every index written before the token reads as) raises one ValueError
+    naming the format version on both routes, before any read."""
+    import os
+    import shutil
+
+    from goldenretriever_spark.index.storage import StoredIndex
+
+    stored, _ = served
+    path = _without_format_token(stored.path, tmp_path)
+    for name in map(route, ROUTES):
+        with pytest.raises(ValueError, match="format version"):
+            StoredIndex(spark, path).search([(0, "def")], k=10)
+        with pytest.raises(ValueError, match="format version"):
+            StoredIndex(spark, path).search_filtered([(0, "def")], k=10, must=["return"])
+    shutil.rmtree(os.path.join(path, "_meta"))
+    with pytest.raises(ValueError, match="format version"):
+        StoredIndex(spark, path)
+
+
+def test_crossover_tool_treats_a_cached_index_without_the_token_as_stale(
+    spark, served_positional, tmp_path
+):
+    """tools/wand_crossover reuses a cached index only when it opens as the
+    current format with positional blocks: a copy without the format token,
+    or no index at all, is stale and gets rebuilt."""
+    from tools.wand_crossover import _cached_index_is_current
+
+    assert _cached_index_is_current(spark, served_positional.path)
+    stale = _without_format_token(served_positional.path, tmp_path)
+    assert not _cached_index_is_current(spark, stale)
+    assert not _cached_index_is_current(spark, str(tmp_path / "missing"))

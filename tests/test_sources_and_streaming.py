@@ -88,7 +88,7 @@ def test_stored_index_wand_roundtrip(spark, tmp_path):
     """write_index + StoredIndex + WAND over the stored blocks == brute."""
     from goldenretriever_spark.index.blocks import pack_blocks
     from goldenretriever_spark.index.build import build_index
-    from goldenretriever_spark.index.storage import StoredIndex, write_index
+    from goldenretriever_spark.index.storage import StoredIndex, to_doc_ids, write_index
     from goldenretriever_spark.query import bm25
     from goldenretriever_spark.query.wand import wand_top_k
 
@@ -101,9 +101,12 @@ def test_stored_index_wand_roundtrip(spark, tmp_path):
     # bucket count must come from the persisted _meta, never a guessed default
     assert stored.n_term_buckets == 8
     qlist = [(0, "def return"), (1, "cache buffer stream")]
-    got = wand_top_k(
-        spark, stored.posting_blocks, stored.corpus_stats, qlist, k=5,
-        n_term_buckets=stored.n_term_buckets,
+    got = to_doc_ids(
+        wand_top_k(
+            spark, stored.posting_blocks, stored.corpus_stats, qlist, k=5,
+            n_term_buckets=stored.n_term_buckets,
+        ),
+        stored.doc_stats,
     ).collect()
     brute = bm25.top_k(idx, bm25.query_terms_df(spark, qlist), k=5).collect()
     key = lambda rows: sorted((r["query_id"], r["rank"], r["doc_id"]) for r in rows)  # noqa: E731

@@ -8,6 +8,7 @@ import pytest
 from goldenretriever_spark import corpus
 from goldenretriever_spark.index.blocks import pack_blocks
 from goldenretriever_spark.index.build import build_index
+from goldenretriever_spark.index.storage import to_doc_ids
 from goldenretriever_spark.query import bm25, wand
 from goldenretriever_spark.query.wand import wand_top_k
 
@@ -43,7 +44,7 @@ def test_wand_equals_brute_force(built, spark, seed_factor, monkeypatch):
     terms = bm25.query_terms_df(spark, qlist)
     brute = _collect_ranked(bm25.top_k(idx, terms, k=K).collect())
     pruned = _collect_ranked(
-        wand_top_k(spark, blocks, idx.corpus_stats, qlist, k=K).collect()
+        to_doc_ids(wand_top_k(spark, blocks, idx.corpus_stats, qlist, k=K), idx.doc_stats).collect()
     )
     assert set(brute) == set(pruned)
     for qid in brute:
@@ -64,7 +65,9 @@ def test_brute_stored_equals_brute_inmemory(built, spark):
     terms = bm25.query_terms_df(spark, qlist)
     brute = _collect_ranked(bm25.top_k(idx, terms, k=K).collect())
     stored = _collect_ranked(
-        brute_top_k_stored(spark, blocks, idx.corpus_stats, qlist, k=K).collect()
+        to_doc_ids(
+            brute_top_k_stored(spark, blocks, idx.corpus_stats, qlist, k=K), idx.doc_stats
+        ).collect()
     )
     assert set(brute) == set(stored)
     for qid in brute:
@@ -104,7 +107,7 @@ def test_dispatch_top_k_both_sides(built, spark, monkeypatch):
         monkeypatch.setattr(wand, "WAND_CROSSOVER_DECODE_ROWS", crossover_rows)
         out, plan = dispatch_top_k(spark, blocks, idx.corpus_stats, qlist, k=K)
         assert plan["path"] == want_path, plan
-        auto = _collect_ranked(out.collect())
+        auto = _collect_ranked(to_doc_ids(out, idx.doc_stats).collect())
         assert set(brute) == set(auto), f"crossover_rows={crossover_rows}"
         for qid in brute:
             assert [d for d, _ in brute[qid]] == [d for d, _ in auto[qid]], (
@@ -166,7 +169,7 @@ def test_dispatch_is_volume_aware(built, spark, monkeypatch):
         # whichever route: still rank-identical to brute force
         terms = bm25.query_terms_df(spark, qlist)
         brute = _collect_ranked(bm25.top_k(idx, terms, k=K).collect())
-        auto = _collect_ranked(out.collect())
+        auto = _collect_ranked(to_doc_ids(out, idx.doc_stats).collect())
         for qid in brute:
             assert [d for d, _ in brute[qid]] == [d for d, _ in auto[qid]]
     assert paths == {1: "brute_stored", 5: "wand"}

@@ -38,7 +38,25 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 N_BUCKETS = 64
 
 
+def _cached_index_is_current(spark, idx_path: str) -> bool:
+    """A cached index is reused only when it has positional blocks and opens
+    as the current index format; anything else is stale (an index written
+    in an older format raises on open)."""
+    from goldenretriever_spark.index.storage import StoredIndex
+
+    if not os.path.exists(idx_path):
+        return False
+    try:
+        return StoredIndex(spark, idx_path).has_positional()
+    except ValueError:
+        return False
+
+
 def ensure_index(spark, n_docs: int) -> str:
+    """The cached synthetic index of ``n_docs`` docs under /tmp, built (or
+    rebuilt, when :func:`_cached_index_is_current` finds it stale) once."""
+    import shutil
+
     from goldenretriever_spark import corpus
     from goldenretriever_spark.index.blocks import pack_blocks
     from goldenretriever_spark.index.build import build_index
@@ -51,7 +69,8 @@ def ensure_index(spark, n_docs: int) -> str:
         corpus.synth_corpus(spark, n_docs, seed=42, partitions=256).write.mode(
             "overwrite"
         ).parquet(cache)
-    if not os.path.exists(os.path.join(idx_path, "positional_blocks")):
+    if not _cached_index_is_current(spark, idx_path):
+        shutil.rmtree(idx_path, ignore_errors=True)
         docs = spark.read.parquet(cache)
         idx = build_index(docs, tokenizer="simple")
         blocks = pack_blocks(idx, block_size=128, target_docs_per_group=250_000,
