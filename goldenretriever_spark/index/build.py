@@ -160,69 +160,85 @@ def staging_tables(toks: DataFrame) -> tuple[DataFrame, DataFrame]:
     return postings, toks.select("doc_id", doc_len, "sha256")
 
 
+def dense_number(
+    rows: DataFrame,
+    key: str,
+    id_col: str,
+    cols: tuple[Column, ...] = (),
+    aggs: tuple[Column, ...] = (),
+    totals: tuple[str, ...] = (),
+    start: int = 0,
+) -> tuple[DataFrame, dict[str, int]]:
+    """The one dense numbering (:func:`number_docs`, sources/kb.unique_ids):
+    ``rows`` -> ``(id_col, key, *aggs)``, one row per distinct ``key``,
+    ``id_col`` = ``start`` + its dense rank in ascending ``key`` order
+    (nulls first), plus the totals ``_rows`` (input rows) and Σ of each
+    ``totals`` aggregate. ``cols`` are evaluated after the exchange.
+
+    Plan: one range exchange on ``key`` (partition i holds smaller values
+    than i+1), a per-partition aggregation + sort, a row number from
+    ``monotonically_increasing_id`` (partition index above bit 33), a
+    ``localCheckpoint`` so those numbers are computed once, and ONE collect
+    of the per-partition counts, whose prefix sums are the partitions' id
+    offsets — no single-partition Window, no Python RDD."""
+    P = int(rows.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    ranged = (
+        rows.repartitionByRange(P, key)
+        .select(key, *cols)
+        .groupBy(key)
+        .agg(F.count(F.lit(1)).alias("_rows"), *aggs)
+        .sortWithinPartitions(key)
+        .withColumn("_i", F.monotonically_increasing_id())
+        .localCheckpoint(eager=False)
+    )
+    part = F.shiftright("_i", 33)
+    summed = ("_rows", *totals)
+    counts = {
+        r["p"]: r
+        for r in ranged.groupBy(part.alias("p"))
+        .agg(F.count(F.lit(1)).alias("_n"), *[F.sum(c).alias(c) for c in summed])
+        .collect()
+    }
+    offsets, acc = [], start
+    for p in range(max(counts, default=0) + 1):
+        offsets.append(acc)
+        acc += counts[p]["_n"] if p in counts else 0
+    ids = F.element_at(
+        F.array(*[F.lit(o).cast("long") for o in offsets]), (part + 1).cast("int")
+    ) + F.col("_i").bitwiseAND(F.lit((1 << 33) - 1))
+    numbered = ranged.select(ids.alias(id_col), "*").drop("_rows", "_i")
+    return numbered, {c: sum(int(r[c]) for r in counts.values()) for c in summed}
+
+
 def number_docs(
     rows: DataFrame, doc_len: Column, sha256: Column
 ) -> tuple[DataFrame, int, int]:
-    """The one docno assignment: ``rows``, one per input row with its
-    ``doc_id``, -> ``(doc_stats, n_rows, total_len)``. ``doc_len`` and
-    ``sha256`` are evaluated on ``rows`` after the exchange, so a raw
-    corpus (doc_id, content) crosses it untokenized and the range
-    partitioner's sampling pass only scans it: the corpus is tokenized once
-    here.
+    """The one docno assignment (:func:`dense_number` on doc_id): ``rows``,
+    one per input row with its ``doc_id``, -> ``(doc_stats, n_rows,
+    total_len)``. ``doc_len`` and ``sha256`` are evaluated after the
+    exchange, so a raw corpus (doc_id, content) crosses it untokenized and
+    is tokenized once, here.
 
     ``doc_stats`` is (docno, doc_id, doc_len, sha256), one row per distinct
     doc_id, where docno is the doc_id's dense rank (0..n-1) in signed
     order, sorted by docno in partition order. Because docno order is
     doc_id order, every doc_id-asc tie rule holds unchanged on docnos.
-
-    Plan: one range-partitioned exchange on doc_id (duplicates of a doc_id
-    land in one partition, and partition i holds smaller ids than i+1), a
-    per-partition dedupe + sort, a row number from
-    ``monotonically_increasing_id`` (partition index in the bits above 33,
-    row within the partition below), a ``localCheckpoint`` so those numbers
-    are computed once, and ONE collect of the per-partition counts, whose
-    prefix sums become each partition's docno offset — no single-partition
-    Window, no Python RDD. The same collect returns ``n_rows`` (input
-    rows, duplicates included) and ``total_len`` (Σ doc_len over input
-    rows, = Σtf of the postings), from which the caller derives
-    corpus_stats without another job."""
-    P = int(rows.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    ranged = (
-        rows.repartitionByRange(P, "doc_id")
-        .select("doc_id", doc_len.alias("doc_len"), sha256.alias("sha256"))
-        .groupBy("doc_id")
-        .agg(
+    ``n_rows`` (input rows, duplicates included) and ``total_len`` (Σ
+    doc_len over input rows, = Σtf of the postings) come from the
+    numbering's one collect, so corpus_stats needs no job of its own."""
+    doc_stats, sums = dense_number(
+        rows,
+        "doc_id",
+        "docno",
+        cols=(doc_len.alias("doc_len"), sha256.alias("sha256")),
+        aggs=(
             F.min("doc_len").alias("doc_len"),
             F.min("sha256").alias("sha256"),
-            F.count(F.lit(1)).alias("_rows"),
             F.sum("doc_len").alias("_len"),
-        )
-        .sortWithinPartitions("doc_id")
-        .withColumn("_i", F.monotonically_increasing_id())
-        .localCheckpoint(eager=False)
+        ),
+        totals=("_len",),
     )
-    part = F.shiftright("_i", 33)
-    counts = {
-        r["p"]: r
-        for r in ranged.groupBy(part.alias("p"))
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("_rows").alias("rows"),
-            F.sum("_len").alias("len"),
-        )
-        .collect()
-    }
-    offsets, acc = [], 0
-    for p in range(max(counts, default=0) + 1):
-        offsets.append(acc)
-        acc += counts[p]["n"] if p in counts else 0
-    docno = F.element_at(
-        F.array(*[F.lit(o).cast("long") for o in offsets]), (part + 1).cast("int")
-    ) + F.col("_i").bitwiseAND(F.lit((1 << 33) - 1))
-    doc_stats = ranged.select(docno.alias("docno"), "doc_id", "doc_len", "sha256")
-    n_rows = sum(int(r["rows"]) for r in counts.values())
-    total_len = sum(int(r["len"]) for r in counts.values())
-    return doc_stats, n_rows, total_len
+    return doc_stats.drop("_len"), sums["_rows"], sums["_len"]
 
 
 def number_index(

@@ -705,14 +705,17 @@ class StoredIndex:
         filter prunes the candidate set BEFORE ranking, so the k returned
         are the k best qualifying docs, cut by the quantized score. Routed
         like :meth:`search`, with the filter terms' Σdf added to the
-        volume: in-process below ``LOCAL_CROSSOVER_DECODE_ROWS`` (the
-        allowed set from query/boolean.boolean_match_local, then the local
-        top-k masked to it), else query/boolean.filtered_top_k."""
+        volume: in-process below ``LOCAL_CROSSOVER_DECODE_ROWS``
+        (query/boolean.boolean_match_local), else the one Spark route,
+        query/boolean.filtered_top_k. Both hand the decode the filter as a
+        docno bitmap (query/boolean.docno_bitmap): the driver holds
+        n_docs/8 bytes whatever the match count."""
         from goldenretriever_spark.index.blocks import BLOCKS_SCHEMA
         from goldenretriever_spark.query.bm25 import query_tokens
         from goldenretriever_spark.query.boolean import (
             boolean_clauses,
             boolean_match_local,
+            docno_bitmap,
             filtered_top_k,
         )
 
@@ -727,8 +730,9 @@ class StoredIndex:
                 "posting_blocks", BLOCKS_SCHEMA, clause_terms,
                 ["term", "docnos_delta_varint"],
             )
-            allowed = boolean_match_local(
-                term_docs, must, should, must_not, min_should_match
+            allowed = docno_bitmap(
+                boolean_match_local(term_docs, must, should, must_not, min_should_match),
+                self.stats[0],
             )
             ranked = self._local_ranked(qtoks, k, allowed, quantize=True)
             return local_frame(self.spark, self._doc_ids(ranked), _RANKED_SCHEMA)

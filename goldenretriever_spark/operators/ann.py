@@ -390,7 +390,8 @@ def ivf_topk_from_lists(
 
     ``assigned``: (vec_id, embedding, centroid_id) exactly as
     :func:`ivf_assign` produced it, persisted at index time partitioned by
-    ``centroid_id`` (tools/hybrid_scale.py writes it that way). The probed
+    ``centroid_id`` (``ivf_assign(...).write.partitionBy("centroid_id")``,
+    as tests/test_round6.py does). The probed
     centroid ids are collected driver-side (a tiny n_queries x n_probe list,
     same pattern as the stored-index term-bucket pruning) and applied as a
     partition filter BEFORE the join, so only the probed lists' partition

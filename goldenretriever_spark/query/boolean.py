@@ -8,7 +8,8 @@ same way as every stored-path operator in this engine: term_bucket
 partition pruning restricts the scan to the query terms' bucket
 directories, a lightweight decode materializes only (term, doc_id) — the
 tf/doc_len blobs are never touched, parquet column pruning keeps them
-unread — and the set algebra is three map-side-combinable aggregations:
+unread — and the set algebra is three aggregations and joins, each leg
+behind ONE exchange on the doc's bitmap word (``doc_id >> 6``):
 
     must:      docs with count_distinct(term) == |must|   (conjunction)
     should:    docs with count_distinct(term) >= min_should_match
@@ -19,6 +20,10 @@ corpus scan, no full-index pass, no Python beyond the Arrow-batched varint
 decode shared with every other stored reader. The ``doc_id`` decoded from
 format-v2 blocks is a docno; callers map results back with
 storage.to_doc_ids.
+
+A filter's allowed set reaches the scoring decode as one docno bitmap
+(:func:`docno_bitmap`) on both hosts: ``ceil(n_docs/8)`` bytes whatever
+the match count.
 """
 
 from __future__ import annotations
@@ -31,19 +36,15 @@ from pyspark.sql import functions as F
 from goldenretriever_spark.index.codec import decode_doc_ids
 from goldenretriever_spark.index.storage import prune_blocks_for_terms
 
-# filtered_top_k pushes the boolean doc set into the decode workers only up
-# to this many ids (int64 -> ~32 MB on the driver); above it the exact
-# semi-join plan runs instead. Read at call time (0 forces the semi-join).
-FILTER_PUSHDOWN_MAX_IDS = 4_000_000
-
 
 def _term_docs(
     posting_blocks: DataFrame, terms: list[str], n_term_buckets: int | None
 ) -> DataFrame:
-    """(term, doc_id) rows for the given terms from the compressed blocks:
+    """(term, doc_id, w) rows for the given terms from the compressed blocks:
     bucket-prune + term filter (storage.prune_blocks_for_terms) + doc-id-only
-    decode. The blob columns for tf/doc_len stay unread (ReadSchema carries
-    only the doc-id blob)."""
+    decode; the tf/doc_len blobs stay unread. The rows are hash-partitioned
+    on the docno's bitmap word ``w``, the leading key of every later step,
+    so this is each leg's only exchange."""
     if not terms:
         raise ValueError("terms must be non-empty")
     pruned = prune_blocks_for_terms(
@@ -56,7 +57,11 @@ def _term_docs(
             if len(rows):
                 yield rows
 
-    return pruned.mapInPandas(unpack, schema="term string, doc_id long")
+    return (
+        pruned.mapInPandas(unpack, schema="term string, doc_id long")
+        .withColumn("w", F.shiftright("doc_id", 6))
+        .repartition("w")
+    )
 
 
 def term_doc_rows(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -103,17 +108,27 @@ def boolean_match_stored(
     At least one positive clause (must or should) is required — a pure
     negation over an index is unbounded by construction.
     """
+    return _matches(
+        posting_blocks, must, should, must_not, min_should_match, n_term_buckets
+    ).drop("w")
+
+
+def _matches(
+    posting_blocks, must, should, must_not, min_should_match, n_term_buckets
+) -> DataFrame:
+    """:func:`boolean_match_stored` with each doc's bitmap word: (w, doc_id,
+    n_should_hit), hash-partitioned on w (see :func:`_term_docs`)."""
     must, should, must_not, min_should_match = boolean_clauses(
         must, should, must_not, min_should_match
     )
-
+    key = ["w", "doc_id"]
     if must:
         cand = (
             _term_docs(posting_blocks, must, n_term_buckets)
-            .groupBy("doc_id")
+            .groupBy(*key)
             .agg(F.count_distinct("term").alias("_nm"))
             .filter(F.col("_nm") == len(must))
-            .select("doc_id")
+            .select(*key)
         )
     else:
         cand = None
@@ -121,25 +136,23 @@ def boolean_match_stored(
     if should:
         sh = (
             _term_docs(posting_blocks, should, n_term_buckets)
-            .groupBy("doc_id")
+            .groupBy(*key)
             .agg(F.count_distinct("term").cast("long").alias("n_should_hit"))
         )
         if cand is None:
             out = sh.filter(F.col("n_should_hit") >= min_should_match)
         else:
-            out = cand.join(sh, "doc_id", "left").select(
-                "doc_id", F.coalesce("n_should_hit", F.lit(0)).alias("n_should_hit")
+            out = cand.join(sh, key, "left").select(
+                *key, F.coalesce("n_should_hit", F.lit(0)).alias("n_should_hit")
             )
             if min_should_match > 0:
                 out = out.filter(F.col("n_should_hit") >= min_should_match)
     else:
-        out = cand.select("doc_id", F.lit(0).cast("long").alias("n_should_hit"))
+        out = cand.select(*key, F.lit(0).cast("long").alias("n_should_hit"))
 
     if must_not:
-        excl = _term_docs(posting_blocks, must_not, n_term_buckets).select(
-            "doc_id"
-        ).distinct()
-        out = out.join(excl, "doc_id", "left_anti")
+        excl = _term_docs(posting_blocks, must_not, n_term_buckets).select(*key).distinct()
+        out = out.join(excl, key, "left_anti")
     return out
 
 
@@ -179,6 +192,15 @@ def boolean_match_local(
     return np.unique(out)
 
 
+def docno_bitmap(ids: np.ndarray, n_docs: int) -> np.ndarray:
+    """A docno set as its bitmap: little-endian packed bits over docno,
+    ``ceil(n_docs/8)`` uint8 bytes, bit ``d % 8`` of byte ``d // 8`` set
+    iff ``d`` is in ``ids`` (wand.scored_postings reads it)."""
+    mask = np.zeros(n_docs, dtype=bool)
+    mask[ids] = True
+    return np.packbits(mask, bitorder="little")
+
+
 def filtered_top_k(
     spark,
     posting_blocks: DataFrame,
@@ -206,69 +228,51 @@ def filtered_top_k(
     matches the oracle's tie discipline exactly; the raw score column is
     still returned).
 
-    Plan (r7, VERDICT r6 #3): the boolean doc set
-    (:func:`boolean_match_stored`) is collected once, capped at
-    ``FILTER_PUSHDOWN_MAX_IDS`` + 1 rows; when it fits under the cap (4M ids
-    ≈ 32 MB) its ids are broadcast as a sorted array and pushed INTO the
-    decode workers (wand._decode_scored), so a selective filter cuts decode
-    emission, shuffle and aggregation volume — and the scoring leg then
-    reuses the full measured brute/WAND dispatcher (wand.dispatch_top_k):
-    heavy-term batches get WAND's block pruning with θ seeded from FILTERED
-    partial scores. Above the cap it falls back to the r6 shape — brute
-    candidate scores LEFT-SEMI joined to the doc set, whose lazy plan is
-    recomputed on that rare path — which stays correct at any filter size.
-    The reference shape is ES ``bool{filter}+match``, which prunes in the
-    filter context the same way.
+    Plan: one filter route. The boolean doc set (:func:`boolean_match_stored`'s
+    algebra, already partitioned by word) is reduced by one Catalyst
+    aggregate to 64-bit words, ``bit_or(1 << (docno & 63))`` grouped by
+    ``docno >> 6``, and collected: at most ``ceil(n_docs/64)`` rows, whatever
+    the match count. The driver lays them out as the docno bitmap
+    (:func:`docno_bitmap`; on a little-endian word array bit 63 of word w is
+    bit 7 of byte 8w+7), broadcasts it, and the decode workers drop postings
+    outside it (wand.scored_postings), so a selective filter cuts decode
+    emission, shuffle and aggregation volume. The scoring leg is the
+    measured brute/WAND dispatcher (wand.dispatch_top_k): heavy-term batches
+    get WAND's block pruning with θ seeded from FILTERED partial scores —
+    ES ``bool{filter}+match`` prunes in the filter context the same way.
 
     Returns (query_id, doc_id, score, rank).
     """
-    from goldenretriever_spark.query.wand import (
-        dispatch_top_k,
-        rank_top_k,
-        stored_score_candidates,
-    )
+    from goldenretriever_spark.query.wand import dispatch_top_k
 
-    allowed = boolean_match_stored(
-        posting_blocks,
-        must=must,
-        should=should,
-        must_not=must_not,
-        min_should_match=min_should_match,
-        n_term_buckets=n_term_buckets,
-    ).select("doc_id")
-
-    # the doc set's one materialization: an Arrow-path collect capped at
-    # cap+1 rows, which also decides cap overflow without a count job;
-    # 4M int64 ids ≈ 32 MB on the driver
-    probe = allowed.limit(FILTER_PUSHDOWN_MAX_IDS + 1).toPandas()
-    if len(probe) <= FILTER_PUSHDOWN_MAX_IDS:
-        ids = np.sort(probe["doc_id"].to_numpy(dtype=np.int64))
-        # quantize=True: both dispatcher routes cut at k by the quantized
-        # tie discipline (WAND with a one-quantum θ slack), so this path
-        # returns EXACTLY the semi-join/oracle rows — verified at the
-        # 3.84M-doc scale point where quantized ties near the boundary are
-        # dense enough that a raw-score cut diverged (BENCH/R7_SCALE.json).
-        ranked, _plan = dispatch_top_k(
-            spark,
-            posting_blocks,
-            corpus_stats,
-            queries,
-            k=k,
-            tokenizer=tokenizer,
-            n_term_buckets=n_term_buckets,
-            stats=stats,
-            allowed_bc=spark.sparkContext.broadcast(ids),
-            quantize=True,
+    if stats is None:
+        row = corpus_stats.collect()[0]
+        stats = (int(row["n_docs"]), float(row["avgdl"]))
+    n_docs = stats[0]
+    words = (
+        _matches(
+            posting_blocks, must, should, must_not, min_should_match, n_term_buckets
         )
-        return ranked
-
-    scored = stored_score_candidates(
+        .groupBy("w")
+        .agg(F.bit_or(F.expr("shiftleft(1L, int(doc_id & 63))")).alias("bits"))
+        .toArrow()
+    )
+    packed = np.zeros(-(-n_docs // 64), dtype="<u8")
+    packed[words["w"].to_numpy()] = words["bits"].to_numpy().view(np.uint64)
+    bitmap = packed.view(np.uint8)[: -(-n_docs // 8)]
+    # quantize=True: both dispatcher routes cut at k by the quantized tie
+    # discipline (WAND with a one-quantum θ slack), so the rows are exactly
+    # the oracle's even where quantized ties near the boundary are dense
+    ranked, _plan = dispatch_top_k(
         spark,
         posting_blocks,
         corpus_stats,
         queries,
+        k=k,
         tokenizer=tokenizer,
         n_term_buckets=n_term_buckets,
         stats=stats,
+        allowed_bc=spark.sparkContext.broadcast(bitmap),
+        quantize=True,
     )
-    return rank_top_k(scored.join(allowed, "doc_id", "left_semi"), k, quantize=True)
+    return ranked

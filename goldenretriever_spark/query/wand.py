@@ -60,9 +60,10 @@ def scored_postings(
 
     Grouped decode (codec batch decoders): ONE vectorized varint pass per
     column per batch — the unpruned scan decodes ~10^6 block rows, where
-    per-block call overhead dominated. ``allowed``: optional SORTED int64
-    array of allowed doc ids; postings outside it are dropped before
-    scoring (see :func:`_decode_scored`)."""
+    per-block call overhead dominated. ``allowed``: optional docno bitmap
+    of a boolean filter (query/boolean.docno_bitmap: uint8, bit ``d % 8``
+    of byte ``d // 8`` set iff docno ``d`` passes); postings whose docno
+    is unset are dropped before scoring."""
     ids, counts = decode_doc_ids(pdf["docnos_delta_varint"])
     if ids.size == 0:
         return None
@@ -71,11 +72,7 @@ def scored_postings(
     idfs = np.repeat(pdf["idf"].to_numpy(np.float64), counts)
     qids = np.repeat(pdf["query_id"].to_numpy(np.int64), counts)
     if allowed is not None:
-        if allowed.size == 0:
-            return None
-        pos = np.searchsorted(allowed, ids)
-        pos_c = np.minimum(pos, allowed.size - 1)
-        keep = (pos < allowed.size) & (allowed[pos_c] == ids)
+        keep = ((allowed[ids >> 3] >> (ids & 7)) & 1).astype(bool)
         if not keep.any():
             return None
         ids, tfs, dls = ids[keep], tfs[keep], dls[keep]
@@ -104,12 +101,11 @@ def _decode_scored(
     absorbs it (rank-identity suite + oracle hashes unchanged). The worker
     body is :func:`scored_postings`.
 
-    ``allowed_bc``: optional broadcast of a SORTED int64 numpy array of
-    allowed doc_ids (boolean filter pushdown, query/boolean.filtered_top_k).
-    Decoded postings outside the set are dropped IN the worker — a selective
-    filter cuts the Arrow return, the shuffle and the aggregation to the
-    qualifying docs instead of only post-score rows (searchsorted
-    membership: no false positives/negatives, so scores are unchanged)."""
+    ``allowed_bc``: optional broadcast of a boolean filter's docno bitmap
+    (query/boolean.filtered_top_k). Decoded postings outside the set are
+    dropped IN the worker — a selective filter cuts the Arrow return, the
+    shuffle and the aggregation to the qualifying docs instead of only
+    post-score rows (exact membership, so scores are unchanged)."""
 
     def unpack(batches):
         allowed = allowed_bc.value if allowed_bc is not None else None
@@ -141,7 +137,8 @@ def local_top_k(
     and the three blobs, already bucket-pruned to the batch's terms) joined
     to each query's unique terms, idf as :func:`idf_col`, decode and
     contributions by :func:`scored_postings`, sums per (query, doc), cut by
-    :func:`rank_top_k_local`. ``allowed`` as in :func:`scored_postings`."""
+    :func:`rank_top_k_local`. ``allowed``: the filter's docno bitmap, as in
+    :func:`scored_postings`."""
     n_docs, avgdl = stats
     qterms = pd.DataFrame(
         [(qid, t) for qid, ts in qtoks for t in ts], columns=["query_id", "term"]
@@ -231,20 +228,18 @@ def stored_score_candidates(
     tokenizer: str = "simple",
     n_term_buckets: int | None = None,
     stats: tuple[int, float] | None = None,
-    allowed_bc=None,
 ) -> DataFrame:
     """(query_id, doc_id, score) over EVERY candidate doc from the stored
     compressed blocks — the stored-path twin of bm25.score_candidates:
     bucket-prune, decode the query terms' blocks, exact BM25 sums, no rank
     cut. Consumers that need the full candidate scores (phrase-boosted
     ranking, explain-style attribution) build on this; brute_top_k_stored
-    is exactly this + :func:`rank_top_k`. ``allowed_bc``: boolean-filter
-    doc-id pushdown, see :func:`_decode_scored`; the other arguments, see
+    is exactly this + :func:`rank_top_k`. Arguments: see
     :func:`_resolve_batch`."""
     batch = _resolve_batch(
         spark, posting_blocks, corpus_stats, queries, tokenizer, n_term_buckets, stats
     )
-    return _score(spark, batch, allowed_bc)
+    return _score(spark, batch)
 
 
 def brute_top_k_stored(
@@ -256,13 +251,11 @@ def brute_top_k_stored(
     tokenizer: str = "simple",
     n_term_buckets: int | None = None,
     stats: tuple[int, float] | None = None,
-    allowed_bc=None,
     quantize: bool = False,
 ) -> DataFrame:
     """Exact top-k over the STORED index with NO pruning: decode every block
     of every query term, score, rank (:func:`rank_top_k`; ``quantize`` as
-    there — filtered_top_k uses it so its two plans agree exactly even when
-    quantized ties are dense near the k boundary). This is the baseline
+    there). This is the baseline
     wand_top_k must beat — same storage, same decode path, identical
     results; the only difference is the θ-pruning machinery
     (tools/wand_crossover.py measures where pruning starts paying for
@@ -270,7 +263,7 @@ def brute_top_k_stored(
     batch = _resolve_batch(
         spark, posting_blocks, corpus_stats, queries, tokenizer, n_term_buckets, stats
     )
-    return rank_top_k(_score(spark, batch, allowed_bc), k, quantize)
+    return rank_top_k(_score(spark, batch), k, quantize)
 
 
 def rank_top_k(scores: DataFrame, k: int, quantize: bool = False) -> DataFrame:
@@ -374,10 +367,11 @@ def dispatch_top_k(
 ) -> tuple[DataFrame, dict]:
     """Top-k over the stored index with brute-stored vs WAND auto-dispatch.
 
-    ``allowed_bc`` (boolean-filter doc-id pushdown, see
-    :func:`_decode_scored`) threads through whichever path is routed, so a
-    filtered query reuses the measured brute/WAND dispatch unchanged
-    (query/boolean.filtered_top_k).
+    ``allowed_bc``: the broadcast docno bitmap of a boolean filter
+    (query/boolean.filtered_top_k, the one caller that passes it; see
+    :func:`_decode_scored`). It threads through whichever path is routed,
+    so a filtered query reuses the measured brute/WAND dispatch unchanged;
+    on WAND it restricts both decode phases (see :func:`_wand`).
 
     Always returns ``(result, plan)`` — the stable-shape API (ADVICE r4).
 
@@ -490,17 +484,9 @@ def wand_top_k(
     tokenizer: str = "simple",
     n_term_buckets: int | None = None,
     stats: tuple[int, float] | None = None,
-    allowed_bc=None,
     quantize: bool = False,
 ) -> DataFrame:
     """Top-k per query over the compressed index; rank-identical to brute force.
-
-    ``allowed_bc`` (boolean-filter pushdown, see :func:`_decode_scored`)
-    restricts BOTH decode phases to the allowed doc set: θ is then the kth
-    best FILTERED partial score — a valid pruning threshold for ranking over
-    the filtered candidates by the same lower-bound argument as the
-    unfiltered proof — so the result is the filtered top-k, rank-identical
-    to the brute filtered path (tests/test_round7.py).
 
     ``quantize=True`` ranks by the x10000-quantized score (oracle tie
     discipline) AND relaxes the pruning threshold by one quantum (1e-4):
@@ -515,13 +501,20 @@ def wand_top_k(
     batch = _resolve_batch(
         spark, posting_blocks, corpus_stats, queries, tokenizer, n_term_buckets, stats
     )
-    return _wand(spark, batch, k, allowed_bc, quantize)
+    return _wand(spark, batch, k, None, quantize)
 
 
 def _wand(
     spark: SparkSession, batch: _Batch, k: int, allowed_bc, quantize: bool
 ) -> DataFrame:
-    """:func:`wand_top_k` over a resolved batch."""
+    """:func:`wand_top_k` over a resolved batch.
+
+    ``allowed_bc`` (a filter's docno bitmap, from :func:`dispatch_top_k`)
+    restricts BOTH decode phases to the allowed doc set: θ is then the kth
+    best FILTERED partial score — a valid pruning threshold for ranking over
+    the filtered candidates by the same lower-bound argument as the
+    unfiltered proof — so the result is the filtered top-k, rank-identical
+    to the brute filtered path (tests/test_boolean.py)."""
     n_docs, avgdl = batch.stats
 
     # metadata-only plan: the cached frame carries block STATS, never the

@@ -18,8 +18,10 @@ The engine-side kb tables:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from goldenretriever_spark.index.build import dense_number
 
 
 def parse_csv(
@@ -91,34 +93,13 @@ def unique_ids(df: DataFrame, col: str, id_col: str, start: int = 0) -> DataFram
     """Dense ids for distinct values, ordered deterministically by value
     (reference uses first-occurrence order, kb_handler.py:15-26; a distributed
     engine needs a stable total order instead — value order is the
-    deterministic choice, SURVEY W5).
+    deterministic choice, SURVEY W5), from ``start``.
 
-    Scale-safe two-phase assignment (zipWithIndex pattern, no global-window
-    single-partition exchange): range-partition the distinct values, number
-    rows within each partition, then add per-partition offsets computed from
-    the tiny partition-count table. The offset prefix-sum is a broadcast
-    nested-loop join over <=P rows — nothing in the plan funnels the data
-    itself through one task, so a 10-TB responses table numbers in parallel.
-    The range exchange is consumed by both branches of the plan and reused
-    (ReusedExchange), so partition ids are consistent."""
-    distinct = df.select(col).dropDuplicates([col]).repartitionByRange(F.asc(col))
-    local = (
-        distinct.withColumn("_pid", F.spark_partition_id())
-        .withColumn(
-            "_rn",
-            F.row_number().over(Window.partitionBy("_pid").orderBy(F.asc(col))) - 1,
-        )
-    )
-    counts = local.groupBy("_pid").agg(F.count(F.lit(1)).alias("_cnt"))
-    a, b = counts.alias("a"), counts.alias("b")
-    offsets = (
-        a.join(F.broadcast(b), F.col("b._pid") < F.col("a._pid"), "left")
-        .groupBy(F.col("a._pid").alias("_pid"))
-        .agg(F.coalesce(F.sum("b._cnt"), F.lit(0)).alias("_off"))
-    )
-    return local.join(F.broadcast(offsets), "_pid").select(
-        col, (F.col("_rn") + F.col("_off") + F.lit(start)).cast("long").alias(id_col)
-    )
+    Scale-safe: the engine's one dense numbering (index/build.dense_number,
+    also the docno assignment); nothing in the plan funnels the data
+    through one task, so a 10-TB responses table numbers in parallel."""
+    numbered, _ = dense_number(df.select(col), col, id_col, start=start)
+    return numbered.select(col, id_col)
 
 
 def build_kb(qa: DataFrame, kb_name: str = "kb") -> dict[str, DataFrame]:

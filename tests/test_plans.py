@@ -103,7 +103,11 @@ def test_stored_layout_is_read_in_one_place():
     decode bodies shared by the Spark workers and the in-process route
     exist once: the numpy BM25 contribution in query/wand.py (the other
     matches are the pack-time block bound, the Catalyst form and the
-    pure-Python oracle) and the phrase vote emission in index/positions.py."""
+    pure-Python oracle) and the phrase vote emission in index/positions.py.
+    A boolean filter reaches the scoring decode one way, as a docno bitmap:
+    its membership test exists once, in query/wand.py, no query module
+    tests membership by ``searchsorted``, and query/boolean.py has no id
+    cap and no semi-join fallback."""
     import pathlib
     import re
 
@@ -127,9 +131,11 @@ def test_stored_layout_is_read_in_one_place():
             {"query/wand.py": 1, "index/blocks.py": 1, "query/bm25.py": 1, "oracle.py": 1},
         ),
         (r"\w+ - off\b", {"index/positions.py": 1}),
-        # docno assignment: one function (build.number_docs), the only
-        # place that numbers rows
+        # docno assignment: one function (build.number_docs) over the one
+        # dense numbering (build.dense_number, also kb.unique_ids'), the
+        # only place that numbers rows
         (r"\bdef number_docs\b", {"index/build.py": 1}),
+        (r"\bdef dense_number\b", {"index/build.py": 1}),
         (r"\bmonotonically_increasing_id\(", {"index/build.py": 1}),
         # docno -> doc_id lookup: one function in index/storage.py, whose
         # Spark and in-process hosts are the only (docno, doc_id)
@@ -139,6 +145,13 @@ def test_stored_layout_is_read_in_one_place():
             r"""(select\(|\[)\s*["']docno["']\s*,\s*["']doc_id["']""",
             {"index/storage.py": 2},
         ),
+        # the docno-bitmap membership test of a filter's allowed set
+        (r"\[\w+ >> 3\] >> \(\w+ & 7\)\) & 1", {"query/wand.py": 1}),
+    ]
+    # pattern -> path prefix it must not appear under
+    absent = [
+        (r"\bsearchsorted\b", "query/"),
+        (r"\bFILTER_PUSHDOWN_MAX_IDS\b|\bleft_semi\b", "query/boolean.py"),
     ]
     offenders = []
     for p in pkg.rglob("*.py"):
@@ -149,6 +162,9 @@ def test_stored_layout_is_read_in_one_place():
                 offenders.append(f"{rel}: {pattern}")
         for pattern, counts in counted:
             if len(re.findall(pattern, text)) != counts.get(rel, 0):
+                offenders.append(f"{rel}: {pattern}")
+        for pattern, prefix in absent:
+            if rel.startswith(prefix) and re.search(pattern, text):
                 offenders.append(f"{rel}: {pattern}")
     assert not offenders, offenders
 

@@ -8,7 +8,6 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
-from goldenretriever_spark.index import storage
 from goldenretriever_spark.query import wand
 from goldenretriever_spark.query.bm25 import query_terms_df
 
@@ -59,23 +58,6 @@ def served_positional(spark, documents, tmp_path_factory):
     path = str(tmp_path_factory.mktemp("serve_pos") / "idx")
     _write(documents, path, positional=True)
     return StoredIndex(spark, path)
-
-
-@pytest.fixture
-def route(monkeypatch):
-    """``route(name)`` forces the serve route of the StoredIndex calls after
-    it: ``"local"`` (every call on these small indexes is under the
-    crossover) or ``"spark"`` (a crossover of 0). The edge-case tests run
-    their body once per name in ``ROUTES``."""
-    crossover = storage.LOCAL_CROSSOVER_DECODE_ROWS
-
-    def force(name: str) -> str:
-        monkeypatch.setattr(
-            storage, "LOCAL_CROSSOVER_DECODE_ROWS", crossover if name == "local" else 0
-        )
-        return name
-
-    return force
 
 
 def _plan(df) -> str:
