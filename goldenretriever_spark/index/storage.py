@@ -32,12 +32,15 @@ an index and refuses any other version with one ``ValueError``.
 
 The same bucket-pruned reads also run in-process (:func:`open_table`,
 :func:`read_terms`): a ``pyarrow.dataset`` scan with the table's schema,
-for the calls whose decode volume is too small to pay for Spark jobs.
+for the calls whose decode volume is too small to pay for Spark jobs. The
+content join-back reads a ``documents`` frame that is a bare Parquet scan
+the same way (:func:`parquet_scan`).
 """
 
 from __future__ import annotations
 
 import os
+import weakref
 
 import pyarrow as pa
 import pyarrow.dataset as ds
@@ -145,6 +148,59 @@ def to_doc_ids(rows, doc_stats):
         .sort_by("_i")
         .select(rows.column_names)
     )
+
+
+def parquet_scan(frame: DataFrame):
+    """``frame``'s rows read in-process when it is a bare Parquet scan: its
+    optimized logical plan is only projections (``Project``) of plain
+    column references over one ``LogicalRelation`` on a ``HadoopFsRelation``
+    in ``ParquetFileFormat`` with no partition columns and no bucketing, its
+    files all on one filesystem. Returns ``(dataset, columns)``: one
+    ``pyarrow.dataset`` over ``frame.inputFiles()``, typed by
+    ``frame.schema`` (never inferred), and the ``to_table`` projection that
+    names each file column as ``frame`` does. Any other frame (a filter, a
+    derived column, a driver-built or partitioned table) gives None. Plan
+    inspection and the relation's own file listing: no Spark job, no file
+    opened."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    def kind(node) -> str:
+        return node.getClass().getSimpleName()
+
+    plan = frame._jdf.queryExecution().optimizedPlan()
+    node = plan
+    while kind(node) == "Project":
+        exprs = node.projectList()
+        if any(kind(exprs.apply(i)) != "AttributeReference" for i in range(exprs.size())):
+            return None
+        node = node.child()
+    if kind(node) != "LogicalRelation":
+        return None
+    rel = node.relation()
+    if (
+        kind(rel) != "HadoopFsRelation"
+        or kind(rel.fileFormat()) != "ParquetFileFormat"
+        or rel.partitionSchema().nonEmpty()
+        or rel.bucketSpec().isDefined()
+    ):
+        return None
+    resolved = [pafs.FileSystem.from_uri(f) for f in frame.inputFiles()]
+    fs = resolved[0][0] if resolved else pafs.LocalFileSystem()
+    if any(not fs.equals(other) for other, _ in resolved):
+        return None
+    # a plain reference keeps the relation attribute's id, not its name
+    # (``select("DOC_ID")`` over a file column ``doc_id``)
+    attrs, out = node.output(), plan.output()
+    in_file = {a.exprId().id(): a.name() for a in map(attrs.apply, range(attrs.size()))}
+    names = [in_file[a.exprId().id()] for a in map(out.apply, range(out.size()))]
+    arrow = to_arrow_schema(frame.schema)
+    files = ds.dataset(
+        [p for _, p in resolved],
+        filesystem=fs,
+        schema=pa.schema([f.with_name(n) for f, n in zip(arrow, names)]),
+        format="parquet",
+    )
+    return files, {f.name: ds.field(n) for f, n in zip(arrow, names)}
 
 
 TERM_STATS_SCHEMA = "term string, df long"
@@ -264,6 +320,10 @@ class StoredIndex:
         # the filesystem resolved once by _filesystem
         self._tables: dict[str, ds.Dataset] = {}
         self._fs: tuple[pafs.FileSystem, str] | None = None
+        # documents= frame -> its in-process scan (parquet_scan) or None,
+        # decided once per frame: a DataFrame's plan and file listing are
+        # fixed when it is created
+        self._content_scans: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
         self._n_term_buckets = self._read_meta()
 
     def _read_meta(self) -> int:
@@ -390,34 +450,60 @@ class StoredIndex:
         blocks = self._rows("posting_blocks", BLOCKS_SCHEMA, terms, _SCORE_COLS)
         return local_top_k(blocks, qtoks, self.stats, k, allowed, quantize)
 
-    def _with_content(self, ranked: pa.Table, documents: DataFrame) -> DataFrame:
-        """The local route's join-back: ``documents``' other columns
-        attached to ``ranked`` in-process, with the Spark route's
-        right-outer contract (every ranked row comes back, in rank order,
-        once per matching content row; a doc missing from ``documents``
-        gets nulls). The ranked ids are known here, so one pushed-down
-        ``isin`` collect fetches their rows: one Spark job, none when
-        nothing ranked."""
+    def _with_content(
+        self, ranked: pa.Table, documents: DataFrame, schema: str | StructType = _RANKED_SCHEMA
+    ) -> tuple[DataFrame, str]:
+        """The one content join-back, in the driver: ``documents``' other
+        columns attached to the collected ``ranked`` rows (``schema``).
+        Every ranked row comes back, in ``ranked``'s row order, once per
+        matching content row; a doc missing from ``documents`` gets nulls. Only the
+        ranked ids' rows are fetched, by one of two fetches, returned with
+        the result:
+
+        - ``"files"``: ``documents`` is a bare Parquet scan
+          (:func:`parquet_scan`) with a long ``doc_id``. Its files are read
+          in-process by one ``pyarrow.dataset`` typed by
+          ``documents.schema``, the ``doc_id isin`` filter pushed down:
+          zero Spark jobs.
+        - ``"spark"``: any other frame. One pushed-down ``isin`` collect:
+          one Spark job.
+
+        Both still read O(content table) bytes, because hash doc ids defeat
+        row-group pruning. Nothing ranked reads nothing."""
         from pyspark.sql.pandas.types import to_arrow_schema
+        from pyspark.sql.types import LongType, StructField
 
         cols = [c for c in documents.columns if c != "doc_id"]
-        content = documents.select("doc_id", *cols)
+        fields = [documents.schema[c] for c in ["doc_id", *cols]]
+        if documents not in self._content_scans:
+            self._content_scans[documents] = (
+                parquet_scan(documents) if fields[0].dataType == LongType() else None
+            )
+        scan = self._content_scans[documents]
         ids = sorted(set(ranked["doc_id"].to_pylist()))
-        if ids:
-            content = content.filter(F.col("doc_id").isin(ids)).toArrow()
-        else:
-            content = to_arrow_schema(content.schema).empty_table()
+        content = to_arrow_schema(StructType(fields)).empty_table()
+        if ids and scan is not None:
+            files, columns = scan
+            content = files.to_table(
+                columns={c: columns[c] for c in ["doc_id", *cols]},
+                filter=columns["doc_id"].isin(pa.array(ids, pa.int64())),
+            )
+        elif ids:
+            content = (
+                documents.select("doc_id", *cols).filter(F.col("doc_id").isin(ids)).toArrow()
+            )
         out = (
             ranked.append_column("_i", pa.array(range(ranked.num_rows), pa.int64()))
             .join(content, keys="doc_id", join_type="left outer")
             .sort_by("_i")
             .select([*ranked.column_names, *cols])
         )
+        if isinstance(schema, str):
+            schema = StructType.fromDDL(schema)
         schema = StructType(
-            StructType.fromDDL(_RANKED_SCHEMA).fields
-            + [documents.schema[c] for c in cols]
+            schema.fields + [StructField(f.name, f.dataType, True) for f in fields[1:]]
         )
-        return local_frame(self.spark, out, schema)
+        return local_frame(self.spark, out, schema), "spark" if scan is None else "files"
 
     @property
     def doc_stats(self) -> DataFrame:
@@ -512,26 +598,22 @@ class StoredIndex:
           batch splitting measured slower and was removed
           (BENCH/WAND_MIXED.json). The k ranked rows per query are then
           collected and their docnos looked up in-process like the local
-          route's (:meth:`_collected`), so the mapping adds no job.
+          route's (:meth:`_doc_ids`), so the mapping adds no job.
 
         ``documents``: optional (doc_id, ...) table; when given, the ranked
-        ids are joined back so results carry materialized content (the
-        reference's ``make_query`` returns answer STRINGS, models.py:137-149).
-        The join is right-outer from ``documents`` (ADVICE r5): all
-        n_queries x k ranked rows survive, a doc_id missing from the doc
-        table surfaces as a row with null content instead of a silent gap in
-        the rank sequence. On the local route the ranked ids are known in
-        the driver, so one pushed-down ``isin`` collect fetches their
-        content (:meth:`_with_content`, one Spark job). It still scans the
-        content table, O(corpus) bytes, because hash doc ids defeat
-        row-group pruning. On the Spark routes Spark builds the outer join
-        on its non-preserved side, here ``documents``: the executed plan is
-        ``BroadcastHashJoin RightOuter BuildLeft``, which broadcasts the
-        whole documents table on every call while it is under
-        ``spark.sql.autoBroadcastJoinThreshold``, and a sort-merge join over
-        the full table above it — an O(corpus) shuffle or broadcast per
-        call. ``with_plan=True`` also returns the route record: ``path``
-        and ``est_rows``, plus the dispatch fields on the Spark routes."""
+        rows carry its other columns (the reference's ``make_query`` returns
+        answer STRINGS, models.py:137-149). On every route the ranked rows
+        are already in the driver, so :meth:`_with_content` fetches only
+        their ids' rows and joins them there: every n_queries x k ranked row
+        survives, in rank order, and a doc_id missing from the doc table
+        comes back with null content instead of leaving a gap in the rank
+        sequence (ADVICE r5). A bare Parquet scan is read in-process (zero
+        Spark jobs), any other frame by one ``isin`` collect (one job); both
+        still read the content table's O(corpus) bytes.
+        ``with_plan=True`` also returns the route record: ``path``,
+        ``est_rows`` and ``content`` (the fetch ``documents`` took,
+        ``"files"`` or ``"spark"``; None without ``documents``), plus the
+        dispatch fields on the Spark routes."""
         from goldenretriever_spark.query.bm25 import query_tokens
         from goldenretriever_spark.query.wand import dispatch_top_k
 
@@ -539,40 +621,28 @@ class StoredIndex:
         est = self._est_rows([ts for _, ts in qtoks])
         if est < LOCAL_CROSSOVER_DECODE_ROWS:
             plan = {"path": "local", "est_rows": est}
-            ranked = self._doc_ids(self._local_ranked(qtoks, k))
-            if documents is not None:
-                ranked = self._with_content(ranked, documents)
-            else:
-                ranked = local_frame(self.spark, ranked, _RANKED_SCHEMA)
-            return (ranked, plan) if with_plan else ranked
-
-        ranked, plan = dispatch_top_k(
-            self.spark,
-            self.posting_blocks,
-            self.corpus_stats,
-            queries,
-            k=k,
-            tokenizer=tokenizer,
-            n_term_buckets=self.n_term_buckets,
-            stats=self.stats,
-            term_df_cache=self._term_df,
-        )
-        ranked = self._collected(ranked, _RANKED_SCHEMA)
-        plan["est_rows"] = est
-        if documents is not None:
-            # right-outer FROM documents keeps every ranked row. Spark builds
-            # it on documents (BroadcastHashJoin RightOuter BuildLeft under
-            # the broadcast threshold, sort-merge above it), so this reads
-            # the whole doc table per call; a broadcast hint on the ranked
-            # side cannot apply here.
-            ranked = (
-                documents.join(ranked, "doc_id", "right")
-                .select(
-                    "query_id", "doc_id", "score", "rank",
-                    *[c for c in documents.columns if c != "doc_id"],
-                )
+            ranked = self._local_ranked(qtoks, k)
+        else:
+            ranked, plan = dispatch_top_k(
+                self.spark,
+                self.posting_blocks,
+                self.corpus_stats,
+                queries,
+                k=k,
+                tokenizer=tokenizer,
+                n_term_buckets=self.n_term_buckets,
+                stats=self.stats,
+                term_df_cache=self._term_df,
             )
-        return (ranked, plan) if with_plan else ranked
+            plan["est_rows"] = est
+            ranked = ranked.toArrow()
+        ranked = self._doc_ids(ranked)
+        plan["content"] = None
+        if documents is None:
+            out = local_frame(self.spark, ranked, _RANKED_SCHEMA)
+        else:
+            out, plan["content"] = self._with_content(ranked, documents)
+        return (out, plan) if with_plan else out
 
     def search_hybrid(
         self,
@@ -604,9 +674,11 @@ class StoredIndex:
         agg reuses the legs' partitioning — BENCH/PLANS.md 'Hybrid RRF
         fusion').
 
-        ``documents``: optional join-back, the same right-outer join as
-        :meth:`search`'s Spark routes (all fused rows preserved, the whole
-        doc table read per call).
+        ``documents``: optional join-back. The fused rows, O(k x queries),
+        are collected and joined with content in the driver by the same
+        :meth:`_with_content` as :meth:`search` (every fused row kept, in
+        rank order; the in-process fetch for a bare Parquet scan, one
+        ``isin`` collect for any other frame).
         Returns (query_id, doc_id, rrf_q, rank [, doc columns])."""
         from goldenretriever_spark.operators.ann import (
             brute_topk,
@@ -631,11 +703,7 @@ class StoredIndex:
         )
         fused = rrf_fuse([lex, vec], k=k)
         if documents is not None:
-            # same right-outer join-back, and plan, as search()
-            fused = documents.join(fused, "doc_id", "right").select(
-                "query_id", "doc_id", "rrf_q", "rank",
-                *[c for c in documents.columns if c != "doc_id"],
-            )
+            fused, _ = self._with_content(fused.toArrow(), documents, fused.schema)
         return fused
 
     def phrase(self, phrase: list[str]) -> DataFrame:

@@ -107,7 +107,9 @@ def test_stored_layout_is_read_in_one_place():
     A boolean filter reaches the scoring decode one way, as a docno bitmap:
     its membership test exists once, in query/wand.py, no query module
     tests membership by ``searchsorted``, and query/boolean.py has no id
-    cap and no semi-join fallback."""
+    cap and no semi-join fallback. The content join-back exists once,
+    ``StoredIndex._with_content``, and index/storage.py runs no right-outer
+    join of the documents table."""
     import pathlib
     import re
 
@@ -147,11 +149,13 @@ def test_stored_layout_is_read_in_one_place():
         ),
         # the docno-bitmap membership test of a filter's allowed set
         (r"\[\w+ >> 3\] >> \(\w+ & 7\)\) & 1", {"query/wand.py": 1}),
+        (r"\bdef _with_content\b", {"index/storage.py": 1}),
     ]
     # pattern -> path prefix it must not appear under
     absent = [
         (r"\bsearchsorted\b", "query/"),
         (r"\bFILTER_PUSHDOWN_MAX_IDS\b|\bleft_semi\b", "query/boolean.py"),
+        (r"""["']right(_?outer)?["']""", "index/storage.py"),
     ]
     offenders = []
     for p in pkg.rglob("*.py"):

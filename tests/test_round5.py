@@ -3,7 +3,6 @@ large-star/small-star connected components vs union-find, and the
 non-convergence guard ADVICE r4 asked for."""
 
 import pytest
-from pyspark.sql import functions as F
 
 
 # ---------------------------------------------------------------------------
@@ -97,42 +96,6 @@ def test_nonconvergence_raises_and_warns(spark):
     chain = _edges_df(spark, _chain_edges(n=60))
     with pytest.raises(RuntimeError, match="did not converge"):
         connected_components_star(chain, max_iter=1)
-
-
-# ---------------------------------------------------------------------------
-# serve loop: StoredIndex.search with content join-back (VERDICT r4 #8)
-# ---------------------------------------------------------------------------
-
-def test_stored_search_content_joinback(spark, tmp_path):
-    """search(documents=...) must return the SAME ranking as ranked-only
-    search plus the matching content string for every row (reference
-    make_query returns answer strings, models.py:137-149)."""
-    import hashlib
-
-    from goldenretriever_spark import corpus
-    from goldenretriever_spark.index.blocks import pack_blocks
-    from goldenretriever_spark.index.build import build_index, with_doc_ids
-    from goldenretriever_spark.index.storage import StoredIndex, write_index
-
-    raw = spark.createDataFrame(corpus.synth_corpus_pandas(120, seed=23))
-    docs = with_doc_ids(raw).select("doc_id", "content")
-    idx = build_index(raw, tokenizer="simple")
-    blocks = pack_blocks(idx, block_size=16, target_docs_per_group=50)
-    path = str(tmp_path / "idx")
-    write_index(idx, path, blocks=blocks, n_term_buckets=8)
-    stored = StoredIndex(spark, path)
-
-    qlist = [(0, "def return"), (1, "cache_buffer")]
-    ranked, plan = stored.search(qlist, k=5, with_plan=True)
-    ranked_rows = {(r["query_id"], r["rank"]): r["doc_id"] for r in ranked.collect()}
-    with_content = stored.search(qlist, k=5, documents=docs)
-    rows = with_content.collect()
-    assert {(r["query_id"], r["rank"]): r["doc_id"] for r in rows} == ranked_rows
-    truth = {r["doc_id"]: r["content"] for r in docs.collect()}
-    for r in rows:
-        assert r["content"] == truth[r["doc_id"]]
-        assert hashlib.sha256(r["content"].encode()).hexdigest()  # non-empty
-    assert plan["path"] == "local"
 
 
 # ---------------------------------------------------------------------------
@@ -240,65 +203,3 @@ def test_rrf_fuse_matches_python_reference(spark, seed):
         got_topk.setdefault(r.query_id, []).append((r.doc_id, r.rrf_q, r.rank))
     for qid in range(4):
         assert sorted(got_topk.get(qid, []), key=lambda t: t[2]) == exp_topk[qid]
-
-
-# ---------------------------------------------------------------------------
-# hybrid serve loop: StoredIndex.search_hybrid (lexical + vector, one call)
-# ---------------------------------------------------------------------------
-
-def test_stored_search_hybrid(spark, tmp_path):
-    """search_hybrid must equal rrf_fuse of the independently computed legs
-    (same stored lexical search, same brute cosine top-k), and the
-    documents join-back must carry the matching content for every row."""
-    import numpy as np
-    import pandas as pd
-
-    from goldenretriever_spark import corpus
-    from goldenretriever_spark.index.blocks import pack_blocks
-    from goldenretriever_spark.index.build import build_index, with_doc_ids
-    from goldenretriever_spark.index.storage import StoredIndex, write_index
-    from goldenretriever_spark.operators.ann import brute_topk
-    from goldenretriever_spark.query.hybrid import rrf_fuse
-
-    raw = spark.createDataFrame(corpus.synth_corpus_pandas(100, seed=29))
-    docs = with_doc_ids(raw).select("doc_id", "content")
-    idx = build_index(raw, tokenizer="simple")
-    blocks = pack_blocks(idx, block_size=16, target_docs_per_group=50)
-    path = str(tmp_path / "idx")
-    write_index(idx, path, blocks=blocks, n_term_buckets=8)
-    stored = StoredIndex(spark, path)
-
-    # embeddings over the SAME doc_id space, deterministic
-    ids = sorted(r["doc_id"] for r in docs.select("doc_id").collect())
-    rng = np.random.default_rng(7)
-    emb_pd = pd.DataFrame(
-        {"vec_id": ids, "embedding": [rng.standard_normal(8).tolist() for _ in ids]}
-    )
-    emb = spark.createDataFrame(emb_pd)
-    qvecs = spark.createDataFrame(
-        pd.DataFrame(
-            {"query_id": [0, 1], "qvec": [emb_pd["embedding"][0], emb_pd["embedding"][1]]}
-        )
-    )
-
-    qlist = [(0, "def return"), (1, "cache_buffer")]
-    got = stored.search_hybrid(qlist, qvecs, emb, k=5)
-
-    lex = stored.search(qlist, k=5).select("query_id", "doc_id", "rank")
-    vec = brute_topk(emb, qvecs, k=5).selectExpr(
-        "query_id", "vec_id AS doc_id", "rnk AS rank"
-    )
-    want = rrf_fuse([lex, vec], k=5)
-    as_set = lambda df: {tuple(r) for r in df.collect()}
-    assert as_set(got) == as_set(want)
-    assert got.count() > 0
-
-    # join-back carries content and preserves the ranking
-    withc = stored.search_hybrid(qlist, qvecs, emb, k=5, documents=docs)
-    truth = {r["doc_id"]: r["content"] for r in docs.collect()}
-    rows = withc.collect()
-    assert {(r["query_id"], r["rank"]): r["doc_id"] for r in rows} == {
-        (r["query_id"], r["rank"]): r["doc_id"] for r in got.collect()
-    }
-    for r in rows:
-        assert r["content"] == truth[r["doc_id"]]

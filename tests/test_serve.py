@@ -1,7 +1,9 @@
 """The per-call serve path of a persisted index (StoredIndex): edge-case
 results pinned against the pure-Python oracle on both serve routes (the
 in-process ``local`` route and the Spark routes), driver-built frames
-planned as Arrow local relations, and the per-call Spark job budgets."""
+planned as Arrow local relations, the content join-back of ``search`` and
+``search_hybrid`` through both of its fetches, and the per-call Spark job
+budgets."""
 
 import math
 
@@ -144,13 +146,16 @@ def test_wand_theta_frame_is_a_local_relation(served, route, monkeypatch):
 
 def test_single_query_search_job_budget(spark, served_positional, documents, route, tmp_path):
     """Spark jobs per call on a warm handle. The local route runs none for a
-    ranked-only search, a filtered search or a phrase, and exactly one for a
-    search with content from a Parquet table (the ``isin`` collect of the
+    ranked-only search, a filtered search, a phrase, or a search with
+    content from a bare Parquet table (read in-process), and exactly one for
+    a search with content from a derived frame (the ``isin`` collect of the
     ranked ids' rows). A search forced onto the Spark route runs at most 4:
-    the query terms, the corpus stats and the df probe add none."""
+    the query terms, the corpus stats and the df probe add none, and content
+    from the Parquet table adds none either."""
     stored = served_positional
     documents.select("doc_id", "content").write.parquet(str(tmp_path / "content"))
     content = spark.read.parquet(str(tmp_path / "content"))
+    derived = content.filter(F.col("doc_id") != 0)
     q = [(0, "class import")]
     stored.search([(0, "def return")], k=10).collect()  # memoize handle metadata
     calls = [
@@ -158,7 +163,8 @@ def test_single_query_search_job_budget(spark, served_positional, documents, rou
         ("search_filtered", 0, lambda: stored.search_filtered(
             q, k=10, must=["def"], must_not=["return"]).collect()),
         ("phrase", 0, lambda: stored.phrase(["def", "return"]).collect()),
-        ("search_documents", 1, lambda: stored.search(q, k=10, documents=content).collect()),
+        ("search_documents", 0, lambda: stored.search(q, k=10, documents=content).collect()),
+        ("search_derived", 1, lambda: stored.search(q, k=10, documents=derived).collect()),
     ]
     for name, budget, call in calls:
         rows, n = _jobs(spark, f"test_serve_local_{name}", call)
@@ -167,9 +173,12 @@ def test_single_query_search_job_budget(spark, served_positional, documents, rou
 
     route("spark")
     stored.search([(0, "def return")], k=10).collect()  # memoize the Spark reads
-    rows, n = _jobs(spark, "test_serve_spark_search", calls[0][2])
+    rows, ranked_jobs = _jobs(spark, "test_serve_spark_search", calls[0][2])
     assert len(rows) == 10
-    assert n <= 4
+    assert ranked_jobs <= 4
+    rows, n = _jobs(spark, "test_serve_spark_search_documents", calls[3][2])
+    assert len(rows) == 10 and all(r["content"] for r in rows)
+    assert n <= ranked_jobs
 
 
 def test_empty_filter_raises(served, route):
@@ -287,32 +296,198 @@ def test_dataframe_query_batch_raises_type_error(spark, served):
         stored.search(batch, k=10)
 
 
-def test_content_joinback_keeps_every_ranked_row(served, documents, route):
-    """search(documents=) joins content back onto every ranked row: with one
-    query's rank-1 doc missing from the content table, all n_queries x k
-    rows still come back in rank order, and exactly that doc's rows have
-    null content."""
+def _content_inputs(spark, documents, tmp_path, dropped, duplicated):
+    """One content table, ``documents`` without the doc ``dropped`` and with
+    the doc ``duplicated`` twice, as each kind of ``documents=`` frame:
+    fetch name -> (frame, the fetch it takes). ``files`` is a bare Parquet
+    scan, ``spark`` the derived frame it was written from, ``partitioned``
+    the same rows in a ``partitionBy`` Parquet table."""
+    base = documents.select("doc_id", "content")
+    derived = base.filter(F.col("doc_id") != dropped).unionByName(
+        base.filter(F.col("doc_id") == duplicated)
+    )
+    derived.write.parquet(str(tmp_path / "content"))
+    derived.withColumn("part", F.col("doc_id") % 3).write.partitionBy("part").parquet(
+        str(tmp_path / "content_partitioned")
+    )
+    partitioned = spark.read.parquet(str(tmp_path / "content_partitioned"))
+    return {
+        "files": (spark.read.parquet(str(tmp_path / "content")), "files"),
+        "spark": (derived, "spark"),
+        "partitioned": (partitioned.select("doc_id", "content"), "spark"),
+    }
+
+
+def test_content_joinback_keeps_every_ranked_row(spark, served, documents, route, tmp_path):
+    """search(documents=) joins content back onto every ranked row, on both
+    routes and through both content fetches: with one query's rank-1 doc
+    missing from the content table and another ranked doc in it twice, all
+    n_queries x k ranked rows come back, in rank order, once per matching
+    content row; exactly the missing doc's rows have null content. The
+    in-process fetch of a bare Parquet table and the Spark fetch of the
+    derived and the partitioned frames return the same rows and schema."""
     stored, _ = served
     qlist, k = [(0, "def return"), (1, "class import")], 8
+    truth = {r["doc_id"]: r["content"] for r in documents.select("doc_id", "content").collect()}
+    key = ("query_id", "rank", "doc_id", "score")
 
     def ranked(df):
         return sorted(df.collect(), key=lambda r: (r["query_id"], r["rank"]))
 
+    bare = ranked(stored.search(qlist, k=k))
+    assert (bare[0]["query_id"], bare[0]["rank"]) == (0, 1)
+    dropped, duplicated = bare[0]["doc_id"], bare[1]["doc_id"]
+    inputs = _content_inputs(spark, documents, tmp_path, dropped, duplicated)
     for name in map(route, ROUTES):
-        bare = ranked(stored.search(qlist, k=k))
-        dropped = bare[0]["doc_id"]
-        assert (bare[0]["query_id"], bare[0]["rank"]) == (0, 1)
-        content = documents.select("doc_id", "content").filter(F.col("doc_id") != dropped)
-        rows = ranked(stored.search(qlist, k=k, documents=content))
+        assert ranked(stored.search(qlist, k=k)) == bare, name
+        got = {}
+        for fetch, (content, want_fetch) in inputs.items():
+            out, plan = stored.search(qlist, k=k, documents=content, with_plan=True)
+            assert plan["content"] == want_fetch, (name, fetch)
+            rows = ranked(out)
+            if name == "local":  # the local ranking's row order, kept by the join
+                assert out.collect() == rows, fetch
+            copies = [2 if r["doc_id"] == duplicated else 1 for r in bare]
+            assert len(rows) == sum(copies), (name, fetch)
+            assert [tuple(r[c] for c in key) for r in rows] == [
+                tuple(r[c] for c in key) for r, n in zip(bare, copies) for _ in range(n)
+            ], (name, fetch)
+            for qid, _ in qlist:
+                ranks = [r["rank"] for r in rows if r["query_id"] == qid]
+                assert sorted(set(ranks)) == list(range(1, k + 1)), (name, fetch)
+            assert all(
+                r["content"] == (None if r["doc_id"] == dropped else truth[r["doc_id"]])
+                for r in rows
+            ), (name, fetch)
+            got[fetch] = (out.schema, rows)
+        assert got["files"] == got["spark"] == got["partitioned"], name
 
-        assert len(rows) == len(qlist) * k, name
-        for qid, _ in qlist:
-            assert [r["rank"] for r in rows if r["query_id"] == qid] == list(range(1, k + 1))
-        key = ("query_id", "rank", "doc_id", "score")
-        assert [tuple(r[c] for c in key) for r in rows] == [
-            tuple(r[c] for c in key) for r in bare
-        ], name
-        assert all((r["content"] is None) == (r["doc_id"] == dropped) for r in rows), name
+
+def test_empty_ranked_result_reads_no_content_file(spark, served, documents, route, tmp_path):
+    """A search that ranks nothing fetches no content: with the bare
+    Parquet content table's files overwritten by junk after the frame was
+    planned, a query of unknown terms returns no rows on both routes and
+    both fetches, without raising."""
+    import os
+
+    stored, _ = served
+    path = tmp_path / "content"
+    documents.select("doc_id", "content").write.parquet(str(path))
+    inputs = {"files": spark.read.parquet(str(path))}
+    inputs["spark"] = inputs["files"].filter(F.col("doc_id") != 0)
+    for f in os.listdir(path):
+        if f.endswith(".parquet"):
+            (path / f).write_bytes(b"not parquet")
+    for name in map(route, ROUTES):
+        for fetch, content in inputs.items():
+            out, plan = stored.search(
+                [(0, "zzzunknownterm")], k=10, documents=content, with_plan=True
+            )
+            assert plan["content"] == fetch, (name, fetch)
+            assert out.collect() == [], (name, fetch)
+            assert out.columns == ["query_id", "doc_id", "score", "rank", "content"]
+
+
+def test_stored_search_content_joinback(spark, tmp_path):
+    """search(documents=...) must return the SAME ranking as ranked-only
+    search plus the matching content string for every row (reference
+    make_query returns answer strings, models.py:137-149), through both
+    content fetches: a driver-built frame and the same rows as a Parquet
+    table."""
+    import hashlib
+
+    from goldenretriever_spark import corpus
+    from goldenretriever_spark.index.blocks import pack_blocks
+    from goldenretriever_spark.index.build import build_index, with_doc_ids
+    from goldenretriever_spark.index.storage import StoredIndex, write_index
+
+    raw = spark.createDataFrame(corpus.synth_corpus_pandas(120, seed=23))
+    docs = with_doc_ids(raw).select("doc_id", "content")
+    docs.write.parquet(str(tmp_path / "content"))
+    idx = build_index(raw, tokenizer="simple")
+    blocks = pack_blocks(idx, block_size=16, target_docs_per_group=50)
+    path = str(tmp_path / "idx")
+    write_index(idx, path, blocks=blocks, n_term_buckets=8)
+    stored = StoredIndex(spark, path)
+
+    qlist = [(0, "def return"), (1, "cache_buffer")]
+    ranked, plan = stored.search(qlist, k=5, with_plan=True)
+    assert plan["content"] is None
+    ranked_rows = {(r["query_id"], r["rank"]): r["doc_id"] for r in ranked.collect()}
+    truth = {r["doc_id"]: r["content"] for r in docs.collect()}
+    inputs = {"spark": docs, "files": spark.read.parquet(str(tmp_path / "content"))}
+    for fetch, content in inputs.items():
+        with_content, content_plan = stored.search(
+            qlist, k=5, documents=content, with_plan=True
+        )
+        assert content_plan["content"] == fetch
+        rows = with_content.collect()
+        assert {(r["query_id"], r["rank"]): r["doc_id"] for r in rows} == ranked_rows
+        for r in rows:
+            assert r["content"] == truth[r["doc_id"]]
+            assert hashlib.sha256(r["content"].encode()).hexdigest()  # non-empty
+    assert plan["path"] == "local"
+
+
+def test_stored_search_hybrid(spark, tmp_path):
+    """search_hybrid must equal rrf_fuse of the independently computed legs
+    (same stored lexical search, same brute cosine top-k), and the
+    documents join-back must carry the matching content for every row,
+    from a driver-built frame and from the same rows as a Parquet table."""
+    import numpy as np
+    import pandas as pd
+
+    from goldenretriever_spark import corpus
+    from goldenretriever_spark.index.blocks import pack_blocks
+    from goldenretriever_spark.index.build import build_index, with_doc_ids
+    from goldenretriever_spark.index.storage import StoredIndex, write_index
+    from goldenretriever_spark.operators.ann import brute_topk
+    from goldenretriever_spark.query.hybrid import rrf_fuse
+
+    raw = spark.createDataFrame(corpus.synth_corpus_pandas(100, seed=29))
+    docs = with_doc_ids(raw).select("doc_id", "content")
+    idx = build_index(raw, tokenizer="simple")
+    blocks = pack_blocks(idx, block_size=16, target_docs_per_group=50)
+    path = str(tmp_path / "idx")
+    write_index(idx, path, blocks=blocks, n_term_buckets=8)
+    stored = StoredIndex(spark, path)
+
+    # embeddings over the SAME doc_id space, deterministic
+    ids = sorted(r["doc_id"] for r in docs.select("doc_id").collect())
+    rng = np.random.default_rng(7)
+    emb_pd = pd.DataFrame(
+        {"vec_id": ids, "embedding": [rng.standard_normal(8).tolist() for _ in ids]}
+    )
+    emb = spark.createDataFrame(emb_pd)
+    qvecs = spark.createDataFrame(
+        pd.DataFrame(
+            {"query_id": [0, 1], "qvec": [emb_pd["embedding"][0], emb_pd["embedding"][1]]}
+        )
+    )
+
+    qlist = [(0, "def return"), (1, "cache_buffer")]
+    got = stored.search_hybrid(qlist, qvecs, emb, k=5)
+
+    lex = stored.search(qlist, k=5).select("query_id", "doc_id", "rank")
+    vec = brute_topk(emb, qvecs, k=5).selectExpr(
+        "query_id", "vec_id AS doc_id", "rnk AS rank"
+    )
+    want = rrf_fuse([lex, vec], k=5)
+    as_set = lambda df: {tuple(r) for r in df.collect()}
+    assert as_set(got) == as_set(want)
+    assert got.count() > 0
+
+    # join-back carries content and preserves the ranking, on both fetches
+    docs.write.parquet(str(tmp_path / "content"))
+    truth = {r["doc_id"]: r["content"] for r in docs.collect()}
+    fused = {(r["query_id"], r["rank"]): r["doc_id"] for r in got.collect()}
+    for content in (docs, spark.read.parquet(str(tmp_path / "content"))):
+        withc = stored.search_hybrid(qlist, qvecs, emb, k=5, documents=content)
+        rows = withc.collect()
+        assert {(r["query_id"], r["rank"]): r["doc_id"] for r in rows} == fused
+        for r in rows:
+            assert r["content"] == truth[r["doc_id"]]
+        assert withc.columns == ["query_id", "doc_id", "rrf_q", "rank", "content"]
 
 
 def test_empty_corpus_builds_and_serves(spark, documents, route, tmp_path):
