@@ -105,3 +105,28 @@ def top_k(idx: OracleIndex, query: str, k: int = 10, tokenizer: str = "simple") 
     scored = [(d, bm25_score(idx, query, d, tokenizer)) for d in candidates]
     scored.sort(key=lambda x: (-x[1], x[0]))
     return scored[:k]
+
+
+def phrase_ranked_top_k(
+    idx: OracleIndex,
+    tokens: dict[int, list[str]],
+    phrase: list[str],
+    k: int = 10,
+    boost: float = 1.0,
+) -> list[tuple[int, int, int]]:
+    """Exact phrase-boosted top-k (query/phrase.phrase_ranked_topk_stored):
+    BM25 over the phrase's terms plus ``boost * ln(1 + occ)``, occ the
+    overlapping exact occurrences of ``phrase`` in the doc's ``tokens``;
+    (rank, doc_id, score x10000 rounded), desc score, ties asc doc_id."""
+    n = len(phrase)
+    candidates: set[int] = set()
+    for t in set(phrase):
+        candidates.update(idx.postings.get(t, {}).keys())
+    scored = []
+    for d in candidates:
+        tk = tokens[d]
+        occ = sum(1 for s in range(len(tk) - n + 1) if tk[s:s + n] == phrase)
+        s = bm25_score(idx, " ".join(phrase), d) + boost * math.log(1 + occ)
+        scored.append((d, round(s * 10000)))
+    scored.sort(key=lambda x: (-x[1], x[0]))
+    return [(i + 1, d, sq) for i, (d, sq) in enumerate(scored[:k])]

@@ -6,16 +6,18 @@ similarity top-k, /root/reference/src/models.py:114-149); every production
 full-text index pairs ranked retrieval with boolean filtering. Served the
 same way as every stored-path operator in this engine: term_bucket
 partition pruning restricts the scan to the query terms' bucket
-directories, a lightweight decode materializes only (term, doc_id) — the
+directories, a lightweight decode materializes only doc ids — the
 tf/doc_len blobs are never touched, parquet column pruning keeps them
-unread — and the set algebra is three aggregations and joins, each leg
-behind ONE exchange on the doc's bitmap word (``doc_id >> 6``):
+unread — and the set algebra is ONE pass: a single scan of every clause's
+terms that tags each posting with its term's clauses, ONE exchange on the
+doc's bitmap word (``doc_id >> 6``), then ONE aggregation per doc counting
+its terms in each clause:
 
-    must:      docs with count_distinct(term) == |must|   (conjunction)
-    should:    docs with count_distinct(term) >= min_should_match
-    must_not:  left_anti join on the union of the excluded terms' docs
+    must:      docs with Σ[term ∈ must] == |must|          (conjunction)
+    should:    docs with Σ[term ∈ should] >= min_should_match
+    must_not:  docs with Σ[term ∈ must_not] == 0
 
-At 100 TB each leg's cost is the posting volume of ITS terms only; no
+At 100 TB the cost is the posting volume of the clause terms only; no
 corpus scan, no full-index pass, no Python beyond the Arrow-batched varint
 decode shared with every other stored reader. The ``doc_id`` decoded from
 format-v2 blocks is a docno; callers map results back with
@@ -38,40 +40,48 @@ from goldenretriever_spark.index.storage import prune_blocks_for_terms
 
 
 def _term_docs(
-    posting_blocks: DataFrame, terms: list[str], n_term_buckets: int | None
+    posting_blocks: DataFrame, must, should, must_not, n_term_buckets: int | None
 ) -> DataFrame:
-    """(term, doc_id, w) rows for the given terms from the compressed blocks:
-    bucket-prune + term filter (storage.prune_blocks_for_terms) + doc-id-only
-    decode; the tf/doc_len blobs stay unread. The rows are hash-partitioned
-    on the docno's bitmap word ``w``, the leading key of every later step,
-    so this is each leg's only exchange."""
-    if not terms:
-        raise ValueError("terms must be non-empty")
+    """(doc_id, _nm, n_should_hit, _nn, w) posting rows of every clause term
+    from the compressed blocks (:func:`clause_doc_rows`): one bucket-prune +
+    term filter (storage.prune_blocks_for_terms) + doc-id-only decode; the
+    tf/doc_len blobs stay unread. The rows are hash-partitioned on the
+    docno's bitmap word ``w``, the leading key of every later step, so this
+    is the algebra's only exchange."""
     pruned = prune_blocks_for_terms(
-        posting_blocks, sorted(set(terms)), n_term_buckets
+        posting_blocks, sorted({*must, *should, *must_not}), n_term_buckets
     ).select("term", "docnos_delta_varint")
 
     def unpack(batches):
         for pdf in batches:
-            rows = term_doc_rows(pdf)
+            rows = clause_doc_rows(pdf, must, should, must_not)
             if len(rows):
                 yield rows
 
     return (
-        pruned.mapInPandas(unpack, schema="term string, doc_id long")
+        pruned.mapInPandas(
+            unpack, schema="doc_id long, _nm byte, n_should_hit byte, _nn byte"
+        )
         .withColumn("w", F.shiftright("doc_id", 6))
         .repartition("w")
     )
 
 
-def term_doc_rows(pdf: pd.DataFrame) -> pd.DataFrame:
-    """One batch of (term, docnos_delta_varint) block rows -> its (term,
-    doc_id) postings: the body of both hosts, :func:`_term_docs`' workers
-    and the in-process :func:`boolean_match_local`."""
+def clause_doc_rows(pdf: pd.DataFrame, must, should, must_not) -> pd.DataFrame:
+    """One batch of (term, docnos_delta_varint) block rows -> its postings
+    tagged by clause, (doc_id, _nm, n_should_hit, _nn): each flag is 1 iff
+    the posting's term is in must / should / must_not (a term may be in
+    more than one). The body of both hosts, :func:`_term_docs`' workers and
+    the in-process :func:`boolean_match_local`. A (term, docno) pair occurs
+    once in posting_blocks (postings are grouped by (term, doc_id) before
+    packing), so a doc's sum of a flag counts its DISTINCT clause terms."""
     ids, counts = decode_doc_ids(pdf["docnos_delta_varint"])
-    return pd.DataFrame(
-        {"term": np.repeat(pdf["term"].to_numpy(), counts), "doc_id": ids}
-    )
+    term = pdf["term"]
+    flags = {
+        name: np.repeat(term.isin(terms).to_numpy(np.int8), counts)
+        for name, terms in (("_nm", must), ("n_should_hit", should), ("_nn", must_not))
+    }
+    return pd.DataFrame({"doc_id": ids, **flags})
 
 
 def boolean_clauses(must, should, must_not, min_should_match):
@@ -117,43 +127,30 @@ def _matches(
     posting_blocks, must, should, must_not, min_should_match, n_term_buckets
 ) -> DataFrame:
     """:func:`boolean_match_stored` with each doc's bitmap word: (w, doc_id,
-    n_should_hit), hash-partitioned on w (see :func:`_term_docs`)."""
+    n_should_hit), hash-partitioned on w (see :func:`_term_docs`): one
+    clause-tagged scan, one aggregation of the flags per doc, then
+    :func:`_passes`."""
     must, should, must_not, min_should_match = boolean_clauses(
         must, should, must_not, min_should_match
     )
-    key = ["w", "doc_id"]
-    if must:
-        cand = (
-            _term_docs(posting_blocks, must, n_term_buckets)
-            .groupBy(*key)
-            .agg(F.count_distinct("term").alias("_nm"))
-            .filter(F.col("_nm") == len(must))
-            .select(*key)
-        )
-    else:
-        cand = None
+    counts = (
+        _term_docs(posting_blocks, must, should, must_not, n_term_buckets)
+        .groupBy("w", "doc_id")
+        .agg(*(F.sum(c).alias(c) for c in ("_nm", "n_should_hit", "_nn")))
+    )
+    return counts.filter(_passes(counts, len(must), min_should_match)).select(
+        "w", "doc_id", "n_should_hit"
+    )
 
-    if should:
-        sh = (
-            _term_docs(posting_blocks, should, n_term_buckets)
-            .groupBy(*key)
-            .agg(F.count_distinct("term").cast("long").alias("n_should_hit"))
-        )
-        if cand is None:
-            out = sh.filter(F.col("n_should_hit") >= min_should_match)
-        else:
-            out = cand.join(sh, key, "left").select(
-                *key, F.coalesce("n_should_hit", F.lit(0)).alias("n_should_hit")
-            )
-            if min_should_match > 0:
-                out = out.filter(F.col("n_should_hit") >= min_should_match)
-    else:
-        out = cand.select(*key, F.lit(0).cast("long").alias("n_should_hit"))
 
-    if must_not:
-        excl = _term_docs(posting_blocks, must_not, n_term_buckets).select(*key).distinct()
-        out = out.join(excl, key, "left_anti")
-    return out
+def _passes(counts, n_must: int, min_should_match: int):
+    """The boolean algebra over a Spark or pandas frame of per-doc clause
+    term counts: every must term, enough should terms, no must_not term."""
+    return (
+        (counts["_nm"] == n_must)
+        & (counts["n_should_hit"] >= min_should_match)
+        & (counts["_nn"] == 0)
+    )
 
 
 def boolean_match_local(
@@ -164,32 +161,17 @@ def boolean_match_local(
     min_should_match: int | None = None,
 ) -> np.ndarray:
     """In-process twin of :func:`boolean_match_stored`'s algebra, same
-    semantics and errors: ``blocks`` are the (term, docnos_delta_varint)
-    block rows of the clause terms, decoded by :func:`term_doc_rows`.
-    Returns the qualifying doc ids, sorted int64."""
+    semantics and errors: the clause terms' rows of ``blocks``, (term,
+    docnos_delta_varint) block rows, are tagged by :func:`clause_doc_rows`
+    and summed per doc in one groupby. Returns the qualifying doc ids,
+    sorted int64."""
     must, should, must_not, min_should_match = boolean_clauses(
         must, should, must_not, min_should_match
     )
-    rows = term_doc_rows(blocks).drop_duplicates()
-
-    def hits(clause: list[str]) -> pd.Series:
-        """doc_id -> count of distinct ``clause`` terms it contains."""
-        return rows[rows["term"].isin(clause)].groupby("doc_id").size()
-
-    out = None
-    if must:
-        nm = hits(must)
-        out = nm.index[nm.to_numpy() == len(must)].to_numpy(np.int64)
-    if should:
-        ns = hits(should)
-        passing = ns.index[ns.to_numpy() >= min_should_match].to_numpy(np.int64)
-        if out is None:
-            out = passing
-        elif min_should_match > 0:
-            out = np.intersect1d(out, passing)
-    if must_not:
-        out = np.setdiff1d(out, hits(must_not).index.to_numpy(np.int64))
-    return np.unique(out)
+    blocks = blocks[blocks["term"].isin([*must, *should, *must_not])]
+    counts = clause_doc_rows(blocks, must, should, must_not).groupby("doc_id").sum()
+    keep = _passes(counts, len(must), min_should_match).to_numpy()
+    return counts.index[keep].to_numpy(np.int64)
 
 
 def docno_bitmap(ids: np.ndarray, n_docs: int) -> np.ndarray:
@@ -228,11 +210,14 @@ def filtered_top_k(
     matches the oracle's tie discipline exactly; the raw score column is
     still returned).
 
-    Plan: one filter route. The boolean doc set (:func:`boolean_match_stored`'s
-    algebra, already partitioned by word) is reduced by one Catalyst
+    Plan: one filter route. The boolean doc set is one pass
+    (:func:`boolean_match_stored`'s algebra: one scan of all clause terms,
+    one exchange on the bitmap word, one per-doc aggregation of clause
+    counts). The word partitioning it leaves is reused by one Catalyst
     aggregate to 64-bit words, ``bit_or(1 << (docno & 63))`` grouped by
-    ``docno >> 6``, and collected: at most ``ceil(n_docs/64)`` rows, whatever
-    the match count. The driver lays them out as the docno bitmap
+    ``docno >> 6``, with no further exchange, and the words are collected:
+    at most ``ceil(n_docs/64)`` rows, whatever the match count; the filter
+    costs two jobs. The driver lays them out as the docno bitmap
     (:func:`docno_bitmap`; on a little-endian word array bit 63 of word w is
     bit 7 of byte 8w+7), broadcasts it, and the decode workers drop postings
     outside it (wand.scored_postings), so a selective filter cuts decode

@@ -284,78 +284,6 @@ def proximity_match_scan(
     )
 
 
-def phrase_ranked_topk(
-    index,
-    positional_blocks: DataFrame,
-    phrases: list[tuple[int, list[str]]],
-    k: int = 10,
-    boost: float = 1.0,
-    n_term_buckets: int | None = None,
-) -> DataFrame:
-    """Phrase-aware ranked retrieval — the positional index's retrieval
-    consumer (Lucene sloppy-phrase scoring shape, not just a boolean match).
-
-    Per query: BM25 bag-of-words score over the phrase's terms, plus a
-    saturating exact-phrase boost ``boost * ln(1 + occurrences)`` for docs
-    where the consecutive phrase occurs, served from the PERSISTED
-    positional blocks (:func:`phrase_match_stored` — bucket-pruned, no
-    corpus scan). The reference ranks by embedding similarity only
-    (/root/reference/src/models.py:114-149); phrase-boosted lexical ranking
-    is the classic positional-index upgrade over bag-of-words.
-
-    Plan shape: the BM25 leg is the stock score_candidates plan (broadcast
-    query terms, one map-side-combinable shuffle); the phrase leg is ONE
-    batched vote over the union of the batch's positional buckets
-    (:func:`phrase_match_stored_batch` — P phrases never pay P scans),
-    whose docnos ``index.doc_stats`` maps to doc_ids; the
-    two meet in a LEFT join keyed (query_id, doc_id) — every
-    phrase-matching doc contains the phrase's terms, so the left side
-    (scored) already covers all matches and no candidate is lost.
-
-    Returns ``(query_id, doc_id, score_q, rank)`` top-k per query, score
-    quantized x10000 with the engine-wide (score desc, doc_id asc) tie
-    discipline.
-    """
-    from goldenretriever_spark.index.storage import to_doc_ids
-    from goldenretriever_spark.query import bm25
-
-    if not phrases:
-        raise ValueError("phrases must be non-empty")
-    spark = positional_blocks.sparkSession
-    terms = bm25.query_terms_df(
-        spark, [(qid, " ".join(ph)) for qid, ph in phrases], tokenizer="simple"
-    )
-    scored = bm25.score_candidates(index, terms)
-    # the in-memory postings score hash doc_ids, the blocks vote on docnos
-    occ = to_doc_ids(
-        phrase_match_stored_batch(positional_blocks, phrases, n_term_buckets=n_term_buckets),
-        index.doc_stats,
-    )
-    return _phrase_boost_rank(scored, occ, k, boost)
-
-
-def _phrase_boost_rank(
-    scored: DataFrame, occ: DataFrame, k: int, boost: float
-) -> DataFrame:
-    """Shared tail of the phrase-ranked paths: LEFT-join the occurrence
-    counts onto the full candidate scores, fold the saturating boost, rank.
-    The join is keyed (query_id, doc_id) over candidate-sized frames only."""
-    from goldenretriever_spark.query.wand import rank_top_k
-
-    boosted = scored.join(occ, ["query_id", "doc_id"], "left").withColumn(
-        "score",
-        F.col("score")
-        + F.lit(float(boost))
-        * F.log(F.lit(1) + F.coalesce(F.col("occurrences"), F.lit(0))),
-    )
-    return rank_top_k(boosted, k, quantize=True).select(
-        "query_id",
-        "doc_id",
-        F.round(F.col("score") * 10000).cast("long").alias("score_q"),
-        "rank",
-    )
-
-
 def phrase_ranked_topk_stored(
     spark: SparkSession,
     posting_blocks: DataFrame,
@@ -367,14 +295,24 @@ def phrase_ranked_topk_stored(
     n_term_buckets: int | None = None,
     stats: tuple[int, float] | None = None,
 ) -> DataFrame:
-    """Phrase-boosted ranked retrieval ENTIRELY from a persisted index —
-    BM25 candidate scores decoded from the compressed posting blocks
-    (query/wand.stored_score_candidates: bucket-pruned, no raw postings
-    table anywhere) fused with the batched stored-phrase occurrence vote.
-    Same contract and scores as :func:`phrase_ranked_topk` on the
-    equivalent in-memory index (identity-tested in tests/test_round6.py);
-    this is the variant a serving deployment runs (StoredIndex.phrase_ranked)."""
-    from goldenretriever_spark.query.wand import stored_score_candidates
+    """Phrase-aware ranked retrieval ENTIRELY from a persisted index — the
+    positional index's retrieval consumer (Lucene sloppy-phrase scoring
+    shape, not just a boolean match); StoredIndex.phrase_ranked serves it.
+
+    Per query: BM25 bag-of-words score over the phrase's terms, decoded from
+    the compressed posting blocks (query/wand.stored_score_candidates:
+    bucket-pruned, no raw postings table anywhere), plus a saturating
+    exact-phrase boost ``boost * ln(1 + occurrences)`` from ONE batched vote
+    over the union of the batch's positional buckets
+    (:func:`phrase_match_stored_batch` — P phrases never pay P scans). The
+    two meet in a LEFT join keyed (query_id, doc_id): every phrase-matching
+    doc contains the phrase's terms, so the scored side already covers all
+    matches. Pure-Python rank identity: tests/test_positions.py.
+
+    Returns ``(query_id, doc_id, score_q, rank)`` top-k per query, ``doc_id``
+    the blocks' docno, score quantized x10000 with the engine-wide (score
+    desc, doc_id asc) tie discipline."""
+    from goldenretriever_spark.query.wand import rank_top_k, stored_score_candidates
 
     if not phrases:
         raise ValueError("phrases must be non-empty")
@@ -390,4 +328,15 @@ def phrase_ranked_topk_stored(
     occ = phrase_match_stored_batch(
         positional_blocks, phrases, n_term_buckets=n_term_buckets
     )
-    return _phrase_boost_rank(scored, occ, k, boost)
+    boosted = scored.join(occ, ["query_id", "doc_id"], "left").withColumn(
+        "score",
+        F.col("score")
+        + F.lit(float(boost))
+        * F.log(F.lit(1) + F.coalesce(F.col("occurrences"), F.lit(0))),
+    )
+    return rank_top_k(boosted, k, quantize=True).select(
+        "query_id",
+        "doc_id",
+        F.round(F.col("score") * 10000).cast("long").alias("score_q"),
+        "rank",
+    )

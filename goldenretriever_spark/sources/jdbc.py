@@ -4,14 +4,12 @@ driver). The Spark-native equivalent is the built-in JDBC source with
 PARALLEL partitioned reads — the cursor loop becomes numPartitions
 range-partitioned scans pushed down to the database.
 
-No JDBC driver jar ships in this sandbox, so this wrapper is exercised only
-for its option-plumbing (unit-testable) and documented as
-deployment-verified; everything here is stock ``spark.read.format('jdbc')``.
+The read itself is stock
+``spark.read.format("jdbc").options(**jdbc_options(...)).load()``; this
+module builds its option map, which is unit-tested without a driver jar.
 """
 
 from __future__ import annotations
-
-from pyspark.sql import DataFrame, SparkSession
 
 
 def jdbc_options(
@@ -45,7 +43,3 @@ def jdbc_options(
         )
     return opts
 
-
-def read_jdbc(spark: SparkSession, url: str, table: str, **kwargs) -> DataFrame:
-    """Partitioned JDBC read; see jdbc_options for the knobs."""
-    return spark.read.format("jdbc").options(**jdbc_options(url, table, **kwargs)).load()

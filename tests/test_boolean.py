@@ -1,17 +1,161 @@
-"""query/boolean.py: the one filter route. A boolean filter's allowed set
-reaches the scoring decode as a docno bitmap on both hosts (StoredIndex's
-in-process route and filtered_top_k's Spark route); results are pinned
-against a test-side semi-join plan and the pure-Python oracle."""
+"""query/boolean.py: the boolean algebra on both hosts (boolean_match_stored
+and boolean_match_local against token membership), and the one filter
+route. A boolean filter's allowed set reaches the scoring decode as a docno
+bitmap on both hosts (StoredIndex's in-process route and filtered_top_k's
+Spark route); results are pinned against a test-side semi-join plan and the
+pure-Python oracle."""
 
 import math
 
 import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
 from goldenretriever_spark.query import wand
-from goldenretriever_spark.query.boolean import boolean_match_stored, filtered_top_k
+from goldenretriever_spark.query.boolean import (
+    boolean_match_local,
+    boolean_match_stored,
+    filtered_top_k,
+)
 
 ROUTES = ("local", "spark")
+
+
+def test_boolean_match_stored_semantics(spark):
+    """Boolean retrieval over packed blocks vs a direct token-membership
+    recomputation, on both hosts over the same blocks: conjunction,
+    disjunction with min_should_match, negation, the must+should hit-count
+    case, a term in both must and should, must ∩ must_not (no doc), an
+    explicit min_should_match=0 beside must, and must_not terms absent from
+    the index."""
+    from goldenretriever_spark import corpus
+    from goldenretriever_spark.index.blocks import pack_blocks
+    from goldenretriever_spark.index.build import build_index, with_doc_ids
+    from goldenretriever_spark.index.storage import to_doc_ids
+    from goldenretriever_spark.tokenizer import simple_tokens
+
+    docs = with_doc_ids(spark.createDataFrame(corpus.synth_corpus_pandas(150, seed=5)))
+    idx = build_index(docs, tokenizer="simple")
+    blocks = pack_blocks(idx, block_size=16, target_docs_per_group=200, n_term_buckets=8).cache()
+    block_rows = blocks.select("term", "docnos_delta_varint").toPandas()
+    doc_id_of = {r["docno"]: r["doc_id"] for r in idx.doc_stats.collect()}
+    tk = docs.select("doc_id", simple_tokens(F.col("content")).alias("tk")).cache()
+
+    def truth(must=(), should=(), must_not=(), msm=None):
+        if msm is None:
+            msm = 1 if not must else 0
+        nsh = None
+        for t in should:
+            c = F.array_contains("tk", t).cast("long")
+            nsh = c if nsh is None else nsh + c
+        nsh = nsh if nsh is not None else F.lit(0).cast("long")
+        cond = F.lit(True)
+        for t in must:
+            cond = cond & F.array_contains("tk", t)
+        for t in must_not:
+            cond = cond & ~F.array_contains("tk", t)
+        out = tk.withColumn("n_should_hit", nsh).filter(cond)
+        if msm > 0:
+            out = out.filter(F.col("n_should_hit") >= msm)
+        return sorted((r["doc_id"], r["n_should_hit"]) for r in out.collect())
+
+    # (clauses, whether some doc must match)
+    cases = [
+        (dict(must=["def", "return"], must_not=["todo"]), True),
+        (dict(should=["def", "import", "return"], min_should_match=2), True),
+        (dict(must=["import"], should=["os", "sys"]), True),
+        (dict(should=["zzz_absent", "def"]), True),  # disjunction default msm=1
+        (dict(must=["def"], should=["def", "import"]), True),  # term in must and should
+        (dict(must=["def", "import"], must_not=["import"]), False),  # must ∩ must_not
+        (dict(must=["return"], should=["def", "class"], min_should_match=0), True),
+        (dict(must=["def"], must_not=["zzz_absent", "qqq_absent"]), True),
+    ]
+    for spec, matches in cases:
+        want = truth(
+            spec.get("must", ()), spec.get("should", ()), spec.get("must_not", ()),
+            spec.get("min_should_match"),
+        )
+        got = sorted(
+            (r["doc_id"], r["n_should_hit"])
+            for r in to_doc_ids(
+                boolean_match_stored(blocks, n_term_buckets=8, **spec), idx.doc_stats
+            ).collect()
+        )
+        assert got == want, spec
+        local = boolean_match_local(block_rows, **spec)
+        assert local.dtype == np.int64 and list(local) == sorted(local), spec
+        assert sorted(doc_id_of[d] for d in local) == [d for d, _ in want], spec
+        assert bool(got) == matches, f"case must be {'non-' * matches}trivial: {spec}"
+
+    for clauses in (dict(must_not=["def"]), dict(should=["a"], min_should_match=2)):
+        with pytest.raises(ValueError):
+            boolean_match_stored(blocks, **clauses)
+        with pytest.raises(ValueError):
+            boolean_match_local(block_rows, **clauses)
+    blocks.unpersist()
+    tk.unpersist()
+
+
+def test_filtered_top_k_semantics(spark, tmp_path, route):
+    """Filter-BEFORE-rank, on both routes: the returned top-k must equal
+    ranking the full candidate score set restricted to boolean-qualifying
+    docs — and must DIFFER from post-filtering the unfiltered top-k when the
+    filter is selective (the semantic the function exists for)."""
+    from goldenretriever_spark import corpus
+    from goldenretriever_spark.index.blocks import pack_blocks
+    from goldenretriever_spark.index.build import build_index, with_doc_ids
+    from goldenretriever_spark.index.storage import StoredIndex, write_index
+    from goldenretriever_spark.query import bm25
+    from goldenretriever_spark.tokenizer import simple_tokens
+
+    docs = with_doc_ids(spark.createDataFrame(corpus.synth_corpus_pandas(200, seed=8)))
+    idx = build_index(docs, tokenizer="simple")
+    blocks = pack_blocks(idx, block_size=32, target_docs_per_group=1000, n_term_buckets=8)
+    idx_path = str(tmp_path / "idx")
+    write_index(idx, idx_path, blocks=blocks, n_term_buckets=8)
+    stored = StoredIndex(spark, idx_path)
+
+    qlist = [(0, "def return"), (1, "import os")]
+    must, must_not = ["todo"], ["hash"]
+
+    got = {
+        name: sorted(
+            (r["query_id"], r["rank"], r["doc_id"], round(r["score"], 9))
+            for r in stored.search_filtered(qlist, k=5, must=must, must_not=must_not).collect()
+        )
+        for name in map(route, ROUTES)
+    }
+
+    # truth: full candidate scores, token-membership filter, re-rank
+    from pyspark.sql import Window
+
+    terms = bm25.query_terms_df(spark, qlist, tokenizer="simple")
+    scored = bm25.score_candidates(idx, terms)
+    tk = docs.select("doc_id", simple_tokens(F.col("content")).alias("tk"))
+    ok = tk.filter(
+        F.array_contains("tk", must[0]) & ~F.array_contains("tk", must_not[0])
+    ).select("doc_id")
+    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
+    want = sorted(
+        (r["query_id"], r["rank"], r["doc_id"], round(r["score"], 9))
+        for r in scored.join(ok, "doc_id", "left_semi")
+        .withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= 5)
+        .collect()
+    )
+    for name in ROUTES:
+        assert got[name] == want, name
+    assert want, "filter must leave real matches"
+
+    # filter-then-rank differs from rank-then-filter on a selective filter
+    unfiltered = stored.search(qlist, k=5)
+    post = sorted(
+        (r["query_id"], r["doc_id"])
+        for r in unfiltered.join(ok, "doc_id", "left_semi").collect()
+    )
+    assert post != [(q, d) for q, _, d, _ in want], (
+        "test filter is not selective enough to distinguish the semantics"
+    )
 
 
 def _filtered_fixture(spark):

@@ -107,7 +107,9 @@ def test_stored_layout_is_read_in_one_place():
     A boolean filter reaches the scoring decode one way, as a docno bitmap:
     its membership test exists once, in query/wand.py, no query module
     tests membership by ``searchsorted``, and query/boolean.py has no id
-    cap and no semi-join fallback. The content join-back exists once,
+    cap and no semi-join fallback. The boolean algebra is one pass on each
+    host: one clause-tagged scan (``_term_docs`` called once), one pandas
+    groupby on the in-process host, and no join. The content join-back exists once,
     ``StoredIndex._with_content``, and index/storage.py runs no right-outer
     join of the documents table."""
     import pathlib
@@ -150,11 +152,14 @@ def test_stored_layout_is_read_in_one_place():
         # the docno-bitmap membership test of a filter's allowed set
         (r"\[\w+ >> 3\] >> \(\w+ & 7\)\) & 1", {"query/wand.py": 1}),
         (r"\bdef _with_content\b", {"index/storage.py": 1}),
+        # the boolean algebra's one scan: its def and one call
+        (r"\b_term_docs\(", {"query/boolean.py": 2}),
     ]
     # pattern -> path prefix it must not appear under
     absent = [
         (r"\bsearchsorted\b", "query/"),
         (r"\bFILTER_PUSHDOWN_MAX_IDS\b|\bleft_semi\b", "query/boolean.py"),
+        (r"\bjoin\(|\bleft_anti\b", "query/boolean.py"),
         (r"""["']right(_?outer)?["']""", "index/storage.py"),
     ]
     offenders = []
@@ -171,6 +176,7 @@ def test_stored_layout_is_read_in_one_place():
             if rel.startswith(prefix) and re.search(pattern, text):
                 offenders.append(f"{rel}: {pattern}")
     assert not offenders, offenders
+    assert (pkg / "query" / "boolean.py").read_text().count(".groupby(") == 1
 
 
 def test_ann_ivf_centroid_join_is_broadcast(spark):

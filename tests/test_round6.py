@@ -5,7 +5,6 @@ incremental build, its compaction, and a clean batch build."""
 
 import os
 
-import pytest
 from pyspark.sql import functions as F
 
 
@@ -157,137 +156,21 @@ def test_phrase_batch_equals_per_phrase(spark):
     assert any(q == 0 for q, _, _ in got), "batch must have real matches"
 
 
-def test_boolean_match_stored_semantics(spark):
-    """Boolean retrieval over packed blocks vs a direct token-membership
-    recomputation: conjunction, disjunction with min_should_match, negation,
-    and the must+should hit-count case."""
-    from goldenretriever_spark import corpus
-    from goldenretriever_spark.index.blocks import pack_blocks
-    from goldenretriever_spark.index.build import build_index, with_doc_ids
-    from goldenretriever_spark.index.storage import to_doc_ids
-    from goldenretriever_spark.query.boolean import boolean_match_stored
-    from goldenretriever_spark.tokenizer import simple_tokens
-
-    docs = with_doc_ids(spark.createDataFrame(corpus.synth_corpus_pandas(150, seed=5)))
-    idx = build_index(docs, tokenizer="simple")
-    blocks = pack_blocks(idx, block_size=16, target_docs_per_group=200, n_term_buckets=8).cache()
-    tk = docs.select("doc_id", simple_tokens(F.col("content")).alias("tk")).cache()
-
-    def truth(must=(), should=(), must_not=(), msm=None):
-        if msm is None:
-            msm = 1 if not must else 0
-        nsh = None
-        for t in should:
-            c = F.array_contains("tk", t).cast("long")
-            nsh = c if nsh is None else nsh + c
-        nsh = nsh if nsh is not None else F.lit(0).cast("long")
-        cond = F.lit(True)
-        for t in must:
-            cond = cond & F.array_contains("tk", t)
-        for t in must_not:
-            cond = cond & ~F.array_contains("tk", t)
-        out = tk.withColumn("n_should_hit", nsh).filter(cond)
-        if msm > 0:
-            out = out.filter(F.col("n_should_hit") >= msm)
-        return sorted((r["doc_id"], r["n_should_hit"]) for r in out.collect())
-
-    cases = [
-        dict(must=["def", "return"], must_not=["todo"]),
-        dict(should=["def", "import", "return"], min_should_match=2),
-        dict(must=["import"], should=["os", "sys"]),
-        dict(should=["zzz_absent", "def"]),  # disjunction default msm=1
-    ]
-    for spec in cases:
-        got = sorted(
-            (r["doc_id"], r["n_should_hit"])
-            for r in to_doc_ids(
-                boolean_match_stored(blocks, n_term_buckets=8, **spec), idx.doc_stats
-            ).collect()
-        )
-        want = truth(
-            spec.get("must", ()), spec.get("should", ()), spec.get("must_not", ()),
-            spec.get("min_should_match"),
-        )
-        assert got == want, spec
-        assert got, f"case must be non-trivial: {spec}"
-
-    with pytest.raises(ValueError):
-        boolean_match_stored(blocks, must_not=["def"])
-    with pytest.raises(ValueError):
-        boolean_match_stored(blocks, should=["a"], min_should_match=2)
-    blocks.unpersist()
-    tk.unpersist()
-
-
-def test_filtered_top_k_semantics(spark, tmp_path):
-    """Filter-BEFORE-rank: the returned top-k must equal ranking the full
-    candidate score set restricted to boolean-qualifying docs — and must
-    DIFFER from post-filtering the unfiltered top-k when the filter is
-    selective (the semantic the function exists for)."""
-    from goldenretriever_spark import corpus
-    from goldenretriever_spark.index.blocks import pack_blocks
-    from goldenretriever_spark.index.build import build_index, with_doc_ids
-    from goldenretriever_spark.index.storage import StoredIndex, write_index
-    from goldenretriever_spark.query import bm25
-    from goldenretriever_spark.tokenizer import simple_tokens
-
-    docs = with_doc_ids(spark.createDataFrame(corpus.synth_corpus_pandas(200, seed=8)))
-    idx = build_index(docs, tokenizer="simple")
-    blocks = pack_blocks(idx, block_size=32, target_docs_per_group=1000, n_term_buckets=8)
-    idx_path = str(tmp_path / "idx")
-    write_index(idx, idx_path, blocks=blocks, n_term_buckets=8)
-    stored = StoredIndex(spark, idx_path)
-
-    qlist = [(0, "def return"), (1, "import os")]
-    must, must_not = ["todo"], ["hash"]
-
-    got = sorted(
-        (r["query_id"], r["rank"], r["doc_id"], round(r["score"], 9))
-        for r in stored.search_filtered(qlist, k=5, must=must, must_not=must_not).collect()
-    )
-
-    # truth: full candidate scores, token-membership filter, re-rank
-    from pyspark.sql import Window
-
-    terms = bm25.query_terms_df(spark, qlist, tokenizer="simple")
-    scored = bm25.score_candidates(idx, terms)
-    tk = docs.select("doc_id", simple_tokens(F.col("content")).alias("tk"))
-    ok = tk.filter(
-        F.array_contains("tk", must[0]) & ~F.array_contains("tk", must_not[0])
-    ).select("doc_id")
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    want = sorted(
-        (r["query_id"], r["rank"], r["doc_id"], round(r["score"], 9))
-        for r in scored.join(ok, "doc_id", "left_semi")
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 5)
-        .collect()
-    )
-    assert got == want
-    assert got, "filter must leave real matches"
-
-    # filter-then-rank differs from rank-then-filter on a selective filter
-    unfiltered = stored.search(qlist, k=5)
-    post = sorted(
-        (r["query_id"], r["doc_id"])
-        for r in unfiltered.join(ok, "doc_id", "left_semi").collect()
-    )
-    assert post != [(q, d) for q, _, d, _ in got], (
-        "test filter is not selective enough to distinguish the semantics"
-    )
-
-
-def test_phrase_ranked_stored_equals_inmemory(spark, tmp_path):
+def test_phrase_ranked_stored_equals_reference(spark, tmp_path):
     """StoredIndex.phrase_ranked (compressed blocks + persisted positional
-    blocks, no raw postings anywhere) must reproduce phrase_ranked_topk on
-    the equivalent in-memory index exactly — same quantized scores, ranks,
-    tie-breaks."""
+    blocks, no raw postings anywhere) must reproduce the pure-Python
+    reference (oracle.phrase_ranked_top_k) exactly — same quantized scores,
+    ranks, tie-breaks."""
     from goldenretriever_spark import corpus
     from goldenretriever_spark.index.blocks import pack_blocks
     from goldenretriever_spark.index.build import build_index, with_doc_ids
     from goldenretriever_spark.index.positions import pack_positional_blocks
     from goldenretriever_spark.index.storage import StoredIndex, write_index
-    from goldenretriever_spark.query.phrase import phrase_ranked_topk
+    from goldenretriever_spark.oracle import (
+        build_oracle_index,
+        phrase_ranked_top_k,
+        simple_tokenize_text,
+    )
 
     docs = with_doc_ids(spark.createDataFrame(corpus.synth_corpus_pandas(150, seed=13)))
     idx = build_index(docs, tokenizer="simple")
@@ -298,11 +181,18 @@ def test_phrase_ranked_stored_equals_inmemory(spark, tmp_path):
     stored = StoredIndex(spark, idx_path)
 
     phrases = [(0, ["def", "return"]), (1, ["#", "todo"]), (2, ["zzz_absent"])]
-    key = lambda df: sorted(  # noqa: E731
-        (r["query_id"], r["rank"], r["doc_id"], r["score_q"]) for r in df.collect()
+    content = {r["doc_id"]: r["content"] for r in docs.select("doc_id", "content").collect()}
+    oidx = build_oracle_index(list(content.items()))
+    toks = {d: simple_tokenize_text(c) for d, c in content.items()}
+    want = sorted(
+        (qid, rank, d, sq)
+        for qid, ph in phrases
+        for rank, d, sq in phrase_ranked_top_k(oidx, toks, ph, k=5)
     )
-    want = key(phrase_ranked_topk(idx, pos, phrases, k=5, n_term_buckets=8))
-    got = key(stored.phrase_ranked(phrases, k=5))
+    got = sorted(
+        (r["query_id"], r["rank"], r["doc_id"], r["score_q"])
+        for r in stored.phrase_ranked(phrases, k=5).collect()
+    )
     assert got == want
     assert any(q == 0 for q, _, _, _ in got)
 

@@ -151,7 +151,10 @@ def test_single_query_search_job_budget(spark, served_positional, documents, rou
     a search with content from a derived frame (the ``isin`` collect of the
     ranked ids' rows). A search forced onto the Spark route runs at most 4:
     the query terms, the corpus stats and the df probe add none, and content
-    from the Parquet table adds none either."""
+    from the Parquet table adds none either. On the Spark route the boolean
+    algebra is one scan and one exchange: a filtered search runs at most 6
+    (the filter's word exchange and bitmap collect, then the scoring), and
+    ``boolean`` at most 3."""
     stored = served_positional
     documents.select("doc_id", "content").write.parquet(str(tmp_path / "content"))
     content = spark.read.parquet(str(tmp_path / "content"))
@@ -179,6 +182,13 @@ def test_single_query_search_job_budget(spark, served_positional, documents, rou
     rows, n = _jobs(spark, "test_serve_spark_search_documents", calls[3][2])
     assert len(rows) == 10 and all(r["content"] for r in rows)
     assert n <= ranked_jobs
+    rows, n = _jobs(spark, "test_serve_spark_search_filtered", calls[1][2])
+    assert rows
+    assert n <= 6, n
+    rows, n = _jobs(spark, "test_serve_spark_boolean", lambda: stored.boolean(
+        must=["def"], must_not=["return"]).collect())
+    assert rows
+    assert n <= 3, n
 
 
 def test_empty_filter_raises(served, route):
