@@ -207,6 +207,8 @@ TERM_STATS_SCHEMA = "term string, df long"
 
 DOC_STATS_SCHEMA = "docno long, doc_id long, doc_len long, sha256 string"
 
+CORPUS_STATS_SCHEMA = StructType().add("n_docs", "long").add("avgdl", "double")
+
 # On-disk format token written to _meta and required on open: 2 = block
 # tables keyed by docno (1, never written as a token, keyed them by doc_id).
 FORMAT_VERSION = 2
@@ -237,7 +239,17 @@ META_SCHEMA = "n_term_buckets int, format_version int"
 #     ratio reaches at ~692k rows.
 LOCAL_CROSSOVER_DECODE_ROWS = 690_000
 
-_RANKED_SCHEMA = "query_id long, doc_id long, score double, rank int"
+# The serve calls' fixed result schemas, built once: StructType.fromDDL
+# parses through the JVM on every call.
+_RANKED_SCHEMA = (
+    StructType().add("query_id", "long").add("doc_id", "long")
+    .add("score", "double").add("rank", "integer")
+)
+_PHRASE_RANKED_SCHEMA = (
+    StructType().add("query_id", "long").add("doc_id", "long")
+    .add("score_q", "long").add("rank", "integer")
+)
+_PHRASE_SCHEMA = StructType().add("doc_id", "long").add("occurrences", "long")
 _SCORE_COLS = ["term", "df", "docnos_delta_varint", "tfs_varint", "dls_varint"]
 
 
@@ -451,7 +463,7 @@ class StoredIndex:
         return local_top_k(blocks, qtoks, self.stats, k, allowed, quantize)
 
     def _with_content(
-        self, ranked: pa.Table, documents: DataFrame, schema: str | StructType = _RANKED_SCHEMA
+        self, ranked: pa.Table, documents: DataFrame, schema: StructType = _RANKED_SCHEMA
     ) -> tuple[DataFrame, str]:
         """The one content join-back, in the driver: ``documents``' other
         columns attached to the collected ``ranked`` rows (``schema``).
@@ -498,8 +510,6 @@ class StoredIndex:
             .sort_by("_i")
             .select([*ranked.column_names, *cols])
         )
-        if isinstance(schema, str):
-            schema = StructType.fromDDL(schema)
         schema = StructType(
             schema.fields + [StructField(f.name, f.dataType, True) for f in fields[1:]]
         )
@@ -534,7 +544,7 @@ class StoredIndex:
             )
         return to_doc_ids(rows, self._tables["doc_stats"])
 
-    def _collected(self, ranked: DataFrame, schema: str) -> DataFrame:
+    def _collected(self, ranked: DataFrame, schema: StructType) -> DataFrame:
         """A Spark route's top-k rows — O(k x queries) — collected once and
         mapped to doc_ids in-process (:meth:`_doc_ids`), returned as a local
         relation: the lookup adds no job to the ranking's own, where a join
@@ -545,9 +555,9 @@ class StoredIndex:
     @property
     def corpus_stats(self) -> DataFrame:
         # memoized like posting_blocks: search/search_filtered/phrase_ranked
-        # pass it on every call, and each read runs a schema-inference job
+        # pass it on every call; read with its schema, so no inference job
         if self._corpus_stats is None:
-            self._corpus_stats = self.spark.read.parquet(
+            self._corpus_stats = self.spark.read.schema(CORPUS_STATS_SCHEMA).parquet(
                 os.path.join(self.path, "corpus_stats")
             )
         return self._corpus_stats
@@ -564,9 +574,19 @@ class StoredIndex:
 
     @property
     def stats(self) -> tuple[int, float]:
-        """(n_docs, avgdl), collected once per handle."""
+        """(n_docs, avgdl), read once per handle in-process, typed by
+        ``CORPUS_STATS_SCHEMA`` like :meth:`_read_meta`'s read: zero Spark
+        jobs."""
         if self._stats is None:
-            row = self.corpus_stats.collect()[0]
+            from pyspark.sql.pandas.types import to_arrow_schema
+
+            fs, root = self._filesystem()
+            row = ds.dataset(
+                f"{root}/corpus_stats",
+                filesystem=fs,
+                schema=to_arrow_schema(CORPUS_STATS_SCHEMA),
+                format="parquet",
+            ).to_table().to_pylist()[0]
             self._stats = (int(row["n_docs"]), float(row["avgdl"]))
         return self._stats
 
@@ -727,9 +747,7 @@ class StoredIndex:
             blocks = self._rows("positional_blocks", POS_BLOCKS_SCHEMA, phrase, DECODE_COLS)
             found = phrase_match_local(blocks, [(0, phrase)])[["doc_id", "occurrences"]]
             found = pa.Table.from_pandas(found, preserve_index=False)
-            return local_frame(
-                self.spark, self._doc_ids(found), "doc_id long, occurrences long"
-            )
+            return local_frame(self.spark, self._doc_ids(found), _PHRASE_SCHEMA)
         return self._doc_ids(
             phrase_match_stored(
                 self.positional_blocks, phrase, n_term_buckets=self.n_term_buckets
@@ -844,7 +862,7 @@ class StoredIndex:
             n_term_buckets=self.n_term_buckets,
             stats=self.stats,
         )
-        return self._collected(ranked, "query_id long, doc_id long, score_q long, rank int")
+        return self._collected(ranked, _PHRASE_RANKED_SCHEMA)
 
     def proximity(self, terms: list[str], window: int) -> DataFrame:
         """Order-free proximity search from the persisted positional blocks
@@ -876,7 +894,7 @@ def write_bucketed(
     key co-location is baked into the layout at write time, so the repeated
     postings<->term_stats / postings<->postings joins of a 100 TB warehouse
     pay the shuffle once (here) instead of per query
-    (tests/test_round3.py asserts the exchange-free plan). Bucketing rides
+    (tests/test_plans.py asserts the exchange-free plan). Bucketing rides
     the table catalog (saveAsTable), not plain parquet paths."""
     w = df.write.format("parquet").mode(mode).bucketBy(n_buckets, *bucket_cols)
     if sort_cols:

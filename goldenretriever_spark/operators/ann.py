@@ -391,14 +391,14 @@ def ivf_topk_from_lists(
     ``assigned``: (vec_id, embedding, centroid_id) exactly as
     :func:`ivf_assign` produced it, persisted at index time partitioned by
     ``centroid_id`` (``ivf_assign(...).write.partitionBy("centroid_id")``,
-    as tests/test_round6.py does). The probed
+    as tests/test_ann.py does). The probed
     centroid ids are collected driver-side (a tiny n_queries x n_probe list,
     same pattern as the stored-index term-bucket pruning) and applied as a
     partition filter BEFORE the join, so only the probed lists' partition
     directories are ever listed or read — per-batch scan cost is bounded by
     the probed lists' sizes, independent of corpus size, with no per-query
     corpus pass. Rank-identical to :func:`ivf_topk` on the same codebook
-    (tests/test_round6.py)."""
+    (tests/test_ann.py)."""
     probes = ivf_probes(qvecs, cent, n_probe)
     probe_ids = [
         r["centroid_id"] for r in probes.select("centroid_id").distinct().collect()
@@ -443,7 +443,7 @@ def q_ann_ivf_trained_topk(
     bounded sample; one parquet split -> fixed summation order at the
     graded scale), so the SERVING plan is oracle-checked against the pinned
     sf0.01 codebook literals (operators/ivf_codebook.py; drift guard in
-    tests/test_round5.py) while the training loop itself stays
+    tests/test_ann.py) while the training loop itself stays
     pytest-covered (determinism; recall > stand-in on clustered-structure
     embeddings at equal candidate budget; BENCH/ANN_RECALL.json).
     Honest caveat, measured: on the driver's

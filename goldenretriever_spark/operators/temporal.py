@@ -59,7 +59,7 @@ def as_of_join(
     # last(ignorenulls) would assemble a row that never existed whenever a
     # right column is null (r1=(a=1,b=null), r2=(a=null,b=2) -> (1,2) instead
     # of r2's (null,2)); true as-of semantics carry the whole latest row,
-    # nulls included (pandas.merge_asof equivalence: tests/test_round4.py).
+    # nulls included (pandas.merge_asof equivalence: tests/test_temporal.py).
     r = right.select(
         *on,
         F.col(right_ts).alias("__ts"),

@@ -35,7 +35,7 @@ from goldenretriever_spark.session import local_frame
 def query_tokens(queries, tokenizer: str = "simple") -> list[tuple[int, list[str]]]:
     """list[(query_id, query_str)] -> [(query_id, unique terms in first-seen
     order)], tokenized ON THE DRIVER with the oracle twin of the engine
-    tokenizer (equality-tested per input class, tests/test_round2): a
+    tokenizer (equality-tested per input class, tests/test_tokenizer.py): a
     query batch is tiny, and tokenizing it in Spark costs a shuffle and two
     stages inside every query call (r7, guide §2.4). Any other batch type
     raises ``TypeError``."""
@@ -57,15 +57,11 @@ def terms_frame(spark: SparkSession, qtoks: list[tuple[int, list[str]]]) -> Data
     local relation (session.local_frame), so broadcasting it runs no Spark
     job."""
     rows = [(qid, t) for qid, ts in qtoks for t in ts]
-    out = local_frame(
+    return local_frame(
         spark,
         {"query_id": [q for q, _ in rows], "term": [t for _, t in rows]},
         "query_id long, term string",
     )
-    # batch-width hint for downstream plan selection (top_k's shared
-    # agg/window exchange)
-    out._gr_n_queries = len({qid for qid, _ in qtoks})
-    return out
 
 
 def query_terms_df(spark: SparkSession, queries, tokenizer: str = "simple") -> DataFrame:
@@ -149,39 +145,10 @@ def top_k(index: InvertedIndex, terms: DataFrame, k: int = 10) -> DataFrame:
 
     For a single query this collapses to TakeOrderedAndProject via
     orderBy().limit(k); the window form handles query batches in one pass.
-
-    Wide batches (r7, guide §2.4): when the batch is at least as wide as
-    the shuffle-partition count (driver-known via terms_frame's hint),
-    an explicit ``repartition(query_id)`` BEFORE the aggregation lets the
-    (query_id, doc_id) hash-agg AND the per-query window share ONE
-    exchange — hash-partitioning on query_id satisfies both clusterings —
-    instead of agg-exchange + window-exchange. Narrow batches keep the
-    two-exchange plan: clustering a 1-query batch on query_id would
-    serialize its whole aggregation onto one task (the interactive-serve
-    case). Identical results either way — a pure plan change.
-
-    Scale note: this in-memory path is the modest-corpus oracle/eval
-    surface; the at-scale serving twin (wand.stored_score_candidates)
-    additionally bounds the per-query decode volume before choosing the
-    single-exchange plan (wand.WIDE_BATCH_MAX_ROWS_PER_QUERY), because
-    clustering huge per-query volumes on query_id measured slower at the
-    3.84M-doc scale point.
     """
-    spark = terms.sparkSession
-    n_queries = getattr(terms, "_gr_n_queries", None)
-    P = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    if n_queries is not None and n_queries >= P:
-        scores = (
-            explain_contributions(index, terms)
-            .repartition("query_id")
-            .groupBy("query_id", "doc_id")
-            .agg(F.sum("contribution").alias("score"))
-        )
-    else:
-        scores = score_candidates(index, terms)
     from goldenretriever_spark.query.wand import rank_top_k
 
-    return rank_top_k(scores, k)
+    return rank_top_k(score_candidates(index, terms), k)
 
 
 def search(

@@ -83,9 +83,7 @@ def scored_postings(
     return pd.DataFrame({"query_id": qids, "doc_id": ids, "c": c})
 
 
-def _decode_scored(
-    matched: DataFrame, avgdl: float, allowed_bc=None, repartition_q: bool = False
-) -> DataFrame:
+def _decode_scored(matched: DataFrame, avgdl: float, allowed_bc=None) -> DataFrame:
     """(query_id, term, idf, blobs) -> (query_id, doc_id, score) with exact
     BM25 sums. Blocks are self-contained (dls stored varint alongside tfs),
     so scoring needs no join back to doc_stats.
@@ -118,10 +116,6 @@ def _decode_scored(
     decoded = matched.select(*cols).mapInPandas(
         unpack, schema="query_id long, doc_id long, c double"
     )
-    if repartition_q:
-        # wide-batch plan (see bm25.top_k): one query_id exchange serves
-        # both this aggregation and the caller's per-query window
-        decoded = decoded.repartition("query_id")
     return decoded.groupBy("query_id", "doc_id").agg(F.sum("c").alias("score"))
 
 
@@ -197,27 +191,13 @@ def _resolve_batch(
     return _Batch(pruned, terms_frame(spark, qtoks), toksets, stats)
 
 
-def _score(spark: SparkSession, batch: _Batch, allowed_bc=None) -> DataFrame:
+def _score(batch: _Batch, allowed_bc=None) -> DataFrame:
     """(query_id, doc_id, score) over every candidate of a resolved batch."""
     n_docs, avgdl = batch.stats
-    max_terms = max((len(ts) for ts in batch.toksets.values()), default=0)
-    P = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    # Wide-batch single-exchange plan (see bm25.top_k) ONLY when the batch
-    # is wide AND the per-query decode volume is provably small: clustering
-    # on query_id gives at most n_queries parallel chunks with no map-side
-    # pre-aggregation, which LOST to the uniform (q,d) exchange at the
-    # 3.84M-doc scale point (BENCH/R7_SCALE.json qlen1 cell) while winning
-    # at bench scale. Bound: Σdf per query ≤ max_terms × n_docs, zero jobs.
-    wide = (
-        len(batch.toksets) >= P
-        and max_terms * n_docs <= WIDE_BATCH_MAX_ROWS_PER_QUERY
-    )
     matched = batch.pruned.join(F.broadcast(batch.qterms), "term").withColumn(
         "idf", idf_col(F.lit(float(n_docs)), F.col("df").cast("double"))
     )
-    return _decode_scored(
-        matched, avgdl, allowed_bc=allowed_bc, repartition_q=wide
-    )
+    return _decode_scored(matched, avgdl, allowed_bc=allowed_bc)
 
 
 def stored_score_candidates(
@@ -239,7 +219,7 @@ def stored_score_candidates(
     batch = _resolve_batch(
         spark, posting_blocks, corpus_stats, queries, tokenizer, n_term_buckets, stats
     )
-    return _score(spark, batch)
+    return _score(batch)
 
 
 def brute_top_k_stored(
@@ -263,7 +243,7 @@ def brute_top_k_stored(
     batch = _resolve_batch(
         spark, posting_blocks, corpus_stats, queries, tokenizer, n_term_buckets, stats
     )
-    return rank_top_k(_score(spark, batch), k, quantize)
+    return rank_top_k(_score(batch), k, quantize)
 
 
 def rank_top_k(scores: DataFrame, k: int, quantize: bool = False) -> DataFrame:
@@ -343,14 +323,6 @@ WAND_CROSSOVER_DECODE_ROWS = 4_500_000
 # (BENCH/WAND_MIXED.json).
 WAND_HEAVY_SHARE_MIN = 0.2
 
-# Wide-batch single-exchange scoring (repartition(query_id) serving both the
-# agg and the window) is only used when every query's decode volume is
-# provably under this bound — above it, per-query clustering concentrates
-# millions of rows on ≤n_queries tasks with no map-side combine and loses
-# to the uniform (q,d) exchange (measured both ways: ~10-15% win at sf0.1,
-# a loss at 3.84M docs — BENCH/R7_SCALE.json).
-WIDE_BATCH_MAX_ROWS_PER_QUERY = 2_000_000
-
 
 def dispatch_top_k(
     spark: SparkSession,
@@ -424,7 +396,7 @@ def dispatch_top_k(
 
     if max_terms * n_docs < crossover_rows:
         plan.update({"path": "brute_stored", "probed": False})
-        return rank_top_k(_score(spark, batch, allowed_bc), k, quantize), plan
+        return rank_top_k(_score(batch, allowed_bc), k, quantize), plan
 
     # the df probe reads only terms not yet in ``term_df_cache`` — the
     # per-handle memo StoredIndex passes (VERDICT r6 #4), so a repeated
@@ -472,7 +444,7 @@ def dispatch_top_k(
         plan["path"] = "wand"
         return _wand(spark, batch, k, allowed_bc, quantize), plan
     plan["path"] = "brute_stored"
-    return rank_top_k(_score(spark, batch, allowed_bc), k, quantize), plan
+    return rank_top_k(_score(batch, allowed_bc), k, quantize), plan
 
 
 def wand_top_k(

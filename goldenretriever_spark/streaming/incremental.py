@@ -78,12 +78,13 @@ def incremental_postings_build(
         # doc_stats is doc_id-partitioned on a real warehouse, so the
         # anti-join is co-partitioned there.
         docs = with_doc_ids(batch_df).dropDuplicates(["doc_id"])
+        # Only a missing store means "first batch": a store that exists
+        # but does not read (corrupt, another schema) raises, since
+        # skipping the dedupe would double-count.
         stats_path = os.path.join(out_dir, "doc_stats")
-        try:
+        if _path_exists(spark, stats_path):
             seen = spark.read.parquet(stats_path).select("doc_id")
             docs = docs.join(seen, "doc_id", "left_anti")
-        except Exception:
-            pass  # first batch: no store yet
         if not docs.take(1):
             return
         if positional:
@@ -130,6 +131,13 @@ def incremental_postings_build(
     )
 
 
+def _path_exists(spark: SparkSession, path: str) -> bool:
+    """Whether ``path`` exists, resolved as ``spark.read`` resolves it (a
+    scheme-less path on ``fs.defaultFS``)."""
+    p = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return p.getFileSystem(spark._jsc.hadoopConfiguration()).exists(p)
+
+
 def streamed_index_views(spark: SparkSession, out_dir: str):
     """Assemble the logical index over the streamed store: the staged
     postings and doc rows numbered once over the whole store
@@ -167,9 +175,9 @@ def compact_streamed_index(
     pos) rows and globally repacked — salts sized by the store-wide Σtf, not
     each batch's — so the republished ``positional_blocks`` serve
     phrase/proximity results identical to a clean batch build over the union
-    of inputs (tests/test_round6.py asserts it). This is the segment-merge
-    half of the Lucene model; decode+repack touches only the positional
-    store, never the raw corpus."""
+    of inputs (tests/test_sources_and_streaming.py asserts it). This is the
+    segment-merge half of the Lucene model; decode+repack touches only the
+    positional store, never the raw corpus."""
     from goldenretriever_spark.index.blocks import pack_blocks
     from goldenretriever_spark.index.storage import StoredIndex, write_index
 

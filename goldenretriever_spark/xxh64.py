@@ -11,7 +11,7 @@ https://github.com/Cyan4973/xxHash — the spec Spark's
 ``org.apache.spark.sql.catalyst.expressions.XxHash64`` implements) in pure
 Python over the string's UTF-8 bytes, so the bucket id costs nanoseconds and
 zero Spark jobs. Equality with the JVM expression is pytest-locked over a
-vocabulary sample (tests/test_round7.py) — build-time and query-time hashing
+vocabulary sample (tests/test_xxh64.py) — build-time and query-time hashing
 MUST agree or pruning silently drops buckets, which is why the twin is
 tested, not trusted.
 """

@@ -56,8 +56,6 @@ def test_compression_is_compact():
 def test_grouped_encode_bit_identical_to_per_block():
     """varint_encode_grouped + delta_encode_grouped must reproduce the
     per-block encoders byte for byte on random sorted runs."""
-    import numpy as np
-
     from goldenretriever_spark.index.codec import (
         delta_encode_grouped,
         delta_encode_sorted_ids,
@@ -81,8 +79,6 @@ def test_grouped_encode_bit_identical_to_per_block():
 def test_grouped_decode_matches_per_block():
     """varint_decode_many + delta_decode_grouped must reproduce the per-block
     decoders exactly, including empty buffers in any position."""
-    import numpy as np
-
     from goldenretriever_spark.index.codec import (
         delta_decode_grouped,
         delta_decode_sorted_ids,
@@ -109,3 +105,26 @@ def test_grouped_decode_matches_per_block():
     vals, cnts = varint_decode_many(tf_bufs)
     assert cnts.tolist() == [len(r) for r in tf_runs]
     assert (vals == np.concatenate([varint_decode(b) for b in tf_bufs])).all()
+
+
+def test_delta_decode_grouped_zero_count_runs():
+    """ADVICE r3 (low): varint_decode_many can legitimately return zero
+    counts (empty buffers, including trailing ones); delta_decode_grouped
+    must handle them instead of indexing out of bounds."""
+    from goldenretriever_spark.index.codec import (
+        delta_decode_grouped,
+        delta_encode_sorted_ids,
+        varint_decode_many,
+    )
+
+    runs = [[5, 7, 12], [], [3], [], []]  # empty + trailing empty buffers
+    bufs = [
+        bytes(delta_encode_sorted_ids(np.array(r, dtype=np.int64))) for r in runs
+    ]
+    deltas, counts = varint_decode_many(bufs)
+    assert counts.tolist() == [3, 0, 1, 0, 0]
+    out = delta_decode_grouped(deltas, counts)
+    assert out.tolist() == [5, 7, 12, 3]
+    # all-empty input
+    deltas2, counts2 = varint_decode_many([b"", b""])
+    assert delta_decode_grouped(deltas2, counts2).tolist() == []

@@ -6,6 +6,8 @@ and against a pure-Python sliding-window reference on randomized corpora,
 plus the overlap / duplicate-term / short-doc edge cases, plus a roundtrip
 of position arrays through the grouped delta-varint codec (positions are
 sorted ints exactly like doc-id runs, so the same storage format applies).
+The batched start-vote equals the per-phrase path, and phrase-boosted
+ranking equals the pure-Python reference through both of its entry points.
 """
 
 import random
@@ -233,3 +235,122 @@ def test_proximity_invalid_args(spark):
         proximity_match_stored(blocks, ["a"], 0)
     with pytest.raises(ValueError):
         proximity_match_scan(_docs(spark, rows), ["a"], 0)
+
+
+# ---------------------------------------------------------------- batches and ranking
+
+def test_phrase_batch_equals_per_phrase(spark):
+    """The batched start-vote must reproduce the per-phrase stored path
+    exactly — including overlapping occurrences and duplicate-term
+    phrases — while paying one decode for the whole batch."""
+    from goldenretriever_spark import corpus
+    from goldenretriever_spark.index.build import with_doc_ids
+    from goldenretriever_spark.query.phrase import (
+        phrase_match_stored,
+        phrase_match_stored_batch,
+    )
+
+    docs = with_doc_ids(spark.createDataFrame(corpus.synth_corpus_pandas(150, seed=9)))
+    blocks = pack_positional_blocks(docs, n_term_buckets=8).cache()
+    batch = [
+        (0, ["def", "return"]),
+        (1, ["#", "todo"]),
+        (2, ["def", "return", "def"]),   # duplicate-term phrase
+        (3, ["zzz_absent", "def"]),      # no matches
+    ]
+    got = sorted(
+        map(tuple, phrase_match_stored_batch(blocks, batch, n_term_buckets=8).collect())
+    )
+    want = sorted(
+        (qid, r["doc_id"], r["occurrences"])
+        for qid, ph in batch
+        for r in phrase_match_stored(blocks, ph, n_term_buckets=8).collect()
+    )
+    blocks.unpersist()
+    assert got == want
+    assert any(q == 0 for q, _, _ in got), "batch must have real matches"
+
+
+PHRASE_SETS = {
+    "with_absent": [(0, ["def", "return"]), (1, ["#", "todo"]), (2, ["zzz_absent"])],
+    "with_duplicate": [(1, ["def", "def"]), (2, ["return", "None"]), (3, ["for", "i", "in"])],
+}
+
+
+@pytest.fixture(scope="module")
+def ranked(spark, tmp_path_factory):
+    """The 150-doc seed-13 corpus behind both phrase-ranked entry points:
+    the pure-Python reference's index and token lists over it, and each
+    entry's ranker (phrases -> (query_id, rank, doc_id, score_q) rows, with
+    the entry's k). ``stored_index`` is StoredIndex.phrase_ranked over a
+    persisted index of 32-doc blocks; ``frames`` is
+    phrase_ranked_topk_stored over in-memory 16-doc blocks with salted
+    positional groups, its docnos mapped to doc_ids."""
+    from goldenretriever_spark import corpus
+    from goldenretriever_spark.index.blocks import pack_blocks
+    from goldenretriever_spark.index.build import build_index, with_doc_ids
+    from goldenretriever_spark.index.storage import StoredIndex, to_doc_ids, write_index
+    from goldenretriever_spark.oracle import build_oracle_index, simple_tokenize_text
+    from goldenretriever_spark.query.phrase import phrase_ranked_topk_stored
+
+    raw = spark.createDataFrame(corpus.synth_corpus_pandas(150, seed=13))
+    docs = with_doc_ids(raw)
+    content = {r["doc_id"]: r["content"] for r in docs.select("doc_id", "content").collect()}
+    oidx = build_oracle_index(list(content.items()))
+    toks = {d: simple_tokenize_text(c) for d, c in content.items()}
+
+    idx = build_index(docs, tokenizer="simple")
+    blocks = pack_blocks(idx, block_size=32, target_docs_per_group=1000, n_term_buckets=8)
+    pos = pack_positional_blocks(docs, postings=idx.postings, n_term_buckets=8)
+    idx_path = str(tmp_path_factory.mktemp("phrase_ranked") / "idx")
+    write_index(idx, idx_path, blocks=blocks, n_term_buckets=8, positional=pos)
+    stored = StoredIndex(spark, idx_path)
+
+    mem = build_index(raw, tokenizer="simple")
+    mem_pos = pack_positional_blocks(
+        raw, tokenizer="simple", postings=mem.postings,
+        target_positions_per_group=512, n_term_buckets=8, block_docs=16,
+    )
+    mem_blocks = pack_blocks(mem, block_size=16, target_docs_per_group=200, n_term_buckets=8)
+
+    def frames(phrases, k):
+        return to_doc_ids(
+            phrase_ranked_topk_stored(
+                spark, mem_blocks, mem.corpus_stats, mem_pos, phrases,
+                k=k, boost=1.0, n_term_buckets=8,
+            ),
+            mem.doc_stats,
+        )
+
+    rankers = {
+        "stored_index": (lambda phrases, k: stored.phrase_ranked(phrases, k=k), 5),
+        "frames": (frames, 10),
+    }
+    return oidx, toks, rankers
+
+
+@pytest.mark.parametrize("phrase_set", list(PHRASE_SETS))
+@pytest.mark.parametrize("entry", ["stored_index", "frames"])
+def test_phrase_ranked_equals_reference(ranked, entry, phrase_set):
+    """Phrase-boosted BM25 top-k from compressed posting blocks plus
+    positional blocks (no raw postings anywhere) == the pure-Python
+    reference (oracle.phrase_ranked_top_k: oracle BM25 over the phrase
+    terms + sliding-window exact occurrence count, boosted by
+    1.0*ln(1+occ), quantized x10000, score-desc/doc_id-asc top-k): full
+    rank identity including quantized scores and tie-breaks."""
+    from goldenretriever_spark.oracle import phrase_ranked_top_k
+
+    oidx, toks, rankers = ranked
+    run, k = rankers[entry]
+    phrases = PHRASE_SETS[phrase_set]
+    want = sorted(
+        (qid, rank, d, sq)
+        for qid, ph in phrases
+        for rank, d, sq in phrase_ranked_top_k(oidx, toks, ph, k=k, boost=1.0)
+    )
+    got = sorted(
+        (r["query_id"], r["rank"], r["doc_id"], r["score_q"])
+        for r in run(phrases, k).collect()
+    )
+    assert got == want
+    assert any(q == phrases[0][0] for q, _, _, _ in got)

@@ -13,10 +13,14 @@ from goldenretriever_spark.query import bm25
 
 
 @pytest.fixture(scope="module")
-def stored(spark, tmp_path_factory):
+def idx(spark):
+    """The 100-doc seed-33 index every plan test here reads."""
+    return build_index(spark.createDataFrame(corpus.synth_corpus_pandas(100, seed=33)))
+
+
+@pytest.fixture(scope="module")
+def stored(spark, idx, tmp_path_factory):
     path = str(tmp_path_factory.mktemp("idx"))
-    docs = spark.createDataFrame(corpus.synth_corpus_pandas(100, seed=33))
-    idx = build_index(docs)
     blocks = pack_blocks(idx, block_size=16, target_docs_per_group=64, n_term_buckets=8)
     write_index(idx, path, blocks=blocks, n_term_buckets=8)
     return StoredIndex(spark, path)
@@ -45,9 +49,7 @@ def test_predicate_pushdown_on_term(stored):
     assert "PushedFilters" in plan and "term" in plan
 
 
-def test_query_terms_join_is_broadcast(spark):
-    docs = spark.createDataFrame(corpus.synth_corpus_pandas(100, seed=33))
-    idx = build_index(docs)
+def test_query_terms_join_is_broadcast(spark, idx):
     terms = bm25.query_terms_df(spark, [(0, "def return cache")])
     scores = bm25.score_candidates(idx, terms)
     plan = _plan(scores)
@@ -55,12 +57,10 @@ def test_query_terms_join_is_broadcast(spark):
     assert "SortMergeJoin" not in plan, "scoring path should not sort-merge join"
 
 
-def test_bm25_scoring_stays_in_codegen(spark):
+def test_bm25_scoring_stays_in_codegen(spark, idx):
     """The BM25 arithmetic must be native Column math inside WholeStageCodegen
     — no BatchEvalPython / ArrowEvalPython in the scoring plan (simple
     tokenizer path)."""
-    docs = spark.createDataFrame(corpus.synth_corpus_pandas(100, seed=33))
-    idx = build_index(docs)
     terms = bm25.query_terms_df(spark, [(0, "def return")])
     df = bm25.top_k(idx, terms, k=5)
     df.collect()  # materialize so AQE finalizes the physical plan
@@ -246,3 +246,36 @@ def test_rrf_fuse_plan_two_shuffles_partial_combine(spark):
     assert "partial_sum" in plan, "map-side combine missing from fusion agg"
     assert "WindowGroupLimit" in plan and "Partial" in plan, plan
     assert "SortMergeJoin" not in plan and "CartesianProduct" not in plan
+
+
+def test_bucketed_tables_join_without_exchange(spark, tmp_path):
+    """Same-bucketing postings + term_stats must join with ZERO Exchange
+    nodes (co-located layout); the plain-parquet join of the same frames
+    shuffles both sides."""
+    from goldenretriever_spark.index.storage import write_bucketed
+
+    spark.sql(f"CREATE DATABASE IF NOT EXISTS bktdb LOCATION '{tmp_path}/wh'")
+    try:
+        docs = spark.createDataFrame(corpus.synth_corpus_pandas(150, seed=9))
+        idx = build_index(docs, persist=False)
+        write_bucketed(idx.postings, "bktdb.postings", ["term"], n_buckets=4,
+                       sort_cols=["term"])
+        write_bucketed(idx.term_stats, "bktdb.term_stats", ["term"], n_buckets=4,
+                       sort_cols=["term"])
+        prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        try:
+            j = spark.table("bktdb.postings").join(
+                spark.table("bktdb.term_stats"), "term"
+            )
+            plan = j._jdf.queryExecution().executedPlan().toString()
+            assert "Exchange" not in plan, plan
+            # sanity: same join un-bucketed DOES exchange
+            j2 = idx.postings.join(idx.term_stats, "term")
+            plan2 = j2._jdf.queryExecution().executedPlan().toString()
+            assert "Exchange" in plan2
+            assert j.count() == j2.count()
+        finally:
+            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    finally:
+        spark.sql("DROP DATABASE IF EXISTS bktdb CASCADE")

@@ -168,46 +168,3 @@ def test_has_positional_false_without_blocks(spark, tmp_path):
     path = str(tmp_path / "idx")
     write_index(idx, path, blocks=pack_blocks(idx), n_term_buckets=8)
     assert not StoredIndex(spark, path).has_positional()
-
-
-def test_phrase_ranked_topk_rank_identity(spark):
-    """phrase_ranked_topk_stored == the pure-Python reference
-    (oracle.phrase_ranked_top_k: oracle BM25 over the
-    phrase terms + sliding-window exact occurrence count, boosted by
-    1.0*ln(1+occ), quantized x10000, score-desc/doc_id-asc top-k) on a
-    randomized corpus — full rank identity including quantized scores."""
-    from goldenretriever_spark.index.blocks import pack_blocks
-    from goldenretriever_spark.index.build import build_index, with_doc_ids
-    from goldenretriever_spark.index.storage import to_doc_ids
-    from goldenretriever_spark.oracle import (
-        build_oracle_index,
-        phrase_ranked_top_k,
-        simple_tokenize_text,
-    )
-    from goldenretriever_spark.query.phrase import phrase_ranked_topk_stored
-
-    raw = spark.createDataFrame(corpus.synth_corpus_pandas(150, seed=13))
-    idx = build_index(raw, tokenizer="simple")
-    positional = pack_positional_blocks(
-        raw, tokenizer="simple", postings=idx.postings,
-        target_positions_per_group=512, n_term_buckets=8, block_docs=16,
-    )
-    blocks = pack_blocks(idx, block_size=16, target_docs_per_group=200, n_term_buckets=8)
-    phrases = [(1, ["def", "def"]), (2, ["return", "None"]), (3, ["for", "i", "in"])]
-    got = {}
-    res = to_doc_ids(
-        phrase_ranked_topk_stored(
-            spark, blocks, idx.corpus_stats, positional, phrases,
-            k=10, boost=1.0, n_term_buckets=8,
-        ),
-        idx.doc_stats,
-    )
-    for r in res.collect():
-        got.setdefault(r["query_id"], []).append((r["rank"], r["doc_id"], r["score_q"]))
-
-    docs_id = with_doc_ids(raw).select("doc_id", "content").collect()
-    oidx = build_oracle_index([(r["doc_id"], r["content"]) for r in docs_id])
-    toks = {r["doc_id"]: simple_tokenize_text(r["content"]) for r in docs_id}
-    for qid, ph in phrases:
-        expected = phrase_ranked_top_k(oidx, toks, ph, k=10, boost=1.0)
-        assert sorted(got.get(qid, [])) == sorted(expected), f"phrase {ph} diverged"

@@ -3,7 +3,7 @@ results pinned against the pure-Python oracle on both serve routes (the
 in-process ``local`` route and the Spark routes), driver-built frames
 planned as Arrow local relations, the content join-back of ``search`` and
 ``search_hybrid`` through both of its fetches, and the per-call Spark job
-budgets."""
+budgets (none to open a handle and read its stats)."""
 
 import math
 
@@ -189,6 +189,39 @@ def test_single_query_search_job_budget(spark, served_positional, documents, rou
         must=["def"], must_not=["return"]).collect())
     assert rows
     assert n <= 3, n
+
+
+def test_opening_a_handle_and_reading_stats_runs_no_job(spark, served):
+    """A handle reads _meta and corpus_stats in-process: opening one and
+    reading its stats runs no Spark job (the empty corpus's (0, 0.0):
+    test_empty_corpus_builds_and_serves)."""
+    from goldenretriever_spark.index.storage import StoredIndex
+
+    stored, oidx = served
+    stats, n = _jobs(spark, "test_serve_stats", lambda: StoredIndex(spark, stored.path).stats)
+    assert n == 0
+    assert stats[0] == oidx.n_docs
+    assert math.isclose(stats[1], oidx.avgdl, rel_tol=1e-12)
+
+
+def test_warm_search_with_content_parses_no_schema(spark, served, documents, monkeypatch, tmp_path):
+    """The serve calls' result schemas are built once, at import: a warm
+    local search(documents=) over a Parquet table parses no DDL string
+    (StructType.fromDDL goes through the JVM on every call)."""
+    from pyspark.sql.types import StructType
+
+    stored, _ = served
+    documents.select("doc_id", "content").write.parquet(str(tmp_path / "content"))
+    content = spark.read.parquet(str(tmp_path / "content"))
+    q = [(0, "def return")]
+    stored.search(q, k=10, documents=content).collect()  # warm the handle's memos
+    parsed = []
+    real = StructType.fromDDL
+    monkeypatch.setattr(
+        StructType, "fromDDL", classmethod(lambda cls, ddl: parsed.append(ddl) or real(ddl))
+    )
+    assert stored.search(q, k=10, documents=content).collect()
+    assert parsed == []
 
 
 def test_empty_filter_raises(served, route):
@@ -517,6 +550,8 @@ def test_empty_corpus_builds_and_serves(spark, documents, route, tmp_path):
         blocks=pack_blocks(idx),
         positional=pack_positional_blocks(docs, postings=idx.postings),
     )
+    stats, n = _jobs(spark, "test_serve_empty_stats", lambda: StoredIndex(spark, path).stats)
+    assert (stats, n) == ((0, 0.0), 0)
     for name in map(route, ROUTES):
         stored = StoredIndex(spark, path)
         assert stored.stats == (0, 0.0)
@@ -784,3 +819,34 @@ def test_crossover_tool_treats_a_cached_index_without_the_token_as_stale(
     stale = _without_format_token(served_positional.path, tmp_path)
     assert not _cached_index_is_current(spark, stale)
     assert not _cached_index_is_current(spark, str(tmp_path / "missing"))
+
+
+def test_stored_index_search_dispatch(spark, tmp_path):
+    """StoredIndex.search = write_index -> dispatch_top_k with the persisted
+    bucket count; must equal the in-memory brute ranking."""
+    from goldenretriever_spark import corpus
+    from goldenretriever_spark.index.blocks import pack_blocks
+    from goldenretriever_spark.index.build import build_index
+    from goldenretriever_spark.index.storage import StoredIndex, write_index
+    from goldenretriever_spark.query import bm25
+
+    docs = spark.createDataFrame(corpus.synth_corpus_pandas(200, seed=13))
+    idx = build_index(docs, tokenizer="simple")
+    blocks = pack_blocks(idx, block_size=16, target_docs_per_group=60, n_term_buckets=8)
+    path = str(tmp_path / "idx")
+    write_index(idx, path, blocks=blocks, n_term_buckets=8)
+
+    qlist = [(0, "def return"), (1, "cache buffer fast")]
+    stored = StoredIndex(spark, path)
+    got = sorted(
+        (r["query_id"], r["rank"], r["doc_id"], r["score"])
+        for r in stored.search(qlist, k=5).collect()
+    )
+    terms = bm25.query_terms_df(spark, qlist)
+    want = sorted(
+        (r["query_id"], r["rank"], r["doc_id"], r["score"])
+        for r in bm25.top_k(idx, terms, k=5).collect()
+    )
+    assert [g[:3] for g in got] == [w[:3] for w in want]
+    for g, w in zip(got, want):
+        assert math.isclose(g[3], w[3], rel_tol=1e-9)

@@ -36,19 +36,14 @@ def main() -> None:
     # in one 16g JVM that spills, while 2 tasks fit, silently destroying
     # measured scaling efficiency. ~50k docs/partition keeps every task's
     # agg/sort working set in memory at all levels.
-    parts = int(os.environ.get(
-        "SPARK_GRAFT_SHUFFLE_PARTITIONS", max(2 * max(cpus, 8), n_docs // 50_000)
-    ))
+    parts = max(2 * max(cpus, 8), n_docs // 50_000)
     # SPARK_GRAFT_CLUSTER=1: run as local-cluster[cpus,1,mem] — `cpus`
     # single-core executor JVMs instead of one JVM with cpus threads. This is
     # the faithful N->4N *executor* proxy (separate GC, separate arenas,
     # worker-process Python UDFs shipped via --py-files/addPyFile).
     if os.environ.get("SPARK_GRAFT_CLUSTER") == "1":
         os.environ["SPARK_GRAFT_MASTER"] = f"local-cluster[{cpus},1,4096]"
-    spark = get_spark(
-        "gr-build-job", cores=cpus, shuffle_partitions=parts,
-        extra_conf={"spark.io.compression.codec": os.environ.get("SPARK_GRAFT_IO_CODEC", "lz4")},
-    )
+    spark = get_spark("gr-build-job", cores=cpus, shuffle_partitions=parts)
     if os.environ.get("SPARK_GRAFT_CLUSTER") == "1":
         from goldenretriever_spark.deploy import attach_package
 
