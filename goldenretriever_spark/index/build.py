@@ -95,7 +95,7 @@ def resolve_doc_id_collisions(
     then fails loudly rather than merging postings silently.
 
     ``_hash(r) -> Column`` is injectable so tests can force collisions with a
-    mock hash at round 0 (tests/test_build.py).
+    mock hash at round 0 (tests/test_round3.py).
     """
     if _hash is None:
         def _hash(r: int):

@@ -894,7 +894,7 @@ def write_bucketed(
     key co-location is baked into the layout at write time, so the repeated
     postings<->term_stats / postings<->postings joins of a 100 TB warehouse
     pay the shuffle once (here) instead of per query
-    (tests/test_plans.py asserts the exchange-free plan). Bucketing rides
+    (tests/test_round3.py asserts the exchange-free plan). Bucketing rides
     the table catalog (saveAsTable), not plain parquet paths."""
     w = df.write.format("parquet").mode(mode).bucketBy(n_buckets, *bucket_cols)
     if sort_cols:

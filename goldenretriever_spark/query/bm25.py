@@ -35,7 +35,7 @@ from goldenretriever_spark.session import local_frame
 def query_tokens(queries, tokenizer: str = "simple") -> list[tuple[int, list[str]]]:
     """list[(query_id, query_str)] -> [(query_id, unique terms in first-seen
     order)], tokenized ON THE DRIVER with the oracle twin of the engine
-    tokenizer (equality-tested per input class, tests/test_tokenizer.py): a
+    tokenizer (equality-tested per input class, tests/test_round2.py): a
     query batch is tiny, and tokenizing it in Spark costs a shuffle and two
     stages inside every query call (r7, guide §2.4). Any other batch type
     raises ``TypeError``."""

@@ -15,7 +15,7 @@ group across executors.
 Emission timing follows the watermark: a window flushes once the watermark
 (advanced by the no-data flush micro-batch at the end of each drain) passes
 its end. Late-vs-dropped behavior across multiple drains is pytest-verified
-(tests/test_sources_and_streaming.py); a single drain over a static table
+(tests/test_round3.py); a single drain over a static table
 has a closed-form result — windows ending at or before max(ts) - delay —
 which is the driver-contract twin (stream_windowed_counts).
 """

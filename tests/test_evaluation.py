@@ -1,7 +1,6 @@
-"""Eval harness (operators/evaluation.py, operators/split.py): MRR /
-recall@k, accuracy@k and hard-negative mining vs hand-computed values
-(the reference's src/finetune/eval.py:12-48), and the deterministic
-train/test split."""
+"""Eval harness (operators/evaluation.py): MRR /
+recall@k and their per-kb rollup vs hand-computed values (the reference's
+src/finetune/eval.py:12-48)."""
 
 from pyspark.sql import functions as F
 
@@ -52,50 +51,3 @@ def test_metrics_per_kb_rollup(spark):
     assert rows["kb_a"]["n_queries"] == 1 and rows["kb_a"]["mrr_q"] == 10000
     assert rows["kb_b"]["n_queries"] == 1 and rows["kb_b"]["mrr_q"] == 3333
     assert rows["ALL"]["n_queries"] == 2 and rows["ALL"]["mrr_q"] == 6667
-
-
-def test_hard_negatives_and_accuracy(spark):
-    from goldenretriever_spark.operators.evaluation import accuracy_at_k, hard_negatives
-
-    ranked = spark.createDataFrame(
-        [  # q0: gold at rank 2 -> hard neg is rank-1 doc 10
-            (0, 10, 1), (0, 20, 2), (0, 30, 3),
-            # q1: gold at rank 1 -> hard neg is rank-2 doc 21
-            (1, 21, 1), (1, 22, 2),
-            # q2: gold absent from ranking -> hard neg is its rank-1
-            (2, 31, 1), (2, 32, 2),
-        ],
-        "query_id long, doc_id long, rank long",
-    )
-    qrels = spark.createDataFrame(
-        [(0, 20), (1, 21), (2, 99)], "query_id long, doc_id long"
-    )
-    neg = {r["query_id"]: (r["neg_doc_id"], r["neg_rank"])
-           for r in hard_negatives(ranked, qrels).collect()}
-    assert neg == {0: (10, 1), 1: (22, 2), 2: (31, 1)}
-
-    acc = accuracy_at_k(ranked, qrels).collect()[0]
-    # gold in top-1: only q1 -> 1/3; top-2: q0+q1 -> 2/3 (q2 never)
-    assert acc["accuracy_at_1_q"] == round(1 / 3 * 10000)
-    assert acc["accuracy_at_2_q"] == round(2 / 3 * 10000)
-    assert acc["accuracy_at_3_q"] == round(2 / 3 * 10000)
-
-
-def test_train_test_split_deterministic_and_sized(spark):
-    from goldenretriever_spark.operators.split import train_test_split
-
-    d = spark.range(0, 2000).withColumnRenamed("id", "k")
-    s1 = train_test_split(d, "k")
-    s2 = train_test_split(d, "k")
-    assert s1.collect() == s2.collect()  # deterministic
-    frac = s1.filter(F.col("split") == "test").count() / 2000
-    assert 0.3 < frac < 0.5  # expected 0.4
-    # seed changes the assignment
-    s3 = train_test_split(d, "k", seed=7)
-    moved = (
-        s1.alias("a")
-        .join(s3.alias("b"), F.col("a.k") == F.col("b.k"))
-        .filter(F.col("a.split") != F.col("b.split"))
-        .count()
-    )
-    assert moved > 0

@@ -1,13 +1,11 @@
-"""Media operators (operators/multimodal.py): header decode, frame
-sampling, byte-histogram features and resize."""
+"""Media operators (operators/multimodal.py): header decode and frame
+sampling."""
 
 from pyspark.sql import functions as F
 
 from goldenretriever_spark.operators.multimodal import (
     decode_media,
-    extract_features,
     frame_sample,
-    resize_media,
     synth_media,
 )
 
@@ -22,22 +20,3 @@ def test_multimodal_decode_and_frame_sample(spark):
         assert (r["kind"] == "video") == (r["n_frames"] > 1)
     frames = frame_sample(media, every=2)
     assert frames.filter(F.col("frame_idx") % 2 != 0).count() == 0
-
-
-def test_multimodal_features_and_resize(spark):
-    """Byte-histogram features are a real deterministic computation (sum to
-    1, stable); resize rewrites header dims and composes with decode while
-    leaving the body intact (payload_bytes unchanged)."""
-    media = synth_media(spark, "/root/testdata/sf0.001").limit(20).cache()
-    feats = extract_features(media).collect()
-    assert len(feats) == 20
-    for r in feats:
-        assert len(r["features"]) == 16
-        assert abs(sum(r["features"]) - 1.0) < 1e-9
-
-    before = {r["doc_id"]: r for r in decode_media(media).collect()}
-    after = {r["doc_id"]: r for r in decode_media(resize_media(media, 64, 48)).collect()}
-    for d, r in after.items():
-        assert (r["width"], r["height"]) == (64, 48)
-        assert r["n_frames"] == before[d]["n_frames"]
-        assert r["payload_bytes"] == before[d]["payload_bytes"]

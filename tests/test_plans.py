@@ -246,36 +246,3 @@ def test_rrf_fuse_plan_two_shuffles_partial_combine(spark):
     assert "partial_sum" in plan, "map-side combine missing from fusion agg"
     assert "WindowGroupLimit" in plan and "Partial" in plan, plan
     assert "SortMergeJoin" not in plan and "CartesianProduct" not in plan
-
-
-def test_bucketed_tables_join_without_exchange(spark, tmp_path):
-    """Same-bucketing postings + term_stats must join with ZERO Exchange
-    nodes (co-located layout); the plain-parquet join of the same frames
-    shuffles both sides."""
-    from goldenretriever_spark.index.storage import write_bucketed
-
-    spark.sql(f"CREATE DATABASE IF NOT EXISTS bktdb LOCATION '{tmp_path}/wh'")
-    try:
-        docs = spark.createDataFrame(corpus.synth_corpus_pandas(150, seed=9))
-        idx = build_index(docs, persist=False)
-        write_bucketed(idx.postings, "bktdb.postings", ["term"], n_buckets=4,
-                       sort_cols=["term"])
-        write_bucketed(idx.term_stats, "bktdb.term_stats", ["term"], n_buckets=4,
-                       sort_cols=["term"])
-        prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        try:
-            j = spark.table("bktdb.postings").join(
-                spark.table("bktdb.term_stats"), "term"
-            )
-            plan = j._jdf.queryExecution().executedPlan().toString()
-            assert "Exchange" not in plan, plan
-            # sanity: same join un-bucketed DOES exchange
-            j2 = idx.postings.join(idx.term_stats, "term")
-            plan2 = j2._jdf.queryExecution().executedPlan().toString()
-            assert "Exchange" in plan2
-            assert j.count() == j2.count()
-        finally:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-    finally:
-        spark.sql("DROP DATABASE IF EXISTS bktdb CASCADE")

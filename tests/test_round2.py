@@ -1,19 +1,29 @@
-"""Round-2 additions: scale-safe dense ids, train/test split, hard-negative
-mining, accuracy@k, LSH/shingle bucket caps, SimHash pairs, vectorized code
-tokenizer equivalence, empty-pack-partition guard, PDF ingestion, whitespace
-tokenizer parity, streaming cross-file dedup, CSV cutoff."""
+"""Dense value-ordered ids (sources/kb.py), the train/test split and
+hard-negative mining (operators/split.py, operators/evaluation.py), LSH and
+shingle bucket caps and SimHash pairs (operators/dedup.py), tokenizer
+parity (tokenizer.py), PDF and CSV ingestion (sources/), and cross-file doc
+dedupe in the streaming build (streaming/incremental.py)."""
 
+import duckdb
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
 from goldenretriever_spark import corpus
-from goldenretriever_spark.sources.kb import unique_ids
+from goldenretriever_spark.operators import dedup
+from goldenretriever_spark.oracle import simple_tokenize_text
+from goldenretriever_spark.sources.kb import parse_csv, unique_ids
+from goldenretriever_spark.streaming.incremental import (
+    incremental_postings_build,
+    streamed_index_views,
+)
+from goldenretriever_spark.tokenizer import (
+    SIMPLE_SPLIT_SQL,
+    code_tokenize_series,
+    code_tokenize_text,
+    simple_tokens,
+)
 
-SF = "/root/testdata/sf0.001"
-
-
-# ---------------------------------------------------------------- dense ids
 
 def test_unique_ids_value_order_and_dense(spark):
     df = spark.createDataFrame(
@@ -38,8 +48,6 @@ def test_unique_ids_no_single_partition_exchange(spark):
     assert len(set(r["vid"] for r in rows)) == 5000
 
 
-# ---------------------------------------------------------------- split
-
 def test_train_test_split_deterministic_and_sized(spark):
     from goldenretriever_spark.operators.split import train_test_split
 
@@ -59,8 +67,6 @@ def test_train_test_split_deterministic_and_sized(spark):
     )
     assert moved > 0
 
-
-# ---------------------------------------------------------------- eval ops
 
 def test_hard_negatives_and_accuracy(spark):
     from goldenretriever_spark.operators.evaluation import accuracy_at_k, hard_negatives
@@ -89,13 +95,9 @@ def test_hard_negatives_and_accuracy(spark):
     assert acc["accuracy_at_3_q"] == round(2 / 3 * 10000)
 
 
-# ---------------------------------------------------------------- dedup caps
-
 def test_lsh_bucket_cap_bounds_viral_pairs(spark, tmp_path, monkeypatch):
     """One viral boilerplate text repeated n times must not produce O(n^2)
     candidate pairs once the bucket cap kicks in."""
-    from goldenretriever_spark.operators import dedup
-
     n = 40
     rows = [(i, "the same viral boilerplate text repeated all over the corpus again") for i in range(n)]
     rows += [(1000 + i, f"unique document number {i} with its own words {i * 7}") for i in range(10)]
@@ -117,8 +119,6 @@ def test_lsh_bucket_cap_bounds_viral_pairs(spark, tmp_path, monkeypatch):
 
 
 def test_simhash_pairs_find_near_dups(spark, tmp_path):
-    from goldenretriever_spark.operators import dedup
-
     base = "spark builds an inverted index with postings compressed into blocks"
     rows = [
         (1, base),
@@ -134,11 +134,7 @@ def test_simhash_pairs_find_near_dups(spark, tmp_path):
     assert all(p == (1, 2) for p in pairs)
 
 
-# ---------------------------------------------------------------- tokenizer
-
 def test_code_tokenizer_vectorized_equals_scalar():
-    from goldenretriever_spark.tokenizer import code_tokenize_series, code_tokenize_text
-
     cases = [
         "HelloWorld fooBar_baz qux123Quux",
         "café résumé naïve é́ stacked",
@@ -158,11 +154,6 @@ def test_code_tokenizer_vectorized_equals_scalar():
 def test_simple_tokenizer_whitespace_parity(spark):
     """Engine (Java regex), Python oracle and DuckDB (RE2) must agree on
     non-ASCII whitespace: NBSP and U+2028 are NOT separators."""
-    import duckdb
-
-    from goldenretriever_spark.oracle import simple_tokenize_text
-    from goldenretriever_spark.tokenizer import SIMPLE_SPLIT_SQL, simple_tokens
-
     text = "a b c d e\tf\x0bg"
     engine = spark.createDataFrame([(text,)], "t string").select(
         simple_tokens(F.col("t")).alias("toks")
@@ -175,8 +166,6 @@ def test_simple_tokenizer_whitespace_parity(spark):
     ).fetchone()[0]
     assert engine == oracle == duck == ["a b", "c d", "e", "f", "g"]
 
-
-# ---------------------------------------------------------------- pdf source
 
 def test_pdf_parse_end_to_end(spark, tmp_path):
     from goldenretriever_spark.sources.pdf import (
@@ -202,15 +191,9 @@ def test_pdf_parse_end_to_end(spark, tmp_path):
         real_text_extractor(b"%PDF-1.4 real bytes")
 
 
-# ---------------------------------------------------------------- streaming
-
 def test_streaming_dedups_same_doc_across_files(spark, tmp_path):
     """The same (repo,path,commit) doc in two input files must index once —
     file-level exactly-once does not cover doc-level duplicates."""
-    from goldenretriever_spark.streaming.incremental import (
-        incremental_postings_build, streamed_index_views,
-    )
-
     docs = spark.createDataFrame(corpus.synth_corpus_pandas(30, seed=5))
     docs.coalesce(1).write.parquet(f"{tmp_path}/in/f1")
     docs.filter(F.col("path").isNotNull()).limit(10).coalesce(1).write.parquet(
@@ -225,11 +208,7 @@ def test_streaming_dedups_same_doc_across_files(spark, tmp_path):
     assert dup_postings == 0
 
 
-# ---------------------------------------------------------------- csv cutoff
-
 def test_parse_csv_cutoff(spark, tmp_path):
-    from goldenretriever_spark.sources.kb import parse_csv
-
     lines = ["ans_str,query_str,context_str"] + [
         f"answer {i},question {i},ctx" for i in range(20)
     ]

@@ -1,13 +1,45 @@
-"""Round-3 additions: doc_id collision rehash, brute/WAND auto-dispatch
-support pieces, S7 csv export roundtrip, S8 jdbc option plumbing."""
+"""The doc_id collision rehash (index/build.py), embedding near-dups
+(operators/dedup.py), CSV export and JDBC options (sources/), the
+StoredIndex search dispatch, multi-probe LSH (operators/ann.py), the
+streaming dedupe, windowed counts and streamed-then-compacted index
+(streaming/), the as-of and binned range joins (operators/temporal.py),
+media features (operators/multimodal.py) and bucketed joins without an
+exchange (index/storage.py)."""
 
+import math
+from datetime import datetime, timedelta
+
+import numpy as np
+import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
+from goldenretriever_spark import corpus
 from goldenretriever_spark.index.build import (
     build_index,
     check_doc_id_collisions,
     resolve_doc_id_collisions,
     with_doc_ids,
+)
+from goldenretriever_spark.operators import ann
+from goldenretriever_spark.operators.ann import probe_masks
+from goldenretriever_spark.operators.dedup import embedding_neardup_pairs
+from goldenretriever_spark.operators.multimodal import (
+    decode_media,
+    extract_features,
+    resize_media,
+    synth_media,
+)
+from goldenretriever_spark.operators.temporal import as_of_join, range_join_binned
+from goldenretriever_spark.query import bm25
+from goldenretriever_spark.streaming.incremental import (
+    compact_streamed_index,
+    incremental_postings_build,
+)
+from goldenretriever_spark.streaming.stateful import deduped_view, streaming_dedupe
+from goldenretriever_spark.streaming.windowed import (
+    streaming_windowed_counts,
+    window_counts_view,
 )
 
 
@@ -65,8 +97,6 @@ def test_collision_rehash_multi_round_fixpoint(spark):
 
 
 def test_collision_rehash_fails_loudly_when_unresolvable(spark):
-    import pytest
-
     docs = _docs(spark, 3).withColumn("doc_id", F.lit(1))
     with pytest.raises(RuntimeError, match="collisions persist"):
         resolve_doc_id_collisions(docs, max_rounds=2, _hash=lambda r: F.lit(1))
@@ -86,10 +116,6 @@ def test_embedding_neardup_finds_cross_label_pair(spark):
     """r2 blocked on `label` and silently missed cross-label near-dups; the
     LSH-bucket blocking must find a near-identical pair with different
     labels (label no longer participates at all)."""
-    import numpy as np
-
-    from goldenretriever_spark.operators.dedup import embedding_neardup_pairs
-
     rng = np.random.default_rng(3)
     base = rng.standard_normal(64)
     near = base + 0.01 * rng.standard_normal(64)
@@ -123,9 +149,8 @@ def test_export_csv_roundtrip(spark, tmp_path):
 def test_jdbc_option_plumbing():
     """S8: partitionColumn/bounds/numPartitions land in the reader options;
     bounds are mandatory with a partition column (no silent single-task
-    scan). No driver jar ships in the sandbox, so load() is not exercised."""
-    import pytest
-
+    scan). No JDBC driver jar ships with the project, so load() is not
+    exercised."""
     from goldenretriever_spark.sources.jdbc import jdbc_options
 
     opts = jdbc_options(
@@ -145,8 +170,6 @@ def test_jdbc_option_plumbing():
 def test_stored_index_search_dispatch(spark, tmp_path):
     """StoredIndex.search = write_index -> dispatch_top_k with the persisted
     bucket count; must equal the in-memory brute ranking."""
-    import math
-
     from goldenretriever_spark import corpus
     from goldenretriever_spark.index.blocks import pack_blocks
     from goldenretriever_spark.index.build import build_index
@@ -176,8 +199,6 @@ def test_stored_index_search_dispatch(spark, tmp_path):
 
 
 def test_probe_masks_radius():
-    from goldenretriever_spark.operators.ann import probe_masks
-
     assert probe_masks(4, 0) == [0]
     assert sorted(probe_masks(4, 1)) == [0, 1, 2, 4, 8]
     m2 = probe_masks(4, 2)
@@ -189,8 +210,6 @@ def test_probe_masks_radius():
 def test_multiprobe_radius2_recall_superset(spark):
     """radius-2 probing must return candidates at least as good as radius-1
     (per query, every radius-1 hit is also a radius-2 candidate)."""
-    from goldenretriever_spark.operators import ann
-
     sf = "/root/testdata/sf0.001"
     r1 = {(r["query_id"], r["vec_id"]) for r in ann.q_ann_lsh(spark, sf, k=20, radius=1).collect()}
     r2 = ann.q_ann_lsh(spark, sf, k=20, radius=2)
@@ -201,11 +220,6 @@ def test_streaming_stateful_dedupe_across_batches(spark, tmp_path):
     """applyInPandasWithState dedupe: each distinct content digest is emitted
     exactly once across micro-batches AND query restarts (state survives via
     the checkpoint); first occurrence wins deterministically."""
-    from goldenretriever_spark.streaming.stateful import (
-        deduped_view,
-        streaming_dedupe,
-    )
-
     in_dir, out_dir = str(tmp_path / "in"), str(tmp_path / "out")
     b1 = spark.createDataFrame(
         [
@@ -244,13 +258,6 @@ def test_streaming_windowed_counts_watermark(spark, tmp_path):
     """Windowed append-mode counts: a window emits once the watermark passes
     its end; an event later than the watermark for a closed window is
     dropped; the still-open tail window is not emitted."""
-    from datetime import datetime
-
-    from goldenretriever_spark.streaming.windowed import (
-        streaming_windowed_counts,
-        window_counts_view,
-    )
-
     in_dir, out_dir = str(tmp_path / "in"), str(tmp_path / "out")
     schema = (
         "event_id long, ts timestamp, user_id long, event_type string, "
@@ -298,16 +305,6 @@ def test_streamed_then_compacted_index_serves_identically(spark, tmp_path):
     """Ingest->serve loop: stream two doc batches, compact the appended
     postings into the block index, and StoredIndex.search must equal
     brute-force BM25 over a clean batch build of the union."""
-    import math
-
-    from goldenretriever_spark import corpus
-    from goldenretriever_spark.index.build import build_index
-    from goldenretriever_spark.query import bm25
-    from goldenretriever_spark.streaming.incremental import (
-        compact_streamed_index,
-        incremental_postings_build,
-    )
-
     in_dir, out_dir = str(tmp_path / "in"), str(tmp_path / "out")
     all_docs = corpus.synth_corpus_pandas(120, seed=21)
     spark.createDataFrame(all_docs.iloc[:70]).write.mode("append").parquet(in_dir)
@@ -334,14 +331,14 @@ def test_streamed_then_compacted_index_serves_identically(spark, tmp_path):
         assert math.isclose(g[3], w[3], rel_tol=1e-9)
 
 
+def _t(m: int) -> datetime:
+    return datetime(2024, 1, 1, 0, m)
+
+
 def test_as_of_join_semantics(spark):
     """Point-in-time: latest right row with ts <= left ts per key; equal ts
     is inclusive (right wins); no prior right row -> nulls; equal-ts right
     rows resolve to max id."""
-    from datetime import datetime
-
-    from goldenretriever_spark.operators.temporal import as_of_join
-
     t = lambda m: datetime(2024, 1, 1, 0, m)  # noqa: E731
     left = spark.createDataFrame(
         [(1, "u1", t(10)), (2, "u1", t(30)), (3, "u2", t(5)), (4, "u1", t(20))],
@@ -366,10 +363,6 @@ def test_range_join_binned_equals_theta(spark):
     """Binned range join must equal the naive theta join exactly (window
     boundaries inclusive both ends), at bin widths above and below the
     window."""
-    from datetime import datetime, timedelta
-
-    from goldenretriever_spark.operators.temporal import range_join_binned
-
     base = datetime(2024, 1, 1)
     left = spark.createDataFrame(
         [(i, f"u{i % 3}", base + timedelta(minutes=17 * i)) for i in range(40)],
@@ -401,13 +394,6 @@ def test_multimodal_features_and_resize(spark):
     """Byte-histogram features are a real deterministic computation (sum to
     1, stable); resize rewrites header dims and composes with decode while
     leaving the body intact (payload_bytes unchanged)."""
-    from goldenretriever_spark.operators.multimodal import (
-        decode_media,
-        extract_features,
-        resize_media,
-        synth_media,
-    )
-
     media = synth_media(spark, "/root/testdata/sf0.001").limit(20).cache()
     feats = extract_features(media).collect()
     assert len(feats) == 20
@@ -427,8 +413,6 @@ def test_bucketed_tables_join_without_exchange(spark, tmp_path):
     """Same-bucketing postings + term_stats must join with ZERO Exchange
     nodes (co-located layout); the plain-parquet join of the same frames
     shuffles both sides."""
-    from goldenretriever_spark import corpus
-    from goldenretriever_spark.index.build import build_index
     from goldenretriever_spark.index.storage import write_bucketed
 
     spark.sql(f"CREATE DATABASE IF NOT EXISTS bktdb LOCATION '{tmp_path}/wh'")
@@ -461,11 +445,6 @@ def test_bucketed_tables_join_without_exchange(spark, tmp_path):
 def test_as_of_join_randomized_vs_pandas(spark):
     """Randomized cross-check: union+window as-of join equals a per-row
     pandas argmax reference on seeded random data (3 seeds)."""
-    import numpy as np
-    import pandas as pd
-
-    from goldenretriever_spark.operators.temporal import as_of_join
-
     for seed in (0, 1, 2):
         rng = np.random.default_rng(seed)
         left = pd.DataFrame({

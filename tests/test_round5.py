@@ -1,30 +1,29 @@
-"""Round-5 coverage: pinned trained-IVF codebook (oracle drift guard),
-large-star/small-star connected components vs union-find, and the
-non-convergence guard ADVICE r4 asked for."""
+"""The pinned trained-IVF codebook (operators/ivf_codebook.py),
+large-star/small-star connected components against one union-find
+reference and its non-convergence guard (operators/dedup.py), the driver's
+file-parse rows, and reciprocal-rank fusion (query/hybrid.py) against the
+closed form and a pure-Python reference."""
 
+import random
+
+import numpy as np
 import pytest
 
+from goldenretriever_spark.operators.ann import train_centroids_kmeans
+from goldenretriever_spark.operators.dedup import connected_components_star
+from goldenretriever_spark.operators.ivf_codebook import CODEBOOK_SF001
+from goldenretriever_spark.query.hybrid import RRF_K0, RRF_QUANT, rrf_fuse
 
-# ---------------------------------------------------------------------------
-# trained-IVF codebook pin (VERDICT r4 #4)
-# ---------------------------------------------------------------------------
 
 def test_trained_codebook_matches_pinned(spark):
     """The sf0.01 k-means training must reproduce the literals the DuckDB
     oracle for ann_ivf_trained_topk was generated from — if this drifts
     (data change, algorithm change, nondeterminism), the contract row would
     hash-mismatch, and this test points at why."""
-    from goldenretriever_spark.operators.ann import train_centroids_kmeans
-    from goldenretriever_spark.operators.ivf_codebook import CODEBOOK_SF001
-
     emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
     cb = train_centroids_kmeans(emb, n_centroids=8, iters=3, seed=42)
     assert cb == CODEBOOK_SF001
 
-
-# ---------------------------------------------------------------------------
-# connected components: star alternation vs union-find (VERDICT r4 #6)
-# ---------------------------------------------------------------------------
 
 def _components(df):
     return {(r["id"], r["component"]) for r in df.collect()}
@@ -46,8 +45,6 @@ def _union_find(edge_list):
 
 
 def _random_edges(n_nodes=200, n_edges=300, seed=17):
-    import numpy as np
-
     rng = np.random.default_rng(seed)
     return [(int(a), int(b)) for a, b in rng.integers(0, n_nodes, size=(n_edges, 2))]
 
@@ -63,14 +60,35 @@ def _edges_df(spark, edge_list):
     return spark.createDataFrame(edge_list, "doc_a long, doc_b long")
 
 
-@pytest.mark.parametrize("graph", ["random", "chain"])
-def test_star_equals_union_find(spark, graph):
-    """The star rewrites equal a union-find reference."""
-    from goldenretriever_spark.operators.dedup import connected_components_star
+def _mixed_edges(seed):
+    """80 random edges over 120 ids plus a disjoint 60-edge chain, whose
+    diameter is slow for plain neighbor propagation."""
+    rng = np.random.default_rng(seed)
+    edge_list = [
+        (int(a), int(b))
+        for a, b in zip(rng.integers(0, 120, 80), rng.integers(0, 120, 80))
+        if a != b
+    ]
+    return edge_list + [(1000 + i, 1000 + i + 1) for i in range(60)]
 
-    edge_list = _random_edges() if graph == "random" else _chain_edges()
+
+GRAPHS = {
+    "mixed0": (lambda: _mixed_edges(0), 50),
+    "mixed1": (lambda: _mixed_edges(1), 50),
+    "mixed2": (lambda: _mixed_edges(2), 50),
+    "random": (_random_edges, 60),
+    "chain": (_chain_edges, 60),
+}
+
+
+@pytest.mark.parametrize("graph", list(GRAPHS))
+def test_star_equals_union_find(spark, graph):
+    """The star rewrites equal a union-find reference: component = min
+    reachable id, on random graphs and on adversarial long chains."""
+    make_edges, max_iter = GRAPHS[graph]
+    edge_list = make_edges()
     star_out = _components(
-        connected_components_star(_edges_df(spark, edge_list), max_iter=60)
+        connected_components_star(_edges_df(spark, edge_list), max_iter=max_iter)
     )
     assert star_out == _union_find(edge_list)
     if graph == "chain":
@@ -78,8 +96,6 @@ def test_star_equals_union_find(spark, graph):
 
 
 def test_star_handles_self_loops_and_duplicates(spark):
-    from goldenretriever_spark.operators.dedup import connected_components_star
-
     edge_list = [(5, 5), (1, 2), (2, 1), (2, 3), (7, 8), (8, 7), (9, 9)]
     star_out = _components(connected_components_star(_edges_df(spark, edge_list)))
     # ADVICE r5: a node appearing only in self-loop edges is a singleton
@@ -91,16 +107,10 @@ def test_star_handles_self_loops_and_duplicates(spark):
 def test_nonconvergence_raises_and_warns(spark):
     """ADVICE r4: exhausting max_iter must not silently return wrong labels
     — non-convergence raises."""
-    from goldenretriever_spark.operators.dedup import connected_components_star
-
     chain = _edges_df(spark, _chain_edges(n=60))
     with pytest.raises(RuntimeError, match="did not converge"):
         connected_components_star(chain, max_iter=1)
 
-
-# ---------------------------------------------------------------------------
-# file-format source query (VERDICT r4 #7): deterministic expected rows
-# ---------------------------------------------------------------------------
 
 def test_src_parse_files_expected_rows(spark):
     """The fixture parse is fully deterministic — pin the exact flattened
@@ -122,16 +132,9 @@ def test_src_parse_files_expected_rows(spark):
     }
 
 
-# ---------------------------------------------------------------------------
-# hybrid RRF fusion (beyond-parity; reference serves BM25 and Annoy cosine
-# separately — /root/reference/src/models.py make_query)
-# ---------------------------------------------------------------------------
-
 def test_rrf_fuse_semantics(spark):
     """An item ranked by both legs outscores single-leg items; quantization
     matches the closed form 1/(k0+r); ties break on doc_id ascending."""
-    from goldenretriever_spark.query.hybrid import RRF_K0, RRF_QUANT, rrf_fuse
-
     lex = spark.createDataFrame(
         [(0, 10, 1), (0, 11, 2), (0, 12, 3)], "query_id long, doc_id long, rank int"
     )
@@ -153,8 +156,6 @@ def test_rrf_fuse_semantics(spark):
 
 
 def test_rrf_fuse_respects_k(spark):
-    from goldenretriever_spark.query.hybrid import rrf_fuse
-
     lex = spark.createDataFrame(
         [(0, d, d + 1) for d in range(8)], "query_id long, doc_id long, rank int"
     )
@@ -168,10 +169,6 @@ def test_rrf_fuse_matches_python_reference(spark, seed):
     """Randomized cross-check: rrf_fuse on arbitrary leg rankings equals a
     pure-Python RRF computed from the same (query, doc, rank) triples —
     scores (quantized) AND fused order, ties on doc_id ascending."""
-    import random
-
-    from goldenretriever_spark.query.hybrid import RRF_K0, RRF_QUANT, rrf_fuse
-
     rng = random.Random(seed)
     legs_py = []
     for _ in range(3):  # three legs, 4 queries, ragged top lists

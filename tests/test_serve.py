@@ -819,34 +819,3 @@ def test_crossover_tool_treats_a_cached_index_without_the_token_as_stale(
     stale = _without_format_token(served_positional.path, tmp_path)
     assert not _cached_index_is_current(spark, stale)
     assert not _cached_index_is_current(spark, str(tmp_path / "missing"))
-
-
-def test_stored_index_search_dispatch(spark, tmp_path):
-    """StoredIndex.search = write_index -> dispatch_top_k with the persisted
-    bucket count; must equal the in-memory brute ranking."""
-    from goldenretriever_spark import corpus
-    from goldenretriever_spark.index.blocks import pack_blocks
-    from goldenretriever_spark.index.build import build_index
-    from goldenretriever_spark.index.storage import StoredIndex, write_index
-    from goldenretriever_spark.query import bm25
-
-    docs = spark.createDataFrame(corpus.synth_corpus_pandas(200, seed=13))
-    idx = build_index(docs, tokenizer="simple")
-    blocks = pack_blocks(idx, block_size=16, target_docs_per_group=60, n_term_buckets=8)
-    path = str(tmp_path / "idx")
-    write_index(idx, path, blocks=blocks, n_term_buckets=8)
-
-    qlist = [(0, "def return"), (1, "cache buffer fast")]
-    stored = StoredIndex(spark, path)
-    got = sorted(
-        (r["query_id"], r["rank"], r["doc_id"], r["score"])
-        for r in stored.search(qlist, k=5).collect()
-    )
-    terms = bm25.query_terms_df(spark, qlist)
-    want = sorted(
-        (r["query_id"], r["rank"], r["doc_id"], r["score"])
-        for r in bm25.top_k(idx, terms, k=5).collect()
-    )
-    assert [g[:3] for g in got] == [w[:3] for w in want]
-    for g, w in zip(got, want):
-        assert math.isclose(g[3], w[3], rel_tol=1e-9)

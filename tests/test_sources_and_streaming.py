@@ -1,19 +1,16 @@
-"""Sources (sources/: knowledge-base builds, CSV/PDF/JDBC readers, sinks,
-the driver's file-parse query) and streaming (streaming/: the incremental
-postings build and its compaction, stateful dedupe, windowed counts)."""
+"""Sources (sources/: knowledge-base builds, sinks) and streaming
+(streaming/: the incremental postings build and its compaction, the
+stateful dedupe's TTL and state eviction)."""
 
-import math
 import os
 import time
-from datetime import datetime
 
 import pytest
 from pyspark.sql import functions as F
 
 from goldenretriever_spark import corpus
 from goldenretriever_spark.index.build import build_index
-from goldenretriever_spark.query import bm25
-from goldenretriever_spark.sources.kb import build_kb, create_df, parse_csv
+from goldenretriever_spark.sources.kb import build_kb, create_df
 from goldenretriever_spark.streaming.incremental import (
     compact_streamed_index,
     incremental_postings_build,
@@ -23,10 +20,6 @@ from goldenretriever_spark.streaming.stateful import (
     deduped_view,
     streaming_dedupe,
     streaming_dedupe_continuous,
-)
-from goldenretriever_spark.streaming.windowed import (
-    streaming_windowed_counts,
-    window_counts_view,
 )
 
 
@@ -72,97 +65,6 @@ def test_sinks_latest_wins(spark, tmp_path):
     assert rows[0]["is_correct"] == [False, False, False, False, False]  # latest + padded
 
 
-def test_parse_csv_cutoff(spark, tmp_path):
-    lines = ["ans_str,query_str,context_str"] + [
-        f"answer {i},question {i},ctx" for i in range(20)
-    ]
-    (tmp_path / "qa.csv").write_text("\n".join(lines))
-    kb = parse_csv(spark, str(tmp_path / "qa.csv"), cutoff=5)
-    assert kb["responses"].count() == 5
-    kb_full = parse_csv(spark, str(tmp_path / "qa.csv"))
-    assert kb_full["responses"].count() == 20
-
-
-def test_pdf_parse_end_to_end(spark, tmp_path):
-    from goldenretriever_spark.sources.pdf import (
-        FAKE_MAGIC, fake_text_extractor, parse_pdf, real_text_extractor,
-    )
-
-    doc = (
-        "Title Page Header\n1-2 First real paragraph about retrieval\n"
-        "spanning lines.\n3-4 Second paragraph mentions BM25.\n"
-        "\n\nAPPENDIX A ignored appendix content 5-6 tail"
-    )
-    (tmp_path / "a.pdf").write_bytes(FAKE_MAGIC + doc.encode())
-    kb = parse_pdf(
-        spark, f"{tmp_path}/*.pdf", num_appendix=1, extractor=fake_text_extractor
-    )
-    clauses = [r["raw_string"] for r in kb["responses"].collect()]
-    assert any("First real paragraph" in c for c in clauses)
-    assert any("BM25" in c for c in clauses)
-    assert not any("Title Page" in c for c in clauses)  # first paragraph dropped
-    assert not any("APPENDIX" in c or "appendix content" in c for c in clauses)
-    assert all("\n" not in c for c in clauses)
-    with pytest.raises(NotImplementedError):
-        real_text_extractor(b"%PDF-1.4 real bytes")
-
-
-def test_export_csv_roundtrip(spark, tmp_path):
-    """S7: table -> csv -> table keeps rows and columns (header on)."""
-    from goldenretriever_spark.sources.sinks import export_csv
-
-    df = spark.createDataFrame(
-        [(1, "alpha", 1.5), (2, "beta", -2.0), (3, "gamma, quoted", 0.0)],
-        "id long, name string, score double",
-    )
-    out = str(tmp_path / "export")
-    export_csv(df, out, single_file=True)
-    back = spark.read.csv(out, header=True, inferSchema=True)
-    assert sorted(back.columns) == sorted(df.columns)
-    assert sorted(map(tuple, back.collect())) == sorted(map(tuple, df.collect()))
-
-
-def test_jdbc_option_plumbing():
-    """S8: partitionColumn/bounds/numPartitions land in the reader options;
-    bounds are mandatory with a partition column (no silent single-task
-    scan). No JDBC driver jar ships with the project, so load() is not
-    exercised."""
-    from goldenretriever_spark.sources.jdbc import jdbc_options
-
-    opts = jdbc_options(
-        "jdbc:postgresql://db/gr", "querylog", user="u", password="p",
-        partition_column="id", lower_bound=0, upper_bound=10_000,
-        num_partitions=16, fetchsize=5000,
-    )
-    assert opts["partitionColumn"] == "id"
-    assert opts["lowerBound"] == "0" and opts["upperBound"] == "10000"
-    assert opts["numPartitions"] == "16"
-    assert opts["fetchsize"] == "5000"
-    assert opts["url"].startswith("jdbc:postgresql")
-    with pytest.raises(ValueError, match="bound"):
-        jdbc_options("jdbc:x", "t", partition_column="id")
-
-
-def test_src_parse_files_expected_rows(spark):
-    """The fixture parse is fully deterministic — pin the exact flattened
-    rows (cutoff drops the 7th CSV row, 'nan' query dropped, duplicate QA
-    row dedupes, body-less TXT clause dropped)."""
-    import __spark_entry__ as E
-
-    rows = {
-        (r["kb_name"], r["query_id"], r["response_id"], r["query_string"])
-        for r in E._src_parse_files(spark, "unused").collect()
-    }
-    assert rows == {
-        ("csvkb", 1, 3, "how to sort"),   # merge sort
-        ("csvkb", 1, 2, "how to sort"),   # quicksort
-        ("csvkb", 0, 1, "how to join"),   # hash join (deduped)
-        ("csvkb", 2, 0, "what is bm25"),
-        ("txtkb", 1, 0, "what is a heap"),
-        ("txtkb", 0, 1, "how to hash"),
-    }
-
-
 # ---------------------------------------------------------------- incremental build
 
 def test_streaming_incremental_equals_batch(spark, tmp_path):
@@ -178,23 +80,6 @@ def test_streaming_incremental_equals_batch(spark, tmp_path):
     b = {(r["term"], r["doc_id"]): (r["tf"], r["doc_len"]) for r in batch.postings.collect()}
     assert s == b
     assert streamed.corpus_stats.collect()[0]["n_docs"] == 80
-
-
-def test_streaming_dedups_same_doc_across_files(spark, tmp_path):
-    """The same (repo,path,commit) doc in two input files must index once —
-    file-level exactly-once does not cover doc-level duplicates."""
-    docs = spark.createDataFrame(corpus.synth_corpus_pandas(30, seed=5))
-    docs.coalesce(1).write.parquet(f"{tmp_path}/in/f1")
-    docs.filter(F.col("path").isNotNull()).limit(10).coalesce(1).write.parquet(
-        f"{tmp_path}/in/f2"
-    )  # 10 duplicate docs in a second file
-    incremental_postings_build(spark, f"{tmp_path}/in/*", f"{tmp_path}/out")
-    streamed = streamed_index_views(spark, f"{tmp_path}/out")
-    assert streamed.corpus_stats.collect()[0]["n_docs"] == 30
-    dup_postings = (
-        streamed.postings.groupBy("term", "doc_id").count().filter(F.col("count") > 1).count()
-    )
-    assert dup_postings == 0
 
 
 def test_fold_raises_on_an_unreadable_doc_stats_store(spark, tmp_path):
@@ -214,36 +99,6 @@ def test_fold_raises_on_an_unreadable_doc_stats_store(spark, tmp_path):
     spark.createDataFrame(docs.iloc[10:]).write.mode("append").parquet(in_dir)
     with pytest.raises(Exception, match="doc_stats"):
         incremental_postings_build(spark, in_dir, out_dir)
-
-
-def test_streamed_then_compacted_index_serves_identically(spark, tmp_path):
-    """Ingest->serve loop: stream two doc batches, compact the appended
-    postings into the block index, and StoredIndex.search must equal
-    brute-force BM25 over a clean batch build of the union."""
-    in_dir, out_dir = str(tmp_path / "in"), str(tmp_path / "out")
-    all_docs = corpus.synth_corpus_pandas(120, seed=21)
-    spark.createDataFrame(all_docs.iloc[:70]).write.mode("append").parquet(in_dir)
-    incremental_postings_build(spark, in_dir, out_dir)
-    spark.createDataFrame(all_docs.iloc[70:]).write.mode("append").parquet(in_dir)
-    incremental_postings_build(spark, in_dir, out_dir)
-
-    stored = compact_streamed_index(
-        spark, out_dir, str(tmp_path / "idx"), n_term_buckets=8
-    )
-    qlist = [(0, "def return"), (1, "cache buffer fast"), (2, "zzzmissing")]
-    got = sorted(
-        (r["query_id"], r["rank"], r["doc_id"], r["score"])
-        for r in stored.search(qlist, k=5).collect()
-    )
-    idx = build_index(spark.createDataFrame(all_docs), tokenizer="simple")
-    terms = bm25.query_terms_df(spark, qlist)
-    want = sorted(
-        (r["query_id"], r["rank"], r["doc_id"], r["score"])
-        for r in bm25.top_k(idx, terms, k=5).collect()
-    )
-    assert [g[:3] for g in got] == [w[:3] for w in want]
-    for g, w in zip(got, want):
-        assert math.isclose(g[3], w[3], rel_tol=1e-9)
 
 
 def test_streamed_positional_parity(spark, tmp_path):
@@ -311,44 +166,6 @@ def test_streamed_positional_parity(spark, tmp_path):
 
 
 # ---------------------------------------------------------------- stateful dedupe
-
-def test_streaming_stateful_dedupe_across_batches(spark, tmp_path):
-    """applyInPandasWithState dedupe: each distinct content digest is emitted
-    exactly once across micro-batches AND query restarts (state survives via
-    the checkpoint); first occurrence wins deterministically."""
-    in_dir, out_dir = str(tmp_path / "in"), str(tmp_path / "out")
-    b1 = spark.createDataFrame(
-        [
-            ("r1", "a.py", "c1", "py", "same content"),
-            ("r1", "b.py", "c2", "py", "same content"),
-            ("r2", "c.py", "c3", "py", "other content"),
-        ],
-        "repo string, path string, commit string, lang string, content string",
-    )
-    b1.write.mode("append").parquet(in_dir)
-    streaming_dedupe(spark, in_dir, out_dir)
-    out1 = deduped_view(spark, out_dir).collect()
-    assert len(out1) == 2
-    assert {(r["content"], r["path"]) for r in out1} == {
-        ("same content", "a.py"),  # min (repo,path,commit) wins
-        ("other content", "c.py"),
-    }
-
-    b2 = spark.createDataFrame(
-        [
-            ("r9", "z.py", "c9", "py", "same content"),   # dup from batch 1
-            ("r3", "d.py", "c4", "py", "third content"),
-        ],
-        "repo string, path string, commit string, lang string, content string",
-    )
-    b2.write.mode("append").parquet(in_dir)
-    streaming_dedupe(spark, in_dir, out_dir)  # restart, same checkpoint
-    out2 = deduped_view(spark, out_dir).collect()
-    assert len(out2) == 3
-    assert sorted(r["content"] for r in out2) == [
-        "other content", "same content", "third content"
-    ]
-
 
 def test_streaming_dedupe_ttl_retention(spark, tmp_path):
     """VERDICT r3 #7: with ttl_ms, a digest re-occurring WITHIN the TTL is
@@ -418,52 +235,3 @@ def test_streaming_dedupe_continuous_evicts_state(spark, tmp_path):
         assert saw_evicted, "idle expired state was not evicted"
     finally:
         q.stop()
-
-
-# ---------------------------------------------------------------- windowed counts
-
-def test_streaming_windowed_counts_watermark(spark, tmp_path):
-    """Windowed append-mode counts: a window emits once the watermark passes
-    its end; an event later than the watermark for a closed window is
-    dropped; the still-open tail window is not emitted."""
-    in_dir, out_dir = str(tmp_path / "in"), str(tmp_path / "out")
-    schema = (
-        "event_id long, ts timestamp, user_id long, event_type string, "
-        "value double, props string"
-    )
-    ev = lambda i, h, m, typ="click": (  # noqa: E731
-        i, datetime(2024, 1, 1, h, m), 1, typ, 1.0, "{}"
-    )
-
-    # drain 1: three events in [0:00,1:00) + one at 3:00. The no-data flush
-    # batch advances the watermark to 2:50 within the drain, closing [0,1)
-    # (count 3); [3,4) stays open.
-    spark.createDataFrame(
-        [ev(1, 0, 5), ev(2, 0, 10), ev(3, 0, 20), ev(4, 3, 0)], schema
-    ).write.mode("append").parquet(in_dir)
-    streaming_windowed_counts(spark, in_dir, out_dir)
-    rows = {
-        (r["window_start"].hour, r["n_events"])
-        for r in window_counts_view(spark, out_dir).collect()
-    }
-    assert rows == {(0, 3)}
-
-    # drain 2: event at 6:00 -> watermark 5:50 closes [3,4) (count 1)
-    spark.createDataFrame([ev(5, 6, 0)], schema).write.mode("append").parquet(in_dir)
-    streaming_windowed_counts(spark, in_dir, out_dir)
-    rows = {
-        (r["window_start"].hour, r["n_events"])
-        for r in window_counts_view(spark, out_dir).collect()
-    }
-    assert rows == {(0, 3), (3, 1)}
-
-    # drain 3: a LATE event at 0:30 (watermark 5:50) must be DROPPED — the
-    # closed hour-0 window is not re-emitted and its count stays 3; the
-    # open [6,7) window emits nothing
-    spark.createDataFrame([ev(6, 0, 30)], schema).write.mode("append").parquet(in_dir)
-    streaming_windowed_counts(spark, in_dir, out_dir)
-    rows = {
-        (r["window_start"].hour, r["n_events"])
-        for r in window_counts_view(spark, out_dir).collect()
-    }
-    assert rows == {(0, 3), (3, 1)}

@@ -1,74 +1,17 @@
-"""Point-in-time operators (operators/temporal.py): as-of join semantics
-(inclusive equal ts, atomic null carry, tie-breaks) against hand-computed
-rows and a pandas argmax reference, and the binned range join against the
-naive theta join."""
+"""Point-in-time operators (operators/temporal.py): the as-of join's atomic
+null carry and tie-breaks against hand-computed rows and a pandas argmax
+reference."""
 
-from datetime import datetime, timedelta
+from datetime import datetime
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import functions as F
 
-from goldenretriever_spark.operators.temporal import as_of_join, range_join_binned
+from goldenretriever_spark.operators.temporal import as_of_join
 
 
 def _t(m: int) -> datetime:
     return datetime(2024, 1, 1, 0, m)
-
-
-def test_as_of_join_semantics(spark):
-    """Point-in-time: latest right row with ts <= left ts per key; equal ts
-    is inclusive (right wins); no prior right row -> nulls; equal-ts right
-    rows resolve to max id."""
-    t = lambda m: datetime(2024, 1, 1, 0, m)  # noqa: E731
-    left = spark.createDataFrame(
-        [(1, "u1", t(10)), (2, "u1", t(30)), (3, "u2", t(5)), (4, "u1", t(20))],
-        "event_id long, user_id string, ts timestamp",
-    )
-    right = spark.createDataFrame(
-        [("u1", t(10), 100, 1.0), ("u1", t(25), 101, 2.0),
-         ("u1", t(25), 102, 3.0), ("u2", t(50), 103, 4.0)],
-        "user_id string, ts timestamp, rid long, val double",
-    )
-    out = {
-        r["event_id"]: (r["r_rid"], r["r_val"])
-        for r in as_of_join(left, right, on=["user_id"]).collect()
-    }
-    assert out[1] == (100, 1.0)       # equal ts -> inclusive
-    assert out[4] == (100, 1.0)       # between right rows
-    assert out[2] == (102, 3.0)       # equal-ts rights -> max rid wins
-    assert out[3] == (None, None)     # u2 has no prior right row
-
-
-def test_as_of_join_randomized_vs_pandas(spark):
-    """Randomized cross-check: union+window as-of join equals a per-row
-    pandas argmax reference on seeded random data (3 seeds)."""
-    for seed in (0, 1, 2):
-        rng = np.random.default_rng(seed)
-        left = pd.DataFrame({
-            "lid": np.arange(60),
-            "k": rng.integers(0, 5, 60),
-            "ts": rng.integers(0, 1000, 60).astype("datetime64[s]"),
-        })
-        right = pd.DataFrame({
-            "rid": np.arange(100, 140),
-            "k": rng.integers(0, 5, 40),
-            "ts": rng.integers(0, 1000, 40).astype("datetime64[s]"),
-        })
-        got = {
-            r["lid"]: r["r_rid"]
-            for r in as_of_join(
-                spark.createDataFrame(left), spark.createDataFrame(right), on=["k"]
-            ).collect()
-        }
-        for _, lrow in left.iterrows():
-            cand = right[(right["k"] == lrow["k"]) & (right["ts"] <= lrow["ts"])]
-            want = (
-                None
-                if cand.empty
-                else int(cand.sort_values(["ts", "rid"]).iloc[-1]["rid"])
-            )
-            assert got[lrow["lid"]] == want, f"seed={seed} lid={lrow['lid']}"
 
 
 def test_as_of_join_null_carry_atomic(spark):
@@ -150,34 +93,3 @@ def test_as_of_join_randomized_nulls_vs_pandas(spark):
                     None if pd.isna(v) else float(v) for v in (row["a"], row["b"])
                 )
             assert got[lrow["lid"]] == want, f"seed={seed} lid={lrow['lid']}"
-
-
-def test_range_join_binned_equals_theta(spark):
-    """Binned range join must equal the naive theta join exactly (window
-    boundaries inclusive both ends), at bin widths above and below the
-    window."""
-    base = datetime(2024, 1, 1)
-    left = spark.createDataFrame(
-        [(i, f"u{i % 3}", base + timedelta(minutes=17 * i)) for i in range(40)],
-        "lid long, user_id string, ts timestamp",
-    )
-    right = spark.createDataFrame(
-        [(100 + i, f"u{i % 3}", base + timedelta(minutes=11 * i)) for i in range(40)],
-        "rid long, user_id string, ts timestamp",
-    )
-    W = 3600
-    naive = left.alias("l").join(
-        right.alias("r"),
-        (F.col("l.user_id") == F.col("r.user_id"))
-        & (F.col("r.ts") <= F.col("l.ts"))
-        & (F.col("r.ts").cast("long") >= F.col("l.ts").cast("long") - W),
-    ).select(F.col("l.lid"), F.col("r.rid"))
-    want = sorted(map(tuple, naive.collect()))
-    for bin_s in (W, W // 3):
-        got = sorted(
-            (r["lid"], r["r_rid"])
-            for r in range_join_binned(
-                left, right, on=["user_id"], window_seconds=W, bin_seconds=bin_s
-            ).collect()
-        )
-        assert got == want, f"bin={bin_s}"
