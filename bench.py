@@ -7,8 +7,9 @@ Extra keys (consumed by tools/scaling_bench.py -> BENCH/BASELINE.md):
     build_docs, build_files_per_sec — index-build throughput on the seeded
     synthetic source-code corpus (BASELINE.json's files/sec metric).
 
-Env knobs: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS (default 32),
-SPARK_GRAFT_BENCH_DOCS (synthetic corpus size, default 20000).
+Env knobs: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS (default: the cores this
+process may run on), SPARK_GRAFT_BENCH_DOCS (synthetic corpus size, default
+20000).
 """
 
 from __future__ import annotations
@@ -21,7 +22,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
 BENCH_DOCS = int(os.environ.get("SPARK_GRAFT_BENCH_DOCS", "20000"))
 CORPUS_CACHE = f"/tmp/gr_bench_corpus_{BENCH_DOCS}.parquet"
 

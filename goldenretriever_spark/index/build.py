@@ -6,12 +6,15 @@ dedupe -> TF-encode every response -> Annoy build -> pickle) with a Spark
 job graph that is pure DataFrame ops until the (optional) compression stage:
 
     documents ──ids+sha──► docs' ──tokenize──► tokens
-        tokens ──explode──► (doc_id, term)
-        (doc_id, term) ──groupBy(term,doc_id).count()──► (term, doc_id, tf)
+        tokens ──posexplode──► (doc_id, pos, term)
+        (doc_id, pos, term) ──groupBy(term,doc_id)──► (term, doc_id, tf, positions)
         docs' ──range sort, tokenize, count──► doc_stats(docno, doc_id, doc_len,
                                                sha256) + corpus_stats(n_docs, avgdl)
-        (term, doc_id, tf) ──⋈ docno──► postings(term, doc_id, tf, doc_len, docno)
+        (term, doc_id, tf, positions) ──⋈ docno──► postings(term, doc_id, tf,
+                                                    doc_len, docno, positions)
         postings ──groupBy(term)──► term_stats(term, df)
+        postings ──pack──► posting_blocks (blocks.py), positional_blocks
+                           (positions.py)
 
 Scale notes (designed for 10^12 files / 1000 executors):
 - doc_id = xxhash64(repo, path, commit): assigned map-side, no global sort.
@@ -47,7 +50,7 @@ class InvertedIndex:
     """In-memory handle to the index tables (each a DataFrame; persisted
     variants are written/read by storage.py)."""
 
-    postings: DataFrame      # term:string, doc_id:long, tf:long, doc_len:long, docno:long
+    postings: DataFrame      # term, doc_id, tf, doc_len, docno:long, positions:array<int>
     doc_stats: DataFrame     # docno:long, doc_id:long, doc_len:long, sha256:string
     corpus_stats: DataFrame  # n_docs:long, avgdl:double (a local relation)
     term_stats: DataFrame    # term:string, df:long
@@ -143,19 +146,25 @@ def tokenized(
 def staging_tables(toks: DataFrame) -> tuple[DataFrame, DataFrame]:
     """Tokenized rows (doc_id, sha256, tokens) -> ``(postings, doc_rows)``
     in hash-id space, before any docno exists: postings (term, doc_id, tf,
-    doc_len) and one doc row (doc_id, doc_len, sha256) per input row. The
-    streaming fold appends exactly these per micro-batch;
+    doc_len, positions) and one doc row (doc_id, doc_len, sha256) per input
+    row. The streaming fold appends exactly these per micro-batch;
     :func:`number_index` turns them into an index.
 
     doc_len rides along in the postings' groupBy key (same cardinality as
     (term, doc_id)), so neither the build nor the query path ever needs a
-    10^12-row join back to doc_stats for BM25's dl term."""
+    10^12-row join back to doc_stats for BM25's dl term. ``positions`` is
+    the term's sorted 0-based token positions in the doc, so this one
+    tokenize feeds both block tables (index/positions.py packs the
+    positional blocks from these rows)."""
     doc_len = F.size("tokens").cast("long").alias("doc_len")
     postings = (
-        toks.select("doc_id", doc_len, F.explode("tokens").alias("term"))
+        toks.select("doc_id", doc_len, F.posexplode("tokens").alias("pos", "term"))
         .groupBy("term", "doc_id", "doc_len")
-        .agg(F.count(F.lit(1)).alias("tf"))
-        .select("term", "doc_id", "tf", "doc_len")
+        .agg(
+            F.count(F.lit(1)).alias("tf"),
+            F.sort_array(F.collect_list("pos")).alias("positions"),
+        )
+        .select("term", "doc_id", "tf", "doc_len", "positions")
     )
     return postings, toks.select("doc_id", doc_len, "sha256")
 
@@ -246,7 +255,7 @@ def number_index(
     numbered: tuple[DataFrame, int, int],
     persist: bool = True,
 ) -> InvertedIndex:
-    """Postings (term, doc_id, tf, doc_len) and their corpus'
+    """Postings (term, doc_id, tf, doc_len, positions) and their corpus'
     :func:`number_docs` result -> the index: the docnos attached to the
     postings by a broadcast join on doc_id (the doc-level side is ~1/|doc|
     of the postings rows; at extreme corpus sizes drop the hint and let AQE
@@ -261,7 +270,7 @@ def number_index(
     doc_stats, n_docs, total_len = numbered
     postings = postings.join(
         F.broadcast(doc_stats.select("doc_id", "docno")), "doc_id"
-    ).select("term", "doc_id", "tf", "doc_len", "docno")
+    ).select("term", "doc_id", "tf", "doc_len", "docno", "positions")
     if persist:
         postings = postings.persist(StorageLevel.MEMORY_AND_DISK)
     corpus_stats = local_frame(
@@ -289,9 +298,10 @@ def build_index(
     cached: at 1.9M docs that is a multi-GB columnar cache written once and
     read twice, pure memory-bandwidth cost that destroyed N->4N scaling on
     bandwidth-limited hosts. The numbering and the postings each tokenize
-    the corpus once; doc_stats is the numbering's checkpoint, so writing it
-    re-tokenizes nothing, and corpus_stats comes from the numbering's
-    collect, so it runs no job of its own.
+    the corpus once, and the postings carry the positions, so the
+    positional pack tokenizes nothing; doc_stats is the numbering's
+    checkpoint, so writing it re-tokenizes nothing, and corpus_stats comes
+    from the numbering's collect, so it runs no job of its own.
     """
     docs = with_doc_ids(documents, resolve_collisions=resolve_collisions)
     postings, _ = staging_tables(

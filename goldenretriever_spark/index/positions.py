@@ -3,10 +3,11 @@
 Phrase and proximity search (query/phrase.py) consume ``(term, doc_id, pos)``
 rows. Serving them by re-tokenizing the corpus per query is a full scan — the
 one scale-killer the r5 audit named. This module persists the positional
-postings ONCE at index-build time. It holds only what is positional: the
-``posexplode`` token rows, their collapse into doc runs, the positions
-payload and its decoders. The blocking is index/blocks.py's, shared with the
-BM25 posting blocks — the same contiguous doc-id-range salt, block split and
+postings ONCE at index-build time, from the ``positions`` column the
+postings already carry (build.staging_tables: one tokenize feeds both block
+tables). It holds only what is positional: the positions payload and its
+decoders. The blocking is index/blocks.py's, shared with the BM25 posting
+blocks — the same contiguous doc-id-range salt, block split and
 one ``(term, salt)`` pack exchange — so both tables are cut identically:
 delta-gap + varint compression (index/codec.py — positions are sorted ints
 exactly like doc-id runs) and ``term_bucket`` partitioning so a phrase
@@ -33,7 +34,7 @@ Block schema::
   doc-major, delta-encoded WITH A RESET at each doc boundary, varint
 
 Skew: the salt (blocks.salt_col) is sized by COLLECTION frequency (total
-positions, not df) because a positional group's row count is Σtf, not doc
+positions, not df) because a positional group's payload is Σtf, not doc
 count — a scorching-hot term ("def") splits into bounded, ordered, disjoint
 ranges with no extra shuffle stage.
 """
@@ -65,44 +66,24 @@ POS_BLOCKS_SCHEMA = (
 )
 
 
-def positional_rows(
-    documents: DataFrame, tokenizer: str = "simple"
-) -> DataFrame:
-    """input_hint corpus -> (term, doc_id, pos) rows, one per token.
-
-    ``posexplode`` over the tokenized content emits the 0-based token index
-    for free — map-side only, no shuffle, no Python."""
-    from goldenretriever_spark.index.build import tokenized
-
-    return tokenized(documents, tokenizer).select(
-        "doc_id", F.posexplode("tokens").alias("pos", "term")
-    ).select("term", "doc_id", "pos")
-
-
 def pack_positions(
-    rows: DataFrame,
-    postings: DataFrame | None = None,
+    postings: DataFrame,
     target_positions_per_group: int = 1_000_000,
     n_term_buckets: int = 64,
     block_docs: int = BLOCK_SIZE,
 ) -> DataFrame:
-    """(term, doc_id, docno, pos) rows -> compressed positional blocks
-    keyed by docno (doc_id only feeds the salt).
+    """Postings (term, doc_id, tf, docno, positions) -> compressed
+    positional blocks keyed by docno (doc_id only feeds the salt).
 
     The salt is sized by collection frequency cf = Σtf per term (a
-    positional group's row count). ``postings``: pass the (usually cached)
-    BM25 postings to sum their tf and skip a second pass over the tokens;
-    without them every row counts once. The cf groupBy partially
+    positional group's position count). The cf groupBy partially
     aggregates map-side, so its shuffle is vocab-sized.
 
-    The worker collapses the (term, salt, docno, pos)-sorted token rows
-    into doc runs, which the shared block split (blocks.split_blocks) cuts
-    into blocks, and adds the positions payload — whole-array numpy, no
-    per-block or per-doc Python loops.
+    Each posting is one doc run of the shared block split
+    (blocks.split_blocks); the worker adds the positions payload, the rows'
+    position arrays concatenated — whole-array numpy, no per-block or
+    per-doc Python loops.
     """
-    counted = postings if postings is not None else rows.select(
-        "term", F.lit(1).alias("tf")
-    )
     # Only terms hot enough to need MORE than one salt group matter to the
     # salt computation (cf < target -> ceil(cf/target) = 1 -> salt 0), and
     # those are the vocabulary HEAD — a handful of rows. Broadcasting just
@@ -111,62 +92,49 @@ def pack_positions(
     # (r7, guide §3.1; the full-cf aggregate still runs once to FIND the
     # hot terms, but never ships per-row).
     hot_cf = (
-        counted.groupBy("term")
+        postings.groupBy("term")
         .agg(F.sum("tf").cast("long").alias("cf"))
         .filter(F.col("cf") >= target_positions_per_group)
     )
-    salted = rows.join(F.broadcast(hot_cf), "term", "left").select(
+    salted = postings.join(F.broadcast(hot_cf), "term", "left").select(
         "term",
         salt_col(F.col("cf"), target_positions_per_group).alias("salt"),
         "docno",
-        "pos",
+        "tf",
+        "positions",
     )
 
     def pack(pdf: pd.DataFrame) -> pd.DataFrame:
-        terms = pdf["term"].to_numpy()
-        salts = pdf["salt"].to_numpy(dtype=np.int64)
-        ids = pdf["docno"].to_numpy(dtype=np.int64)
-        n_rows = len(pdf)
-
-        # collapse token rows into doc runs: a run starts wherever
-        # (term, salt, docno) changes
-        doc_change = np.empty(n_rows, dtype=bool)
-        doc_change[0] = True
-        doc_change[1:] = (
-            (terms[1:] != terms[:-1])
-            | (salts[1:] != salts[:-1])
-            | (ids[1:] != ids[:-1])
-        )
-        doc_starts = np.flatnonzero(doc_change)
-        doc_ends = np.append(doc_starts[1:], n_rows)
+        tfs = pdf["tf"].to_numpy(dtype=np.int64)
         starts, ends, head = split_blocks(
-            terms[doc_starts], salts[doc_starts], ids[doc_starts], block_docs
+            pdf["term"].to_numpy(),
+            pdf["salt"].to_numpy(),
+            pdf["docno"].to_numpy(dtype=np.int64),
+            block_docs,
         )
-
-        # blocks tile the doc runs contiguously, so each block's token rows
-        # are one slice of the positions buffer
-        r_starts = doc_starts[starts]
-        r_ends = np.append(r_starts[1:], n_rows)
+        # each doc's positions are tf consecutive values of the flat buffer,
+        # and blocks tile the docs contiguously, so a block's positions are
+        # one slice of it
+        pos_off = np.zeros(tfs.size + 1, dtype=np.int64)
+        np.cumsum(tfs, out=pos_off[1:])
         # positions delta-encoded with a reset at EVERY doc boundary — the
         # decode rebuilds per-doc runs from pos_counts alone
         pos_deltas = delta_encode_grouped(
-            pdf["pos"].to_numpy(dtype=np.int64), doc_starts
+            np.concatenate(pdf["positions"].to_list()), pos_off[:-1]
         )
         return pd.DataFrame(
             {
                 **head,
                 "pos_counts_varint": varint_encode_grouped(
-                    (doc_ends - doc_starts).astype(np.uint64), starts, ends
+                    tfs.astype(np.uint64), starts, ends
                 ),
                 "positions_delta_varint": varint_encode_grouped(
-                    pos_deltas, r_starts, r_ends
+                    pos_deltas, pos_off[starts], pos_off[ends]
                 ),
             }
         )
 
-    return pack_exchange(
-        salted, ["docno", "pos"], pack, POS_BLOCKS_SCHEMA, n_term_buckets
-    )
+    return pack_exchange(salted, ["docno"], pack, POS_BLOCKS_SCHEMA, n_term_buckets)
 
 
 def pack_positional_blocks(
@@ -180,18 +148,14 @@ def pack_positional_blocks(
     """Convenience: corpus -> compressed positional blocks in one plan.
 
     ``postings``: the index's postings (build.build_index over the same
-    ``documents``). They carry each doc's docno, which a broadcast of their
-    doc-level (doc_id, docno) pairs attaches to the token rows, and their
-    tf sums the salt's cf (see :func:`pack_positions`). Without them the
-    postings are built here, numbering the corpus once more: docno is a
-    function of the corpus, so both numberings agree."""
+    ``documents``), which carry each posting's docno and positions; they
+    are packed as they are (:func:`pack_positions`). Without them they are
+    built here from ``documents``."""
     if postings is None:
         from goldenretriever_spark.index.build import build_index
 
         postings = build_index(documents, tokenizer, persist=False).postings
-    docnos = postings.select("doc_id", "docno").distinct()
     return pack_positions(
-        positional_rows(documents, tokenizer).join(F.broadcast(docnos), "doc_id"),
         postings,
         target_positions_per_group=target_positions_per_group,
         n_term_buckets=n_term_buckets,
@@ -212,29 +176,6 @@ def _decode(pdf: pd.DataFrame) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
         pdf["docnos_delta_varint"],
         pdf["pos_counts_varint"],
         pdf["positions_delta_varint"],
-    )
-
-
-def decode_positions(blocks: DataFrame) -> DataFrame:
-    """positional blocks -> (term, doc_id, pos) rows via one vectorized
-    mapInPandas decode (codec.decode_position_blocks); ``doc_id`` carries
-    the blocks' doc keys (docnos in a v2 index)."""
-
-    def unpack(batches):
-        for pdf in batches:
-            doc_per_pos, positions, pos_per_block = _decode(pdf)
-            if doc_per_pos.size == 0:
-                continue
-            yield pd.DataFrame(
-                {
-                    "term": np.repeat(pdf["term"].to_numpy(), pos_per_block),
-                    "doc_id": doc_per_pos,
-                    "pos": positions,
-                }
-            )
-
-    return blocks.select(*DECODE_COLS).mapInPandas(
-        unpack, schema="term string, doc_id long, pos long"
     )
 
 
@@ -301,7 +242,7 @@ def decode_phrase_votes(
     """Positional blocks -> phrase start-votes ``(query_id, doc_id, start)``
     in ONE worker pass (r7, guide §4.2; the body is :func:`phrase_votes`).
 
-    Fuses :func:`decode_positions` with the vote expansion that used to be a
+    Fuses the block decode with the vote expansion that used to be a
     JVM broadcast join: exactly the row multiset the join produced (same
     uniqueness argument: (start, offset) determines pos), but term strings
     never cross Arrow back to the JVM and the downstream plan needs no join
@@ -324,10 +265,10 @@ def decode_phrase_votes(
 def decode_position_codes(blocks: DataFrame, terms: list[str]) -> DataFrame:
     """Positional blocks -> (code, doc_id, pos) rows where ``code`` is the
     index of the block's term in ``terms`` — the stored proximity path's
-    decode (query/phrase.proximity_match_stored). Same vectorized decode as
-    :func:`decode_positions`, but an int term code crosses Arrow instead of
-    a repeated term string (r7, guide §4.2); rows whose term is not in
-    ``terms`` are dropped (the pruned scan normally contains none)."""
+    decode (query/phrase.proximity_match_stored). An int term code crosses
+    Arrow instead of a repeated term string (r7, guide §4.2); rows whose
+    term is not in ``terms`` are dropped (the pruned scan normally contains
+    none)."""
     code_of = {t: i for i, t in enumerate(terms)}
 
     def unpack(batches):

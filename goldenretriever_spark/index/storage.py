@@ -391,10 +391,11 @@ class StoredIndex:
         return self._positional_blocks
 
     def _read_blocks(self, table: str, schema: str) -> DataFrame:
-        """A block table read with its packer's schema plus the term_bucket
-        partition column, never by inference: a table with no rows (an
-        empty corpus writes only ``_SUCCESS``) reads as an empty frame
-        instead of failing schema inference."""
+        """A term-bucketed table (a block table or term_stats) read with its
+        writer's schema plus the term_bucket partition column, never by
+        inference: a table with no rows (an empty corpus writes only
+        ``_SUCCESS``) reads as an empty frame instead of failing schema
+        inference."""
         return self.spark.read.schema(f"{schema}, term_bucket int").parquet(
             os.path.join(self.path, table)
         )
@@ -564,7 +565,8 @@ class StoredIndex:
 
     @property
     def term_stats(self) -> DataFrame:
-        return self.spark.read.parquet(os.path.join(self.path, "term_stats"))
+        """(term, df, term_bucket), read with its schema (:meth:`_read_blocks`)."""
+        return self._read_blocks("term_stats", TERM_STATS_SCHEMA)
 
     @property
     def n_term_buckets(self) -> int:

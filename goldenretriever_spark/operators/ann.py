@@ -443,7 +443,7 @@ def q_ann_ivf_trained_topk(
     bounded sample; one parquet split -> fixed summation order at the
     graded scale), so the SERVING plan is oracle-checked against the pinned
     sf0.01 codebook literals (operators/ivf_codebook.py; drift guard in
-    tests/test_round5.py) while the training loop itself stays
+    tests/test_ann.py) while the training loop itself stays
     pytest-covered (determinism; recall > stand-in on clustered-structure
     embeddings at equal candidate budget; BENCH/ANN_RECALL.json).
     Honest caveat, measured: on the driver's

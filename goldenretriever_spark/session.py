@@ -25,10 +25,11 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) a SparkSession.
 
-    cores: int N -> local[N]; "*" -> local[*]; None -> $SPARK_GRAFT_CPUS or 32.
+    cores: int N -> local[N]; "*" -> local[*]; None -> $SPARK_GRAFT_CPUS,
+    else the number of cores this process may run on.
     """
     if cores is None:
-        cores = os.environ.get("SPARK_GRAFT_CPUS", "32")
+        cores = os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
     # SPARK_GRAFT_MASTER overrides (e.g. local-cluster[4,1,4096] — separate
     # executor JVMs, each with its own GC and allocator arenas: the honest
     # sandbox proxy for N distinct executors)

@@ -6,7 +6,7 @@ querylog and late feedback updates).
 with readStream + Trigger.AvailableNow and folds each micro-batch into the
 postings store inside foreachBatch:
 
-    new docs -> tokenize -> (term, doc_id, tf, doc_len) -> append partition
+    new docs -> tokenize -> (term, doc_id, tf, doc_len, positions) -> append partition
 
 Streaming checkpointing is exactly-once per input FILE, not per document, so
 the same doc (repo, path, commit) can arrive in two different files. Each
@@ -19,8 +19,11 @@ the batch build over the union of inputs — asserted in
 tests/test_sources_and_streaming.py.
 
 At scale the same structure runs continuously (Trigger.ProcessingTime) with
-checkpointLocation giving exactly-once file processing; the posting-block
-compaction job (index/blocks.py) runs periodically over the appended deltas.
+checkpointLocation giving exactly-once file processing; the compaction job
+(:func:`compact_streamed_index`) runs periodically over the appended deltas
+and packs both block tables from the one postings store, whose rows carry
+their positions. With ``positional=True`` each batch also appends a
+servable positional segment, packed from that batch's own postings.
 """
 
 from __future__ import annotations
@@ -50,10 +53,11 @@ def incremental_postings_build(
     explicit doc_id column (kept by build_index); default corpora derive it
     from (repo, path, commit).
 
-    ``positional=True`` additionally packs each micro-batch's positional
-    postings (index/positions.py) and appends them as per-batch SEGMENTS to
-    ``out_dir/positional_blocks`` — the Lucene segment model: each batch's
-    blocks are complete and immediately servable (phrase_match_stored never
+    ``positional=True`` additionally packs each micro-batch's postings
+    into positional blocks (index/positions.py) and appends them as
+    per-batch SEGMENTS to ``out_dir/positional_blocks`` — the Lucene
+    segment model: each batch's blocks are complete and immediately
+    servable (phrase_match_stored never
     keys on block_id, it decodes every pruned block row independently, and
     batches hold disjoint doc_ids by the dedupe above), while periodic
     compaction (:func:`compact_streamed_index`) republishes globally-packed
@@ -88,8 +92,8 @@ def incremental_postings_build(
         if not docs.take(1):
             return
         if positional:
-            # Three consumers tokenize this batch (postings, doc_stats,
-            # positional pack) — materialize the deduped batch ONCE.
+            # The segment pack re-reads this batch after the doc_stats
+            # append — materialize the deduped batch ONCE.
             # localCheckpoint, NOT cache(): the docs plan anti-joins the
             # doc_stats store this fold appends to, and a parquet append
             # recaches-by-path every cached plan reading that path — the
@@ -108,15 +112,14 @@ def incremental_postings_build(
         postings.write.mode("append").parquet(os.path.join(out_dir, "postings"))
         doc_rows.write.mode("append").parquet(stats_path)
         if positional:
-            from goldenretriever_spark.index.positions import (
-                pack_positions,
-                positional_rows,
-            )
+            from goldenretriever_spark.index.positions import pack_positions
 
             # a segment's block keys are the hash doc_ids themselves
-            rows = positional_rows(docs, tokenizer).withColumn("docno", F.col("doc_id"))
             (
-                pack_positions(rows, postings, n_term_buckets=n_term_buckets)
+                pack_positions(
+                    postings.withColumn("docno", F.col("doc_id")),
+                    n_term_buckets=n_term_buckets,
+                )
                 .write.mode("append")
                 .partitionBy("term_bucket")
                 .parquet(os.path.join(out_dir, "positional_blocks"))
@@ -170,14 +173,13 @@ def compact_streamed_index(
     already (term, doc_id)-unique (batch dedupe above), so compaction is
     exactly the batch pack — no merge pass.
 
-    ``positional=True``: the per-batch positional segments appended by
-    :func:`incremental_postings_build` are decoded back to (term, doc_id,
-    pos) rows and globally repacked — salts sized by the store-wide Σtf, not
+    ``positional=True``: the store's numbered postings, which carry their
+    positions, are packed globally — salts sized by the store-wide Σtf, not
     each batch's — so the republished ``positional_blocks`` serve
     phrase/proximity results identical to a clean batch build over the union
     of inputs (tests/test_sources_and_streaming.py asserts it). This is the
-    segment-merge half of the Lucene model; decode+repack touches only the
-    positional store, never the raw corpus."""
+    segment-merge half of the Lucene model: it reads the postings store,
+    never the raw corpus or the per-batch segments."""
     from goldenretriever_spark.index.blocks import pack_blocks
     from goldenretriever_spark.index.storage import StoredIndex, write_index
 
@@ -190,19 +192,9 @@ def compact_streamed_index(
     )
     pos_blocks = None
     if positional:
-        from goldenretriever_spark.index.positions import (
-            decode_positions,
-            pack_positions,
-        )
+        from goldenretriever_spark.index.positions import pack_positions
 
-        segs = spark.read.parquet(os.path.join(out_dir, "positional_blocks"))
-        # segments are keyed by hash doc_id: attach the store-wide docnos
-        docnos = F.broadcast(idx.doc_stats.select("doc_id", "docno"))
-        pos_blocks = pack_positions(
-            decode_positions(segs).join(docnos, "doc_id"),
-            idx.postings,
-            n_term_buckets=n_term_buckets,
-        )
+        pos_blocks = pack_positions(idx.postings, n_term_buckets=n_term_buckets)
     write_index(
         idx,
         idx_path,

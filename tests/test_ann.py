@@ -1,5 +1,6 @@
 """Vector retrieval (operators/ann.py): the trained k-means IVF codebook
-against the stand-in, and IVF served from persisted inverted lists (rank identity
+against the stand-in and against its pinned literals
+(operators/ivf_codebook.py), and IVF served from persisted inverted lists (rank identity
 with the in-plan assignment, partition pruning, and the hybrid wiring)."""
 
 import pytest
@@ -15,6 +16,7 @@ from goldenretriever_spark.operators.ann import (
     synth_clustered_embeddings,
     train_centroids_kmeans,
 )
+from goldenretriever_spark.operators.ivf_codebook import CODEBOOK_SF001
 
 
 # ---------------------------------------------------------------- trained IVF codebook
@@ -73,6 +75,16 @@ def test_ivf_trained_beats_standin_on_clustered(spark):
         r_standin, r_trained = recall(standin, n_probe), recall(trained, n_probe)
         assert r_trained > r_standin + 0.03, (n_probe, r_trained, r_standin)
     e.unpersist()
+
+
+def test_trained_codebook_matches_pinned(spark):
+    """The sf0.01 k-means training must reproduce the literals the DuckDB
+    oracle for ann_ivf_trained_topk was generated from — if this drifts
+    (data change, algorithm change, nondeterminism), the contract row would
+    hash-mismatch, and this test points at why."""
+    emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
+    cb = train_centroids_kmeans(emb, n_centroids=8, iters=3, seed=42)
+    assert cb == CODEBOOK_SF001
 
 
 # ---------------------------------------------------------------- IVF from persisted lists

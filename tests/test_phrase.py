@@ -1,25 +1,30 @@
 """Phrase search over positional postings (query/phrase.py).
 
-Cross-checks the stored path (positional blocks packed from the rows,
-fused decode + start-vote) against the scan path (single array expression)
-and against a pure-Python sliding-window reference on randomized corpora,
-plus the overlap / duplicate-term / short-doc edge cases, plus a roundtrip
-of position arrays through the grouped delta-varint codec (positions are
+Cross-checks the stored path (positional blocks packed from the rows'
+postings, fused decode + start-vote) against the scan path (single array
+expression) and against a pure-Python sliding-window reference on
+randomized corpora, plus the overlap / duplicate-term / short-doc edge
+cases; each test checks all its phrases in one stored and one scan action.
+The postings' positions equal a pure-Python tokenization, and position
+arrays roundtrip through the grouped delta-varint codec (positions are
 sorted ints exactly like doc-id runs, so the same storage format applies).
 The batched start-vote equals the per-phrase path, and phrase-boosted
 ranking equals the pure-Python reference through both of its entry points.
 """
 
 import random
-from functools import lru_cache
+from functools import lru_cache, reduce
 
 import numpy as np
 import pytest
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
-from goldenretriever_spark.index.positions import pack_positional_blocks, positional_rows
+from goldenretriever_spark.index.positions import pack_positional_blocks
 from goldenretriever_spark.query.phrase import (
     phrase_match_scan,
     phrase_match_stored,
+    phrase_match_stored_batch,
     proximity_match_scan,
     proximity_match_stored,
 )
@@ -41,45 +46,68 @@ def _docs(spark, rows):
 
 
 @lru_cache(maxsize=2)
-def _blocks(spark, rows: tuple):
-    """Positional blocks packed from the tiny rows; 4-doc blocks so a term's
-    postings span several blocks."""
-    content = _docs(spark, rows).withColumnRenamed("text", "content")
-    return pack_positional_blocks(content, n_term_buckets=4, block_docs=4).localCheckpoint(
-        eager=True
-    )
-
-
-@lru_cache(maxsize=2)
-def _doc_stats(spark, rows: tuple):
-    """The tiny rows' doc_stats: their docno -> doc_id lookup."""
+def _built(spark, rows: tuple):
+    """The tiny rows' positional blocks, packed from their index's postings
+    with 4-doc blocks so a term's postings span several blocks, and the
+    index's doc_stats (the blocks' docno -> doc_id lookup)."""
     from goldenretriever_spark.index.build import build_index
 
     content = _docs(spark, rows).withColumnRenamed("text", "content")
-    return build_index(content, persist=False).doc_stats
+    idx = build_index(content, persist=False)
+    blocks = pack_positional_blocks(
+        content, postings=idx.postings, n_term_buckets=4, block_docs=4
+    ).localCheckpoint(eager=True)
+    return blocks, idx.doc_stats
 
 
-def _stored(spark, rows: tuple, match):
-    """A stored match over the rows' blocks, docnos mapped to doc_ids."""
+def _tagged(frames):
+    """Per-query frames -> one frame with their list index as query_id."""
+    return reduce(
+        DataFrame.unionByName,
+        [f.select(F.lit(q).cast("long").alias("query_id"), "*") for q, f in enumerate(frames)],
+    )
+
+
+def _by_query(frame, n: int) -> list[list[tuple]]:
+    """One collect of (query_id, doc_id, count) rows -> per query id
+    0..n-1, its sorted (doc_id, count) pairs."""
+    out = [[] for _ in range(n)]
+    for q, d, c in frame.select("query_id", "doc_id", F.col(frame.columns[-1])).collect():
+        out[q].append((d, c))
+    return [sorted(r) for r in out]
+
+
+def _stored(spark, rows: tuple, match, n: int):
+    """A batch of stored matches over the rows' blocks, docnos mapped to
+    doc_ids, in one action."""
     from goldenretriever_spark.index.storage import to_doc_ids
 
-    return sorted(
-        map(tuple, to_doc_ids(match(_blocks(spark, rows)), _doc_stats(spark, rows)).collect())
-    )
+    blocks, doc_stats = _built(spark, rows)
+    return _by_query(to_doc_ids(match(blocks), doc_stats), n)
 
 
-def _check(spark, rows, phrase):
+def _check(spark, rows, phrases):
+    """Per phrase, stored == scan == the pure-Python reference; the stored
+    and the scan matches of all ``phrases`` are each one action. Returns
+    the references."""
     rows = tuple(rows)
     docs = _docs(spark, rows)
-    stored = _stored(spark, rows, lambda b: phrase_match_stored(b, phrase))
-    scan = sorted(map(tuple, phrase_match_scan(docs, phrase).collect()))
-    ref = sorted(
-        (d, _py_occurrences(_tokens(t), phrase))
-        for d, t in rows
-        if _py_occurrences(_tokens(t), phrase) > 0
+    n = len(phrases)
+    stored = _stored(
+        spark, rows, lambda b: phrase_match_stored_batch(b, list(enumerate(phrases))), n
     )
-    assert stored == scan == ref
-    return ref
+    scan = _by_query(_tagged([phrase_match_scan(docs, ph) for ph in phrases]), n)
+    refs = [
+        sorted(
+            (d, _py_occurrences(_tokens(t), ph))
+            for d, t in rows
+            if _py_occurrences(_tokens(t), ph) > 0
+        )
+        for ph in phrases
+    ]
+    for ph, st, sc, ref in zip(phrases, stored, scan, refs):
+        assert st == sc == ref, ph
+    return refs
 
 
 def test_phrase_overlapping_and_duplicates(spark):
@@ -90,15 +118,17 @@ def test_phrase_overlapping_and_duplicates(spark):
         (4, "a"),                # shorter than any phrase
         (5, ""),
     ]
-    assert _check(spark, rows, ["a", "a"]) == [(1, 3)]
-    assert _check(spark, rows, ["a", "b", "a"]) == [(2, 2)]
-    assert _check(spark, rows, ["x", "y", "z"]) == [(3, 1)]
-    assert _check(spark, rows, ["q"]) == []
+    assert _check(spark, rows, [["a", "a"], ["a", "b", "a"], ["x", "y", "z"], ["q"]]) == [
+        [(1, 3)],
+        [(2, 2)],
+        [(3, 1)],
+        [],
+    ]
 
 
 def test_phrase_single_term_equals_tf(spark):
     rows = [(1, "w v w w"), (2, "v v"), (3, "")]
-    assert _check(spark, rows, ["w"]) == [(1, 3)]
+    assert _check(spark, rows, [["w"]]) == [[(1, 3)]]
 
 
 def test_phrase_randomized_cross_check(spark):
@@ -108,27 +138,41 @@ def test_phrase_randomized_cross_check(spark):
         (i, " ".join(rng.choice(vocab) for _ in range(rng.randint(0, 30))))
         for i in range(80)
     ]
-    for phrase in (["aa", "bb"], ["bb", "bb"], ["aa", "bb", "cc"], ["dd"]):
-        _check(spark, rows, phrase)
+    _check(spark, rows, [["aa", "bb"], ["bb", "bb"], ["aa", "bb", "cc"], ["dd"]])
 
 
 def test_phrase_case_and_whitespace_normalization(spark):
     rows = [(1, "  Foo\tBAR  \n baz"), (2, "foo bar")]
-    assert _check(spark, rows, ["foo", "bar"]) == [(1, 1), (2, 1)]
+    assert _check(spark, rows, [["foo", "bar"]]) == [[(1, 1), (2, 1)]]
 
 
 def test_phrase_empty_raises(spark):
     rows = ((1, "a"),)
     with pytest.raises(ValueError):
-        phrase_match_stored(_blocks(spark, rows), [])
+        phrase_match_stored(_built(spark, rows)[0], [])
     with pytest.raises(ValueError):
         phrase_match_scan(_docs(spark, rows), [])
 
 
-def test_positional_rows_positions(spark):
-    docs = _docs(spark, [(1, "a b a")]).withColumnRenamed("text", "content")
-    got = sorted(map(tuple, positional_rows(docs).collect()))
-    assert got == [("a", 1, 0), ("a", 1, 2), ("b", 1, 1)]
+def test_postings_positions(spark):
+    """The postings carry each (term, doc)'s sorted 0-based token
+    positions, the one source of both block tables: equal to a pure-Python
+    tokenization, with repeated terms and an empty doc."""
+    from goldenretriever_spark.index.build import build_index
+
+    rows = [(1, "a b a"), (2, "B c  b b"), (3, "")]
+    content = _docs(spark, rows).withColumnRenamed("text", "content")
+    got = sorted(
+        (r["term"], r["doc_id"], r["tf"], list(r["positions"]))
+        for r in build_index(content, persist=False).postings.collect()
+    )
+    want = []
+    for d, text in rows:
+        toks = _tokens(text)
+        for t in set(toks):
+            pos = [i for i, u in enumerate(toks) if u == t]
+            want.append((t, d, len(pos), pos))
+    assert got == sorted(want)
 
 
 def test_positions_roundtrip_codec():
@@ -164,18 +208,34 @@ def _py_windows(tokens: list[str], terms: list[str], w: int) -> int:
     )
 
 
-def _check_prox(spark, rows, terms, w):
+def _check_prox(spark, rows, cases):
+    """Per (terms, window) case, stored == scan == the pure-Python
+    reference; the stored and the scan matches of all ``cases`` are each
+    one action (a union of per-case frames tagged by case). Returns the
+    references."""
     rows = tuple(rows)
     docs = _docs(spark, rows)
-    stored = _stored(spark, rows, lambda b: proximity_match_stored(b, terms, w))
-    scan = sorted(map(tuple, proximity_match_scan(docs, terms, w).collect()))
-    ref = sorted(
-        (d, _py_windows(_tokens(t), terms, w))
-        for d, t in rows
-        if _py_windows(_tokens(t), terms, w) > 0
+    n = len(cases)
+    stored = _stored(
+        spark,
+        rows,
+        lambda b: _tagged([proximity_match_stored(b, terms, w) for terms, w in cases]),
+        n,
     )
-    assert stored == scan == ref
-    return ref
+    scan = _by_query(
+        _tagged([proximity_match_scan(docs, terms, w) for terms, w in cases]), n
+    )
+    refs = [
+        sorted(
+            (d, _py_windows(_tokens(t), terms, w))
+            for d, t in rows
+            if _py_windows(_tokens(t), terms, w) > 0
+        )
+        for terms, w in cases
+    ]
+    for case, st, sc, ref in zip(cases, stored, scan, refs):
+        assert st == sc == ref, case
+    return refs
 
 
 def test_proximity_basic_and_truncation(spark):
@@ -186,28 +246,29 @@ def test_proximity_basic_and_truncation(spark):
         (4, "a b a"),         # multiple satisfying starts
         (5, ""),
     ]
-    assert _check_prox(spark, rows, ["a", "b"], 4) == [(1, 1), (2, 1), (4, 2)]
-    assert _check_prox(spark, rows, ["a", "b"], 2) == [(2, 1), (4, 2)]
-    assert _check_prox(spark, rows, ["a", "b"], 6) == [
-        (1, 1),
-        (2, 1),
-        (3, 1),
-        (4, 2),
+    assert _check_prox(spark, rows, [(["a", "b"], 4), (["a", "b"], 2), (["a", "b"], 6)]) == [
+        [(1, 1), (2, 1), (4, 2)],
+        [(2, 1), (4, 2)],
+        [(1, 1), (2, 1), (3, 1), (4, 2)],
     ]
 
 
 def test_proximity_duplicate_terms_set_semantics(spark):
     # duplicate query terms collapse to the distinct set
     rows = [(1, "a b"), (2, "a a")]
-    assert _check_prox(spark, rows, ["a", "a", "b"], 3) == [(1, 1)]
-    assert _check_prox(spark, rows, ["a", "a"], 1) == [(1, 1), (2, 2)]
+    assert _check_prox(spark, rows, [(["a", "a", "b"], 3), (["a", "a"], 1)]) == [
+        [(1, 1)],
+        [(1, 1), (2, 2)],
+    ]
 
 
 def test_proximity_window_too_small_for_terms(spark):
     # 3 distinct terms can never fit a 2-token window
     rows = [(1, "a b c")]
-    assert _check_prox(spark, rows, ["a", "b", "c"], 2) == []
-    assert _check_prox(spark, rows, ["a", "b", "c"], 3) == [(1, 1)]
+    assert _check_prox(spark, rows, [(["a", "b", "c"], 2), (["a", "b", "c"], 3)]) == [
+        [],
+        [(1, 1)],
+    ]
 
 
 def test_proximity_randomized_cross_check(spark):
@@ -217,18 +278,16 @@ def test_proximity_randomized_cross_check(spark):
         (i, " ".join(rng.choice(vocab) for _ in range(rng.randint(0, 40))))
         for i in range(60)
     ]
-    for terms, w in (
-        (["aa", "bb"], 3),
-        (["aa", "bb", "cc"], 5),
-        (["dd"], 1),
-        (["ee", "aa"], 10),
-    ):
-        _check_prox(spark, rows, terms, w)
+    _check_prox(
+        spark,
+        rows,
+        [(["aa", "bb"], 3), (["aa", "bb", "cc"], 5), (["dd"], 1), (["ee", "aa"], 10)],
+    )
 
 
 def test_proximity_invalid_args(spark):
     rows = ((1, "a"),)
-    blocks = _blocks(spark, rows)
+    blocks = _built(spark, rows)[0]
     with pytest.raises(ValueError):
         proximity_match_stored(blocks, [], 3)
     with pytest.raises(ValueError):
@@ -245,10 +304,6 @@ def test_phrase_batch_equals_per_phrase(spark):
     phrases — while paying one decode for the whole batch."""
     from goldenretriever_spark import corpus
     from goldenretriever_spark.index.build import with_doc_ids
-    from goldenretriever_spark.query.phrase import (
-        phrase_match_stored,
-        phrase_match_stored_batch,
-    )
 
     docs = with_doc_ids(spark.createDataFrame(corpus.synth_corpus_pandas(150, seed=9)))
     blocks = pack_positional_blocks(docs, n_term_buckets=8).cache()

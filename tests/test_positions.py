@@ -3,15 +3,13 @@ stored-vs-scan identity for phrase and proximity search, StoredIndex
 integration with term-bucket pruning, and block invariants under forced
 salting/small blocks."""
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from goldenretriever_spark import corpus
-from goldenretriever_spark.index.positions import (
-    decode_positions,
-    pack_positional_blocks,
-    positional_rows,
-)
+from goldenretriever_spark.index.codec import decode_position_blocks
+from goldenretriever_spark.index.positions import pack_positional_blocks
 from goldenretriever_spark.index.storage import prune_blocks_for_terms
 from goldenretriever_spark.query.phrase import (
     phrase_match_scan,
@@ -49,12 +47,33 @@ def _rows(df, doc_stats=None):
 
 
 def test_pack_decode_roundtrip(spark, built):
-    """decode(pack(corpus)) must reproduce the posexplode positional rows
-    bit-exactly — every (term, doc_id, pos) token occurrence."""
+    """decode(pack(corpus)) must reproduce the corpus' posexplode token
+    rows bit-exactly — every (term, doc_id, pos) token occurrence. The
+    collected blocks are decoded by codec.decode_position_blocks."""
+    from goldenretriever_spark.index.build import with_doc_ids
+    from goldenretriever_spark.tokenizer import tokens_column
+
     raw, blocks, doc_stats = built
 
-    expected = _rows(positional_rows(raw, "simple"))
-    got = _rows(decode_positions(blocks), doc_stats)
+    expected = _rows(
+        with_doc_ids(raw)
+        .select("doc_id", F.posexplode(tokens_column(F.col("content"), "simple")))
+        .select(F.col("col").alias("term"), "doc_id", "pos")
+    )
+    rows = blocks.collect()
+    doc_per_pos, positions, pos_per_block = decode_position_blocks(
+        [r["docnos_delta_varint"] for r in rows],
+        [r["pos_counts_varint"] for r in rows],
+        [r["positions_delta_varint"] for r in rows],
+    )
+    doc_id_of = dict(doc_stats.select("docno", "doc_id").collect())
+    got = sorted(
+        zip(
+            np.repeat([r["term"] for r in rows], pos_per_block).tolist(),
+            [doc_id_of[d] for d in doc_per_pos.tolist()],
+            positions.tolist(),
+        )
+    )
     assert got == expected
     assert len(got) > 1000  # non-trivial corpus
 

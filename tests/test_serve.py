@@ -552,6 +552,9 @@ def test_empty_corpus_builds_and_serves(spark, documents, route, tmp_path):
     )
     stats, n = _jobs(spark, "test_serve_empty_stats", lambda: StoredIndex(spark, path).stats)
     assert (stats, n) == ((0, 0.0), 0)
+    term_stats = StoredIndex(spark, path).term_stats
+    assert term_stats.count() == 0
+    assert term_stats.schema.simpleString() == "struct<term:string,df:bigint,term_bucket:int>"
     for name in map(route, ROUTES):
         stored = StoredIndex(spark, path)
         assert stored.stats == (0, 0.0)

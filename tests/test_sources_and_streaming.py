@@ -1,6 +1,6 @@
-"""Sources (sources/: knowledge-base builds, sinks) and streaming
-(streaming/: the incremental postings build and its compaction, the
-stateful dedupe's TTL and state eviction)."""
+"""Sources (sources/: knowledge-base builds, sinks; the driver's file-parse
+rows) and streaming (streaming/: the incremental postings build and its
+compaction, the stateful dedupe's TTL and state eviction)."""
 
 import os
 import time
@@ -63,6 +63,26 @@ def test_sinks_latest_wins(spark, tmp_path):
     rows = querylog_view(spark, path).collect()
     assert len(rows) == 1
     assert rows[0]["is_correct"] == [False, False, False, False, False]  # latest + padded
+
+
+def test_src_parse_files_expected_rows(spark):
+    """The fixture parse is fully deterministic — pin the exact flattened
+    rows (cutoff drops the 7th CSV row, 'nan' query dropped, duplicate QA
+    row dedupes, body-less TXT clause dropped)."""
+    import __spark_entry__ as E
+
+    rows = {
+        (r["kb_name"], r["query_id"], r["response_id"], r["query_string"])
+        for r in E._src_parse_files(spark, "unused").collect()
+    }
+    assert rows == {
+        ("csvkb", 1, 3, "how to sort"),   # merge sort
+        ("csvkb", 1, 2, "how to sort"),   # quicksort
+        ("csvkb", 0, 1, "how to join"),   # hash join (deduped)
+        ("csvkb", 2, 0, "what is bm25"),
+        ("txtkb", 1, 0, "what is a heap"),
+        ("txtkb", 0, 1, "how to hash"),
+    }
 
 
 # ---------------------------------------------------------------- incremental build

@@ -97,10 +97,7 @@ def main() -> None:
     threshold = _opt("--threshold", 0.8)
     max_pairs = int(_opt("--max-pairs", 200e6))
 
-    spark = get_spark(
-        "gr-dedup-scale", cores=32, shuffle_partitions=32,
-        extra_conf={"spark.ui.enabled": "true"},
-    )
+    spark = get_spark("gr-dedup-scale", extra_conf={"spark.ui.enabled": "true"})
     ui_base = spark.sparkContext.uiWebUrl or "http://localhost:4040"
     sc = spark.sparkContext
 

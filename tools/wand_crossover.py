@@ -114,7 +114,7 @@ def sweep(n_docs: int, runs: int, ks: list[int], qlens: list[int]) -> None:
     )
     from goldenretriever_spark.session import get_spark
 
-    spark = get_spark("gr-wand-sweep", cores=32, shuffle_partitions=32)
+    spark = get_spark("gr-wand-sweep")
     idx_path = ensure_index(spark, n_docs)
     stored = StoredIndex(spark, idx_path)
     nb = stored.n_term_buckets
@@ -210,7 +210,7 @@ def mixed(n_docs: int, runs: int, k: int = 10) -> None:
     )
     from goldenretriever_spark.session import get_spark
 
-    spark = get_spark("gr-wand-mixed", cores=32, shuffle_partitions=32)
+    spark = get_spark("gr-wand-mixed")
     idx_path = ensure_index(spark, n_docs)
     stored = StoredIndex(spark, idx_path)
     nb = stored.n_term_buckets
@@ -305,8 +305,8 @@ def local(sizes: list[int], runs: int, k: int) -> None:
     from goldenretriever_spark.query.wand import brute_top_k_stored
     from goldenretriever_spark.session import get_spark
 
-    cores = len(os.sched_getaffinity(0))
-    spark = get_spark("gr-local-crossover", cores=cores)
+    spark = get_spark("gr-local-crossover")
+    cores = spark.sparkContext.defaultParallelism
     max_result = spark.conf.get("spark.driver.maxResultSize", "1g")
     budget = spark.sparkContext._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
         max_result
@@ -463,7 +463,7 @@ def main() -> None:
         local(sizes, runs, k)
         return
 
-    spark = get_spark("gr-wand-crossover", cores=32, shuffle_partitions=32)
+    spark = get_spark("gr-wand-crossover")
     qset = corpus.reference_queries(50, seed=42)
     qlist = [(int(r.query_id), r.query_str) for r in qset.itertuples()]
 
